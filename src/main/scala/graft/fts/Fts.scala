@@ -236,6 +236,17 @@ object AnalyzerConfig {
   * built-in strategy (pushdown, broadcast, AQE) applies; persisted form is
   * parquet partitioned by a term hash bucket so a query's term lookups prune
   * to a handful of files (partition-pruning pathway, SURVEY.md §4.2).
+  *
+  * CONTRACT: `postings` holds at most one row per (term, doc_id). Every
+  * producer guarantees it — each `Index.build*` variant aggregates per
+  * (term, doc_id), [[Index.write]]/[[Index.read]] and the df-capped and
+  * reversed layouts only filter or project those rows (reversal is
+  * injective), and [[IncrementalIndex.readAsOf]] re-aggregates the merged
+  * log per (term, doc_id). The query operators rely on it: document
+  * frequency is a plain row count per term ([[Search.scoreAllBm25]]) and
+  * the AND / minimum-should-match id sets count rows per doc
+  * ([[Search.matchAllIds]], [[Search.matchMinIds]]) — no distinct
+  * aggregate. A hand-assembled index must keep the contract too.
   */
 final case class FtsIndex(
     postings: DataFrame, // term, doc_id, tf
@@ -485,10 +496,10 @@ object Index {
     // from a two-column pruned read of the pre-aggregated index. The old
     // shape re-ran scan→tokenize→aggregate once per output file.
     val spark = ix.docLens.sparkSession
-    spark.read.parquet(s"$dir/postings")
+    readParquet(spark, s"$dir/postings")
       .groupBy("doc_id").agg(first(col("dl")).as("dl"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/doclens")
-    spark.read.parquet(s"$dir/doclens")
+    readParquet(spark, s"$dir/doclens")
       .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/stats")
   }
@@ -557,7 +568,7 @@ object Index {
       .parquet(s"$dir/postings_rev")
 
   def readReversed(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/postings_rev")
+    readParquet(spark, s"$dir/postings_rev")
 
   /** One-call provisioning: build the index from the parquet table, persist
     * it in the bucketed layout, and register the table→index association —
@@ -624,9 +635,55 @@ object Index {
 
   def read(spark: org.apache.spark.sql.SparkSession, dir: String, buckets: Int = 64): FtsIndex =
     FtsIndex(
-      spark.read.parquet(s"$dir/postings"),
-      spark.read.parquet(s"$dir/doclens"),
-      spark.read.parquet(s"$dir/stats"))
+      readParquet(spark, s"$dir/postings"),
+      readParquet(spark, s"$dir/doclens"),
+      readParquet(spark, s"$dir/stats"))
+
+  /** Spark's parquet footer key holding the writer's schema as JSON. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The data-column schema of a Spark-written parquet directory, from ONE
+    * footer read on the driver: the first visible data file found by a
+    * depth-first listing (partition dirs included). None when the
+    * directory has no data file or the footer carries no Spark schema
+    * (a foreign writer). */
+  private[fts] def footerSchema(spark: org.apache.spark.sql.SparkSession,
+                                 dir: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.hadoop.fs.Path
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
+    def firstFile(p: Path): Option[Path] = {
+      val (dirs, files) = fs.listStatus(p).filter(s => visible(s.getPath))
+        .partition(_.isDirectory)
+      files.map(_.getPath).find(_.getName.endsWith(".parquet"))
+        .orElse(dirs.iterator.map(d => firstFile(d.getPath)).collectFirst {
+          case Some(f) => f })
+    }
+    try firstFile(root).flatMap { f =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      val kv = try reader.getFileMetaData.getKeyValueMetaData
+               finally reader.close()
+      Option(kv.get(SparkSchemaKey)).map(j =>
+        org.apache.spark.sql.types.DataType.fromJson(j)
+          .asInstanceOf[org.apache.spark.sql.types.StructType])
+    } catch { case _: java.io.IOException => None } // missing dir included
+  }
+
+  /** `spark.read.parquet(dir)` without the schema-inference job: the data
+    * schema comes from [[footerSchema]] and is handed to the reader, so
+    * opening the directory runs no Spark job (inference launches one per
+    * directory). `partitionCols` fixes the type of partition columns
+    * (e.g. LONG batch ids, which inference would type INT); partition
+    * columns not named keep their inferred type. Falls back to inference
+    * when no Spark footer schema is found. */
+  private[fts] def readParquet(spark: org.apache.spark.sql.SparkSession, dir: String,
+                                partitionCols: org.apache.spark.sql.types.StructField*): DataFrame =
+    footerSchema(spark, dir).fold(spark.read.parquet(dir))(s =>
+      spark.read.schema(org.apache.spark.sql.types.StructType(
+        s.fields ++ partitionCols)).parquet(dir))
 
   /** Postings rows for the query terms only. Against the persisted layout the
     * bucket predicate (same expression as the writer, over literals — so
@@ -676,10 +733,11 @@ object Search {
   }
 
   /** doc_ids containing ALL of the terms (boolean AND = postings intersect:
-    * filter to the query's terms, count distinct matched terms per doc). */
+    * filter to the query's terms, count matched terms per doc — a row
+    * count, since postings are unique per (term, doc_id), see [[FtsIndex]]). */
   def matchAllIds(ix: FtsIndex, terms: Seq[String]): DataFrame =
     ix.postings.filter(col("term").isin(terms.distinct: _*))
-      .groupBy("doc_id").agg(countDistinct(col("term")).as("n_terms"))
+      .groupBy("doc_id").agg(count(lit(1)).as("n_terms"))
       .filter(col("n_terms") === terms.distinct.size)
       .select("doc_id")
 
@@ -778,7 +836,8 @@ object Search {
     * term count is unsatisfiable and returns the empty set (the analyzer
     * may legitimately shrink a query by dropping stopwords, so this is a
     * data condition, not an error); minMatch < 1 fails loud. Same
-    * pruned-postings shape as matchAllIds: the distinct-term count runs
+    * pruned-postings shape as matchAllIds: the per-doc row count (= the
+    * distinct matched terms, by the [[FtsIndex]] uniqueness contract) runs
     * over the query terms' rows only, map-side partial first. */
   def matchMinIds(ix: FtsIndex, terms: Seq[String], minMatch: Int): DataFrame = {
     val ts = terms.distinct
@@ -789,7 +848,7 @@ object Search {
           org.apache.spark.sql.catalyst.expressions.Literal.FalseLiteral))
         .select("doc_id")
     else ix.postings.filter(col("term").isin(ts: _*))
-      .groupBy("doc_id").agg(countDistinct(col("term")).as("n_terms"))
+      .groupBy("doc_id").agg(count(lit(1)).as("n_terms"))
       .filter(col("n_terms") >= minMatch)
       .select("doc_id")
   }
@@ -1233,6 +1292,16 @@ object Search {
       .select(col("doc_id"), round(col("score"), 4).as("score"))
       .orderBy(col("score").desc, col("doc_id")).limit(k)
 
+  /** Term-filtered postings plus each term's document frequency `df`
+    * (double) as a window count over the term: a row count IS the
+    * distinct-doc count by the [[FtsIndex]] uniqueness contract. One
+    * exchange on `term`, in the same stage as the scoring rows — no second
+    * scan of the postings, no aggregate to broadcast back. */
+  private def withDocFreq(qp: DataFrame): DataFrame =
+    qp.withColumn("df", count(lit(1))
+      .over(org.apache.spark.sql.expressions.Window.partitionBy("term"))
+      .cast("double"))
+
   /** Per-doc BM25 scores (full precision, no ordering) for every doc
     * containing at least one query term — the composable half of
     * [[scoreBm25]], and the subplan [[graft.ext.RewriteFtsMatch]] grafts in
@@ -1241,18 +1310,18 @@ object Search {
   def scoreAllBm25(ix: FtsIndex, terms: Seq[String],
                    k1: Double = 1.2, b: Double = 0.75,
                    candidates: Option[DataFrame] = None): DataFrame = {
-    val qp0 = ix.postings.filter(col("term").isin(terms.distinct: _*))
     // df/idf stay CORPUS statistics even when scoring is restricted to a
-    // candidate id set (MaxScore pruning must not change any score)
-    val df = qp0.groupBy("term").agg(countDistinct(col("doc_id")).cast("double").as("df"))
+    // candidate id set (MaxScore pruning must not change any score): the
+    // df window runs BEFORE the candidate semi-join, which cannot push
+    // below it (the join key is not the window's partition key)
+    val qp0 = withDocFreq(ix.postings.filter(col("term").isin(terms.distinct: _*)))
     val qp = candidates.fold(qp0)(c =>
       qp0.join(c.select(col("doc_id")), Seq("doc_id"), "left_semi"))
     // a persisted layout carries dl on the posting rows ([[Index.write]]
     // denormalizes it), so scoring reads ONLY the query terms' pruned
     // buckets — the O(corpus) doclens join is the in-memory fallback
     val withDl =
-      if (qp.columns.contains("dl")) qp.join(broadcast(df), "term")
-      else qp.join(broadcast(df), "term").join(ix.docLens, "doc_id")
+      if (qp.columns.contains("dl")) qp else qp.join(ix.docLens, "doc_id")
     withDl
       .crossJoin(broadcast(ix.stats))
       .withColumn("idf",
@@ -1927,11 +1996,9 @@ object Search {
     * carry a denormalized `dl` (persisted layout) score without touching
     * the corpus-sized doclens table. */
   def tfidfScoreTopK(ix: FtsIndex, terms: Seq[String], k: Int): DataFrame = {
-    val qp = ix.postings.filter(col("term").isin(terms.distinct: _*))
-    val df = qp.groupBy("term").agg(countDistinct(col("doc_id")).cast("double").as("df"))
+    val qp = withDocFreq(ix.postings.filter(col("term").isin(terms.distinct: _*)))
     val withDl =
-      if (qp.columns.contains("dl")) qp.join(broadcast(df), "term")
-      else qp.join(broadcast(df), "term").join(ix.docLens, "doc_id")
+      if (qp.columns.contains("dl")) qp else qp.join(ix.docLens, "doc_id")
     withDl
       .crossJoin(broadcast(ix.stats))
       .withColumn("w",
@@ -2021,11 +2088,9 @@ object Search {
     import spark.implicits._
     val wDf = broadcast(weights.toDF("term", "qw"))
     // weighted-BM25 rerank over the expanded term set
-    val qp0 = ix.postings.join(wDf, "term")
-    val df = qp0.groupBy("term").agg(countDistinct(col("doc_id")).cast("double").as("df"))
+    val qp0 = withDocFreq(ix.postings.join(wDf, "term"))
     val withDl =
-      if (qp0.columns.contains("dl")) qp0.join(broadcast(df), "term")
-      else qp0.join(broadcast(df), "term").join(ix.docLens, "doc_id")
+      if (qp0.columns.contains("dl")) qp0 else qp0.join(ix.docLens, "doc_id")
     withDl.crossJoin(broadcast(ix.stats))
       .withColumn("idf",
         log((col("n_docs").cast("double") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))

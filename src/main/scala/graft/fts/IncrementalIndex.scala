@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Incremental inverted-index maintenance for streaming document ingest
   * (SURVEY.md §7 step 6). Strategy: merge-on-read deltas — each micro-batch
@@ -116,13 +117,14 @@ object IncrementalIndex {
   }
 
   /** A partitioned delta directory as a DataFrame with its partition column
-    * cast to LONG (partition-value inference yields INT for small ids), or
-    * None when the directory has no live partitions. */
+    * typed LONG (partition-value inference would yield INT for small ids),
+    * or None when the directory has no live partitions. The data schema
+    * comes from one parquet footer ([[Index.readParquet]]), so opening the
+    * directory launches no schema-inference job. */
   private def loadDelta(spark: SparkSession, dir: String,
                         colName: String): Option[DataFrame] =
     if (partitionIds(spark, dir, colName).isEmpty) None
-    else Some(spark.read.parquet(dir)
-      .withColumn(colName, col(colName).cast("long")))
+    else Some(Index.readParquet(spark, dir, StructField(colName, LongType)))
 
   /** Start a foreachBatch sink that appends per-batch postings deltas.
     * `positional = true` captures per-doc position lists in the deltas
@@ -205,7 +207,7 @@ object IncrementalIndex {
     // written (dl = Σtf per doc, the docLens definition in every build
     // variant) — ix.docLens would re-run the batch's scan→tokenize→
     // aggregate a second time, doubling per-batch ingest CPU
-    spark.read.parquet(s"$dir/postings_delta/batch_id=$batchId")
+    Index.readParquet(spark, s"$dir/postings_delta/batch_id=$batchId")
       .groupBy("doc_id").agg(sum(col("tf")).as("dl"))
       .withColumn("batch_id", lit(batchId))
       .write.mode(SaveMode.Overwrite)
@@ -259,12 +261,13 @@ object IncrementalIndex {
     val nextBatch = maxBatch.map(_ + 1).getOrElse(0L)
     maxBatch.foreach(asOf =>
       writeTombstones(spark, dir, docs.select(col(idCol)), idCol, asOf))
-    // positional? — from the live deltas' schema, else the compacted base's
+    // positional? — from the live deltas' footer schema, else the
+    // compacted base's (a driver-side footer read, no Spark job)
     val positional =
-      loadDelta(spark, s"$dir/postings_delta", "batch_id")
-        .orElse(compactionInfo(spark, dir).map { case (base, _) =>
-          spark.read.parquet(s"$base/postings") })
-        .exists(_.columns.contains("positions"))
+      Index.footerSchema(spark, s"$dir/postings_delta")
+        .orElse(compactionInfo(spark, dir).flatMap { case (base, _) =>
+          Index.footerSchema(spark, s"$base/postings") })
+        .exists(_.fieldNames.contains("positions"))
     // replacements MUST go through the same pipeline the log was built with
     val analyzer = logAnalyzer(spark, dir)
     val ix = if (!analyzer.isV1 && positional)
@@ -410,8 +413,8 @@ object IncrementalIndex {
                          tablePath: String, idCol: String = "doc_id",
                          textCol: String = "text", buckets: Int = 64): Unit = {
     compact(spark, dir, outDir, buckets)
-    val positional = spark.read.parquet(s"$outDir/postings")
-      .columns.contains("positions")
+    val positional = Index.footerSchema(spark, s"$outDir/postings")
+      .exists(_.fieldNames.contains("positions"))
     // an analyzer-configured ingest's compacted index registers (and
     // persists) under the SAME pipeline, so SQL queries normalize through it
     val analyzer = logAnalyzer(spark, dir)

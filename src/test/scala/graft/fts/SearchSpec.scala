@@ -1,7 +1,7 @@
 package graft.fts
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{JobCount, SparkSpec}
 
 /** FTS semantics on a tiny hand-computable corpus. */
 class SearchSpec extends SparkSpec {
@@ -774,5 +774,119 @@ class SearchSpec extends SparkSpec {
       afterScore = p1.last.getDouble(1), afterId = p1.last.getLong(0)).collect()
     assert((p1 ++ p2).map(_.getLong(0)).toSeq == full.map(_.getLong(0)).toSeq.take(p1.length + p2.length))
     assert(p1.map(_.getLong(0)).toSet.intersect(p2.map(_.getLong(0)).toSet).isEmpty)
+  }
+
+  /** A 300-doc corpus over a 40-word vocabulary, skewed so head terms sit
+    * in most docs and tail terms in a few — df varies across query terms. */
+  private lazy val skewed = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    (0L until 300L).map { id =>
+      val n = 5 + rnd.nextInt(11)
+      (id, Seq.fill(n)(s"w${math.min(39, (math.pow(rnd.nextDouble(), 2) * 40).toInt)}")
+        .mkString(" "))
+    }.toDF("doc_id", "text")
+  }
+
+  /** The previous operator forms, kept as the reference: df as a separate
+    * distinct-doc aggregate broadcast back on term; AND / minimum-should-
+    * match as a distinct-term count per doc. */
+  private def scoreAllDistinctDf(ix: FtsIndex, terms: Seq[String],
+                                 candidates: Option[org.apache.spark.sql.DataFrame])
+      : org.apache.spark.sql.DataFrame = {
+    val (k1, b) = (1.2, 0.75)
+    val qp0 = ix.postings.filter(col("term").isin(terms.distinct: _*))
+    val df = qp0.groupBy("term").agg(countDistinct(col("doc_id")).cast("double").as("df"))
+    val qp = candidates.fold(qp0)(c =>
+      qp0.join(c.select(col("doc_id")), Seq("doc_id"), "left_semi"))
+    val withDl =
+      if (qp.columns.contains("dl")) qp.join(broadcast(df), "term")
+      else qp.join(broadcast(df), "term").join(ix.docLens, "doc_id")
+    withDl.crossJoin(broadcast(ix.stats))
+      .withColumn("idf",
+        log((col("n_docs").cast("double") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
+      .withColumn("score_t",
+        col("idf") * (col("tf").cast("double") * (k1 + 1.0)) /
+          (col("tf").cast("double") + (col("dl").cast("double") / col("avgdl") * b + (1.0 - b)) * k1))
+      .groupBy("doc_id").agg(sum(col("score_t")).as("score"))
+  }
+
+  private def minIdsDistinct(ix: FtsIndex, terms: Seq[String], minMatch: Int) =
+    ix.postings.filter(col("term").isin(terms.distinct: _*))
+      .groupBy("doc_id").agg(countDistinct(col("term")).as("n_terms"))
+      .filter(col("n_terms") >= minMatch).select("doc_id")
+
+  test("window-df BM25 and row-count matching equal the distinct-aggregate forms") {
+    import spark.implicits._
+    val mem = Index.build(skewed)
+    val pDir = graft.core.Scratch.freshDir("score_identity_ix")
+    Index.write(mem, pDir, buckets = 4)
+    val persisted = Index.read(spark, pDir)
+    // merge-on-read view: two batches folded into a base, then an upsert
+    // over live docs and a delete — tombstones hit base and delta rows
+    val lDir = graft.core.Scratch.freshDir("score_identity_log")
+    IncrementalIndex.upsert(spark, lDir, skewed.filter(col("doc_id") < 200))
+    IncrementalIndex.upsert(spark, lDir, skewed.filter(col("doc_id") >= 200))
+    IncrementalIndex.compact(spark, lDir,
+      graft.core.Scratch.freshDir("score_identity_base"), buckets = 4)
+    IncrementalIndex.upsert(spark, lDir,
+      (50L until 60L).map(i => (i, s"w1 w2 w39 w39 extra$i")).toDF("doc_id", "text"))
+    IncrementalIndex.delete(spark, lDir, (100L until 110L).toDF("doc_id"))
+    val incremental = IncrementalIndex.read(spark, lDir)
+
+    val terms = Seq("w0", "w3", "w17", "w39", "absent")
+    val cands = spark.range(0, 300, 3).toDF("doc_id")
+    def scored(d: org.apache.spark.sql.DataFrame) =
+      d.select(col("doc_id"), round(col("score"), 4)).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSet
+    def ids(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.getLong(0)).toSet
+    for ((kind, ix) <- Seq("in-memory" -> mem, "persisted" -> persisted,
+        "merge-on-read" -> incremental); c <- Seq(None, Some(cands))) {
+      val got = scored(Search.scoreAllBm25(ix, terms, candidates = c))
+      assert(got.nonEmpty, kind)
+      assert(got == scored(scoreAllDistinctDf(ix, terms, c)),
+        s"$kind, candidates=${c.isDefined}: window df changed a score")
+    }
+    for ((kind, ix) <- Seq("in-memory" -> mem, "persisted" -> persisted,
+        "merge-on-read" -> incremental)) {
+      val and = ids(Search.matchAllIds(ix, Seq("w0", "w3", "w17")))
+      assert(and.nonEmpty && and == ids(minIdsDistinct(ix, Seq("w0", "w3", "w17"), 3)), kind)
+      for (m <- 1 to 3) assert(ids(Search.matchMinIds(ix, terms, m)) ==
+        ids(minIdsDistinct(ix, terms, m)), s"$kind, minMatch=$m")
+    }
+  }
+
+  test("persisted SQL serving: top-k and a 3-term AND launch at most the pinned job count") {
+    // Warm (second run) counts over a positional index with the default 64
+    // buckets, under AQE. With df as a distinct aggregate broadcast back on
+    // term and AND as a distinct-term count: fts_score top-k 8 jobs, 3-term
+    // fts_match 3 jobs. With the window df and row-count matching: 6 and 2.
+    graft.ext.GraftExtensions.install(spark)
+    graft.fts.IndexCatalog.clear()
+    try {
+      val table = graft.core.Scratch.freshDir("jobcount_table")
+      skewed.write.mode("overwrite").parquet(table)
+      Index.createIndex(spark, table, graft.core.Scratch.freshDir("jobcount_ix"),
+        positional = true)
+      spark.read.parquet(table).createOrReplaceTempView("jobcount_docs")
+      val topk = "SELECT doc_id, round(fts_score(text, 'w0 w17'), 4) AS score " +
+        "FROM jobcount_docs WHERE fts_match_any(text, 'w0 w17') " +
+        "ORDER BY score DESC, doc_id LIMIT 10"
+      val and = "SELECT doc_id FROM jobcount_docs WHERE fts_match(text, 'w0 w3 w17')"
+      def warmJobs(sql: String): Int = {
+        spark.sql(sql).collect()
+        JobCount(spark)(spark.sql(sql).collect())._2
+      }
+      val (topkJobs, andJobs) = (warmJobs(topk), warmJobs(and))
+      assert(topkJobs <= 6, s"fts_score top-k launched $topkJobs jobs")
+      assert(andJobs <= 2, s"3-term fts_match launched $andJobs jobs")
+      // the lowering is still exact
+      val ix = Index.build(skewed)
+      assert(spark.sql(and).collect().map(_.getLong(0)).toSet ==
+        Search.matchAllIds(ix, Seq("w0", "w3", "w17")).collect().map(_.getLong(0)).toSet)
+      assert(spark.sql(topk).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
+        Search.scoreBm25(ix, Seq("w0", "w17"), 10).collect()
+          .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+    } finally graft.fts.IndexCatalog.clear()
   }
 }
