@@ -15,14 +15,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.localHive(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
-      .getOrCreate()
-    graft.core.GraftSession.tune(spark)
+    val spark = graft.core.GraftSession.localHive(
+      graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // absorb generic session/JIT warmup (scan, shuffle, agg, join, noop

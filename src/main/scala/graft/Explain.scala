@@ -1,21 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-shape inspection: prints the formatted physical plan of selected
   * queries (default: a scale-critical subset) so pushdown, pruning,
   * broadcast choices, and codegen spans can be reviewed per round. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    graft.core.GraftSession.tune(spark)
+    val spark = graft.core.GraftSession.localHive(
+      graft.core.GraftSession.builder("local[8]", 8)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args.nonEmpty) args.toSeq

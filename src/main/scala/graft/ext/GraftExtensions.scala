@@ -2,7 +2,6 @@ package graft.ext
 
 import java.util.Locale
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -2088,9 +2087,8 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
 }
 
 /** Session extensions: the full-text function surface + the rewrite rule.
-  * Install with
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.ext.GraftExtensions`. */
+  * Enabled by `spark.sql.extensions=graft.ext.GraftExtensions`, which
+  * [[graft.core.GraftSession.builder]] sets. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.allFunctions.foreach(ext.injectFunction)
@@ -2099,10 +2097,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** The complete graft SQL function surface — fts + vector + text kernels.
-    * ONE list feeds both installation paths, so a session built with
-    * `spark.sql.extensions=graft.ext.GraftExtensions` and one patched by
-    * [[install]] expose identical functions. */
+  /** The complete graft SQL function surface — fts + vector + text kernels,
+    * injected into every session by [[GraftExtensions]]. */
   def allFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
     Seq(
       (new FunctionIdentifier("fts_tokenize"),
@@ -2262,22 +2258,4 @@ object GraftExtensions {
             org.apache.spark.sql.catalyst.expressions.Add(a, b))
         })
     ) ++ VecKernels.functions ++ TextKernels.functions
-
-  /** Register the graft functions + rule on an already-built session (the
-    * harness receives driver-owned sessions; extensions can't be added
-    * post-hoc via builder, but the internals are session-state-local). */
-  def install(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    allFunctions.foreach { case (id, info, builder) =>
-      reg.registerFunction(id, info, builder)
-    }
-    // post-hoc rule injection isn't part of the public API; the supported
-    // path is spark.sql.extensions=graft.ext.GraftExtensions. For harness
-    // sessions we fall back to experimental extraOptimizations, which the
-    // optimizer runs as its own batch.
-    if (!spark.experimental.extraOptimizations.contains(RewriteFtsMatch)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteFtsMatch
-    }
-  }
 }

@@ -256,8 +256,8 @@ object TextKernels {
     out
   }
 
-  /** The kernels' SQL function surface — one canonical list shared by every
-    * installation path (see [[VecKernels.functions]] for the rationale). */
+  /** The kernels' SQL function surface, part of
+    * [[GraftExtensions.allFunctions]] (see [[VecKernels.functions]]). */
   def functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (new FunctionIdentifier("graft_shingle_hashes"),
       new ExpressionInfo(classOf[ShingleHashesExpr].getName, "graft_shingle_hashes"),
@@ -337,14 +337,6 @@ object TextKernels {
     var l = 0
     while (l < 4 && l < la && l < lb && a(l) == b(l)) l += 1
     jaro + l * 0.1 * (1.0 - jaro)
-  }
-
-  /** Register all kernels on a session's function registry. */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    functions.foreach { case (id, info, builder) =>
-      reg.registerFunction(id, info, builder)
-    }
   }
 }
 

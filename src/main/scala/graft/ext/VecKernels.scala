@@ -160,10 +160,9 @@ object VecKernels {
     bucket
   }
 
-  /** The kernels' SQL function surface, one canonical list consumed by BOTH
-    * installation paths ([[GraftExtensions]] as spark.sql.extensions and
-    * [[GraftExtensions.install]] post-hoc) so the registered surface can't
-    * drift between them. The library API in [[graft.pipeline.Similarity]]
+  /** The kernels' SQL function surface, part of
+    * [[GraftExtensions.allFunctions]] and so registered only through
+    * `spark.sql.extensions`. The library API in [[graft.pipeline.Similarity]]
     * builds the expressions directly and needs no registry. */
   def functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (new FunctionIdentifier("graft_dot"),
@@ -202,13 +201,6 @@ object VecKernels {
           "graft_lsh_bucket(vec[, planes]) needs a literal integer planes arg, got: "
             + args.map(_.sql).mkString(", "))
       }))
-
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    functions.foreach { case (id, info, builder) =>
-      reg.registerFunction(id, info, builder)
-    }
-  }
 }
 
 case class DotExpr(left: Expression, right: Expression)

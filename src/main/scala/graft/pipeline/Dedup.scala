@@ -16,6 +16,10 @@ import graft.fts.Analyzer
   * shuffle on a band/bucket key (pairs meet only inside their bucket), the
   * reference's hash-shuffle pattern over Murmur3-style hashing (reference
   * misc.scala:443 — our xxhash64 analogue, hashes computed inside codegen).
+  *
+  * The shingle/signature kernels are called as `graft_*` SQL functions, so
+  * the input must come from a session with `graft.ext.GraftExtensions`
+  * (every [[graft.core.GraftSession.builder]] session has it).
   */
 object Dedup {
 
@@ -53,7 +57,6 @@ object Dedup {
     * step is "write the signature table"). */
   def shingleSets(docs: DataFrame, n: Int = 3, idCol: String = "doc_id",
                   textCol: String = "text"): DataFrame = {
-    graft.ext.TextKernels.install(docs.sparkSession)
     val sets = docs
       // spread the CPU-heavy kernel across the cluster — the input is often
       // a few large parquet files whose row groups don't split to full

@@ -172,7 +172,6 @@ object Fts extends QueryPack {
     // re-tokenized — asserted by PlanShapeSpec.
     Q("q_fts_sql_slop",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql_pos"), positional = true)
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixsl")
@@ -515,7 +514,6 @@ object Fts extends QueryPack {
     // rule (native FtsTokenize expression with codegen underneath).
     Q("q_fts_sql",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         // this query exists to exercise the SCAN lowering — drop any index
         // registration left by q_fts_sql_indexed/_any (registry order is
         // arbitrary), else the rewrite would take the semi-join path and
@@ -539,7 +537,6 @@ object Fts extends QueryPack {
     // postings scan + semi-join.
     Q("q_fts_sql_indexed",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixq")
@@ -660,7 +657,6 @@ object Fts extends QueryPack {
     // counts, here one Expand over the semi-joined rows).
     Q("q_fts_facets",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_facets"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_fct")
@@ -685,7 +681,6 @@ object Fts extends QueryPack {
     // RESIDUAL — same rows as q_fts_phrase, same oracle.
     Q("q_fts_sql_phrase",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixp")
@@ -706,7 +701,6 @@ object Fts extends QueryPack {
     // oracle scores), so rows must equal q_fts_bm25's.
     Q("q_fts_sql_bm25",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixsc")
@@ -723,7 +717,6 @@ object Fts extends QueryPack {
     // q_fts_sql_bm25's id+score-only shape drops the corpus scan entirely.
     Q("q_fts_sql_bm25_cols",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixsc2")
@@ -754,7 +747,6 @@ object Fts extends QueryPack {
     // (same plan as q_fts_prefix's library path; same oracle).
     Q("q_fts_sql_prefix",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixpre")
@@ -772,7 +764,6 @@ object Fts extends QueryPack {
     // candidate text is never re-read. Same rows/oracle as q_fts_near.
     Q("q_fts_sql_near",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql_pos"), positional = true)
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixnear")
@@ -797,7 +788,6 @@ object Fts extends QueryPack {
     // q_fts_phrase.
     Q("q_fts_sql_phrase_pos",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql_pos"), positional = true)
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixpp")
@@ -831,7 +821,6 @@ object Fts extends QueryPack {
     // doc ids, no per-doc term-count filter).
     Q("q_fts_sql_any",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixany")
@@ -854,7 +843,6 @@ object Fts extends QueryPack {
     // path's array_intersect).
     Q("q_fts_sql_min",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixmin")
@@ -950,7 +938,6 @@ object Fts extends QueryPack {
     // lifecycle with no manual registration step.
     Q("q_fts_compacted_sql",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         val deltaDir = graft.core.Scratch.dir("fts_index_csql_delta")
         val outDir = graft.core.Scratch.dir("fts_index_csql_out")
         val landing = graft.core.Scratch.dir("docs_csql_stream")
@@ -1238,7 +1225,6 @@ object Fts extends QueryPack {
     // rebuild anywhere. Same oracle as q_fts_near.
     Q("q_fts_compacted_near",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         val deltaDir = graft.core.Scratch.dir("fts_index_cnear_delta")
         val outDir = graft.core.Scratch.dir("fts_index_cnear_out")
         val landing = graft.core.Scratch.dir("docs_cnear_stream")
@@ -1270,7 +1256,6 @@ object Fts extends QueryPack {
     // (plan-asserted).
     Q("q_fts_sql_or",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql_pos"), positional = true)
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixor")
@@ -1309,7 +1294,6 @@ object Fts extends QueryPack {
     // scan — same rows as q_fts_suffix, plan-asserted.
     Q("q_fts_sql_suffix",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql_rev"), reversed = true)
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixsuf")
@@ -1328,7 +1312,6 @@ object Fts extends QueryPack {
     // q_fts_match_not, no scan lowering anywhere (plan-asserted).
     Q("q_fts_sql_not",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixnot")
@@ -1349,7 +1332,6 @@ object Fts extends QueryPack {
     // semantics (LIKE + the non-overlap length guard).
     Q("q_fts_sql_wildcard",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixwc")
@@ -1372,7 +1354,6 @@ object Fts extends QueryPack {
     // (q_fts_sql_wildcard above).
     Q("q_fts_sql_pattern",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixpt")
@@ -1391,7 +1372,6 @@ object Fts extends QueryPack {
     // classifier, so the whole id-only query stays index-only.
     Q("q_fts_query_pattern",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_qpt")
@@ -1419,7 +1399,6 @@ object Fts extends QueryPack {
     // RE2-portable by contract).
     Q("q_fts_query_regex",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_qrx")
@@ -1444,7 +1423,6 @@ object Fts extends QueryPack {
     // phrase "data quer"); now they mean pattern slots.
     Q("q_fts_query_phrase_wild",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql_pos"), positional = true)
         Tables(s, dir, "documents").createOrReplaceTempView("documents_qpw")
@@ -1467,7 +1445,6 @@ object Fts extends QueryPack {
     // token-list predicates.
     Q("q_fts_query",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_qstr")
@@ -1490,7 +1467,6 @@ object Fts extends QueryPack {
     // in a query can never silently match zero rows.
     Q("q_fts_query_near",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql_pos"), positional = true)
         Tables(s, dir, "documents").createOrReplaceTempView("documents_qstr2")
@@ -1517,7 +1493,6 @@ object Fts extends QueryPack {
     // window over per-term position lists plus the containment conjunct.
     Q("q_fts_query_slop",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql_pos"), positional = true)
         Tables(s, dir, "documents").createOrReplaceTempView("documents_qsl")
@@ -1548,7 +1523,6 @@ object Fts extends QueryPack {
     // containment is value equality.
     Q("q_fts_query_fields",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         val path = s"$dir/documents.parquet"
         graft.fts.Index.createIndex(s, path,
           graft.core.Scratch.dir("fts_index_sql"))
@@ -1578,7 +1552,6 @@ object Fts extends QueryPack {
     // on these [a-z0-9]+ terms.
     Q("q_fts_query_range",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_qr")
@@ -1599,7 +1572,6 @@ object Fts extends QueryPack {
     // replays the window arithmetic with DuckDB list slicing.
     Q("q_fts_snippet",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_snip")
@@ -1656,7 +1628,6 @@ object Fts extends QueryPack {
     // pipeline and the BM25 formula over the analyzed tokens.
     Q("q_fts_sql_analyzer",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         // a SCRATCH COPY of the table: the catalog keys on (table, column),
         // so registering the stemmed index for the shared fixture path
         // would replace the v1 (documents, text) entry the other SQL
@@ -1716,7 +1687,6 @@ object Fts extends QueryPack {
     // and the harness runs queries concurrently (see q_fts_sql_analyzer).
     Q("q_fts_sql_analyzer_phrase",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         val tbl = layoutOnce(s, dir, "docs_anp_table", "_SUCCESS") { out =>
           Tables(s, dir, "documents").write.mode("overwrite").parquet(out)
         }
@@ -1757,7 +1727,6 @@ object Fts extends QueryPack {
     // appears. The oracle left-joins per-doc scores and takes the max.
     Q("q_fts_score_agg",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixagg")
@@ -1790,7 +1759,6 @@ object Fts extends QueryPack {
     // q_fts_analyzer's pipeline replay for ('query','window').
     Q("q_fts_stream_analyzer",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         val deltaDir = graft.core.Scratch.dir("fts_index_san_delta")
         val outDir = graft.core.Scratch.dir("fts_index_san_out")
         val landing = graft.core.Scratch.dir("docs_san_stream")
@@ -1834,7 +1802,6 @@ object Fts extends QueryPack {
     // single tokens, so its oracle predicate is plain equality.
     Q("q_fts_multicol",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         val path = s"$dir/documents.parquet"
         graft.fts.Index.createIndex(s, path,
           graft.core.Scratch.dir("fts_index_sql"))
@@ -2313,7 +2280,6 @@ object Fts extends QueryPack {
     // the BM25 formula over the v1 tokens.
     Q("q_fts_query_ranked",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql_pos"), positional = true)
         Tables(s, dir, "documents").createOrReplaceTempView("documents_qrank")
@@ -2356,7 +2322,6 @@ object Fts extends QueryPack {
     // levenshtein.
     Q("q_fts_query_fuzzy",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_qfuzz")
@@ -2386,7 +2351,6 @@ object Fts extends QueryPack {
     // the analyzed tokens.
     Q("q_fts_query_analyzer",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         // scratch COPY of the table: the catalog keys on (table, column),
         // and the shared fixture path must keep its v1 entry for the other
         // SQL queries
@@ -2432,7 +2396,6 @@ object Fts extends QueryPack {
     // replays the per-term weighted formula.
     Q("q_fts_query_boost",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
           graft.core.Scratch.dir("fts_index_sql_pos"), positional = true)
         Tables(s, dir, "documents").createOrReplaceTempView("documents_qboost")

@@ -370,7 +370,6 @@ object Pipeline extends QueryPack {
     // nfc_normalize, hash-exact.
     Q("q_dedup_nfc",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         Tables(s, dir, "documents").createOrReplaceTempView("documents_dnfc")
         s.sql("""WITH decomposed AS (
                    SELECT doc_id, text || ' cafe\u0301' AS t0 FROM documents_dnfc),
@@ -1051,7 +1050,6 @@ object Pipeline extends QueryPack {
     // oracle as q_sim_cosine — SQL and library brute force must agree.
     Q("q_sim_sql",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         graft.core.Tables.registerViews(s, dir)
         s.sql("""WITH e AS (SELECT vec_id, CAST(embedding AS ARRAY<DOUBLE>) AS v
                             FROM embeddings),
@@ -2248,7 +2246,6 @@ object Pipeline extends QueryPack {
     // normalized string proves byte identity with DuckDB's nfc_normalize.
     Q("q_text_nfc",
       (s, dir) => {
-        graft.ext.GraftExtensions.install(s)
         Tables(s, dir, "documents").createOrReplaceTempView("documents_nfc")
         s.sql("""SELECT doc_id,
                    CAST(length(raw) AS INT) AS len_raw,
@@ -4599,7 +4596,6 @@ object Pipeline extends QueryPack {
     // broadcast join; similarity only ever runs on dictionary pairs.
     Q("q_er_jw",
       (s, dir) => {
-        graft.ext.TextKernels.install(s)
         val parts = Tables(s, dir, "part")
         val len = length(col("p_name"))
         val pos = (pmod(col("p_partkey"), (len - 3).cast("long")) + 3)

@@ -55,7 +55,6 @@ class ScalarFunctionsSpec extends SparkSpec {
   }
 
   test("text_normalize: all four Unicode forms, codegen and SQL surface") {
-    graft.ext.GraftExtensions.install(spark)
     def norm(s: String, form: String): String = {
       import spark.implicits._
       Seq(s).toDF("s")

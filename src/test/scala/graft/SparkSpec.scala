@@ -13,13 +13,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = graft.core.GraftSession.localHive(SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
+    val s = graft.core.GraftSession.localHive(
+      graft.core.GraftSession.builder("local[4]", 4).appName("graft-test"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -128,8 +128,6 @@ class CodegenGateSpec extends SparkSpec {
   }
 
   test("text kernels compile clean over the fixture corpus") {
-    TextKernels.install(spark)
-    VecKernels.install(spark)
     val docs = spark.read.parquet(sf("documents"))
     val hits = captureFallbacks {
       val n = docs.select(

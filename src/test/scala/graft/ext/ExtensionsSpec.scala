@@ -8,7 +8,6 @@ import graft.SparkSpec
 class ExtensionsSpec extends SparkSpec {
 
   test("fts_tokenize expression matches Analyzer.tokenize semantics") {
-    GraftExtensions.install(spark)
     import spark.implicits._
     Seq(("Hello, WORLD!! 42", 1)).toDF("text", "id").createOrReplaceTempView("t_ext")
     val native = spark.sql("SELECT fts_tokenize(text) AS toks FROM t_ext")
@@ -20,7 +19,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fts_tokenize survives whole-stage codegen over the fixture") {
-    GraftExtensions.install(spark)
     spark.read.parquet(sf("documents")).createOrReplaceTempView("docs_ext")
     val n = spark.sql(
       "SELECT sum(size(fts_tokenize(text))) FROM docs_ext").collect()(0).getLong(0)
@@ -36,7 +34,6 @@ class ExtensionsSpec extends SparkSpec {
     }.forall(_.output.exists(_.name == "term"))
 
   test("fts_match rewrites to array_contains conjunction and filters correctly") {
-    GraftExtensions.install(spark)
     spark.read.parquet(sf("documents")).createOrReplaceTempView("docs_ext")
     val df = spark.sql(
       "SELECT doc_id FROM docs_ext WHERE fts_match(text, 'spark query')")
@@ -53,7 +50,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fts_match over a registered table lowers to a postings semi-join") {
-    GraftExtensions.install(spark)
     val docsPath = sf("documents")
     val ixDir = "/root/repo/target/ttmp/fts_index_spec"
     graft.fts.Index.write(graft.fts.Index.build(spark.read.parquet(docsPath)), ixDir)
@@ -78,7 +74,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fts_match_min: scan and index paths agree on the >= k distinct contract") {
-    GraftExtensions.install(spark)
     val docsPath = sf("documents")
     val ixDir = "/root/repo/target/ttmp/fts_index_min_spec"
     graft.fts.Index.write(graft.fts.Index.build(spark.read.parquet(docsPath)), ixDir)
@@ -150,7 +145,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("index path follows renames but refuses name-only impostors") {
-    GraftExtensions.install(spark)
     val docsPath = sf("documents")
     val ixDir = "/root/repo/target/ttmp/fts_index_lineage_spec"
     graft.fts.Index.write(graft.fts.Index.build(spark.read.parquet(docsPath)), ixDir)
@@ -193,7 +187,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fts_score: SQL ranked retrieval equals the library BM25 path") {
-    GraftExtensions.install(spark)
     val docsPath = sf("documents")
     val ixDir = "/root/repo/target/ttmp/fts_index_score_spec"
     graft.fts.Index.write(graft.fts.Index.build(spark.read.parquet(docsPath)), ixDir)
@@ -224,7 +217,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("two fts_score queries in one SELECT fold into two scoring joins") {
-    GraftExtensions.install(spark)
     val docsPath = sf("documents")
     val ixDir = "/root/repo/target/ttmp/fts_index_score2_spec"
     graft.fts.Index.write(graft.fts.Index.build(spark.read.parquet(docsPath)), ixDir)
@@ -255,7 +247,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("match+prefix+near conjuncts all lower over one positional index") {
-    GraftExtensions.install(spark)
     val docsPath = sf("documents")
     val docs = spark.read.parquet(docsPath)
     val posDir = "/root/repo/target/ttmp/fts_index_combo_spec"
@@ -283,7 +274,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fts_snippet: first-occurrence window, clipping, null on no match") {
-    GraftExtensions.install(spark)
     def snip(text: String, q: String, w: Int): Option[String] = {
       val r = spark.sql(
         s"SELECT fts_snippet('$text', '$q', $w) AS s").collect()(0)
@@ -302,7 +292,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fts_score directly in ORDER BY lowers and stays top-k") {
-    GraftExtensions.install(spark)
     val docsPath = sf("documents")
     val ixDir = "/root/repo/target/ttmp/fts_index_scoresort_spec"
     graft.fts.Index.write(graft.fts.Index.build(spark.read.parquet(docsPath)), ixDir)
@@ -334,7 +323,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fts_score without a registered index fails with the remedy") {
-    GraftExtensions.install(spark)
     graft.fts.IndexCatalog.clear()
     spark.read.parquet(sf("documents")).createOrReplaceTempView("docs_score_noix")
     val e = intercept[Throwable] {
@@ -346,7 +334,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fts_prefix: scan and index lowerings agree with the library path") {
-    GraftExtensions.install(spark)
     graft.fts.IndexCatalog.clear()
     val docsPath = sf("documents")
     val ixDir = "/root/repo/target/ttmp/fts_index_prefix_spec"
@@ -375,7 +362,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fts_wildcard: scan and index lowerings agree with the library path") {
-    GraftExtensions.install(spark)
     graft.fts.IndexCatalog.clear()
     val docsPath = sf("documents")
     val ixDir = "/root/repo/target/ttmp/fts_index_wc_spec"
@@ -398,7 +384,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fts_near: scan, tf-index residual, and positional lowerings agree") {
-    GraftExtensions.install(spark)
     graft.fts.IndexCatalog.clear()
     val docsPath = sf("documents")
     val docs = spark.read.parquet(docsPath)
@@ -439,7 +424,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fts_wildcard general patterns: scan and index lowerings agree") {
-    GraftExtensions.install(spark)
     graft.fts.IndexCatalog.clear()
     val docsPath = sf("documents")
     val docs = spark.read.parquet(docsPath)
@@ -473,7 +457,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fts_phrase_slop: scan, tf-index residual, and positional lowerings agree") {
-    GraftExtensions.install(spark)
     graft.fts.IndexCatalog.clear()
     val docsPath = sf("documents")
     val docs = spark.read.parquet(docsPath)
@@ -527,7 +510,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("stale index (table files changed after registration) falls back to scan") {
-    GraftExtensions.install(spark)
     val tmpTable = "/root/repo/target/ttmp/fts_stale_table"
     val ixDir = "/root/repo/target/ttmp/fts_stale_index"
     val docs = spark.read.parquet(sf("documents"))
@@ -557,7 +539,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("freshness TTL (opt-in) skips the re-listing, default stays exact") {
-    GraftExtensions.install(spark)
     val tmpTable = "/root/repo/target/ttmp/fts_ttl_table"
     val ixDir = "/root/repo/target/ttmp/fts_ttl_index"
     val docs = spark.read.parquet(sf("documents"))
@@ -582,7 +563,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fts_phrase: scan and index lowerings agree with the library path") {
-    GraftExtensions.install(spark)
     graft.fts.IndexCatalog.clear()
     val docsPath = sf("documents")
     spark.read.parquet(docsPath).createOrReplaceTempView("docs_phrase_spec")
@@ -634,7 +614,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("covered match plans agree with the scan lowering across random queries") {
-    GraftExtensions.install(spark)
     graft.fts.IndexCatalog.clear()
     val docsPath = sf("documents")
     val docs = spark.read.parquet(docsPath)
@@ -681,7 +660,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("a stale table drops EVERY column's entry, not just one") {
-    GraftExtensions.install(spark)
     val tmpTable = "/root/repo/target/ttmp/fts_stale_mc_table"
     val docs = spark.read.parquet(sf("documents"))
     docs.write.mode("overwrite").parquet(tmpTable)
@@ -700,7 +678,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("an analyzer-configured registration round-trips through restore") {
-    GraftExtensions.install(spark)
     val tmpTable = "/root/repo/target/ttmp/fts_restore_an_table"
     val ixDir = "/root/repo/target/ttmp/fts_restore_an_index"
     val docs = spark.read.parquet(sf("documents"))
@@ -727,7 +704,7 @@ class ExtensionsSpec extends SparkSpec {
     } finally graft.fts.IndexCatalog.clear()
   }
 
-  test("both installation paths expose the identical function surface") {
+  test("the factory session exposes the function surface, rule only in operator optimization") {
     val names = GraftExtensions.allFunctions.map(_._1.funcName).toSet
     assert(names == Set("fts_tokenize", "fts_match", "fts_match_any",
       "fts_match_min",
@@ -739,15 +716,42 @@ class ExtensionsSpec extends SparkSpec {
       "graft_shingle_hashes", "graft_minhash", "graft_simhash",
       "graft_intersect_card", "text_normalize", "graft_bigram_buckets",
       "porter_stem", "graft_char_trigrams", "jaro_winkler"))
-    GraftExtensions.install(spark)
     names.foreach { n =>
       assert(spark.sessionState.functionRegistry
         .functionExists(new org.apache.spark.sql.catalyst.FunctionIdentifier(n)), n)
     }
+    // Spark runs injected operator-optimization rules in both halves of
+    // that batch pair (before and after filter inference): once in each,
+    // never in the separate "User Provided Optimizers" batch
+    val placed = spark.sessionState.optimizer.batches
+      .flatMap(b => b.rules.filter(_ eq RewriteFtsMatch).map(_ => b.name))
+    assert(placed == Seq("Operator Optimization before Inferring Filters",
+      "Operator Optimization after Inferring Filters"), placed)
+    assert(spark.experimental.extraOptimizations.isEmpty)
+  }
+
+  test("a newSession() of the factory session keeps the functions and the rewrite") {
+    val s2 = spark.newSession()
+    assert(s2.sql("SELECT size(graft_minhash(graft_shingle_hashes('a b c d e')))")
+      .head().getInt(0) == 64)
+    val docsPath = sf("documents")
+    val ixDir = graft.core.Scratch.freshDir("fts_index_new_session_spec")
+    graft.fts.Index.write(graft.fts.Index.build(s2.read.parquet(docsPath)), ixDir)
+    graft.fts.IndexCatalog.register(docsPath, ixDir)
+    try {
+      s2.read.parquet(docsPath).createOrReplaceTempView("docs_new_session")
+      val df = s2.sql(
+        "SELECT doc_id FROM docs_new_session WHERE fts_match(text, 'spark query')")
+      assert(scansOnlyPostings(df),
+        s"expected an index-only postings plan, got:\n${df.queryExecution.optimizedPlan}")
+      val expect = graft.fts.Search.matchAllIds(
+          graft.fts.Index.build(s2.read.parquet(docsPath)), Seq("spark", "query"))
+        .collect().map(_.getLong(0)).toSet
+      assert(df.collect().map(_.getLong(0)).toSet == expect)
+    } finally graft.fts.IndexCatalog.clear()
   }
 
   test("fts_match with NULL query is null-filtered, not an execution crash") {
-    GraftExtensions.install(spark)
     spark.read.parquet(sf("documents")).createOrReplaceTempView("docs_ext")
     val n = spark.sql(
       "SELECT count(*) FROM docs_ext WHERE fts_match(text, NULL)").collect()(0).getLong(0)
@@ -758,7 +762,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fts_match with a non-literal query fails with a clear message") {
-    GraftExtensions.install(spark)
     spark.read.parquet(sf("documents")).createOrReplaceTempView("docs_ext")
     val e = intercept[Exception] {
       spark.sql("SELECT count(*) FROM docs_ext WHERE fts_match(text, lang)").collect()
@@ -767,7 +770,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("graft_dot SQL function: exact dot, null on ragged arrays") {
-    GraftExtensions.install(spark)
     val r = spark.sql(
       "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))").collect()(0)
     assert(r.getDouble(0) == 11.0)
@@ -787,7 +789,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("fts_match with no usable terms is false, not an error") {
-    GraftExtensions.install(spark)
     spark.read.parquet(sf("documents")).createOrReplaceTempView("docs_ext")
     val n = spark.sql(
       "SELECT count(*) FROM docs_ext WHERE fts_match(text, '!!! ...')").collect()(0).getLong(0)

@@ -249,7 +249,6 @@ class AnalyzerSpec extends SparkSpec {
 
   test("stemmed phrase and near serve from a positional analyzer index") {
     import spark.implicits._
-    graft.ext.GraftExtensions.install(spark)
     val docs = Seq(
       (1L, "run the queries against the window manager"), // query,against,window,… → NOT adjacent
       (2L, "query the window opens fast"),                 // the vanishes → query,window ADJACENT

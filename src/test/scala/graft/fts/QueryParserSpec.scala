@@ -258,16 +258,11 @@ class QueryParserSpec extends SparkSpec {
 
   // ---- SQL surface ----------------------------------------------------------
 
-  private def install(): Unit = {
-    graft.ext.GraftExtensions.install(spark)
-    IndexCatalog.clear()
-  }
-
   private def ids(sql: String): Set[Long] =
     spark.sql(sql).collect().map(_.getLong(0)).toSet
 
   test("fts_query equals the hand-written fts_match conjunction") {
-    install()
+    IndexCatalog.clear()
     spark.read.parquet(sf("documents")).createOrReplaceTempView("docs_qp")
     val viaQuery = ids(
       "SELECT doc_id FROM docs_qp WHERE fts_query(text, 'spark AND query')")
@@ -281,7 +276,7 @@ class QueryParserSpec extends SparkSpec {
   }
 
   test("foldable non-literal query strings are accepted") {
-    install()
+    IndexCatalog.clear()
     spark.read.parquet(sf("documents")).createOrReplaceTempView("docs_qp")
     val expect = ids(
       "SELECT doc_id FROM docs_qp WHERE fts_query(text, 'spark')")
@@ -291,7 +286,7 @@ class QueryParserSpec extends SparkSpec {
   }
 
   test("non-foldable / NULL / malformed queries raise AnalysisException") {
-    install()
+    IndexCatalog.clear()
     spark.read.parquet(sf("documents")).createOrReplaceTempView("docs_qp")
     intercept[org.apache.spark.sql.AnalysisException](
       spark.sql("SELECT doc_id FROM docs_qp WHERE fts_query(text, text)").collect())
@@ -302,7 +297,7 @@ class QueryParserSpec extends SparkSpec {
   }
 
   test("fuzzy query: index path equals the scan fallback, both non-empty") {
-    install()
+    IndexCatalog.clear()
     spark.read.parquet(sf("documents")).createOrReplaceTempView("docs_qp")
     // no registered index → ArrayExists + banded levenshtein over tokens
     val scan = ids(
@@ -318,7 +313,7 @@ class QueryParserSpec extends SparkSpec {
   }
 
   test("fts_query_score equals fts_score over the extracted scoring terms") {
-    install()
+    IndexCatalog.clear()
     Index.createIndex(spark, sf("documents"),
       "/root/repo/target/ttmp/fts_qp_rank")
     spark.read.parquet(sf("documents")).createOrReplaceTempView("docs_qp")
@@ -335,7 +330,7 @@ class QueryParserSpec extends SparkSpec {
   }
 
   test("boosted fts_query_score equals the weighted sum of score groups") {
-    install()
+    IndexCatalog.clear()
     Index.createIndex(spark, sf("documents"),
       "/root/repo/target/ttmp/fts_qp_boost")
     spark.read.parquet(sf("documents")).createOrReplaceTempView("docs_qp")
@@ -355,7 +350,7 @@ class QueryParserSpec extends SparkSpec {
     // no registered index → every leaf lowers to the stateless codegen
     // kernels, which are streaming-safe: the query language works at
     // INGEST (filter-at-source curation) without any index machinery
-    install()
+    IndexCatalog.clear()
     val sparkS = spark
     import sparkS.implicits._
     implicit val sqlCtx = sparkS.sqlContext
@@ -380,7 +375,7 @@ class QueryParserSpec extends SparkSpec {
   test("wildcard phrase matches on the SCAN path with 3VL nulls") {
     // no index: fts_phrase_wild lowers to per-offset slot checks over the
     // token array (exact = comparison, pattern = codegen'd LIKE)
-    install()
+    IndexCatalog.clear()
     val sparkS = spark
     import sparkS.implicits._
     val docs = Seq(
@@ -404,7 +399,7 @@ class QueryParserSpec extends SparkSpec {
   }
 
   test("fts_query serves an analyzer-configured index through entryTerms") {
-    install()
+    IndexCatalog.clear()
     try {
       val docsPath = sf("documents")
       val docs = spark.read.parquet(docsPath)
@@ -509,7 +504,7 @@ class QueryParserSpec extends SparkSpec {
   }
 
   test("fts_term_range SQL function matches scan and index paths alike") {
-    install()
+    IndexCatalog.clear()
     try {
       val docsPath = sf("documents")
       spark.read.parquet(docsPath).createOrReplaceTempView("docs_qp_r")
@@ -538,7 +533,7 @@ class QueryParserSpec extends SparkSpec {
   }
 
   test("fts_query field scopes serve each column's own index") {
-    install()
+    IndexCatalog.clear()
     try {
       val docsPath = sf("documents")
       Index.createIndex(spark, docsPath,

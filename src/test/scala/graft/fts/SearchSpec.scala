@@ -861,7 +861,6 @@ class SearchSpec extends SparkSpec {
     // buckets, under AQE. With df as a distinct aggregate broadcast back on
     // term and AND as a distinct-term count: fts_score top-k 8 jobs, 3-term
     // fts_match 3 jobs. With the window df and row-count matching: 6 and 2.
-    graft.ext.GraftExtensions.install(spark)
     graft.fts.IndexCatalog.clear()
     try {
       val table = graft.core.Scratch.freshDir("jobcount_table")

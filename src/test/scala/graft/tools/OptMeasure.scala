@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round measurement driver (guide §1: measure first).
   *
   * Times named queries in isolation with the SAME methodology as Bench
@@ -31,14 +29,8 @@ object OptMeasure {
       case a => sel += a
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.localHive(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
-      .getOrCreate()
-    graft.core.GraftSession.tune(spark)
+    val spark = graft.core.GraftSession.localHive(
+      graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // same session warmup as Bench so the first measured query isn't

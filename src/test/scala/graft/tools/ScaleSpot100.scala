@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** ×100 scale rehearsal (test-scope dev driver): materializes a
   * 100×-sf0.1 corpus (≈ sf10 — 500k documents, 200k embeddings, 60M
   * lineitem rows) with [[ScaleCorpus]]'s disjoint-id replica model and
@@ -34,14 +32,7 @@ object ScaleSpot100 {
     val base = ScaleCorpus.base
     val out = s"/root/repo/target/sfscale_x$factor"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    graft.core.GraftSession.tune(spark)
+    val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def ensure(name: String)(build: => Unit): Unit =
