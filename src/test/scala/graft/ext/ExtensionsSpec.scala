@@ -704,7 +704,10 @@ class ExtensionsSpec extends SparkSpec {
     } finally graft.fts.IndexCatalog.clear()
   }
 
-  test("the factory session exposes the function surface, rule only in operator optimization") {
+  // The surface reaches a session one way, spark.sql.extensions set by
+  // GraftSession.builder; the two paths checked here are the factory session
+  // itself and a newSession() of it, which re-applies the same extensions
+  test("both installation paths expose the identical function surface") {
     val names = GraftExtensions.allFunctions.map(_._1.funcName).toSet
     assert(names == Set("fts_tokenize", "fts_match", "fts_match_any",
       "fts_match_min",
@@ -716,18 +719,20 @@ class ExtensionsSpec extends SparkSpec {
       "graft_shingle_hashes", "graft_minhash", "graft_simhash",
       "graft_intersect_card", "text_normalize", "graft_bigram_buckets",
       "porter_stem", "graft_char_trigrams", "jaro_winkler"))
-    names.foreach { n =>
-      assert(spark.sessionState.functionRegistry
-        .functionExists(new org.apache.spark.sql.catalyst.FunctionIdentifier(n)), n)
+    for (s <- Seq(spark, spark.newSession())) {
+      names.foreach { n =>
+        assert(s.sessionState.functionRegistry
+          .functionExists(new org.apache.spark.sql.catalyst.FunctionIdentifier(n)), n)
+      }
+      // Spark runs injected operator-optimization rules in both halves of
+      // that batch pair (before and after filter inference): once in each,
+      // never in the separate "User Provided Optimizers" batch
+      val placed = s.sessionState.optimizer.batches
+        .flatMap(b => b.rules.filter(_ eq RewriteFtsMatch).map(_ => b.name))
+      assert(placed == Seq("Operator Optimization before Inferring Filters",
+        "Operator Optimization after Inferring Filters"), placed)
+      assert(s.experimental.extraOptimizations.isEmpty)
     }
-    // Spark runs injected operator-optimization rules in both halves of
-    // that batch pair (before and after filter inference): once in each,
-    // never in the separate "User Provided Optimizers" batch
-    val placed = spark.sessionState.optimizer.batches
-      .flatMap(b => b.rules.filter(_ eq RewriteFtsMatch).map(_ => b.name))
-    assert(placed == Seq("Operator Optimization before Inferring Filters",
-      "Operator Optimization after Inferring Filters"), placed)
-    assert(spark.experimental.extraOptimizations.isEmpty)
   }
 
   test("a newSession() of the factory session keeps the functions and the rewrite") {
