@@ -1349,7 +1349,8 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
     // doc_id scan and a plan that touches only the query terms' pruned
     // postings buckets (the covering-index property).
     // The covered CORE for a set of expressions over Filter(cond, …): the
-    // scoring subplan semi-joined with the conjuncts' id sets, plus the
+    // scoring subplan semi-joined with the conjuncts' id sets (none for a
+    // conjunct over exactly the score's term domain), plus the
     // attributes to rewrite with. None unless: every FtsScore in `exprs`
     // resolves to ONE (index, query); every non-score reference in `exprs`
     // is the id column; every conjunct is index-exact on the same id (or
@@ -1381,7 +1382,10 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
           }
           // classify conjuncts: each is an exact id set on the same id
           // attribute, an ignorable IsNotNull (implied by index-domain
-          // membership), or disqualifying
+          // membership), the score's own domain, or disqualifying
+          val scoreSet = scoreTerms.toSet
+          def onScoreIndex(a: Attribute) = entryFor(a).exists { case (e, id) =>
+            e.indexDir == entry.indexDir && id.exprId == idAttr.exprId }
           var bounding = false
           var ok = refsOk
           val idSets = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
@@ -1401,6 +1405,17 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
                   antiIdSets += df.queryExecution.optimizedPlan
                 case _ => ok = false
               }
+            // a conjunct whose docs are EXACTLY the score's term domain —
+            // fts_match_any over the score's term set, or fts_match over
+            // its single term — is what the scoring subplan already holds:
+            // it bounds the rows but needs no id set and no semi-join
+            case FtsMatchAny(a: Attribute, Literal(q2: UTF8String, StringType))
+                if onScoreIndex(a) && entryTerms(entry, q2).toSet == scoreSet =>
+              bounding = true
+            case FtsMatch(a: Attribute, Literal(q2: UTF8String, StringType))
+                if onScoreIndex(a) && scoreSet.size == 1 &&
+                  entryTerms(entry, q2).toSet == scoreSet =>
+              bounding = true
             case conj =>
               exactIdsDf(conj, entryFor) match {
                 case Some((df, conjId)) if conjId.exprId == idAttr.exprId =>

@@ -243,10 +243,13 @@ object AnalyzerConfig {
   * reversed layouts only filter or project those rows (reversal is
   * injective), and [[IncrementalIndex.readAsOf]] re-aggregates the merged
   * log per (term, doc_id). The query operators rely on it: document
-  * frequency is a plain row count per term ([[Search.scoreAllBm25]]) and
-  * the AND / minimum-should-match id sets count rows per doc
+  * frequency is a plain row count per term ([[Search.scoreAllBm25]]), the
+  * AND / minimum-should-match id sets count rows per doc
   * ([[Search.matchAllIds]], [[Search.matchMinIds]]) — no distinct
-  * aggregate. A hand-assembled index must keep the contract too.
+  * aggregate — and a one-term id set ([[Search.matchAllIds]] /
+  * [[Search.matchAnyIds]] given one distinct term) is that term's postings
+  * projected to `doc_id`, with no de-duplication at all. A hand-assembled
+  * index must keep the contract too.
   */
 final case class FtsIndex(
     postings: DataFrame, // term, doc_id, tf
@@ -734,12 +737,24 @@ object Search {
 
   /** doc_ids containing ALL of the terms (boolean AND = postings intersect:
     * filter to the query's terms, count matched terms per doc — a row
-    * count, since postings are unique per (term, doc_id), see [[FtsIndex]]). */
+    * count, since postings are unique per (term, doc_id), see [[FtsIndex]]).
+    * One distinct term is that term's postings projected to `doc_id`
+    * ([[singleTermIds]]). */
   def matchAllIds(ix: FtsIndex, terms: Seq[String]): DataFrame =
-    ix.postings.filter(col("term").isin(terms.distinct: _*))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_terms"))
-      .filter(col("n_terms") === terms.distinct.size)
-      .select("doc_id")
+    terms.distinct match {
+      case Seq(t) => singleTermIds(ix, t)
+      case ts =>
+        ix.postings.filter(col("term").isin(ts: _*))
+          .groupBy("doc_id").agg(count(lit(1)).as("n_terms"))
+          .filter(col("n_terms") === ts.size)
+          .select("doc_id")
+    }
+
+  /** doc_ids containing `term`: its postings rows projected to `doc_id` —
+    * already distinct by the [[FtsIndex]] uniqueness contract, so no
+    * aggregate and no exchange. */
+  private def singleTermIds(ix: FtsIndex, term: String): DataFrame =
+    ix.postings.filter(col("term") === term).select("doc_id")
 
   /** Candidate ids for a case-insensitive SUBSTRING needle over a
     * trigram index ([[Index.buildTrigram]]): docs holding ALL the
@@ -824,10 +839,17 @@ object Search {
       .select(col(idCol))
   }
 
-  /** doc_ids containing ANY of the terms (boolean OR = postings union). */
+  /** doc_ids containing ANY of the terms (boolean OR = postings union).
+    * One distinct term is that term's postings projected to `doc_id`, with
+    * no `distinct`: the [[FtsIndex]] uniqueness contract already makes its
+    * ids distinct. */
   def matchAnyIds(ix: FtsIndex, terms: Seq[String]): DataFrame =
-    ix.postings.filter(col("term").isin(terms.distinct: _*))
-      .select("doc_id").distinct()
+    terms.distinct match {
+      case Seq(t) => singleTermIds(ix, t)
+      case ts =>
+        ix.postings.filter(col("term").isin(ts: _*))
+          .select("doc_id").distinct()
+    }
 
   /** doc_ids containing at least `minMatch` DISTINCT of the terms —
     * Lucene BooleanQuery.setMinimumNumberShouldMatch / Elasticsearch's

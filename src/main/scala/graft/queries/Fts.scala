@@ -696,9 +696,10 @@ object Fts extends QueryPack {
     // RANKED retrieval on the SQL surface: fts_score lowers (for the
     // registered table) to a left-outer join against the per-doc BM25
     // scoring subplan over partition-pruned postings, and ORDER BY score
-    // LIMIT 10 plans as TakeOrderedAndProject. fts_match_any supplies the
-    // candidate filter (docs with >=1 query term — exactly the set the
-    // oracle scores), so rows must equal q_fts_bm25's.
+    // LIMIT 10 plans as TakeOrderedAndProject. fts_match_any over the same
+    // terms keeps docs with >=1 query term — exactly the set the scoring
+    // subplan (and the oracle) scores, so it adds no semi-join — and rows
+    // must equal q_fts_bm25's.
     Q("q_fts_sql_bm25",
       (s, dir) => {
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",

@@ -15,6 +15,10 @@ class PlanShapeSpec extends SparkSpec {
       org.apache.spark.sql.execution.FormattedMode)
   }
 
+  /** File scans over an index's postings directory in a formatted plan. */
+  private def postingsScans(plan: String): Int =
+    plan.linesIterator.count(l => l.startsWith("Location:") && l.contains("/postings]"))
+
   test("q_sim_sql: SQL cosine top-k is a TakeOrderedAndProject, no global sort") {
     val plan = planOf("q_sim_sql")
     assert(plan.contains("TakeOrderedAndProject"),
@@ -156,8 +160,10 @@ class PlanShapeSpec extends SparkSpec {
         "ranked retrieval must score from the index, not re-tokenize the corpus")
       assert(plan.contains("PartitionFilters: [((bucket"),
         "postings scans must prune to the query terms' buckets")
-      assert(plan.contains("LeftSemi"),
-        "the fts_match_any candidate filter must lower to the postings semi-join")
+      // fts_match_any over the score's own terms is the scoring subplan's
+      // domain: no candidate semi-join, one postings scan for the query
+      assert(!plan.contains("LeftSemi") && postingsScans(plan) == 1,
+        s"a candidate filter over the score's terms must add no semi-join:\n${plan.linesIterator.take(40).mkString("\n")}")
       // the 100× guarantee: dl is denormalized onto the posting rows at
       // Index.write, so scoring never scans the O(corpus) doclens table —
       // the only corpus-wide input left is the 1-row stats broadcast
@@ -208,11 +214,13 @@ class PlanShapeSpec extends SparkSpec {
     graft.fts.IndexCatalog.clear()
     val plan = planOf("q_fts_sql_analyzer")
     try {
-      assert(plan.contains("LeftSemi"),
-        "the candidate filter must lower to the postings semi-join")
+      // the candidate filter's ANALYZED terms equal the score's, so it is
+      // the scoring subplan's domain: no semi-join, one postings scan
+      assert(!plan.contains("LeftSemi") && postingsScans(plan) == 1,
+        s"the analyzed candidate filter must add no semi-join:\n${plan.linesIterator.take(40).mkString("\n")}")
       // 'the queries window' must reach the postings scan as the ANALYZED
-      // terms — stopword dropped, plural stemmed — or the semi-join would
-      // probe terms the stemmed index never carries
+      // terms — stopword dropped, plural stemmed — or the scan would probe
+      // terms the stemmed index never carries
       assert(plan.contains("In(term, [query,window])"),
         s"query terms must be analyzer-normalized:\n${plan.linesIterator.take(40).mkString("\n")}")
       assert(!plan.contains("fts_tokenize"),

@@ -853,6 +853,20 @@ class SearchSpec extends SparkSpec {
       assert(and.nonEmpty && and == ids(minIdsDistinct(ix, Seq("w0", "w3", "w17"), 3)), kind)
       for (m <- 1 to 3) assert(ids(Search.matchMinIds(ix, terms, m)) ==
         ids(minIdsDistinct(ix, terms, m)), s"$kind, minMatch=$m")
+      // one distinct term: the term's postings projected to doc_id, with
+      // no de-duplication — every id must still come back exactly once
+      // (w39 is re-sent by the upsert, w0 sits in most docs, a repeated
+      // term is one term)
+      for (one <- Seq(Seq("w0"), Seq("w39", "w39"), Seq("w17"), Seq("absent"))) {
+        val ref = ids(minIdsDistinct(ix, one, 1))
+        for ((op, got) <- Seq("matchAllIds" -> Search.matchAllIds(ix, one),
+            "matchAnyIds" -> Search.matchAnyIds(ix, one))) {
+          val rows = got.collect().map(_.getLong(0))
+          assert(rows.toSet == ref && rows.length == ref.size,
+            s"$kind, $op($one): ${rows.length} rows for ${ref.size} docs")
+        }
+        assert(one == Seq("absent") || ref.nonEmpty, s"$kind, $one")
+      }
     }
   }
 
@@ -861,6 +875,9 @@ class SearchSpec extends SparkSpec {
     // buckets, under AQE. With df as a distinct aggregate broadcast back on
     // term and AND as a distinct-term count: fts_score top-k 8 jobs, 3-term
     // fts_match 3 jobs. With the window df and row-count matching: 6 and 2.
+    // With one-term id sets as plain postings projections and no candidate
+    // semi-join over the score's own terms: top-k 4, one-word fts_match 1,
+    // fts_query('+w0 -w3 w17') 3 (was 6, 2 and 6).
     graft.fts.IndexCatalog.clear()
     try {
       val table = graft.core.Scratch.freshDir("jobcount_table")
@@ -872,20 +889,94 @@ class SearchSpec extends SparkSpec {
         "FROM jobcount_docs WHERE fts_match_any(text, 'w0 w17') " +
         "ORDER BY score DESC, doc_id LIMIT 10"
       val and = "SELECT doc_id FROM jobcount_docs WHERE fts_match(text, 'w0 w3 w17')"
+      val one = "SELECT doc_id FROM jobcount_docs WHERE fts_match(text, 'w17')"
+      val qstring = "SELECT doc_id FROM jobcount_docs WHERE fts_query(text, '+w0 -w3 w17')"
       def warmJobs(sql: String): Int = {
         spark.sql(sql).collect()
         JobCount(spark)(spark.sql(sql).collect())._2
       }
       val (topkJobs, andJobs) = (warmJobs(topk), warmJobs(and))
-      assert(topkJobs <= 6, s"fts_score top-k launched $topkJobs jobs")
+      val (oneJobs, qstringJobs) = (warmJobs(one), warmJobs(qstring))
+      assert(topkJobs <= 4, s"fts_score top-k launched $topkJobs jobs")
       assert(andJobs <= 2, s"3-term fts_match launched $andJobs jobs")
+      assert(oneJobs <= 1, s"one-word fts_match launched $oneJobs jobs")
+      assert(qstringJobs <= 3, s"fts_query('+w0 -w3 w17') launched $qstringJobs jobs")
       // the lowering is still exact
       val ix = Index.build(skewed)
-      assert(spark.sql(and).collect().map(_.getLong(0)).toSet ==
-        Search.matchAllIds(ix, Seq("w0", "w3", "w17")).collect().map(_.getLong(0)).toSet)
+      def idList(d: org.apache.spark.sql.DataFrame) =
+        d.collect().map(_.getLong(0)).sorted.toSeq
+      assert(idList(spark.sql(and)) == idList(Search.matchAllIds(ix, Seq("w0", "w3", "w17"))))
+      assert(idList(spark.sql(one)) == idList(Search.matchAllIds(ix, Seq("w17"))))
+      assert(idList(spark.sql(qstring)) ==
+        idList(Search.matchBoolean(skewed, ix, Seq("w0", "w17"), Seq("w3")).select("doc_id")))
       assert(spark.sql(topk).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
         Search.scoreBm25(ix, Seq("w0", "w17"), 10).collect()
           .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+    } finally graft.fts.IndexCatalog.clear()
+  }
+
+  test("a candidate filter over exactly the fts_score terms adds no semi-join; any other term set keeps it") {
+    import spark.implicits._
+    def plan(sql: String) = spark.sql(sql).queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    def rows(sql: String) = spark.sql(sql).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    graft.fts.IndexCatalog.clear()
+    try {
+      val table = graft.core.Scratch.freshDir("elision_table")
+      skewed.write.mode("overwrite").parquet(table)
+      spark.read.parquet(table).createOrReplaceTempView("elision_docs")
+      Index.createIndex(spark, table, graft.core.Scratch.freshDir("elision_ix"))
+      def topk(cands: String) =
+        "SELECT doc_id, round(fts_score(text, 'w0 w17'), 4) AS score " +
+          s"FROM elision_docs WHERE fts_match_any(text, '$cands') " +
+          "ORDER BY score DESC, doc_id LIMIT 10"
+      // same set (order and repetition aside), a subset, a superset
+      val cases = Seq("w17 w0 w0" -> false, "w0" -> true, "w0 w17 w3" -> true)
+      val indexed = cases.map { case (cands, semi) =>
+        val p = plan(topk(cands))
+        assert(p.contains("LeftSemi") == semi,
+          s"fts_match_any(text, '$cands'): LeftSemi expected $semi:\n$p")
+        rows(topk(cands))
+      }
+      // fts_score has no scan lowering, so the reference is the filter's
+      // scan lowering (no index registered) scored by the in-memory index:
+      // docs without a score term score 0, as coalesce gives in SQL
+      val scores = Search.scoreAllBm25(Index.build(skewed), Seq("w0", "w17"))
+        .select(col("doc_id"), round(col("score"), 4)).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      graft.fts.IndexCatalog.clear()
+      cases.map(_._1).zip(indexed).foreach { case (cands, got) =>
+        val want = spark.sql(
+            s"SELECT doc_id FROM elision_docs WHERE fts_match_any(text, '$cands')")
+          .collect().map(_.getLong(0)).toSeq
+          .map(id => (id, scores.getOrElse(id, 0.0)))
+          .sortBy { case (id, sc) => (-sc, id) }.take(10)
+        assert(got.nonEmpty && got == want, s"fts_match_any(text, '$cands')")
+      }
+
+      // an analyzer index compares ANALYZED term sets: 'the queries window'
+      // is [query, window] — the score's domain
+      val cfg = AnalyzerConfig(stopWords = Seq("the"), sStem = true)
+      val docs = Seq(
+        (1L, "run the queries against the window manager"),
+        (2L, "query the window opens fast"),
+        (3L, "windows everywhere"),
+        (4L, "nothing relevant here at all"),
+        (5L, "many queries later")).toDF("doc_id", "text")
+      val anTable = graft.core.Scratch.freshDir("elision_an_table")
+      docs.write.mode("overwrite").parquet(anTable)
+      spark.read.parquet(anTable).createOrReplaceTempView("elision_an_docs")
+      Index.createIndex(spark, anTable, graft.core.Scratch.freshDir("elision_an_ix"),
+        analyzer = cfg)
+      val an = "SELECT doc_id, round(fts_score(text, 'window query'), 4) AS score " +
+        "FROM elision_an_docs WHERE fts_match_any(text, 'the queries window') " +
+        "ORDER BY score DESC, doc_id LIMIT 10"
+      val anPlan = plan(an)
+      assert(!anPlan.contains("LeftSemi"), s"analyzed same-set filter kept a semi-join:\n$anPlan")
+      assert(rows(an) == Search.scoreBm25(Index.buildWithAnalyzer(docs, cfg),
+          Seq("window", "query"), 10).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
     } finally graft.fts.IndexCatalog.clear()
   }
 }
