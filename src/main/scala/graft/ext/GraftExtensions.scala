@@ -469,6 +469,16 @@ object FtsSnippet {
   }
 }
 
+/** A boolean `fts_*` predicate. Unevaluable: [[RewriteFtsMatch]] lowers
+  * every one onto an index id set or a scan kernel during optimization.
+  * The covered-match pass keys on this trait, so it considers each
+  * predicate the id-set lowering knows without a list of its own. */
+sealed trait FtsPredicate extends Expression
+    with org.apache.spark.sql.catalyst.expressions.Unevaluable {
+  override def dataType: DataType = BooleanType
+  override def nullable: Boolean = true
+}
+
 /** `fts_match(text, 'q terms')`: true iff the document contains ALL query
   * terms (token-level AND). Left unevaluated at runtime on purpose: the
   * analyzer accepts it, and [[RewriteFtsMatch]] lowers it to plain
@@ -476,11 +486,8 @@ object FtsSnippet {
   * the same "rewrite the predicate, let the engine optimize the rest"
   * pattern as the reference's LikeSimplification (Optimizer.scala:99) and
   * RewritePredicateSubquery (Optimizer.scala:123). */
-case class FtsMatch(left: Expression, right: Expression)
-    extends Expression with org.apache.spark.sql.catalyst.expressions.Unevaluable {
+case class FtsMatch(left: Expression, right: Expression) extends FtsPredicate {
   override def children: Seq[Expression] = Seq(left, right)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
   override def prettyName: String = "fts_match"
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FtsMatch =
     copy(left = newChildren(0), right = newChildren(1))
@@ -490,11 +497,8 @@ case class FtsMatch(left: Expression, right: Expression)
   * LEAST ONE query term (token-level OR). Lowered by [[RewriteFtsMatch]]
   * exactly like [[FtsMatch]] — index path is a semi-join against the ANY
   * postings (no per-doc term-count filter), scan path an OR conjunction. */
-case class FtsMatchAny(left: Expression, right: Expression)
-    extends Expression with org.apache.spark.sql.catalyst.expressions.Unevaluable {
+case class FtsMatchAny(left: Expression, right: Expression) extends FtsPredicate {
   override def children: Seq[Expression] = Seq(left, right)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
   override def prettyName: String = "fts_match_any"
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FtsMatchAny =
     copy(left = newChildren(0), right = newChildren(1))
@@ -512,10 +516,8 @@ case class FtsMatchAny(left: Expression, right: Expression)
   * may drop stopwords — a data condition); k < 1 fails loud. */
 case class FtsMatchMin(first: Expression, second: Expression,
                        third: Expression)
-    extends Expression with org.apache.spark.sql.catalyst.expressions.Unevaluable {
+    extends FtsPredicate {
   override def children: Seq[Expression] = Seq(first, second, third)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
   override def prettyName: String = "fts_match_min"
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FtsMatchMin =
     copy(first = newChildren(0), second = newChildren(1), third = newChildren(2))
@@ -527,11 +529,8 @@ case class FtsMatchMin(first: Expression, second: Expression,
   * scan path = token-canonical substring containment; index path =
   * all-terms postings semi-join (cheap candidates) + the same containment
   * as a residual filter. */
-case class FtsPhrase(left: Expression, right: Expression)
-    extends Expression with org.apache.spark.sql.catalyst.expressions.Unevaluable {
+case class FtsPhrase(left: Expression, right: Expression) extends FtsPredicate {
   override def children: Seq[Expression] = Seq(left, right)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
   override def prettyName: String = "fts_phrase"
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FtsPhrase =
     copy(left = newChildren(0), right = newChildren(1))
@@ -545,11 +544,8 @@ case class FtsPhrase(left: Expression, right: Expression)
   * a POSITIONAL v1 index ([[graft.fts.Search.matchPhraseWildPositional]]);
   * scan path = per-start-offset slot checks over the token array (exact
   * slots compare, pattern slots run the codegen'd LIKE). */
-case class FtsPhraseWild(left: Expression, right: Expression)
-    extends Expression with org.apache.spark.sql.catalyst.expressions.Unevaluable {
+case class FtsPhraseWild(left: Expression, right: Expression) extends FtsPredicate {
   override def children: Seq[Expression] = Seq(left, right)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
   override def prettyName: String = "fts_phrase_wild"
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FtsPhraseWild =
     copy(left = newChildren(0), right = newChildren(1))
@@ -583,11 +579,8 @@ case class FtsScore(left: Expression, right: Expression)
   * [[RewriteFtsMatch]]: index path = a term-RANGE semi-join against the
   * term-sorted postings ([[graft.fts.Search.matchPrefixIds]]; row-group
   * min/max pruning); scan path = the [[FtsHasTokenPrefix]] kernel. */
-case class FtsPrefix(left: Expression, right: Expression)
-    extends Expression with org.apache.spark.sql.catalyst.expressions.Unevaluable {
+case class FtsPrefix(left: Expression, right: Expression) extends FtsPredicate {
   override def children: Seq[Expression] = Seq(left, right)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
   override def prettyName: String = "fts_prefix"
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FtsPrefix =
     copy(left = newChildren(0), right = newChildren(1))
@@ -604,10 +597,8 @@ case class FtsPrefix(left: Expression, right: Expression)
   * kernel. */
 case class FtsTermRange(text: Expression, lo: Expression, hi: Expression,
                         inclLo: Expression, inclHi: Expression)
-    extends Expression with org.apache.spark.sql.catalyst.expressions.Unevaluable {
+    extends FtsPredicate {
   override def children: Seq[Expression] = Seq(text, lo, hi, inclLo, inclHi)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
   override def prettyName: String = "fts_term_range"
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FtsTermRange =
     copy(text = newChildren(0), lo = newChildren(1), hi = newChildren(2),
@@ -623,10 +614,8 @@ case class FtsTermRange(text: Expression, lo: Expression, hi: Expression,
   * [[FtsNearTokens]] kernel as residual; unindexed, the kernel alone. */
 case class FtsNear(text: Expression, termA: Expression, termB: Expression,
                    slop: Expression)
-    extends Expression with org.apache.spark.sql.catalyst.expressions.Unevaluable {
+    extends FtsPredicate {
   override def children: Seq[Expression] = Seq(text, termA, termB, slop)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
   override def prettyName: String = "fts_near"
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FtsNear =
     copy(text = newChildren(0), termA = newChildren(1), termB = newChildren(2),
@@ -644,10 +633,8 @@ case class FtsNear(text: Expression, termA: Expression, termB: Expression,
   * alone. */
 case class FtsPhraseSlop(text: Expression, phrase: Expression,
                          slop: Expression)
-    extends Expression with org.apache.spark.sql.catalyst.expressions.Unevaluable {
+    extends FtsPredicate {
   override def children: Seq[Expression] = Seq(text, phrase, slop)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
   override def prettyName: String = "fts_phrase_slop"
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FtsPhraseSlop =
     copy(text = newChildren(0), phrase = newChildren(1), slop = newChildren(2))
@@ -664,11 +651,8 @@ case class FtsPhraseSlop(text: Expression, phrase: Expression,
   * postings ([[graft.fts.Search.matchPatternIds]]), scan path an
   * exists(tokens, LIKE). `fts_prefix` is the tail-less special case with
   * its own simpler lowering. */
-case class FtsWildcard(left: Expression, right: Expression)
-    extends Expression with org.apache.spark.sql.catalyst.expressions.Unevaluable {
+case class FtsWildcard(left: Expression, right: Expression) extends FtsPredicate {
   override def children: Seq[Expression] = Seq(left, right)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
   override def prettyName: String = "fts_wildcard"
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FtsWildcard =
     copy(left = newChildren(0), right = newChildren(1))
@@ -684,10 +668,8 @@ case class FtsWildcard(left: Expression, right: Expression)
   * threshold form bails out of the DP early, so a long token costs
   * O(len·k), not O(len²)). */
 case class FtsFuzzy(text: Expression, term: Expression, maxEdits: Expression)
-    extends Expression with org.apache.spark.sql.catalyst.expressions.Unevaluable {
+    extends FtsPredicate {
   override def children: Seq[Expression] = Seq(text, term, maxEdits)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
   override def prettyName: String = "fts_fuzzy"
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FtsFuzzy =
     copy(text = newChildren(0), term = newChildren(1), maxEdits = newChildren(2))
@@ -708,35 +690,45 @@ case class FtsFuzzy(text: Expression, term: Expression, maxEdits: Expression)
   * matched rows drive the ordinary id-set semi-join. Scan path: an
   * exists(tokens, RLIKE) over the token array. Keep patterns RE2-portable
   * (no lookaround/backrefs) — the oracle engine replays them. */
-case class FtsRegexp(text: Expression, pattern: Expression)
-    extends Expression with org.apache.spark.sql.catalyst.expressions.Unevaluable {
+case class FtsRegexp(text: Expression, pattern: Expression) extends FtsPredicate {
   override def children: Seq[Expression] = Seq(text, pattern)
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
   override def prettyName: String = "fts_regexp"
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): FtsRegexp =
     copy(text = newChildren(0), pattern = newChildren(1))
 }
 
-/** Lowers [[FtsMatch]] along one of two paths:
+/** Lowers every `fts_*` predicate and `fts_score` during optimization, in
+  * five passes:
   *
-  *  1. **Index-backed** (the 100 TB path): a `fts_match` conjunct in a
-  *     `Filter` directly over a table registered in
-  *     [[graft.fts.IndexCatalog]] becomes a LEFT-SEMI join against the
-  *     persisted bucketed postings ([[graft.fts.Index.lookup]]), so the
-  *     postings scan partition-prunes to the query terms' hash buckets —
-  *     ~|terms| buckets read instead of the whole corpus. Same
+  *  1. **Covered score**: an id-only projection or sort over `fts_score`
+  *     whose WHERE conjuncts are all index-exact, one of them bounding the
+  *     rows to the score's terms, is the BM25 scoring subplan semi-joined
+  *     with the conjuncts' id sets. The corpus is never scanned.
+  *  2. **Covered match**: `SELECT id-only … WHERE <index-exact conjuncts>`
+  *     is the conjuncts' id sets semi-joined, negations anti-joined.
+  *  3. **Score join**: any other `fts_score` over a registered table
+  *     becomes a left-outer join against the per-doc BM25 scores of the
+  *     persisted index.
+  *  4. **WHERE pass**: each conjunct a registered index answers
+  *     ([[lowerConjunct]]) becomes a join step over the corpus scan,
+  *     against postings partition-pruned to the query terms' buckets. Same
   *     predicate→semi-join shape as the reference's
   *     RewritePredicateSubquery (Optimizer.scala:123); the pruning rides
   *     the stock partition-pruning pathway (FileSourceStrategy.scala:78).
-  *  2. **Scan fallback**: any remaining `fts_match` is rewritten to
-  *     `array_contains(fts_tokenize(text), term) AND …` — a full scan, but
-  *     codegen'd and pushdown-friendly like any predicate.
+  *  5. **Scan fallback**: whatever is left becomes codegen'd kernels over
+  *     `fts_tokenize(text)`, e.g. `array_contains(fts_tokenize(text), term)
+  *     AND …` — a full scan, but pushdown-friendly like any predicate.
+  *
+  * Passes 1, 2 and 4 share one id-set lowering, [[exactIdsDf]]; the WHERE
+  * pass adds only the forms that need the corpus row (negation under
+  * IsNotNull, token-kernel residuals). Every lowering runs the same
+  * argument checks, so a predicate's answer does not depend on which
+  * index, if any, is registered.
   */
 object RewriteFtsMatch extends Rule[LogicalPlan]
     with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
   import org.apache.spark.sql.catalyst.expressions.{Alias, And, ArrayContains, Attribute, Coalesce, EqualTo, ExprId, IsNotNull, Literal, NamedExpression}
-  import org.apache.spark.sql.catalyst.plans.{LeftOuter, LeftSemi}
+  import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftOuter, LeftSemi}
   import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, Project, SubqueryAlias}
   import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
   import graft.fts.IndexCatalog
@@ -792,47 +784,23 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
     Contains(canonical, s(" " + terms.mkString(" ") + " "))
   }
 
-  // rewritable-conjunct modes
-  private val ModeAll = 0
-  private val ModeAny = 1
-  private val ModePhrase = 2
-
   /** An attribute's resolved index binding: the entry serving it plus the
     * child-level id attribute to semi-join on. A table can carry SEVERAL
     * indexes (one per text column), so every conjunct resolves its OWN
     * binding from the attribute it scores/filters. */
   private type EntryFor = Attribute => Option[(IndexCatalog.Entry, Attribute)]
 
-  /** A Filter conjunct the index path can lower, bound to the entry that
-    * answers it (and the id attribute its id set joins on). */
-  private sealed trait FtsConjunct
-  private final case class TermsConj(entry: IndexCatalog.Entry,
-                                     idAttr: Attribute, attr: Attribute,
-                                     q: UTF8String, mode: Int)
-      extends FtsConjunct
-  /** `NOT fts_match(_any)` — lowered as a LEFT-ANTI join on the same id
-    * sets the positive forms semi-join (the library's mustNot semantics,
-    * [[graft.fts.Search.matchBoolean]]). `requireAll` mirrors the inner
-    * predicate: NOT match = anti on the all-terms ids, NOT match_any =
-    * anti on the any-term ids. `attr` (the text column) rides along for the
-    * IsNotNull conjunct: a NULL-text doc has no postings, so the bare
-    * anti-join would KEEP it while the scan path's NOT(NULL) = NULL drops
-    * it — three-valued semantics must not depend on index registration. */
-  private final case class NotTermsConj(entry: IndexCatalog.Entry,
-                                        idAttr: Attribute, attr: Attribute,
-                                        q: UTF8String, requireAll: Boolean)
-      extends FtsConjunct
-  /** A DISJUNCTION whose every branch is exactly answerable from the index
-    * — lowered as one semi-join against the UNION of the branches' id
-    * sets (branches may target DIFFERENT indexed columns of the table, as
-    * long as they share the id attribute the union joins on). Branches
-    * needing a text residual (phrase/near over a tf-only index)
-    * disqualify the whole disjunction (the residual would have to apply
-    * per-branch, which a union of ids cannot express) and it falls back
-    * to the scan lowering instead. */
-  private final case class OrConj(idAttr: Attribute,
-                                  ids: Seq[org.apache.spark.sql.DataFrame])
-      extends FtsConjunct
+  /** The argument checks every lowering of a predicate runs, so the scan
+    * fallback and the index plans reject the same call with one message. */
+  private def checkEdits(k: Int): Unit =
+    if (k < 1 || k > 2) throw new IllegalArgumentException(
+      s"fts_fuzzy requires maxEdits in {1, 2}, got $k")
+  private def checkSlop(fn: String, slop: Int): Unit =
+    if (slop < 0) throw new IllegalArgumentException(
+      s"$fn requires a non-negative slop, got $slop")
+  private def checkMinMatch(k: Int): Unit =
+    if (k < 1) throw new IllegalArgumentException(
+      s"fts_match_min: minimum_should_match must be >= 1, got $k")
 
   /** The exact doc-id set for one positive fts predicate over its resolved
     * entry's persisted index — with the id attribute the set joins on — or
@@ -860,8 +828,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
                        Literal(k: Int, org.apache.spark.sql.types.IntegerType))
           if entryFor(a).isDefined =>
         val (entry, idAttr) = entryFor(a).get
-        if (k < 1) throw new IllegalArgumentException(
-          s"fts_match_min: minimum_should_match must be >= 1, got $k")
+        checkMinMatch(k)
         val ts = entryTerms(entry, q)
         Some((if (ts.isEmpty || k > ts.distinct.size) emptyIds(entry)
           else graft.fts.Search.matchMinIds(graft.fts.FtsIndex(
@@ -891,6 +858,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
                    Literal(sl: Int, org.apache.spark.sql.types.IntegerType))
           if entryFor(a).exists(_._1.positional) =>
         val (entry, idAttr) = entryFor(a).get
+        checkSlop("fts_near", sl)
         val (na, nb) = (entryNearTerm(entry, singleTerm(ta, "fts_near")),
           entryNearTerm(entry, singleTerm(tb, "fts_near")))
         Some((if (na.isEmpty || nb.isEmpty) emptyIds(entry)
@@ -898,8 +866,9 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
             na.get, nb.get, sl, entry.buckets), idAttr))
       case FtsPhraseSlop(a: Attribute, Literal(q: UTF8String, StringType),
                          Literal(sl: Int, org.apache.spark.sql.types.IntegerType))
-          if sl >= 0 && entryFor(a).exists(_._1.positional) =>
+          if entryFor(a).exists(_._1.positional) =>
         val (entry, idAttr) = entryFor(a).get
+        checkSlop("fts_phrase_slop", sl)
         val ts = entryPhraseTerms(entry, q)
         Some((if (ts.isEmpty) emptyIds(entry)
           else graft.fts.Search.matchPhraseSloppy(
@@ -931,6 +900,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
           // distance against the raw query term measures the wrong space
           if entryFor(a).exists(_._1.analyzer.isV1) =>
         val (entry, idAttr) = entryFor(a).get
+        checkEdits(k)
         Some((graft.fts.Search.matchFuzzyIds(persistedIx(entry),
           singleTerm(t, "fts_fuzzy"), k), idAttr))
       case FtsRegexp(a: Attribute, Literal(p: UTF8String, StringType))
@@ -942,7 +912,10 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
           p.toString), idAttr))
       // a disjunction whose every branch is index-exact on the SAME id is
       // itself index-exact: the union of the branch id sets (recursive, so
-      // nested Ors flatten; mirrors the filter pass's OrConj)
+      // nested Ors flatten). Branches over different indexed columns are
+      // fine (same doc id); mixed id attributes cannot union. A branch
+      // needing a text residual (phrase/near over a tf-only index) is not
+      // index-exact, so the whole disjunction falls to the scan lowering
       case or: org.apache.spark.sql.catalyst.expressions.Or =>
         val branches = splitDisjunctivePredicates(or)
           .map(b => exactIdsDf(b, entryFor))
@@ -976,59 +949,69 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
       case _ => None
     }
   }
-  private final case class PrefixConj(entry: IndexCatalog.Entry,
-                                      idAttr: Attribute, prefix: String)
-      extends FtsConjunct
-  private final case class RangeConj(entry: IndexCatalog.Entry,
-                                     idAttr: Attribute, lo: String,
-                                     hi: String, inclLo: Boolean,
-                                     inclHi: Boolean)
-      extends FtsConjunct
-  private final case class WildcardConj(entry: IndexCatalog.Entry,
-                                        idAttr: Attribute, head: String,
-                                        tail: String)
-      extends FtsConjunct
-  private final case class FuzzyConj(entry: IndexCatalog.Entry,
-                                     idAttr: Attribute, term: String,
-                                     maxEdits: Int)
-      extends FtsConjunct
-  /** GENERAL wildcard (multi-star / '?') — a pushed literal-head range +
-    * per-term LIKE over the pruned postings; the single-star form keeps
-    * its LIKE-free [[WildcardConj]] plan. */
-  private final case class PatternConj(entry: IndexCatalog.Entry,
-                                       idAttr: Attribute, pattern: String)
-      extends FtsConjunct
-  /** `fts_regexp` / the query language's `/pattern/` — anchored-literal-
-    * prefix term range + full-match RLIKE residual over the pruned
-    * postings ([[graft.fts.Search.matchRegexpIds]]). */
-  private final case class RegexpConj(entry: IndexCatalog.Entry,
-                                      idAttr: Attribute, pattern: String)
-      extends FtsConjunct
-  /** `fts_match_min` — minimum-should-match boolean: ≥ k of the query's
-    * terms present. Postings-only (per-doc distinct-term count over the
-    * terms' pruned postings), so it composes with other index conjuncts
-    * in the semi-join fold instead of forcing a corpus scan. */
-  private final case class MinConj(entry: IndexCatalog.Entry,
-                                   idAttr: Attribute, q: UTF8String, k: Int)
-      extends FtsConjunct
-  /** `fts_phrase_wild` — wildcard-slot phrase; index-exact only against a
-    * POSITIONAL v1 index (patterns measure the v1 term space, and the
-    * adjacency fold needs position lists). */
-  private final case class WildPhraseConj(entry: IndexCatalog.Entry,
-                                          idAttr: Attribute,
-                                          slots: Seq[String])
-      extends FtsConjunct
-  private final case class NearConj(entry: IndexCatalog.Entry,
-                                    idAttr: Attribute, attr: Attribute,
-                                    a: String, b: String, slop: Int)
-      extends FtsConjunct
-  /** `fts_phrase_slop` — ordered sloppy phrase. Positional entry: pure
-    * postings plan; tf-only v1 entry: all-terms candidates + the ordered
-    * window kernel as residual over candidates only. */
-  private final case class SlopConj(entry: IndexCatalog.Entry,
-                                    idAttr: Attribute, attr: Attribute,
-                                    q: UTF8String, slop: Int)
-      extends FtsConjunct
+  /** `cur` joined with an id set (first column) on `idAttr`. */
+  private def idJoin(cur: LogicalPlan, idAttr: Attribute, ids: LogicalPlan,
+                     joinType: org.apache.spark.sql.catalyst.plans.JoinType): LogicalPlan =
+    Join(cur, ids, joinType, Some(EqualTo(idAttr, ids.output.head)), JoinHint.NONE)
+
+  /** One WHERE conjunct as a step over the plan it filters, or None when no
+    * registered index answers it (the scan fallback lowers it then):
+    *  - an id set [[exactIdsDf]] answers is semi-joined;
+    *  - `NOT fts_match(_any)` anti-joins the positive id set (the
+    *    library's mustNot, [[graft.fts.Search.matchBoolean]]) under
+    *    IsNotNull(text): a NULL-text doc has no postings, so the bare
+    *    anti-join would keep it while the scan path's NOT(NULL) drops it.
+    *    No usable terms is the scan path's NOT(false), a no-op that keeps
+    *    NULL-text rows too;
+    *  - phrase, near and sloppy phrase over a tf-only v1 index semi-join
+    *    the all-terms candidates, then verify them with the token kernel.
+    *    An analyzer index has no such residual: the kernels re-tokenize
+    *    text with the v1 grammar, which does not speak analyzed positions. */
+  private def lowerConjunct(c: Expression, entryFor: EntryFor)
+      : Option[LogicalPlan => LogicalPlan] = {
+    import org.apache.spark.sql.catalyst.expressions.Not
+    import org.apache.spark.sql.types.IntegerType
+    def negated(a: Attribute, q: UTF8String, requireAll: Boolean) =
+      entryFor(a).map { case (entry, idAttr) =>
+        val terms = entryTerms(entry, q)
+        if (terms.isEmpty) identity[LogicalPlan] _
+        else {
+          val ids = matchingIds(entry, terms, requireAll)
+          (cur: LogicalPlan) => idJoin(Filter(IsNotNull(a), cur), idAttr, ids, LeftAnti)
+        }
+      }
+    def verified(a: Attribute, terms: Seq[String], residual: Expression) =
+      entryFor(a).filter { case (e, _) => e.analyzer.isV1 && !e.positional }
+        .map { case (entry, idAttr) =>
+          if (terms.isEmpty) Filter(Literal.FalseLiteral, _: LogicalPlan)
+          else {
+            val ids = matchingIds(entry, terms, requireAll = true)
+            (cur: LogicalPlan) => Filter(residual, idJoin(cur, idAttr, ids, LeftSemi))
+          }
+        }
+    exactIdsDf(c, entryFor).map { case (df, idAttr) =>
+      val ids = df.queryExecution.optimizedPlan
+      (cur: LogicalPlan) => idJoin(cur, idAttr, ids, LeftSemi)
+    }.orElse(c match {
+      case Not(FtsMatch(a: Attribute, Literal(q: UTF8String, StringType))) =>
+        negated(a, q, requireAll = true)
+      case Not(FtsMatchAny(a: Attribute, Literal(q: UTF8String, StringType))) =>
+        negated(a, q, requireAll = false)
+      case FtsPhrase(a: Attribute, Literal(q: UTF8String, StringType)) =>
+        verified(a, queryTerms(q), phraseContains(a, phraseTerms(q)))
+      case FtsNear(a: Attribute, Literal(ta: UTF8String, StringType),
+                   Literal(tb: UTF8String, StringType), Literal(sl: Int, IntegerType)) =>
+        checkSlop("fts_near", sl)
+        val (na, nb) = (singleTerm(ta, "fts_near"), singleTerm(tb, "fts_near"))
+        verified(a, Seq(na, nb), FtsNearTokens(a, na, nb, sl))
+      case FtsPhraseSlop(a: Attribute, Literal(q: UTF8String, StringType),
+                         Literal(sl: Int, IntegerType)) =>
+        checkSlop("fts_phrase_slop", sl)
+        val terms = phraseTerms(q)
+        verified(a, terms.distinct, FtsPhraseSlopTokens(a, terms, sl))
+      case _ => None
+    })
+  }
 
   /** Validated (head, tail) of a single-star wildcard pattern. */
   private def parseWildcard(p: UTF8String): (String, String) = {
@@ -1156,8 +1139,8 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
 
   /** The persisted index as a lookup-ready handle, cached per (session,
     * indexDir) in [[IndexCatalog.cachedIndex]] — re-opening the parquet on
-    * every optimizer pass cost a file LISTING per query even when the TTL
-    * fingerprint check passed. */
+    * every optimizer pass cost a file LISTING per query on top of the
+    * fingerprint check. */
   private def persistedIx(entry: IndexCatalog.Entry): graft.fts.FtsIndex =
     IndexCatalog.cachedIndex(
       org.apache.spark.sql.SparkSession.active, entry)
@@ -1327,8 +1310,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
             if (terms.isEmpty) repl((dirKey, q)) = Literal(0.0)
             else {
               val sub = scoringPlan(entry, terms)
-              cur = Join(cur, sub, LeftOuter,
-                Some(EqualTo(idAttr, sub.output.head)), JoinHint.NONE)
+              cur = idJoin(cur, idAttr, sub, LeftOuter)
               repl((dirKey, q)) = Coalesce(Seq(sub.output(1), Literal(0.0)))
             }
           }
@@ -1443,13 +1425,10 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
             val scoreIdAttr = cur.output.head
             val scoreAttr = cur.output(1)
             idSets.foreach { ids =>
-              cur = Join(cur, ids, LeftSemi,
-                Some(EqualTo(scoreIdAttr, ids.output.head)), JoinHint.NONE)
+              cur = idJoin(cur, scoreIdAttr, ids, LeftSemi)
             }
             antiIdSets.foreach { ids =>
-              cur = Join(cur, ids,
-                org.apache.spark.sql.catalyst.plans.LeftAnti,
-                Some(EqualTo(scoreIdAttr, ids.output.head)), JoinHint.NONE)
+              cur = idJoin(cur, scoreIdAttr, ids, LeftAnti)
             }
             Some((cur, scoreIdAttr, scoreAttr, idAttr.exprId))
           }
@@ -1528,14 +1507,11 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
             var core = exact.head._2._1.queryExecution.optimizedPlan
             exact.tail.foreach { case (_, (df, _)) =>
               val p = df.queryExecution.optimizedPlan
-              core = Join(core, p, LeftSemi,
-                Some(EqualTo(core.output.head, p.output.head)), JoinHint.NONE)
+              core = idJoin(core, core.output.head, p, LeftSemi)
             }
             anti.foreach { case (_, (df, _)) =>
               val p = df.queryExecution.optimizedPlan
-              core = Join(core, p,
-                org.apache.spark.sql.catalyst.plans.LeftAnti,
-                Some(EqualTo(core.output.head, p.output.head)), JoinHint.NONE)
+              core = idJoin(core, core.output.head, p, LeftAnti)
             }
             val coreId = core.output.head
             val newList = projectList.map { ne =>
@@ -1562,14 +1538,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
     // scanned.
     val sortCovered = plan.transformUp {
       case p @ Project(projectList, Filter(cond, grandchild))
-          if p.resolved &&
-            cond.exists(e => e.isInstanceOf[FtsMatch] ||
-              e.isInstanceOf[FtsMatchAny] || e.isInstanceOf[FtsMatchMin] ||
-              e.isInstanceOf[FtsPhrase] ||
-              e.isInstanceOf[FtsPrefix] || e.isInstanceOf[FtsWildcard] ||
-              e.isInstanceOf[FtsTermRange] || e.isInstanceOf[FtsNear] ||
-              e.isInstanceOf[FtsPhraseSlop] ||
-              e.isInstanceOf[FtsPhraseWild]) &&
+          if p.resolved && cond.exists(_.isInstanceOf[FtsPredicate]) &&
             !projectList.exists(_.exists(_.isInstanceOf[FtsScore])) =>
         coveredMatch(projectList, cond, grandchild) match {
           case Some(covered) =>
@@ -1654,250 +1623,22 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
           case None => agg
         }
     }
+    // WHERE pass: each conjunct an index answers becomes a join step over
+    // the Filter of the rest, one WHERE clause possibly probing several
+    // indexed columns (title AND body) of the same table
     val indexAware = scoreAware.transformUp {
       case f @ Filter(cond, child) if f.resolved =>
-        indexedTable(child) match {
-          case Some((entryFor, effChild)) =>
-            // classified rewritable fts conjuncts, each bound to the entry
-            // resolved from ITS OWN attribute — one WHERE clause may probe
-            // several indexed columns (title AND body) of the same table
-            val (fts, rest) = splitConjunctivePredicates(cond).partitionMap {
-              case FtsMatch(a: Attribute, Literal(q: UTF8String, StringType))
-                  if entryFor(a).isDefined =>
-                val (e, id) = entryFor(a).get
-                Left(TermsConj(e, id, a, q, ModeAll))
-              case FtsMatchAny(a: Attribute, Literal(q: UTF8String, StringType))
-                  if entryFor(a).isDefined =>
-                val (e, id) = entryFor(a).get
-                Left(TermsConj(e, id, a, q, ModeAny))
-              case FtsPhrase(a: Attribute, Literal(q: UTF8String, StringType))
-                  // v1: positional exact or containment residual; analyzer:
-                  // only a positional index can answer (the residual's v1
-                  // re-tokenize of text does not speak analyzed positions)
-                  if entryFor(a).exists(e => e._1.analyzer.isV1 || e._1.positional) =>
-                val (e, id) = entryFor(a).get
-                Left(TermsConj(e, id, a, q, ModePhrase))
-              case org.apache.spark.sql.catalyst.expressions.Not(
-                  FtsMatch(a: Attribute, Literal(q: UTF8String, StringType)))
-                  if entryFor(a).isDefined =>
-                val (e, id) = entryFor(a).get
-                Left(NotTermsConj(e, id, a, q, requireAll = true))
-              case org.apache.spark.sql.catalyst.expressions.Not(
-                  FtsMatchAny(a: Attribute, Literal(q: UTF8String, StringType)))
-                  if entryFor(a).isDefined =>
-                val (e, id) = entryFor(a).get
-                Left(NotTermsConj(e, id, a, q, requireAll = false))
-              case FtsPrefix(a: Attribute, Literal(p: UTF8String, StringType))
-                  if entryFor(a).exists(_._1.analyzer.isV1) =>
-                val (e, id) = entryFor(a).get
-                Left(PrefixConj(e, id, normPrefix(p)))
-              case FtsTermRange(a: Attribute,
-                                Literal(lo: UTF8String, StringType),
-                                Literal(hi: UTF8String, StringType),
-                                Literal(il: Boolean, BooleanType),
-                                Literal(ih: Boolean, BooleanType))
-                  if entryFor(a).exists(_._1.analyzer.isV1) =>
-                val (e, id) = entryFor(a).get
-                Left(RangeConj(e, id, lo.toString, hi.toString, il, ih))
-              case FtsWildcard(a: Attribute, Literal(p: UTF8String, StringType))
-                  if entryFor(a).exists(_._1.analyzer.isV1) =>
-                val (e, id) = entryFor(a).get
-                if (isSimpleWildcard(p)) {
-                  val (h, t) = parseWildcard(p)
-                  Left(WildcardConj(e, id, h, t))
-                } else Left(PatternConj(e, id, normPattern(p)))
-              case FtsFuzzy(a: Attribute, Literal(t: UTF8String, StringType),
-                            Literal(k: Int, org.apache.spark.sql.types.IntegerType))
-                  if entryFor(a).exists(_._1.analyzer.isV1) =>
-                val (e, id) = entryFor(a).get
-                Left(FuzzyConj(e, id, singleTerm(t, "fts_fuzzy"), k))
-              case FtsRegexp(a: Attribute, Literal(p: UTF8String, StringType))
-                  if entryFor(a).exists(_._1.analyzer.isV1) =>
-                val (e, id) = entryFor(a).get
-                Left(RegexpConj(e, id, p.toString))
-              case FtsMatchMin(a: Attribute, Literal(q: UTF8String, StringType),
-                               Literal(k: Int, org.apache.spark.sql.types.IntegerType))
-                  if entryFor(a).isDefined =>
-                if (k < 1) throw new IllegalArgumentException(
-                  s"fts_match_min: minimum_should_match must be >= 1, got $k")
-                val (e, id) = entryFor(a).get
-                Left(MinConj(e, id, q, k))
-              case or: org.apache.spark.sql.catalyst.expressions.Or =>
-                val branchIds = splitDisjunctivePredicates(or)
-                  .map(b => exactIdsDf(b, entryFor))
-                if (branchIds.forall(_.isDefined)) {
-                  val resolved = branchIds.flatten
-                  // one union semi-join has ONE join key: branches over
-                  // different indexed columns are fine (same doc id), but
-                  // mixed id attributes cannot union
-                  resolved.map(_._2.exprId).distinct match {
-                    case Seq(_) =>
-                      Left(OrConj(resolved.head._2, resolved.map(_._1)))
-                    case _ => Right(or)
-                  }
-                } else Right(or)
-              case FtsPhraseWild(a: Attribute, Literal(q: UTF8String, StringType))
-                  // positional v1 only: patterns measure the v1 term
-                  // space, and the fold needs position lists — no tf-only
-                  // residual exists (the scan path handles unindexed runs)
-                  if entryFor(a).exists(e => e._1.analyzer.isV1 && e._1.positional) =>
-                val (e, id) = entryFor(a).get
-                Left(WildPhraseConj(e, id, wildSlots(q)))
-              case FtsNear(a: Attribute, Literal(ta: UTF8String, StringType),
-                           Literal(tb: UTF8String, StringType),
-                           Literal(sl: Int, org.apache.spark.sql.types.IntegerType))
-                  if entryFor(a).exists(e => e._1.analyzer.isV1 || e._1.positional) =>
-                val (e, id) = entryFor(a).get
-                Left(NearConj(e, id, a, singleTerm(ta, "fts_near"),
-                  singleTerm(tb, "fts_near"), sl))
-              case FtsPhraseSlop(a: Attribute, Literal(q: UTF8String, StringType),
-                                 Literal(sl: Int, org.apache.spark.sql.types.IntegerType))
-                  // positional: index-exact; tf-only v1: candidates + the
-                  // token-kernel residual (an analyzer tf-only index can't
-                  // answer — the residual's v1 re-tokenize of text does not
-                  // speak analyzed positions)
-                  if sl >= 0 &&
-                    entryFor(a).exists(e => e._1.analyzer.isV1 || e._1.positional) =>
-                val (e, id) = entryFor(a).get
-                Left(SlopConj(e, id, a, q, sl))
-              case other => Right(other)
-            }
-            if (fts.isEmpty) f
-            else {
-              rewrote = true
-              val base = rest.reduceOption(And).map(Filter(_, effChild))
-                .getOrElse(effChild)
-              def semi(cur: LogicalPlan, sub: LogicalPlan,
-                       idAttr: Attribute): LogicalPlan =
-                Join(cur, sub, LeftSemi,
-                  Some(EqualTo(idAttr, sub.output.head)), JoinHint.NONE)
-              val folded = fts.foldLeft(base) {
-                case (cur, TermsConj(entry, idAttr, a, q, mode)) =>
-                  val terms = entryTerms(entry, q)
-                  if (terms.isEmpty) Filter(Literal.FalseLiteral, cur)
-                  else if (mode == ModePhrase && entry.positional)
-                    // a POSITIONAL index answers the phrase exactly from
-                    // position lists — no containment residual, text never
-                    // re-read (Search.matchPhrasePositional). Analyzer
-                    // entries match in analyzed space: entryPhraseTerms
-                    // replays the pipeline ordered, and the stored
-                    // positions are analyzed-stream offsets
-                    semi(cur, graft.fts.Search.matchPhrasePositional(
-                      persistedIx(entry), entryPhraseTerms(entry, q),
-                      entry.buckets)
-                      .queryExecution.optimizedPlan, idAttr)
-                  else {
-                    val joined = semi(cur,
-                      matchingIds(entry, terms, requireAll = mode != ModeAny),
-                      idAttr)
-                    // phrase over tf-only postings: all-terms candidates +
-                    // containment verified as a residual over candidates
-                    if (mode == ModePhrase)
-                      Filter(phraseContains(a, phraseTerms(q)), joined)
-                    else joined
-                  }
-                case (cur, NotTermsConj(entry, idAttr, a, q, requireAll)) =>
-                  val terms = entryTerms(entry, q)
-                  // NOT over no usable terms is NOT(false) = true: keep all
-                  if (terms.isEmpty) cur
-                  else {
-                    val sub = matchingIds(entry, terms, requireAll)
-                    // IsNotNull mirrors the scan path's three-valued logic:
-                    // NOT fts_match(NULL, …) is NULL there, so the doc drops
-                    Join(Filter(IsNotNull(a), cur), sub,
-                      org.apache.spark.sql.catalyst.plans.LeftAnti,
-                      Some(EqualTo(idAttr, sub.output.head)), JoinHint.NONE)
-                  }
-                case (cur, OrConj(idAttr, ids)) =>
-                  // one semi-join against the UNION of the branch id sets
-                  semi(cur, ids.reduce(_ unionByName _).distinct()
-                    .queryExecution.optimizedPlan, idAttr)
-                case (cur, PrefixConj(entry, idAttr, p)) =>
-                  // term-RANGE over the sorted postings (row-group min/max
-                  // pruning; hash buckets can't help a prefix)
-                  semi(cur, graft.fts.Search.matchPrefixIds(persistedIx(entry), p)
-                    .queryExecution.optimizedPlan, idAttr)
-                case (cur, RangeConj(entry, idAttr, lo, hi, il, ih)) =>
-                  // user-bounded term RANGE — the prefix window generalized
-                  semi(cur, graft.fts.Search.matchTermRangeIds(
-                    persistedIx(entry), lo, hi, il, ih)
-                    .queryExecution.optimizedPlan, idAttr)
-                case (cur, WildcardConj(entry, idAttr, h, t)) =>
-                  semi(cur, wildcardIdsDf(entry, h, t)
-                    .queryExecution.optimizedPlan, idAttr)
-                case (cur, PatternConj(entry, idAttr, pat)) =>
-                  semi(cur, patternIdsDf(entry, pat)
-                    .queryExecution.optimizedPlan, idAttr)
-                case (cur, RegexpConj(entry, idAttr, pat)) =>
-                  // prefix-ranged full-match RLIKE over the pruned
-                  // postings — dictionary-sized, the corpus never sees
-                  // the regex engine
-                  semi(cur, graft.fts.Search.matchRegexpIds(
-                    persistedIx(entry), pat)
-                    .queryExecution.optimizedPlan, idAttr)
-                case (cur, MinConj(entry, idAttr, q, k)) =>
-                  // per-doc distinct-term count ≥ k over the terms' pruned
-                  // postings (same plan as the single-predicate path)
-                  val ts = entryTerms(entry, q)
-                  if (ts.isEmpty || k > ts.distinct.size)
-                    Filter(Literal.FalseLiteral, cur)
-                  else semi(cur, graft.fts.Search.matchMinIds(
-                    graft.fts.FtsIndex(graft.fts.Index.lookup(
-                      persistedIx(entry), ts.distinct, entry.buckets),
-                      null, null), ts, k)
-                    .queryExecution.optimizedPlan, idAttr)
-                case (cur, WildPhraseConj(entry, idAttr, slots)) =>
-                  // position-list adjacency fold with pattern-slot unions
-                  // — pure postings plan, text never re-read
-                  if (slots.isEmpty) Filter(Literal.FalseLiteral, cur)
-                  else semi(cur,
-                    graft.fts.Search.matchPhraseWildPositional(
-                      persistedIx(entry), slots, entry.buckets)
-                      .queryExecution.optimizedPlan, idAttr)
-                case (cur, FuzzyConj(entry, idAttr, t, k)) =>
-                  // distance over the length-banded term dictionary; the
-                  // matched terms drive the ordinary postings union — the
-                  // corpus side never sees the distance function
-                  semi(cur, graft.fts.Search.matchFuzzyIds(
-                    persistedIx(entry), t, k)
-                    .queryExecution.optimizedPlan, idAttr)
-                case (cur, NearConj(entry, idAttr, a, ta, tb, sl)) =>
-                  if (entry.positional) {
-                    val (na, nb) = (entryNearTerm(entry, ta),
-                      entryNearTerm(entry, tb))
-                    // an operand the analyzer drops has no postings: the
-                    // proximity can never hold
-                    if (na.isEmpty || nb.isEmpty)
-                      Filter(Literal.FalseLiteral, cur)
-                    else semi(cur, graft.fts.Search.matchNear(
-                      persistedIx(entry), na.get, nb.get, sl, entry.buckets)
-                      .queryExecution.optimizedPlan, idAttr)
-                  } else
-                    // tf-only index: both-terms candidates, then the token
-                    // proximity kernel as residual over candidates only
-                    Filter(FtsNearTokens(a, ta, tb, sl),
-                      semi(cur, matchingIds(entry, Seq(ta, tb),
-                        requireAll = true), idAttr))
-                case (cur, SlopConj(entry, idAttr, a, q, sl)) =>
-                  val terms = entryPhraseTerms(entry, q)
-                  if (terms.isEmpty) Filter(Literal.FalseLiteral, cur)
-                  else if (entry.positional)
-                    // positions answer the ordered window exactly — no
-                    // residual, text never re-read
-                    semi(cur, graft.fts.Search.matchPhraseSloppy(
-                      persistedIx(entry), terms, sl, entry.buckets)
-                      .queryExecution.optimizedPlan, idAttr)
-                  else
-                    // tf-only v1 index: all-terms candidates, ordered
-                    // window kernel as residual over candidates only
-                    Filter(FtsPhraseSlopTokens(a, terms, sl),
-                      semi(cur, matchingIds(entry, terms.distinct,
-                        requireAll = true), idAttr))
-              }
-              // an id column re-threaded for the join must not leak upward
-              if (effChild eq child) folded else Project(child.output, folded)
-            }
-          case None => f
+        indexedTable(child).fold[LogicalPlan](f) { case (entryFor, effChild) =>
+          val (steps, rest) = splitConjunctivePredicates(cond)
+            .partitionMap(c => lowerConjunct(c, entryFor).toLeft(c))
+          if (steps.isEmpty) f
+          else {
+            rewrote = true
+            val base = rest.reduceOption(And).fold(effChild)(Filter(_, effChild))
+            val folded = steps.foldLeft(base)((cur, step) => step(cur))
+            // an id column re-threaded for the join must not leak upward
+            if (effChild eq child) folded else Project(child.output, folded)
+          }
         }
     }
     // The semi-join just dropped the only reference to the text column, but
@@ -1928,8 +1669,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
           .reduce(org.apache.spark.sql.catalyst.expressions.Or(_, _))
       case FtsMatchMin(text, Literal(q: UTF8String, StringType),
                        Literal(k: Int, org.apache.spark.sql.types.IntegerType)) =>
-        if (k < 1) throw new IllegalArgumentException(
-          s"fts_match_min: minimum_should_match must be >= 1, got $k")
+        checkMinMatch(k)
         val terms = queryTerms(q).distinct
         if (terms.isEmpty || k > terms.size) Literal.FalseLiteral
         else org.apache.spark.sql.catalyst.expressions.GreaterThanOrEqual(
@@ -1976,14 +1716,12 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
       case FtsNear(text, Literal(ta: UTF8String, StringType),
                    Literal(tb: UTF8String, StringType),
                    Literal(sl: Int, org.apache.spark.sql.types.IntegerType)) =>
-        if (sl < 0) throw new IllegalArgumentException(
-          s"fts_near requires a non-negative slop, got $sl")
+        checkSlop("fts_near", sl)
         FtsNearTokens(text, singleTerm(ta, "fts_near"),
           singleTerm(tb, "fts_near"), sl)
       case FtsPhraseSlop(text, Literal(q: UTF8String, StringType),
                          Literal(sl: Int, org.apache.spark.sql.types.IntegerType)) =>
-        if (sl < 0) throw new IllegalArgumentException(
-          s"fts_phrase_slop requires a non-negative slop, got $sl")
+        checkSlop("fts_phrase_slop", sl)
         val terms = phraseTerms(q)
         if (terms.isEmpty) Literal.FalseLiteral
         // slop 0 is the exact phrase — same containment lowering, so the
@@ -1997,8 +1735,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
         // and bails out of the DP band early, so a long token costs
         // O(len·k) not O(len²). Same 3VL as the other kernels: NULL text
         // → NULL (ArrayExists over a NULL array).
-        if (k < 1 || k > 2) throw new IllegalArgumentException(
-          s"fts_fuzzy requires maxEdits in {1, 2}, got $k")
+        checkEdits(k)
         val term = singleTerm(t, "fts_fuzzy")
         val v = org.apache.spark.sql.catalyst.expressions.NamedLambdaVariable(
           "t", StringType, nullable = false)
@@ -2032,32 +1769,9 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
             org.apache.spark.sql.catalyst.expressions.RLike(v,
               Literal(UTF8String.fromString("^(?:" + pat + ")$"), StringType)),
             Seq(v)))
-      // NULL query literal: three-valued logic, same as every SQL predicate
-      case FtsMatch(_, Literal(null, _)) => Literal(null, BooleanType)
-      case FtsMatchAny(_, Literal(null, _)) => Literal(null, BooleanType)
-      case FtsMatchMin(_, q, k)
-          if Seq(q, k).exists {
-            case Literal(null, _) => true; case _ => false } =>
-        Literal(null, BooleanType)
-      case FtsPhrase(_, Literal(null, _)) => Literal(null, BooleanType)
-      case FtsPhraseWild(_, Literal(null, _)) => Literal(null, BooleanType)
-      case FtsPrefix(_, Literal(null, _)) => Literal(null, BooleanType)
-      case FtsWildcard(_, Literal(null, _)) => Literal(null, BooleanType)
-      case FtsRegexp(_, Literal(null, _)) => Literal(null, BooleanType)
-      case FtsNear(_, a, b, s)
-          if Seq(a, b, s).exists {
-            case Literal(null, _) => true; case _ => false } =>
-        Literal(null, BooleanType)
-      case FtsFuzzy(_, t, k)
-          if Seq(t, k).exists {
-            case Literal(null, _) => true; case _ => false } =>
-        Literal(null, BooleanType)
-      case FtsPhraseSlop(_, q, s)
-          if Seq(q, s).exists {
-            case Literal(null, _) => true; case _ => false } =>
-        Literal(null, BooleanType)
-      case FtsTermRange(_, lo, hi, il, ih)
-          if Seq(lo, hi, il, ih).exists {
+      // a NULL argument literal: three-valued logic, same as every SQL
+      // predicate (child 0 is the text column of every predicate)
+      case p: FtsPredicate if p.children.tail.exists {
             case Literal(null, _) => true; case _ => false } =>
         Literal(null, BooleanType)
       // anything else (non-literal query) would otherwise survive as an

@@ -79,8 +79,7 @@ object IndexCatalog {
     * (every directory, `_`-prefixed ones included) and hashes the same
     * strings, so fingerprints stored by earlier builds stay valid. On an
     * object store it is the same LIST the subsequent scan planning issues
-    * anyway (set [[freshnessTtlMs]] if the optimizer-time LIST shows up in
-    * profiles). `_`-prefixed bookkeeping files (_SUCCESS) are skipped, same
+    * anyway. `_`-prefixed bookkeeping files (_SUCCESS) are skipped, same
     * as Spark's own file-index listing. */
   def tableFingerprint(tablePath: String): Long = {
     val path = new org.apache.hadoop.fs.Path(tablePath)
@@ -227,42 +226,20 @@ object IndexCatalog {
           .map(AnalyzerConfig.parse).getOrElse(AnalyzerConfig())))
   }
 
-  /** Freshness-check TTL in ms. 0 (default) = re-list the table's files on
-    * every optimizer pass — correctness-first staleness detection. On an
-    * object store with millions of files that LIST is real planning
-    * latency; set a small TTL (e.g. 30000) to amortize it across queries,
-    * accepting a ≤ TTL window in which a just-rewritten table could still
-    * be answered from the old index. */
-  @volatile var freshnessTtlMs: Long = 0L
-
-  private val lastChecked = new ConcurrentHashMap[String, java.lang.Long]()
-
   /** ALL fresh entries for `tablePath` (one per indexed column, textCol
     * order for determinism). Freshness is per table: one listing checks
     * every entry's stored fingerprint — an entry whose fingerprint differs
     * (table rewritten after indexing) is dropped so callers fall back to
-    * non-index semantics. Within [[freshnessTtlMs]] of the last successful
-    * check the listing is skipped. */
+    * non-index semantics. */
   def entriesFor(tablePath: String): Seq[Entry] = {
     val key = canon(tablePath)
     import scala.jdk.CollectionConverters._
     val es = byPathCol.asScala.filter(_._1._1 == key).toSeq
     if (es.isEmpty) Nil
     else {
-      val now = System.currentTimeMillis()
-      val recent = freshnessTtlMs > 0 &&
-        Option(lastChecked.get(key)).exists(now - _ < freshnessTtlMs)
-      val fp: Option[Long] =
-        if (recent) None // all entries passed within the TTL
-        else scala.util.Try(tableFingerprint(tablePath)).toOption
-      val (fresh, stale) =
-        if (recent) (es, Nil)
-        else es.partition { case (_, e) => fp.contains(e.fingerprint) }
+      val fp = scala.util.Try(tableFingerprint(tablePath)).toOption
+      val (fresh, stale) = es.partition { case (_, e) => fp.contains(e.fingerprint) }
       stale.foreach { case (k, e) => byPathCol.remove(k, e) }
-      if (!recent) {
-        if (stale.isEmpty && fresh.nonEmpty) lastChecked.put(key, now)
-        else lastChecked.remove(key)
-      }
       fresh.map(_._2).sortBy(_.textCol)
     }
   }
@@ -270,5 +247,5 @@ object IndexCatalog {
   /** The first fresh entry for `tablePath` (single-index convenience). */
   def get(tablePath: String): Option[Entry] = entriesFor(tablePath).headOption
 
-  def clear(): Unit = { byPathCol.clear(); lastChecked.clear(); ixCache.clear() }
+  def clear(): Unit = { byPathCol.clear(); ixCache.clear() }
 }

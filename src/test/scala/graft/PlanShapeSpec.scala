@@ -466,9 +466,9 @@ class PlanShapeSpec extends SparkSpec {
   test("persisted ANN probes are a partition filter + top-k, no corpus scan") {
     val emb = spark.read.parquet(sf("embeddings"))
     graft.pipeline.Similarity.writeBucketed(
-      emb, "/root/repo/target/ttmp/ann_buckets_spec")
+      emb, ttmp("ann_buckets_spec"))
     val topk = graft.pipeline.Similarity.annTopKPersisted(
-      emb, "/root/repo/target/ttmp/ann_buckets_spec", 0L, 10)
+      emb, ttmp("ann_buckets_spec"), 0L, 10)
     val plan = topk.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
     assert("PartitionFilters: \\[.*bucket".r.findFirstIn(plan).nonEmpty,
@@ -480,9 +480,9 @@ class PlanShapeSpec extends SparkSpec {
   test("IVF-PQ serve partition-prunes to probe cells and reads code rows only") {
     val emb = spark.read.parquet(sf("embeddings"))
     graft.pipeline.Similarity.writeCelledPq(
-      emb, "/root/repo/target/ttmp/ivfpq_spec")
+      emb, ttmp("ivfpq_spec"))
     val topk = graft.pipeline.Similarity.ivfPqTopK(
-      emb, "/root/repo/target/ttmp/ivfpq_spec", 0L, 5)
+      emb, ttmp("ivfpq_spec"), 0L, 5)
     val plan = topk.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
     assert("PartitionFilters: \\[cell".r.findFirstIn(plan).nonEmpty,

@@ -51,7 +51,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("fts_match over a registered table lowers to a postings semi-join") {
     val docsPath = sf("documents")
-    val ixDir = "/root/repo/target/ttmp/fts_index_spec"
+    val ixDir = ttmp("fts_index_spec")
     graft.fts.Index.write(graft.fts.Index.build(spark.read.parquet(docsPath)), ixDir)
     graft.fts.IndexCatalog.register(docsPath, ixDir)
     try {
@@ -75,7 +75,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("fts_match_min: scan and index paths agree on the >= k distinct contract") {
     val docsPath = sf("documents")
-    val ixDir = "/root/repo/target/ttmp/fts_index_min_spec"
+    val ixDir = ttmp("fts_index_min_spec")
     graft.fts.Index.write(graft.fts.Index.build(spark.read.parquet(docsPath)), ixDir)
     // ground truth: >= 2 distinct of the 4 terms via the library id set
     val ix = graft.fts.Index.build(spark.read.parquet(docsPath))
@@ -146,7 +146,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("index path follows renames but refuses name-only impostors") {
     val docsPath = sf("documents")
-    val ixDir = "/root/repo/target/ttmp/fts_index_lineage_spec"
+    val ixDir = ttmp("fts_index_lineage_spec")
     graft.fts.Index.write(graft.fts.Index.build(spark.read.parquet(docsPath)), ixDir)
     graft.fts.IndexCatalog.register(docsPath, ixDir)
     try {
@@ -188,7 +188,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("fts_score: SQL ranked retrieval equals the library BM25 path") {
     val docsPath = sf("documents")
-    val ixDir = "/root/repo/target/ttmp/fts_index_score_spec"
+    val ixDir = ttmp("fts_index_score_spec")
     graft.fts.Index.write(graft.fts.Index.build(spark.read.parquet(docsPath)), ixDir)
     graft.fts.IndexCatalog.register(docsPath, ixDir)
     try {
@@ -218,7 +218,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("two fts_score queries in one SELECT fold into two scoring joins") {
     val docsPath = sf("documents")
-    val ixDir = "/root/repo/target/ttmp/fts_index_score2_spec"
+    val ixDir = ttmp("fts_index_score2_spec")
     graft.fts.Index.write(graft.fts.Index.build(spark.read.parquet(docsPath)), ixDir)
     graft.fts.IndexCatalog.register(docsPath, ixDir)
     try {
@@ -249,7 +249,7 @@ class ExtensionsSpec extends SparkSpec {
   test("match+prefix+near conjuncts all lower over one positional index") {
     val docsPath = sf("documents")
     val docs = spark.read.parquet(docsPath)
-    val posDir = "/root/repo/target/ttmp/fts_index_combo_spec"
+    val posDir = ttmp("fts_index_combo_spec")
     graft.fts.Index.write(graft.fts.Index.buildPositional(docs), posDir)
     graft.fts.IndexCatalog.register(docsPath, posDir, positional = true)
     try {
@@ -293,7 +293,7 @@ class ExtensionsSpec extends SparkSpec {
 
   test("fts_score directly in ORDER BY lowers and stays top-k") {
     val docsPath = sf("documents")
-    val ixDir = "/root/repo/target/ttmp/fts_index_scoresort_spec"
+    val ixDir = ttmp("fts_index_scoresort_spec")
     graft.fts.Index.write(graft.fts.Index.build(spark.read.parquet(docsPath)), ixDir)
     graft.fts.IndexCatalog.register(docsPath, ixDir)
     try {
@@ -336,7 +336,7 @@ class ExtensionsSpec extends SparkSpec {
   test("fts_prefix: scan and index lowerings agree with the library path") {
     graft.fts.IndexCatalog.clear()
     val docsPath = sf("documents")
-    val ixDir = "/root/repo/target/ttmp/fts_index_prefix_spec"
+    val ixDir = ttmp("fts_index_prefix_spec")
     graft.fts.Index.write(graft.fts.Index.build(spark.read.parquet(docsPath)), ixDir)
     spark.read.parquet(docsPath).createOrReplaceTempView("docs_prefix_sql")
     val expect = graft.fts.Search.matchPrefixIds(
@@ -364,7 +364,7 @@ class ExtensionsSpec extends SparkSpec {
   test("fts_wildcard: scan and index lowerings agree with the library path") {
     graft.fts.IndexCatalog.clear()
     val docsPath = sf("documents")
-    val ixDir = "/root/repo/target/ttmp/fts_index_wc_spec"
+    val ixDir = ttmp("fts_index_wc_spec")
     graft.fts.Index.write(graft.fts.Index.build(spark.read.parquet(docsPath)), ixDir)
     spark.read.parquet(docsPath).createOrReplaceTempView("docs_wc_sql")
     val expect = graft.fts.Search.matchWildcardIds(
@@ -397,7 +397,7 @@ class ExtensionsSpec extends SparkSpec {
     assert(!scan.queryExecution.optimizedPlan.toString.contains("LeftSemi"))
     assert(scan.collect().map(_.getLong(0)).toSet == expect)
     // tf-only index: candidates semi-join + kernel residual
-    val tfDir = "/root/repo/target/ttmp/fts_index_near_tf_spec"
+    val tfDir = ttmp("fts_index_near_tf_spec")
     graft.fts.Index.write(graft.fts.Index.build(docs), tfDir)
     graft.fts.IndexCatalog.register(docsPath, tfDir)
     try {
@@ -409,7 +409,7 @@ class ExtensionsSpec extends SparkSpec {
       assert(tfq.collect().map(_.getLong(0)).toSet == expect)
     } finally graft.fts.IndexCatalog.clear()
     // positional index: pure position-list plan, no kernel, no re-read
-    val posDir = "/root/repo/target/ttmp/fts_index_near_pos_spec"
+    val posDir = ttmp("fts_index_near_pos_spec")
     graft.fts.Index.write(graft.fts.Index.buildPositional(docs), posDir)
     graft.fts.IndexCatalog.register(docsPath, posDir, positional = true)
     try {
@@ -436,7 +436,7 @@ class ExtensionsSpec extends SparkSpec {
       val expect = scan.collect().map(_.getLong(0)).toSet
       assert(expect.nonEmpty, s"pattern $pat matched nothing — dead fixture")
       // index path: covering semi-join over pruned postings, no tokenize
-      val ixDir = s"/root/repo/target/ttmp/fts_index_pat_spec_${pat.hashCode}"
+      val ixDir = ttmp(s"fts_index_pat_spec_${pat.hashCode}")
       graft.fts.Index.write(graft.fts.Index.build(docs), ixDir)
       graft.fts.IndexCatalog.register(docsPath, ixDir)
       try {
@@ -484,7 +484,7 @@ class ExtensionsSpec extends SparkSpec {
         "WHERE fts_phrase(text, 'data query')")
         .collect().map(_.getLong(0)).toSet)
     // tf-only index: all-terms candidates semi-join + kernel residual
-    val tfDir = "/root/repo/target/ttmp/fts_index_slop_tf_spec"
+    val tfDir = ttmp("fts_index_slop_tf_spec")
     graft.fts.Index.write(graft.fts.Index.build(docs), tfDir)
     graft.fts.IndexCatalog.register(docsPath, tfDir)
     try {
@@ -496,7 +496,7 @@ class ExtensionsSpec extends SparkSpec {
       assert(tfq.collect().map(_.getLong(0)).toSet == expect)
     } finally graft.fts.IndexCatalog.clear()
     // positional index: pure position-list plan, no kernel, no re-read
-    val posDir = "/root/repo/target/ttmp/fts_index_slop_pos_spec"
+    val posDir = ttmp("fts_index_slop_pos_spec")
     graft.fts.Index.write(graft.fts.Index.buildPositional(docs), posDir)
     graft.fts.IndexCatalog.register(docsPath, posDir, positional = true)
     try {
@@ -510,8 +510,8 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("stale index (table files changed after registration) falls back to scan") {
-    val tmpTable = "/root/repo/target/ttmp/fts_stale_table"
-    val ixDir = "/root/repo/target/ttmp/fts_stale_index"
+    val tmpTable = ttmp("fts_stale_table")
+    val ixDir = ttmp("fts_stale_index")
     val docs = spark.read.parquet(sf("documents"))
     docs.write.mode("overwrite").parquet(tmpTable)
     graft.fts.Index.createIndex(spark, tmpTable, ixDir)
@@ -538,30 +538,6 @@ class ExtensionsSpec extends SparkSpec {
     } finally graft.fts.IndexCatalog.clear()
   }
 
-  test("freshness TTL (opt-in) skips the re-listing, default stays exact") {
-    val tmpTable = "/root/repo/target/ttmp/fts_ttl_table"
-    val ixDir = "/root/repo/target/ttmp/fts_ttl_index"
-    val docs = spark.read.parquet(sf("documents"))
-    docs.write.mode("overwrite").parquet(tmpTable)
-    graft.fts.Index.createIndex(spark, tmpTable, ixDir)
-    try {
-      graft.fts.IndexCatalog.freshnessTtlMs = 60000
-      assert(graft.fts.IndexCatalog.get(tmpTable).nonEmpty) // caches the check
-      // rewrite the table: within the TTL the stale index is still served —
-      // the documented trade-off of enabling the TTL
-      docs.limit(10).write.mode("overwrite").parquet(tmpTable)
-      assert(graft.fts.IndexCatalog.get(tmpTable).nonEmpty,
-        "within the TTL the listing must be skipped")
-      // TTL off (the default): the very next lookup detects staleness
-      graft.fts.IndexCatalog.freshnessTtlMs = 0
-      assert(graft.fts.IndexCatalog.get(tmpTable).isEmpty,
-        "with TTL disabled staleness must be detected immediately")
-    } finally {
-      graft.fts.IndexCatalog.freshnessTtlMs = 0
-      graft.fts.IndexCatalog.clear()
-    }
-  }
-
   test("fts_phrase: scan and index lowerings agree with the library path") {
     graft.fts.IndexCatalog.clear()
     val docsPath = sf("documents")
@@ -576,7 +552,7 @@ class ExtensionsSpec extends SparkSpec {
     assert(!scan.queryExecution.optimizedPlan.toString.contains("LeftSemi"))
     assert(scan.collect().map(_.getLong(0)).toSet == expect)
     // index path: candidates via postings semi-join + containment residual
-    val ixDir = "/root/repo/target/ttmp/fts_phrase_spec_index"
+    val ixDir = ttmp("fts_phrase_spec_index")
     graft.fts.Index.write(graft.fts.Index.build(spark.read.parquet(docsPath)), ixDir)
     graft.fts.IndexCatalog.register(docsPath, ixDir)
     try {
@@ -591,8 +567,8 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("index metadata persists and restores across catalog resets") {
-    val tmpTable = "/root/repo/target/ttmp/fts_restore_table"
-    val ixDir = "/root/repo/target/ttmp/fts_restore_index"
+    val tmpTable = ttmp("fts_restore_table")
+    val ixDir = ttmp("fts_restore_index")
     val docs = spark.read.parquet(sf("documents"))
     docs.write.mode("overwrite").parquet(tmpTable)
     graft.fts.Index.createIndex(spark, tmpTable, ixDir)
@@ -648,7 +624,7 @@ class ExtensionsSpec extends SparkSpec {
       spark.sql(s"SELECT doc_id FROM docs_cover_prop WHERE $p")
         .collect().map(_.getLong(0)).toSet
     }
-    val ixDir = "/root/repo/target/ttmp/fts_cover_prop_index"
+    val ixDir = ttmp("fts_cover_prop_index")
     graft.fts.Index.write(graft.fts.Index.build(docs), ixDir)
     graft.fts.IndexCatalog.register(docsPath, ixDir)
     try predicates.zip(expected).foreach { case (p, expect) =>
@@ -659,14 +635,99 @@ class ExtensionsSpec extends SparkSpec {
     } finally graft.fts.IndexCatalog.clear()
   }
 
+  test("scan, tf-only and positional lowerings agree on every WHERE shape") {
+    graft.fts.IndexCatalog.clear()
+    // the fixture plus one NULL-text document: NOT forms drop it (NOT over
+    // NULL is NULL) unless the term set is empty (NOT false keeps it)
+    val table = ttmp("fts_agree_table")
+    spark.read.parquet(sf("documents")).select("doc_id", "lang", "text")
+      .union(spark.sql(
+        "SELECT 100000L AS doc_id, 'en' AS lang, CAST(NULL AS STRING) AS text"))
+      .write.mode("overwrite").parquet(table)
+    spark.read.parquet(table).createOrReplaceTempView("docs_agree")
+    val shapes = Seq(
+      "fts_match(text, 'data query spark')",
+      "fts_match_any(text, 'dup vector')",
+      "fts_match_min(text, 'data query dup spark', 3)",
+      "fts_phrase(text, 'data query')",
+      "fts_phrase_wild(text, 'data quer*')",
+      "fts_prefix(text, 'du')",
+      "fts_term_range(text, 'data', 'dup', true, false)",
+      "fts_near(text, 'data', 'query', 2)",
+      "fts_near(text, 'dup', 'dup', 1)",
+      "fts_phrase_slop(text, 'data query', 2)",
+      "fts_wildcard(text, 'd*p')",
+      "fts_wildcard(text, 'c?st*er')",
+      "fts_fuzzy(text, 'dupe', 1)",
+      "fts_regexp(text, 'du[a-z]')",
+      "NOT fts_match(text, 'data query')",
+      "NOT fts_match_any(text, 'data dup')",
+      "fts_match(text, 'dup') OR fts_prefix(text, 'vec')",
+      "fts_match(text, 'dup') OR fts_phrase(text, 'data query')",
+      "fts_match(text, 'data') AND lang = 'en'",
+      "fts_match_any(text, 'spark dup') AND doc_id % 2 = 0",
+      "fts_match(text, 'data') AND NOT fts_match_any(text, 'spark table')",
+      "fts_query(text, 'data AND (quer* OR dup) NOT table')",
+      "fts_query(text, '\"data query\"~2 OR dupe~1')",
+      "fts_match(text, '!!! ...')",
+      "fts_match_any(text, '...')",
+      "NOT fts_match(text, '!!!')",
+      "fts_phrase(text, '...')",
+      "fts_phrase_slop(text, '...', 1)",
+      "fts_near(text, 'data', NULL, 2)",
+      "fts_phrase_slop(text, 'data query', NULL)")
+    // out-of-range arguments: every lowering rejects them with one message
+    val badArgs = Seq(
+      "fts_fuzzy(text, 'data', 3)", "fts_fuzzy(text, 'data', 0)",
+      "fts_near(text, 'data', 'query', -1)", "fts_near(text, 'data', 'data', -1)",
+      "fts_phrase_slop(text, 'data query', -1)",
+      "fts_match_min(text, 'data query', 0)")
+    val projections = Seq("doc_id", "doc_id, lang")
+    def query(proj: String, where: String) =
+      spark.sql(s"SELECT $proj FROM docs_agree WHERE $where")
+    def rows(proj: String, where: String): Seq[String] =
+      query(proj, where).collect().map(_.toString).sorted.toSeq
+    def failure(proj: String, where: String): String = {
+      val e = intercept[Exception](query(proj, where).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case iae: IllegalArgumentException => iae.getMessage }
+        .getOrElse(fail(s"'$where' failed without an IllegalArgumentException: $e"))
+    }
+    val grid = for (p <- projections; w <- shapes) yield (p, w)
+    val badGrid = for (p <- projections; b <- badArgs) yield (p, b)
+    // scan-path ground truth first (unregistered)
+    val expected = grid.map { case (p, w) => rows(p, w) }
+    val expectedErr = badGrid.map { case (p, b) => failure(p, b) }
+    val nullDoc = "100000"
+    assert(rows("doc_id", "NOT fts_match(text, '!!!')").exists(_.contains(nullDoc)))
+    assert(!rows("doc_id", "NOT fts_match(text, 'data query')").exists(_.contains(nullDoc)))
+    for ((name, positional) <- Seq(("tf", false), ("pos", true))) {
+      graft.fts.Index.createIndex(spark, table, ttmp(s"fts_agree_$name"),
+        positional = positional)
+      try {
+        grid.zip(expected).foreach { case ((p, w), expect) =>
+          assert(rows(p, w) == expect,
+            s"$name index: '$w' ($p) diverges from the scan lowering")
+        }
+        badGrid.zip(expectedErr).foreach { case ((p, b), msg) =>
+          assert(failure(p, b) == msg, s"$name index: '$b' ($p)")
+        }
+        // every id set the covered plans know is served index-only
+        for (w <- Seq("fts_fuzzy(text, 'dupe', 1)", "fts_regexp(text, 'du[a-z]')"))
+          assert(scansOnlyPostings(query("doc_id", w)),
+            s"$name index: '$w' must be covered:\n${query("doc_id", w).queryExecution.optimizedPlan}")
+      } finally graft.fts.IndexCatalog.clear()
+    }
+  }
+
   test("a stale table drops EVERY column's entry, not just one") {
-    val tmpTable = "/root/repo/target/ttmp/fts_stale_mc_table"
+    val tmpTable = ttmp("fts_stale_mc_table")
     val docs = spark.read.parquet(sf("documents"))
     docs.write.mode("overwrite").parquet(tmpTable)
     graft.fts.Index.createIndex(spark, tmpTable,
-      "/root/repo/target/ttmp/fts_stale_mc_text")
+      ttmp("fts_stale_mc_text"))
     graft.fts.Index.createIndex(spark, tmpTable,
-      "/root/repo/target/ttmp/fts_stale_mc_src", textCol = "source")
+      ttmp("fts_stale_mc_src"), textCol = "source")
     try {
       assert(graft.fts.IndexCatalog.entriesFor(tmpTable).size == 2,
         "both columns' indexes must register side by side")
@@ -678,8 +739,8 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("an analyzer-configured registration round-trips through restore") {
-    val tmpTable = "/root/repo/target/ttmp/fts_restore_an_table"
-    val ixDir = "/root/repo/target/ttmp/fts_restore_an_index"
+    val tmpTable = ttmp("fts_restore_an_table")
+    val ixDir = ttmp("fts_restore_an_index")
     val docs = spark.read.parquet(sf("documents"))
     docs.write.mode("overwrite").parquet(tmpTable)
     val cfg = graft.fts.AnalyzerConfig(

@@ -303,7 +303,7 @@ class QueryParserSpec extends SparkSpec {
     val scan = ids(
       "SELECT doc_id FROM docs_qp WHERE fts_query(text, 'querry~1')")
     Index.createIndex(spark, sf("documents"),
-      "/root/repo/target/ttmp/fts_qp_fuzzy")
+      ttmp("fts_qp_fuzzy"))
     try {
       // registered index → dictionary expansion + postings-union semi-join
       val ixed = ids(
@@ -315,7 +315,7 @@ class QueryParserSpec extends SparkSpec {
   test("fts_query_score equals fts_score over the extracted scoring terms") {
     IndexCatalog.clear()
     Index.createIndex(spark, sf("documents"),
-      "/root/repo/target/ttmp/fts_qp_rank")
+      ttmp("fts_qp_rank"))
     spark.read.parquet(sf("documents")).createOrReplaceTempView("docs_qp")
     try {
       def rows(expr: String): Seq[(Long, Double)] = spark.sql(
@@ -332,7 +332,7 @@ class QueryParserSpec extends SparkSpec {
   test("boosted fts_query_score equals the weighted sum of score groups") {
     IndexCatalog.clear()
     Index.createIndex(spark, sf("documents"),
-      "/root/repo/target/ttmp/fts_qp_boost")
+      ttmp("fts_qp_boost"))
     spark.read.parquet(sf("documents")).createOrReplaceTempView("docs_qp")
     try {
       def rows(expr: String): Seq[(Long, Double)] = spark.sql(
@@ -404,7 +404,7 @@ class QueryParserSpec extends SparkSpec {
       val docsPath = sf("documents")
       val docs = spark.read.parquet(docsPath)
       val cfg = AnalyzerConfig(stopWords = Seq("the"), sStem = true, minTokenLen = 2)
-      val ixDir = "/root/repo/target/ttmp/fts_index_qp_an"
+      val ixDir = ttmp("fts_index_qp_an")
       Index.createIndex(spark, docsPath, ixDir, analyzer = cfg)
       docs.createOrReplaceTempView("docs_qp_an")
       // 'queries' must stem to the corpus term 'query' on the way in
@@ -512,7 +512,7 @@ class QueryParserSpec extends SparkSpec {
       val scan = ids("""SELECT doc_id FROM docs_qp_r
         WHERE fts_term_range(text, 'query', 'querz')""")
       Index.createIndex(spark, docsPath,
-        "/root/repo/target/ttmp/fts_index_qp_r")
+        ttmp("fts_index_qp_r"))
       // index path: pushed term range over the sorted postings
       val indexed = ids("""SELECT doc_id FROM docs_qp_r
         WHERE fts_term_range(text, 'query', 'querz')""")
@@ -537,9 +537,9 @@ class QueryParserSpec extends SparkSpec {
     try {
       val docsPath = sf("documents")
       Index.createIndex(spark, docsPath,
-        "/root/repo/target/ttmp/fts_index_qp_f1")
+        ttmp("fts_index_qp_f1"))
       Index.createIndex(spark, docsPath,
-        "/root/repo/target/ttmp/fts_index_qp_f2", textCol = "source")
+        ttmp("fts_index_qp_f2"), textCol = "source")
       spark.read.parquet(docsPath).createOrReplaceTempView("docs_qp_f")
       val got = ids("""SELECT doc_id FROM docs_qp_f
         WHERE fts_query(text, 'spark query source:src3')""")

@@ -192,7 +192,7 @@ class SearchSpec extends SparkSpec {
     assert(Search.matchAllIds(capped, eff).collect().map(_.getLong(0)).toSet
       == Set(1L, 2L))
     // the band travels with the persisted index
-    val dir = "/root/repo/target/ttmp/fts_capped_spec"
+    val dir = ttmp("fts_capped_spec")
     Index.writeCapped(capped, stop, dir)
     assert(Index.readStopTerms(spark, dir).collect().map(_.getString(0)).toSet
       == Set("data"))
@@ -218,7 +218,7 @@ class SearchSpec extends SparkSpec {
     intercept[IllegalArgumentException](Search.matchWildcardIds(wix, "a*b*c"))
     intercept[IllegalArgumentException](Search.matchWildcardIds(wix, "*"))
     // reversed layout answers the same leading-star query as a prefix range
-    val revDir = "/root/repo/target/ttmp/fts_rev_spec"
+    val revDir = ttmp("fts_rev_spec")
     Index.writeReversed(wix, revDir)
     val viaRev = Search.matchSuffixIds(Index.readReversed(spark, revDir), "ert")
       .collect().map(_.getLong(0)).toSet

@@ -318,12 +318,12 @@ class SimilaritySpec extends SparkSpec {
     // serve-only contract: the layout (and its quantizer) must exist first
     val missing = intercept[IllegalArgumentException] {
       Similarity.ivfTopKPersisted(emb,
-        "/root/repo/target/ttmp/ivf_spec_missing", 0L, 5)
+        ttmp("ivf_spec_missing"), 0L, 5)
     }
     assert(missing.getMessage.contains("writeCelled"))
-    Similarity.writeCelled(emb, "/root/repo/target/ttmp/ivf_spec_cells")
+    Similarity.writeCelled(emb, ttmp("ivf_spec_cells"))
     val df = Similarity.ivfTopKPersisted(emb,
-      "/root/repo/target/ttmp/ivf_spec_cells", 0L, 5)
+      ttmp("ivf_spec_cells"), 0L, 5)
     val plan = df.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)
     assert(plan.contains("PartitionFilters: [cell"),

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * schema subset. */
 class AvroSpec extends SparkSpec {
 
-  private val dir = "/root/repo/target/ttmp/avro_spec"
+  private val dir = ttmp("avro_spec")
 
   private def wipe(): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)

@@ -8,7 +8,7 @@ import graft.SparkSpec
   * open-bound / multi-column correct. */
 class ZoneMapSpec extends SparkSpec {
 
-  private val dir = "/root/repo/target/ttmp/zonemap_spec"
+  private val dir = ttmp("zonemap_spec")
 
   private lazy val written: Unit = {
     val orders = spark.read.parquet(sf("orders"))
@@ -75,8 +75,8 @@ class ZoneMapSpec extends SparkSpec {
     // two independent uniform dimensions: x = id mod 100, y = id div 100
     val df = (0L until 10000L).map(i => (i, i % 100, i / 100))
       .toDF("id", "x", "y")
-    val lexDir = "/root/repo/target/ttmp/zonemap_lex2"
-    val zDir = "/root/repo/target/ttmp/zonemap_z2"
+    val lexDir = ttmp("zonemap_lex2")
+    val zDir = ttmp("zonemap_z2")
     ZoneMap.write(df, lexDir, Seq("x", "y"), nFiles = 16)
     ZoneMap.writeZOrdered(df, zDir, Seq("x", "y"), nFiles = 16)
     // a narrow slice of the SECOND dimension alone
@@ -109,7 +109,7 @@ class ZoneMapSpec extends SparkSpec {
     // nulls in a zone column code as bucket 0 and never crash the write
     val withNulls = df.withColumn("x",
       when(col("id") < 5, lit(null).cast("long")).otherwise(col("x")))
-    val nDir = "/root/repo/target/ttmp/zonemap_znull"
+    val nDir = ttmp("zonemap_znull")
     ZoneMap.writeZOrdered(withNulls, nDir, Seq("x", "y"), nFiles = 4)
     assert(spark.read.parquet(s"$nDir/data").count() == 10000L)
   }
