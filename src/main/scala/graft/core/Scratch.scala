@@ -8,12 +8,14 @@ package graft.core
   * SaveMode.Overwrite can delete a directory in the window where another
   * JVM is planning a read of it (observed: UNABLE_TO_INFER_SCHEMA on the
   * fts postings dir). A pid-scoped root makes every JVM's scratch space
-  * private while staying deterministic within the JVM. target/ is
-  * disposable, so accumulation across runs is bounded by `sbt clean`.
+  * private while staying deterministic within the JVM. The roots live
+  * under the working directory's `target/qtmp` (a checkout's root, where
+  * sbt forks its runs and tests); target/ is disposable, so accumulation
+  * across runs is bounded by `sbt clean`.
   */
 object Scratch {
-  private val root =
-    s"/root/repo/target/qtmp/jvm-${ProcessHandle.current().pid()}"
+  private val base = java.nio.file.Paths.get("target/qtmp").toAbsolutePath
+  private val root = s"$base/jvm-${ProcessHandle.current().pid()}"
 
   // Sweep DEAD JVMs' scratch roots once at first use: pid-scoped dirs are
   // private while their JVM lives, garbage the moment it exits, and a day
@@ -22,7 +24,6 @@ object Scratch {
   // ENOSPC with ~1.5 GB of dead roots sitting here). Liveness via
   // ProcessHandle keeps a concurrent sibling JVM's root untouched.
   locally {
-    val base = java.nio.file.Paths.get("/root/repo/target/qtmp")
     if (java.nio.file.Files.isDirectory(base)) {
       import scala.jdk.CollectionConverters._
       scala.util.Using.resource(java.nio.file.Files.list(base)) { st =>

@@ -719,6 +719,8 @@ case class FtsRegexp(text: Expression, pattern: Expression) extends FtsPredicate
   *     `fts_tokenize(text)`, e.g. `array_contains(fts_tokenize(text), term)
   *     AND …` — a full scan, but pushdown-friendly like any predicate.
   *
+  * Passes 1 and 3 share one scoring subplan, [[scoringPlan]]: the query
+  * terms' pruned postings, with the index's corpus stats as literals.
   * Passes 1, 2 and 4 share one id-set lowering, [[exactIdsDf]]; the WHERE
   * pass adds only the forms that need the corpus row (negation under
   * IsNotNull, token-kernel residuals). Every lowering runs the same
@@ -1270,20 +1272,25 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
       else None)
 
   /** Per-doc BM25 scores for `terms` as an optimized logical plan over the
-    * persisted index — postings pruned to the terms' buckets, doc lengths
-    * and corpus stats joined in ([[graft.fts.Search.scoreAllBm25]]).
+    * persisted index ([[graft.fts.Search.scoreAllBm25]]): postings pruned
+    * to the terms' buckets, doc lengths read from the `dl` column
+    * [[graft.fts.Index.write]] denormalized onto them, and the corpus
+    * stats `(n_docs, avgdl)` folded in as literals, read once per cached
+    * handle ([[IndexCatalog.cachedStats]]). The plan reads the pruned
+    * postings and nothing else: no doclens join, no stats broadcast.
     * Output: (doc_id, score). */
   private def scoringPlan(entry: IndexCatalog.Entry, terms: Seq[String]): LogicalPlan = {
     val ix = persistedIx(entry)
     val pruned = ix.copy(postings = graft.fts.Index.lookup(ix, terms, entry.buckets))
-    graft.fts.Search.scoreAllBm25(pruned, terms).queryExecution.optimizedPlan
+    graft.fts.Search.scoreAllBm25(pruned, terms, stats = Some(IndexCatalog.cachedStats(
+      org.apache.spark.sql.SparkSession.active, entry))).queryExecution.optimizedPlan
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     var rewrote = false
     // Pass 0 — ranked retrieval: fts_score occurrences in a Project over a
     // registered table become a LEFT-OUTER join against the per-doc BM25
-    // scoring subplan (pruned postings ⋈ doclens ⋈ stats), the expression
+    // scoring subplan (pruned postings, literal corpus stats), the expression
     // replaced by coalesce(score, 0.0) — docs containing no query term
     // score zero. Runs BEFORE the filter pass so the Project's child is
     // still the clean Filter/SubqueryAlias/relation chain traceToBase
@@ -1815,13 +1822,15 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
   }
 }
 
-/** Session extensions: the full-text function surface + the rewrite rule.
+/** Session extensions: the full-text function surface, the rewrite rule
+  * and the single-task rule for small postings slices.
   * Enabled by `spark.sql.extensions=graft.ext.GraftExtensions`, which
   * [[graft.core.GraftSession.builder]] sets. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.allFunctions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => RewriteFtsMatch)
+    ext.injectPreCBORule(_ => SingleTaskPostings)
   }
 }
 

@@ -256,6 +256,19 @@ final case class FtsIndex(
     docLens: DataFrame,  // doc_id, dl
     stats: DataFrame)    // n_docs, avgdl  (single row)
 
+/** An index's corpus statistics as plain values: the one `stats` row that
+  * [[Search.scoreAllBm25]] otherwise broadcast-joins in. `avgdl` is NaN
+  * for an empty corpus, which has no postings to score. */
+final case class CorpusStats(nDocs: Long, avgdl: Double)
+
+object CorpusStats {
+  /** Collects an index's `stats` row: one job over a one-row table. */
+  def read(stats: DataFrame): CorpusStats = {
+    val r = stats.select(col("n_docs"), col("avgdl")).head()
+    CorpusStats(r.getLong(0), if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
+  }
+}
+
 object Index {
   /** Build postings + per-doc lengths + corpus stats from a document table.
     * One pass to tokens (explode = reference GenerateExec pattern,
@@ -477,7 +490,14 @@ object Index {
     * `dl` is recomputed from the postings themselves (window over doc_id)
     * rather than joined from `ix.docLens` — one shuffle, no re-derivation
     * of the docLens aggregation, and consistency with the stored postings
-    * by construction. */
+    * by construction.
+    *
+    * The layout is `postings/bucket=N/` (data columns `term`, `doc_id`,
+    * `tf`, `dl`, plus `positions` when positional), `doclens/` and the
+    * one-row `stats/`. Readers recognize the postings by that schema, not
+    * by the directory name: [[graft.ext.SingleTaskPostings]] runs a scan
+    * of it whose pruned buckets are small as one task, and SQL scoring
+    * reads `stats` once per handle ([[IndexCatalog.cachedStats]]). */
   def write(ix: FtsIndex, dir: String, buckets: Int = 64): Unit = {
     val dlWin = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
     ix.postings
@@ -1156,17 +1176,7 @@ object Search {
   def matchPhrasePositional(ix: FtsIndex, phrase: Seq[String],
                             buckets: Int = 64): DataFrame = {
     require(phrase.nonEmpty, "empty phrase")
-    val spark = ix.postings.sparkSession
-    import spark.implicits._
-    // phrase order as data: idx joins each term occurrence to its slot(s) —
-    // a repeated term simply matches several slots. Index.lookup applies
-    // the bucket predicate too, so a persisted positional index
-    // partition-prunes to the phrase terms' buckets here.
-    val order = phrase.zipWithIndex.toDF("term", "idx")
-    val slots = Index.lookup(ix, phrase.distinct, buckets)
-      .join(broadcast(order), "term")
-      .select(col("doc_id"), col("idx"), col("positions"))
-    slots.groupBy("doc_id")
+    slotPositions(ix, phrase.zipWithIndex, buckets).groupBy("doc_id")
       .agg(count(lit(1)).as("n_slots"),
         sort_array(collect_list(struct(col("idx"), col("positions")))).as("tp"))
       .filter(col("n_slots") === phrase.size) // every slot's term present
@@ -1177,6 +1187,20 @@ object Search {
           p => array_contains(acc, p - 1))))
       .filter(size(col("ends")) > 0)
       .select("doc_id")
+  }
+
+  /** `(doc_id, idx, positions)`: one row per posting of a slotted term and
+    * per slot `idx` it fills — a term repeated in the phrase fills several.
+    * The term → slots map is a literal, exploded per posting row, so the
+    * slot lookup is a projection over the bucket-pruned postings
+    * ([[Index.lookup]]): no join, and no local relation to encode. */
+  private def slotPositions(ix: FtsIndex, slots: Seq[(String, Int)],
+                            buckets: Int): DataFrame = {
+    val terms = slots.map(_._1).distinct
+    val slotMap = map(terms.flatMap(t =>
+      Seq(lit(t), array(slots.collect { case (`t`, i) => lit(i) }: _*))): _*)
+    Index.lookup(ix, terms, buckets).select(col("doc_id"),
+      explode(element_at(slotMap, col("term"))).as("idx"), col("positions"))
   }
 
   /** WILDCARD-slot phrase over POSITIONAL postings — Lucene's
@@ -1194,21 +1218,13 @@ object Search {
                                 buckets: Int = 64): DataFrame = {
     require(slots.nonEmpty, "empty phrase")
     def isPattern(s: String) = s.exists(c => c == '*' || c == '?')
-    val spark = ix.postings.sparkSession
     // ALL exact slots ride ONE bucket-pruned postings lookup (the
-    // matchPhrasePositional shape: distinct terms → broadcast order join,
-    // a repeated term matches several slots); each pattern slot adds its
-    // own range+LIKE pass — one scan per pattern, not per slot.
+    // matchPhrasePositional shape: a repeated term matches several
+    // slots); each pattern slot adds its own range+LIKE pass — one scan
+    // per pattern, not per slot.
     val exact = slots.zipWithIndex.filterNot { case (s, _) => isPattern(s) }
     val exactFrames =
-      if (exact.isEmpty) Nil
-      else {
-        import spark.implicits._
-        val order = exact.map { case (t, i) => (t, i) }.toDF("term", "idx")
-        Seq(Index.lookup(ix, exact.map(_._1).distinct, buckets)
-          .join(broadcast(order), "term")
-          .select(col("doc_id"), col("idx"), col("positions")))
-      }
+      if (exact.isEmpty) Nil else Seq(slotPositions(ix, exact, buckets))
     val patternFrames = slots.zipWithIndex.collect {
       case (slot, i) if isPattern(slot) =>
         val head = slot.takeWhile(c => c != '*' && c != '?')
@@ -1270,14 +1286,8 @@ object Search {
                         buckets: Int = 64): DataFrame = {
     require(phrase.nonEmpty, "empty phrase")
     require(slop >= 0, "slop must be non-negative")
-    val spark = ix.postings.sparkSession
-    import spark.implicits._
-    val order = phrase.zipWithIndex.toDF("term", "idx")
-    val slots = Index.lookup(ix, phrase.distinct, buckets)
-      .join(broadcast(order), "term")
-      .select(col("doc_id"), col("idx"), col("positions"))
     val window = phrase.size - 1 + slop
-    slots.groupBy("doc_id")
+    slotPositions(ix, phrase.zipWithIndex, buckets).groupBy("doc_id")
       .agg(count(lit(1)).as("n_slots"),
         sort_array(collect_list(struct(col("idx"), col("positions")))).as("tp"))
       .filter(col("n_slots") === phrase.size) // every slot's term present
@@ -1328,10 +1338,18 @@ object Search {
     * containing at least one query term — the composable half of
     * [[scoreBm25]], and the subplan [[graft.ext.RewriteFtsMatch]] grafts in
     * when SQL `fts_score(text, 'q')` is lowered over a registered index.
-    * Output columns: `doc_id, score`. */
+    * Output columns: `doc_id, score`.
+    *
+    * Corpus statistics come in one of two forms. By default the one-row
+    * `ix.stats` table is broadcast and cross-joined onto the scoring rows
+    * (merge-on-read and in-memory indexes, whose stats are a plan). Given
+    * `stats`, `n_docs` and `avgdl` are literals instead: the plan reads
+    * only the pruned postings, with no broadcast. Both forms evaluate the
+    * same expressions, so their scores are bit-identical. */
   def scoreAllBm25(ix: FtsIndex, terms: Seq[String],
                    k1: Double = 1.2, b: Double = 0.75,
-                   candidates: Option[DataFrame] = None): DataFrame = {
+                   candidates: Option[DataFrame] = None,
+                   stats: Option[CorpusStats] = None): DataFrame = {
     // df/idf stay CORPUS statistics even when scoring is restricted to a
     // candidate id set (MaxScore pruning must not change any score): the
     // df window runs BEFORE the candidate semi-join, which cannot push
@@ -1344,8 +1362,8 @@ object Search {
     // buckets — the O(corpus) doclens join is the in-memory fallback
     val withDl =
       if (qp.columns.contains("dl")) qp else qp.join(ix.docLens, "doc_id")
-    withDl
-      .crossJoin(broadcast(ix.stats))
+    stats.fold(withDl.crossJoin(broadcast(ix.stats)))(s =>
+        withDl.withColumn("n_docs", lit(s.nDocs)).withColumn("avgdl", lit(s.avgdl)))
       .withColumn("idf",
         log((col("n_docs").cast("double") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
       .withColumn("score_t",

@@ -50,7 +50,18 @@ object IndexCatalog {
     * the cache every query re-pays a file listing during planning
     * (planning latency only, but real on object stores). Invalidated by
     * [[register]] (an index rewrite registers again) and [[clear]]. */
-  private val ixCache = new ConcurrentHashMap[String, (AnyRef, FtsIndex)]()
+  private val ixCache = new ConcurrentHashMap[String, Handle]()
+
+  /** One session's open handle on a persisted index. Its corpus stats are
+    * read on first use and then kept as long as the handle. */
+  private final class Handle(val spark: AnyRef, val ix: FtsIndex) {
+    lazy val stats: CorpusStats = CorpusStats.read(ix.stats)
+  }
+
+  private def handle(spark: org.apache.spark.sql.SparkSession, entry: Entry): Handle =
+    ixCache.compute(entry.indexDir, (_, cur) =>
+      if (cur != null && (cur.spark eq spark)) cur
+      else new Handle(spark, Index.read(spark, entry.indexDir, entry.buckets)))
 
   /** The entry's persisted index handle, cached per (session, indexDir).
     * Every call returns FRESH output exprIds over the SAME cached relation
@@ -60,13 +71,19 @@ object IndexCatalog {
     * the plan ambiguous. */
   def cachedIndex(spark: org.apache.spark.sql.SparkSession,
                   entry: Entry): FtsIndex = {
-    val base = ixCache.compute(entry.indexDir, (_, cur) =>
-      if (cur != null && (cur._1 eq spark)) cur
-      else (spark, Index.read(spark, entry.indexDir, entry.buckets)))._2
+    val base = handle(spark, entry).ix
     import org.apache.spark.sql.GraftColumnBridge.freshCopy
     FtsIndex(freshCopy(base.postings), freshCopy(base.docLens),
       freshCopy(base.stats))
   }
+
+  /** The entry's corpus statistics `(n_docs, avgdl)`, read once per cached
+    * handle: the first call runs one job over the one-row `stats` table,
+    * later calls run none until [[register]] or [[clear]] drops the
+    * handle. BM25 scoring folds them in as literals. */
+  def cachedStats(spark: org.apache.spark.sql.SparkSession,
+                  entry: Entry): CorpusStats =
+    handle(spark, entry).stats
 
   /** Order-independent hash of the table's data files (path, length,
     * mtime) — any rewrite, compaction, append, or delete changes it. The

@@ -165,10 +165,17 @@ class PlanShapeSpec extends SparkSpec {
       assert(!plan.contains("LeftSemi") && postingsScans(plan) == 1,
         s"a candidate filter over the score's terms must add no semi-join:\n${plan.linesIterator.take(40).mkString("\n")}")
       // the 100× guarantee: dl is denormalized onto the posting rows at
-      // Index.write, so scoring never scans the O(corpus) doclens table —
-      // the only corpus-wide input left is the 1-row stats broadcast
+      // Index.write, so scoring never scans the O(corpus) doclens table,
+      // and the corpus stats are literals read once per index handle, so
+      // the pruned postings are the plan's only input
       assert(!plan.contains("doclens"),
         "scoring must read dl from the pruned postings, not the doclens table")
+      assert(!plan.linesIterator.exists(l => l.startsWith("Location:") && l.contains("/stats]")),
+        s"corpus stats must be literals, not a stats scan:\n${plan.linesIterator.take(40).mkString("\n")}")
+      // the pruned slice is small, so it runs as one task: the window df,
+      // the per-doc sum and the top-k need no exchange
+      assert(!plan.contains("Exchange"),
+        s"a small pruned slice must plan with no exchange:\n${plan.linesIterator.take(40).mkString("\n")}")
       // COVERING-INDEX property: the projection touches only doc_id +
       // fts_score and the filter is index-exact and domain-bounding, so
       // the corpus table is not scanned AT ALL — the whole answer comes

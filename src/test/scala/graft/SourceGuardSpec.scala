@@ -35,6 +35,56 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n  ", "\n  ", ""))
   }
 
+  /** The string literals of a Scala source, comments skipped: plain and
+    * triple-quoted strings (interpolated ones included) and char
+    * literals, whose quote must not open a string. */
+  private def stringLiterals(src: String): Seq[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    def upTo(s: String, from: Int) = src.indexOf(s, from) match {
+      case -1 => src.length
+      case j => j
+    }
+    var i = 0
+    while (i < src.length) {
+      if (src.startsWith("//", i)) i = upTo("\n", i)
+      else if (src.startsWith("/*", i)) i = upTo("*/", i + 2) + 2
+      else if (src.startsWith("\"\"\"", i)) {
+        val end = upTo("\"\"\"", i + 3)
+        out += src.substring(i + 3, end)
+        i = end + 3
+      } else if (src.charAt(i) == '"') {
+        var j = i + 1
+        while (j < src.length && src.charAt(j) != '"' && src.charAt(j) != '\n')
+          j += (if (src.charAt(j) == '\\') 2 else 1)
+        out += src.substring(i + 1, math.min(j, src.length))
+        i = j + 1
+      } else if (src.startsWith("'\\", i)) i = upTo("'", i + 3) + 1
+      else if (i + 2 < src.length && src.charAt(i) == '\'' && src.charAt(i + 2) == '\'') i += 3
+      else i += 1
+    }
+    out.toSeq
+  }
+
+  /** A path hard-coded to one checkout breaks every other checkout, and
+    * from any other working directory it writes into that one. Two forms
+    * are caught: the checkout's own root (sbt forks the tests there) and
+    * any absolute path into a `target/` build directory, wherever the
+    * checkout that wrote it lived. Build and scratch output resolves
+    * `target/` against the working directory instead. */
+  test("no string literal in src/main hard-codes a checkout or build path") {
+    val checkout = Paths.get("").toAbsolutePath.toString
+    assert(Files.isDirectory(Paths.get(checkout, "src", "main")), checkout)
+    val buildPath = "^/\\S*/target(/|$)".r
+    val main = sources.filter(_._1.startsWith(Paths.get("src", "main")))
+    assert(main.size > 50, s"only ${main.size} main sources found")
+    val bad = for {
+      (p, text) <- main
+      lit <- stringLiterals(text)
+      if lit.contains(checkout) || buildPath.findFirstIn(lit).isDefined
+    } yield s"$p: \"$lit\""
+    assert(bad.isEmpty, bad.mkString("\n  ", "\n  ", ""))
+  }
+
   test("no post-hoc install of the graft function surface") {
     val bad = offenders("""\bdef\s+install\s*\(""") ++
       offenders("""\b(GraftExtensions|TextKernels|VecKernels)\s*\.\s*install\b""") ++

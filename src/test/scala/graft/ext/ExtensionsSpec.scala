@@ -636,6 +636,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("scan, tf-only and positional lowerings agree on every WHERE shape") {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
     graft.fts.IndexCatalog.clear()
     // the fixture plus one NULL-text document: NOT forms drop it (NOT over
     // NULL is NULL) unless the term set is empty (NOT false keeps it)
@@ -645,6 +646,22 @@ class ExtensionsSpec extends SparkSpec {
         "SELECT 100000L AS doc_id, 'en' AS lang, CAST(NULL AS STRING) AS text"))
       .write.mode("overwrite").parquet(table)
     spark.read.parquet(table).createOrReplaceTempView("docs_agree")
+    // the same session state with spark.sql.files.openCostInBytes = 0:
+    // no non-empty postings slice runs as a single task there, so every
+    // index plan keeps its parallel shape, and rows must not change
+    val parallel = spark.newSession()
+    parallel.conf.set("spark.sql.files.openCostInBytes", "0")
+    parallel.read.parquet(table).createOrReplaceTempView("docs_agree")
+    // two terms outside the corpus vocabulary, by their postings bucket
+    // (the writer's pmod(xxhash64(term), 64)): one whose bucket holds
+    // other terms' postings, one whose bucket holds no file at all
+    def bucket(t: String) =
+      Math.floorMod(new XxHash64(Seq(Literal(t))).eval().asInstanceOf[Long], 64L)
+    val filled = spark.sql("SELECT DISTINCT explode(fts_tokenize(text)) FROM docs_agree")
+      .collect().map(r => bucket(r.getString(0))).toSet
+    val probes = (0 until 1000).map(i => s"nosuch$i")
+    val absent = probes.find(t => filled(bucket(t))).get
+    val unfilled = probes.find(t => !filled(bucket(t))).get
     val shapes = Seq(
       "fts_match(text, 'data query spark')",
       "fts_match_any(text, 'dup vector')",
@@ -675,7 +692,16 @@ class ExtensionsSpec extends SparkSpec {
       "fts_phrase(text, '...')",
       "fts_phrase_slop(text, '...', 1)",
       "fts_near(text, 'data', NULL, 2)",
-      "fts_phrase_slop(text, 'data query', NULL)")
+      "fts_phrase_slop(text, 'data query', NULL)",
+      s"fts_match(text, '$absent')",
+      s"fts_match(text, 'data $absent')",
+      s"fts_match(text, '$unfilled')",
+      s"fts_match_any(text, 'dup $unfilled')",
+      s"NOT fts_match_any(text, '$unfilled')",
+      // a repeated term fills two phrase slots
+      "fts_phrase(text, 'line group line')",
+      "fts_phrase_slop(text, 'order query order', 1)",
+      "fts_phrase_slop(text, 'group line', 3)")
     // out-of-range arguments: every lowering rejects them with one message
     val badArgs = Seq(
       "fts_fuzzy(text, 'data', 3)", "fts_fuzzy(text, 'data', 0)",
@@ -683,12 +709,15 @@ class ExtensionsSpec extends SparkSpec {
       "fts_phrase_slop(text, 'data query', -1)",
       "fts_match_min(text, 'data query', 0)")
     val projections = Seq("doc_id", "doc_id, lang")
-    def query(proj: String, where: String) =
-      spark.sql(s"SELECT $proj FROM docs_agree WHERE $where")
-    def rows(proj: String, where: String): Seq[String] =
-      query(proj, where).collect().map(_.toString).sorted.toSeq
-    def failure(proj: String, where: String): String = {
-      val e = intercept[Exception](query(proj, where).collect())
+    def query(proj: String, where: String,
+              s: org.apache.spark.sql.SparkSession = spark) =
+      s.sql(s"SELECT $proj FROM docs_agree WHERE $where")
+    def rows(proj: String, where: String,
+             s: org.apache.spark.sql.SparkSession = spark): Seq[String] =
+      query(proj, where, s).collect().map(_.toString).sorted.toSeq
+    def failure(proj: String, where: String,
+                s: org.apache.spark.sql.SparkSession = spark): String = {
+      val e = intercept[Exception](query(proj, where, s).collect())
       Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .collectFirst { case iae: IllegalArgumentException => iae.getMessage }
         .getOrElse(fail(s"'$where' failed without an IllegalArgumentException: $e"))
@@ -701,17 +730,45 @@ class ExtensionsSpec extends SparkSpec {
     val nullDoc = "100000"
     assert(rows("doc_id", "NOT fts_match(text, '!!!')").exists(_.contains(nullDoc)))
     assert(!rows("doc_id", "NOT fts_match(text, 'data query')").exists(_.contains(nullDoc)))
+    assert(expected(shapes.indexOf("fts_phrase(text, 'line group line')")).nonEmpty,
+      "the repeated-term phrase must match some fixture document")
+    // fts_score has no scan lowering: its reference is the persisted index
+    // scored through the stats table. Two terms per query, so each doc's
+    // score is one addition, whose order cannot change the bits
+    val scoreQueries = Seq("data query", s"dup $unfilled", s"$absent $unfilled")
+    def topk(q: String, s: org.apache.spark.sql.SparkSession) =
+      s.sql(s"SELECT doc_id, fts_score(text, '$q') AS score FROM docs_agree " +
+        s"WHERE fts_match_any(text, '$q') ORDER BY score DESC, doc_id LIMIT 10")
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     for ((name, positional) <- Seq(("tf", false), ("pos", true))) {
-      graft.fts.Index.createIndex(spark, table, ttmp(s"fts_agree_$name"),
-        positional = positional)
+      val ixDir = ttmp(s"fts_agree_$name")
+      graft.fts.Index.createIndex(spark, table, ixDir, positional = positional)
       try {
-        grid.zip(expected).foreach { case ((p, w), expect) =>
-          assert(rows(p, w) == expect,
-            s"$name index: '$w' ($p) diverges from the scan lowering")
+        for ((session, shape) <- Seq((spark, "single-task"), (parallel, "parallel"))) {
+          grid.zip(expected).foreach { case ((p, w), expect) =>
+            assert(rows(p, w, session) == expect,
+              s"$name index, $shape plans: '$w' ($p) diverges from the scan lowering")
+          }
+          badGrid.zip(expectedErr).foreach { case ((p, b), msg) =>
+            assert(failure(p, b, session) == msg, s"$name index, $shape plans: '$b' ($p)")
+          }
+          scoreQueries.foreach { q =>
+            val want = graft.fts.Search.scoreAllBm25(
+                graft.fts.Index.read(spark, ixDir), q.split(' ').toSeq)
+              .orderBy(col("score").desc, col("doc_id")).limit(10)
+              .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+            assert(topk(q, session) == want,
+              s"$name index, $shape plans: fts_score(text, '$q') top-k")
+          }
         }
-        badGrid.zip(expectedErr).foreach { case ((p, b), msg) =>
-          assert(failure(p, b) == msg, s"$name index: '$b' ($p)")
-        }
+        assert(topk("data query", spark).nonEmpty)
+        // the two sessions really plan the two shapes
+        def plan(s: org.apache.spark.sql.SparkSession) = query("doc_id",
+          "fts_match(text, 'data query spark')", s).queryExecution.executedPlan.toString
+        assert(!plan(spark).contains("Exchange") && plan(spark).contains("Coalesce 1"),
+          s"$name index: a small pruned slice must run as one task:\n${plan(spark)}")
+        assert(plan(parallel).contains("Exchange"),
+          s"$name index: openCostInBytes = 0 must keep the parallel plan:\n${plan(parallel)}")
         // every id set the covered plans know is served index-only
         for (w <- Seq("fts_fuzzy(text, 'dupe', 1)", "fts_regexp(text, 'du[a-z]')"))
           assert(scansOnlyPostings(query("doc_id", w)),

@@ -877,7 +877,12 @@ class SearchSpec extends SparkSpec {
     // fts_match 3 jobs. With the window df and row-count matching: 6 and 2.
     // With one-term id sets as plain postings projections and no candidate
     // semi-join over the score's own terms: top-k 4, one-word fts_match 1,
-    // fts_query('+w0 -w3 w17') 3 (was 6, 2 and 6).
+    // fts_query('+w0 -w3 w17') 3 (was 6, 2 and 6). With a small pruned
+    // postings slice on one task, joins of two such slices shuffled-hash
+    // and corpus stats and phrase slots as literals: top-k, the 3-term AND,
+    // the one-word match, the query string, a phrase and a near-AND each
+    // run as ONE job, while an unpruned prefix scan keeps its parallel
+    // plan (≥ 2).
     graft.fts.IndexCatalog.clear()
     try {
       val table = graft.core.Scratch.freshDir("jobcount_table")
@@ -891,16 +896,28 @@ class SearchSpec extends SparkSpec {
       val and = "SELECT doc_id FROM jobcount_docs WHERE fts_match(text, 'w0 w3 w17')"
       val one = "SELECT doc_id FROM jobcount_docs WHERE fts_match(text, 'w17')"
       val qstring = "SELECT doc_id FROM jobcount_docs WHERE fts_query(text, '+w0 -w3 w17')"
+      val phrase = "SELECT doc_id FROM jobcount_docs WHERE fts_phrase(text, 'w0 w1')"
+      val prefix = "SELECT doc_id FROM jobcount_docs WHERE fts_prefix(text, 'w1')"
+      // a near id set is itself a join of two slices, here grafted into a
+      // covered match beside another id set
+      val nearAnd = "SELECT doc_id FROM jobcount_docs " +
+        "WHERE fts_near(text, 'w0', 'w1', 2) AND fts_match(text, 'w2')"
       def warmJobs(sql: String): Int = {
         spark.sql(sql).collect()
         JobCount(spark)(spark.sql(sql).collect())._2
       }
       val (topkJobs, andJobs) = (warmJobs(topk), warmJobs(and))
       val (oneJobs, qstringJobs) = (warmJobs(one), warmJobs(qstring))
-      assert(topkJobs <= 4, s"fts_score top-k launched $topkJobs jobs")
-      assert(andJobs <= 2, s"3-term fts_match launched $andJobs jobs")
+      val (phraseJobs, prefixJobs) = (warmJobs(phrase), warmJobs(prefix))
+      val nearAndJobs = warmJobs(nearAnd)
+      assert(topkJobs <= 1, s"fts_score top-k launched $topkJobs jobs")
+      assert(andJobs <= 1, s"3-term fts_match launched $andJobs jobs")
       assert(oneJobs <= 1, s"one-word fts_match launched $oneJobs jobs")
-      assert(qstringJobs <= 3, s"fts_query('+w0 -w3 w17') launched $qstringJobs jobs")
+      assert(qstringJobs <= 1, s"fts_query('+w0 -w3 w17') launched $qstringJobs jobs")
+      assert(phraseJobs <= 1, s"fts_phrase launched $phraseJobs jobs")
+      assert(prefixJobs >= 2,
+        s"an unpruned fts_prefix scan must stay parallel, launched $prefixJobs jobs")
+      assert(nearAndJobs <= 1, s"fts_near AND fts_match launched $nearAndJobs jobs")
       // the lowering is still exact
       val ix = Index.build(skewed)
       def idList(d: org.apache.spark.sql.DataFrame) =
@@ -912,6 +929,12 @@ class SearchSpec extends SparkSpec {
       assert(spark.sql(topk).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
         Search.scoreBm25(ix, Seq("w0", "w17"), 10).collect()
           .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+      val pix = Index.buildPositional(skewed)
+      assert(idList(spark.sql(phrase)) ==
+        idList(Search.matchPhrasePositional(pix, Seq("w0", "w1"))))
+      assert(idList(spark.sql(prefix)) == idList(Search.matchPrefixIds(pix, "w1")))
+      assert(idList(spark.sql(nearAnd)) == idList(Search.matchNear(pix, "w0", "w1", 2)
+        .join(Search.matchAllIds(pix, Seq("w2")), "doc_id")))
     } finally graft.fts.IndexCatalog.clear()
   }
 
