@@ -721,17 +721,25 @@ case class FtsRegexp(text: Expression, pattern: Expression) extends FtsPredicate
   *
   * Passes 1 and 3 share one scoring subplan, [[scoringPlan]]: the query
   * terms' pruned postings, with the index's corpus stats as literals.
-  * Passes 1, 2 and 4 share one id-set lowering, [[exactIdsDf]]; the WHERE
+  * Passes 1, 2 and 4 share one id-set lowering, [[exactIds]]; the WHERE
   * pass adds only the forms that need the corpus row (negation under
   * IsNotNull, token-kernel residuals). Every lowering runs the same
   * argument checks, so a predicate's answer does not depend on which
   * index, if any, is registered.
+  *
+  * The rule runs inside the session optimizer's operator-optimization
+  * batches. The subplans it grafts are not optimized on their own
+  * ([[plannerReady]]): the batch the rule fires in, and every batch
+  * after it, optimize them together with the query. Pushdown, constant
+  * folding (the bucket filters that partition-prune the postings),
+  * column pruning and inferred filters run once per query, and
+  * [[SingleTaskPostings]] sees each postings scan once.
   */
 object RewriteFtsMatch extends Rule[LogicalPlan]
     with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
   import org.apache.spark.sql.catalyst.expressions.{Alias, And, ArrayContains, Attribute, Coalesce, EqualTo, ExprId, IsNotNull, Literal, NamedExpression}
   import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftOuter, LeftSemi}
-  import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, Project, SubqueryAlias}
+  import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, JoinHint, Project, SubqueryAlias, Union}
   import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
   import graft.fts.IndexCatalog
 
@@ -805,9 +813,41 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
       s"fts_match_min: minimum_should_match must be >= 1, got $k")
 
   /** The exact doc-id set for one positive fts predicate over its resolved
-    * entry's persisted index — with the id attribute the set joins on — or
-    * None when the predicate is not index-exact here. */
-  private def exactIdsDf(e: Expression, entryFor: EntryFor)
+    * entry's persisted index, as a [[plannerReady]] plan, with the id
+    * attribute the set joins on; None when the predicate is not
+    * index-exact here. A disjunction is the union of its branches' sets, a
+    * conjunction their intersection. */
+  private def exactIds(e: Expression, entryFor: EntryFor)
+      : Option[(LogicalPlan, Attribute)] = {
+    // Branches over different indexed columns are fine (same doc id);
+    // mixed id attributes cannot combine. A branch needing a text residual
+    // (phrase/near over a tf-only index) is not index-exact, so the whole
+    // expression falls to the scan lowering
+    def combined(branches: Seq[Expression], combine: Seq[LogicalPlan] => LogicalPlan) = {
+      val resolved = branches.map(exactIds(_, entryFor))
+      if (resolved.exists(_.isEmpty) ||
+          resolved.flatten.map(_._2.exprId).distinct.size != 1) None
+      else Some((combine(resolved.flatten.map(_._1)), resolved.head.get._2))
+    }
+    e match {
+      // recursive, so nested Ors flatten
+      case or: org.apache.spark.sql.catalyst.expressions.Or =>
+        combined(splitDisjunctivePredicates(or), { sets =>
+          val union = Union(sets)
+          Aggregate(union.output, union.output, union)
+        })
+      // a conjunction inside an OR branch — `(a AND b*) OR c`; top-level
+      // Ands are split into separate conjuncts before they get here
+      case and: org.apache.spark.sql.catalyst.expressions.And =>
+        combined(splitConjunctivePredicates(and),
+          _.reduce((a, b) => idJoin(a, a.output.head, b, LeftSemi)))
+      case _ => exactLeafIds(e, entryFor).map { case (df, idAttr) =>
+        (plannerReady(df), idAttr) }
+    }
+  }
+
+  /** [[exactIds]] for one predicate that is not an Or or an And. */
+  private def exactLeafIds(e: Expression, entryFor: EntryFor)
       : Option[(org.apache.spark.sql.DataFrame, Attribute)] = {
     // type-correct empty id frame (optimizes to an empty LocalRelation)
     def emptyIds(entry: IndexCatalog.Entry) = persistedIx(entry).postings
@@ -819,13 +859,13 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
         val (entry, idAttr) = entryFor(a).get
         val ts = entryTerms(entry, q)
         Some((if (ts.isEmpty) emptyIds(entry)
-          else matchingIdsDf(entry, ts, requireAll = true), idAttr))
+          else matchingIds(entry, ts, requireAll = true), idAttr))
       case FtsMatchAny(a: Attribute, Literal(q: UTF8String, StringType))
           if entryFor(a).isDefined =>
         val (entry, idAttr) = entryFor(a).get
         val ts = entryTerms(entry, q)
         Some((if (ts.isEmpty) emptyIds(entry)
-          else matchingIdsDf(entry, ts, requireAll = false), idAttr))
+          else matchingIds(entry, ts, requireAll = false), idAttr))
       case FtsMatchMin(a: Attribute, Literal(q: UTF8String, StringType),
                        Literal(k: Int, org.apache.spark.sql.types.IntegerType))
           if entryFor(a).isDefined =>
@@ -912,45 +952,27 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
         val (entry, idAttr) = entryFor(a).get
         Some((graft.fts.Search.matchRegexpIds(persistedIx(entry),
           p.toString), idAttr))
-      // a disjunction whose every branch is index-exact on the SAME id is
-      // itself index-exact: the union of the branch id sets (recursive, so
-      // nested Ors flatten). Branches over different indexed columns are
-      // fine (same doc id); mixed id attributes cannot union. A branch
-      // needing a text residual (phrase/near over a tf-only index) is not
-      // index-exact, so the whole disjunction falls to the scan lowering
-      case or: org.apache.spark.sql.catalyst.expressions.Or =>
-        val branches = splitDisjunctivePredicates(or)
-          .map(b => exactIdsDf(b, entryFor))
-        if (branches.forall(_.isDefined)) {
-          val resolved = branches.flatten
-          resolved.map(_._2.exprId).distinct match {
-            case Seq(_) =>
-              Some((resolved.map(_._1).reduce(_ unionByName _).distinct(),
-                resolved.head._2))
-            case _ => None
-          }
-        } else None
-      // a conjunction inside an OR branch — `(a AND b*) OR c` — is
-      // index-exact when every conjunct is: the INTERSECTION of the id
-      // sets (semi-join chain). Top-level Ands never reach here (they are
-      // split into separate conjuncts first), so this case exists purely
-      // to close the boolean algebra under Or recursion.
-      case and: org.apache.spark.sql.catalyst.expressions.And =>
-        val branches = splitConjunctivePredicates(and)
-          .map(b => exactIdsDf(b, entryFor))
-        if (branches.forall(_.isDefined)) {
-          val resolved = branches.flatten
-          resolved.map(_._2.exprId).distinct match {
-            case Seq(_) =>
-              Some((resolved.map(_._1).reduce((a, b) =>
-                a.join(b, a(a.columns.head) === b(b.columns.head), "left_semi")),
-                resolved.head._2))
-            case _ => None
-          }
-        } else None
       case _ => None
     }
   }
+
+  /** `df`'s analyzed plan, ready for the planner without an optimizer run.
+    * The rule runs inside the outer optimizer's operator-optimization
+    * batches, after the batches that remove nodes no strategy plans; this
+    * applies just those rules: [[org.apache.spark.sql.catalyst.optimizer.Optimizer]]'s
+    * `FinishAnalysis` (resolved `broadcast` hints fold into their joins,
+    * subquery aliases go, replaceable expressions are replaced), `With`
+    * expressions rewritten, and `distinct()` as an aggregate. The outer
+    * optimizer then optimizes the grafted plan with the query around it:
+    * pushdown, pruning and inferred filters run once per query. */
+  private def plannerReady(df: org.apache.spark.sql.DataFrame): LogicalPlan = {
+    import org.apache.spark.sql.catalyst.optimizer.{ReplaceDeduplicateWithAggregate, ReplaceDistinctWithAggregate, RewriteWithExpression}
+    val qe = df.queryExecution
+    Seq(qe.sparkSession.sessionState.optimizer.FinishAnalysis, RewriteWithExpression,
+        ReplaceDeduplicateWithAggregate, ReplaceDistinctWithAggregate)
+      .foldLeft(qe.analyzed)((plan, rule) => rule(plan))
+  }
+
   /** `cur` joined with an id set (first column) on `idAttr`. */
   private def idJoin(cur: LogicalPlan, idAttr: Attribute, ids: LogicalPlan,
                      joinType: org.apache.spark.sql.catalyst.plans.JoinType): LogicalPlan =
@@ -958,7 +980,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
 
   /** One WHERE conjunct as a step over the plan it filters, or None when no
     * registered index answers it (the scan fallback lowers it then):
-    *  - an id set [[exactIdsDf]] answers is semi-joined;
+    *  - an id set [[exactIds]] answers is semi-joined;
     *  - `NOT fts_match(_any)` anti-joins the positive id set (the
     *    library's mustNot, [[graft.fts.Search.matchBoolean]]) under
     *    IsNotNull(text): a NULL-text doc has no postings, so the bare
@@ -978,7 +1000,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
         val terms = entryTerms(entry, q)
         if (terms.isEmpty) identity[LogicalPlan] _
         else {
-          val ids = matchingIds(entry, terms, requireAll)
+          val ids = plannerReady(matchingIds(entry, terms, requireAll))
           (cur: LogicalPlan) => idJoin(Filter(IsNotNull(a), cur), idAttr, ids, LeftAnti)
         }
       }
@@ -987,12 +1009,11 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
         .map { case (entry, idAttr) =>
           if (terms.isEmpty) Filter(Literal.FalseLiteral, _: LogicalPlan)
           else {
-            val ids = matchingIds(entry, terms, requireAll = true)
+            val ids = plannerReady(matchingIds(entry, terms, requireAll = true))
             (cur: LogicalPlan) => Filter(residual, idJoin(cur, idAttr, ids, LeftSemi))
           }
         }
-    exactIdsDf(c, entryFor).map { case (df, idAttr) =>
-      val ids = df.queryExecution.optimizedPlan
+    exactIds(c, entryFor).map { case (ids, idAttr) =>
       (cur: LogicalPlan) => idJoin(cur, idAttr, ids, LeftSemi)
     }.orElse(c match {
       case Not(FtsMatch(a: Attribute, Literal(q: UTF8String, StringType))) =>
@@ -1226,12 +1247,11 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
     }
 
   /** Doc ids matching `terms` (ALL of them, or ANY if `requireAll` is
-    * false), as an optimized logical plan over the persisted postings
-    * (optimized eagerly so partition pruning + pushdown have already run by
-    * the time it is grafted into the outer tree — the later optimizer
-    * batches of the outer query won't revisit it). */
-  private def matchingIdsDf(entry: IndexCatalog.Entry, terms: Seq[String],
-                            requireAll: Boolean): org.apache.spark.sql.DataFrame = {
+    * false) over the persisted postings. The bucket filter is an
+    * expression over literals, so once grafted ([[plannerReady]]) the
+    * outer optimizer folds it and the scan partition-prunes. */
+  private def matchingIds(entry: IndexCatalog.Entry, terms: Seq[String],
+                          requireAll: Boolean): org.apache.spark.sql.DataFrame = {
     // bucket-pruned postings slice, then the same AND/OR match shapes the
     // library API exposes — one implementation of the match semantics
     val pruned = graft.fts.FtsIndex(
@@ -1240,10 +1260,6 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
     if (requireAll) graft.fts.Search.matchAllIds(pruned, terms)
     else graft.fts.Search.matchAnyIds(pruned, terms)
   }
-
-  private def matchingIds(entry: IndexCatalog.Entry, terms: Seq[String],
-                          requireAll: Boolean): LogicalPlan =
-    matchingIdsDf(entry, terms, requireAll).queryExecution.optimizedPlan
 
   /** Wildcard id set: a LEADING star over an index persisted WITH the
     * reversed-term projection answers as a prefix range over the reversed
@@ -1271,7 +1287,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
           org.apache.spark.sql.SparkSession.active, entry.indexDir))
       else None)
 
-  /** Per-doc BM25 scores for `terms` as an optimized logical plan over the
+  /** Per-doc BM25 scores for `terms` as a [[plannerReady]] plan over the
     * persisted index ([[graft.fts.Search.scoreAllBm25]]): postings pruned
     * to the terms' buckets, doc lengths read from the `dl` column
     * [[graft.fts.Index.write]] denormalized onto them, and the corpus
@@ -1282,12 +1298,11 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
   private def scoringPlan(entry: IndexCatalog.Entry, terms: Seq[String]): LogicalPlan = {
     val ix = persistedIx(entry)
     val pruned = ix.copy(postings = graft.fts.Index.lookup(ix, terms, entry.buckets))
-    graft.fts.Search.scoreAllBm25(pruned, terms, stats = Some(IndexCatalog.cachedStats(
-      org.apache.spark.sql.SparkSession.active, entry))).queryExecution.optimizedPlan
+    plannerReady(graft.fts.Search.scoreAllBm25(pruned, terms, stats = Some(
+      IndexCatalog.cachedStats(org.apache.spark.sql.SparkSession.active, entry))))
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    var rewrote = false
     // Pass 0 — ranked retrieval: fts_score occurrences in a Project over a
     // registered table become a LEFT-OUTER join against the per-doc BM25
     // scoring subplan (pruned postings, literal corpus stats), the expression
@@ -1389,9 +1404,9 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
             // from postings of non-null indexed text, matching the scan
             // path's 3VL (NOT fts_match(NULL,…) is NULL there → dropped)
             case org.apache.spark.sql.catalyst.expressions.Not(inner) =>
-              exactIdsDf(inner, entryFor) match {
-                case Some((df, conjId)) if conjId.exprId == idAttr.exprId =>
-                  antiIdSets += df.queryExecution.optimizedPlan
+              exactIds(inner, entryFor) match {
+                case Some((ids, conjId)) if conjId.exprId == idAttr.exprId =>
+                  antiIdSets += ids
                 case _ => ok = false
               }
             // a conjunct whose docs are EXACTLY the score's term domain —
@@ -1406,9 +1421,9 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
                   entryTerms(entry, q2).toSet == scoreSet =>
               bounding = true
             case conj =>
-              exactIdsDf(conj, entryFor) match {
-                case Some((df, conjId)) if conjId.exprId == idAttr.exprId =>
-                  idSets += df.queryExecution.optimizedPlan
+              exactIds(conj, entryFor) match {
+                case Some((ids, conjId)) if conjId.exprId == idAttr.exprId =>
+                  idSets += ids
                   // does this conjunct imply membership in the score's
                   // term domain (≥1 score term present)?
                   conj match {
@@ -1480,7 +1495,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
                      grandchild: LogicalPlan): Option[LogicalPlan] =
       indexedTable(grandchild).flatMap { case (entryFor, _) =>
         val conjs = splitConjunctivePredicates(cond)
-        val exact = conjs.flatMap(c => exactIdsDf(c, entryFor).map(c -> _))
+        val exact = conjs.flatMap(c => exactIds(c, entryFor).map(c -> _))
         val exactConjs = exact.map(_._1).toSet
         // NEGATED index-exact conjuncts subtract their id set via an
         // anti-join (the covered domain is postings rows — non-null
@@ -1489,7 +1504,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
         // set must remain to define the domain.
         val anti = conjs.filterNot(exactConjs.contains).flatMap {
           case n @ org.apache.spark.sql.catalyst.expressions.Not(inner) =>
-            exactIdsDf(inner, entryFor).map(n -> _)
+            exactIds(inner, entryFor).map(n -> _)
           case _ => Nil
         }
         val antiConjs = anti.map(_._1: Expression).toSet
@@ -1511,14 +1526,12 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
             org.apache.spark.sql.catalyst.expressions.AttributeSet(Seq(idAttr))))
           if (!leftovers || !projOk) None
           else {
-            var core = exact.head._2._1.queryExecution.optimizedPlan
-            exact.tail.foreach { case (_, (df, _)) =>
-              val p = df.queryExecution.optimizedPlan
-              core = idJoin(core, core.output.head, p, LeftSemi)
+            var core = exact.head._2._1
+            exact.tail.foreach { case (_, (ids, _)) =>
+              core = idJoin(core, core.output.head, ids, LeftSemi)
             }
-            anti.foreach { case (_, (df, _)) =>
-              val p = df.queryExecution.optimizedPlan
-              core = idJoin(core, core.output.head, p, LeftAnti)
+            anti.foreach { case (_, (ids, _)) =>
+              core = idJoin(core, core.output.head, ids, LeftAnti)
             }
             val coreId = core.output.head
             val newList = projectList.map { ne =>
@@ -1547,12 +1560,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
       case p @ Project(projectList, Filter(cond, grandchild))
           if p.resolved && cond.exists(_.isInstanceOf[FtsPredicate]) &&
             !projectList.exists(_.exists(_.isInstanceOf[FtsScore])) =>
-        coveredMatch(projectList, cond, grandchild) match {
-          case Some(covered) =>
-            rewrote = true
-            covered
-          case None => p
-        }
+        coveredMatch(projectList, cond, grandchild).getOrElse(p)
       case p @ Project(outerList,
             org.apache.spark.sql.catalyst.plans.logical.Sort(
               order, global, Project(_, Filter(cond, grandchild)), hint))
@@ -1560,7 +1568,6 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
             !outerList.exists(_.exists(_.isInstanceOf[FtsScore])) =>
         coveredCore(order ++ outerList, cond, grandchild) match {
           case Some((core, scoreIdAttr, scoreAttr, idExprId)) =>
-            rewrote = true
             val newOrder = order.map(o =>
               coveredExpr(o, scoreIdAttr, scoreAttr, idExprId)
                 .asInstanceOf[org.apache.spark.sql.catalyst.expressions.SortOrder])
@@ -1573,17 +1580,9 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
     val scoreAware = sortCovered.transformUp {
       case p @ Project(projectList, child)
           if p.resolved && projectList.exists(_.exists(_.isInstanceOf[FtsScore])) =>
-        indexOnly(projectList, child) match {
-          case Some(covered) =>
-            rewrote = true
-            covered
-          case None => lowerScores(projectList, child) match {
-            case Some((newList, cur)) =>
-              rewrote = true
-              Project(newList.map(_.asInstanceOf[NamedExpression]), cur)
-            case None => p
-          }
-        }
+        indexOnly(projectList, child).orElse(lowerScores(projectList, child).map {
+          case (newList, cur) => Project(newList.map(_.asInstanceOf[NamedExpression]), cur)
+        }).getOrElse(p)
       // filter pushdown may have INLINED a projected score alias into a
       // Filter condition (`WHERE s <> 0` over `SELECT fts_score(..) AS s`) —
       // lower it there too, projecting back to the child's schema so the
@@ -1592,7 +1591,6 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
           if f.resolved && cond.exists(_.isInstanceOf[FtsScore]) =>
         lowerScores(Seq(cond), child) match {
           case Some((Seq(newCond), cur)) =>
-            rewrote = true
             Project(child.output, Filter(newCond, cur))
           case _ => f
         }
@@ -1605,7 +1603,6 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
           if srt.resolved && order.exists(_.exists(_.isInstanceOf[FtsScore])) =>
         lowerScores(order, child) match {
           case Some((newOrder, cur)) =>
-            rewrote = true
             Project(child.output,
               org.apache.spark.sql.catalyst.plans.logical.Sort(
                 newOrder.map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.SortOrder]),
@@ -1623,7 +1620,6 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
             (grouping ++ aggExprs).exists(_.exists(_.isInstanceOf[FtsScore])) =>
         lowerScores(grouping ++ aggExprs, child) match {
           case Some((newAll, cur)) =>
-            rewrote = true
             val (newG, newA) = newAll.splitAt(grouping.size)
             org.apache.spark.sql.catalyst.plans.logical.Aggregate(
               newG, newA.map(_.asInstanceOf[NamedExpression]), cur, hint)
@@ -1640,7 +1636,6 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
             .partitionMap(c => lowerConjunct(c, entryFor).toLeft(c))
           if (steps.isEmpty) f
           else {
-            rewrote = true
             val base = rest.reduceOption(And).fold(effChild)(Filter(_, effChild))
             val folded = steps.foldLeft(base)((cur, step) => step(cur))
             // an id column re-threaded for the join must not leak upward
@@ -1648,20 +1643,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
           }
         }
     }
-    // The semi-join just dropped the only reference to the text column, but
-    // stock ColumnPruning already ran (this rule sits in the user batch at
-    // the optimizer's tail) — re-apply it so the document scan's ReadSchema
-    // shrinks to the projected columns instead of shipping the fat text
-    // column through the join.
-    val pruned =
-      if (rewrote)
-        // CollapseProject after the prune: the rewrites insert schema-restoring
-        // Projects that stack with the query's own — a Limit(Project(Project(
-        // Sort))) would no longer pattern-match TakeOrderedAndProject
-        org.apache.spark.sql.catalyst.optimizer.CollapseProject(
-          org.apache.spark.sql.catalyst.optimizer.ColumnPruning(indexAware))
-      else indexAware
-    pruned.transformAllExpressions {
+    indexAware.transformAllExpressions {
       case FtsMatch(text, Literal(q: UTF8String, StringType)) =>
         val terms = queryTerms(q)
         if (terms.isEmpty) Literal.FalseLiteral

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.planning.{ExtractEquiJoinKeys, PhysicalOper
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftOuter, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, HintInfo, Join, JoinHint, LogicalPlan, Project, Repartition, SHUFFLE_HASH, Sort, Union, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, HadoopFsRelation, LogicalRelation}
 
 /** Runs a small bucket-pruned postings slice as ONE task, so a full-text
@@ -38,42 +37,25 @@ import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, HadoopFsR
   *
   * Injected as a pre-CBO rule: by then the operator-optimization batch,
   * which could push a semi-join below a `Repartition`, has run, and the
-  * scans' partition filters are final. Id-set subplans that
-  * [[RewriteFtsMatch]] optimized on their own already carry this rule's
-  * nodes; they are stripped and re-derived over the whole plan, so the
-  * final shape does not depend on where the outer optimizer moved them,
-  * and no slice is coalesced twice.
+  * scans' partition filters are final. [[RewriteFtsMatch]] grafts its
+  * postings subplans unoptimized, so the rule sees every postings scan of
+  * a query once, in its final place.
   * The byte count is `location.listFiles` over the relation's cached
   * listing: no file-system call.
   */
 object SingleTaskPostings extends Rule[LogicalPlan] {
 
-  /** Marks the `Repartition` nodes this rule adds, so a later pass over a
-    * plan that grafted them in can tell them from a user's `coalesce(1)`. */
-  private val Added = TreeNodeTag[Unit]("graft.singleTaskPostings")
-
-  /** The hint a join of two single-task sides gets. A grafted subplan may
-    * already carry it, and such a join is single-task all the same. */
+  /** The hint a join of two single-task sides gets. */
   private val ShuffleHash = JoinHint(None, Some(HintInfo(strategy = Some(SHUFFLE_HASH))))
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.find(isPostingsScan).fold(plan) { _ =>
-      lower(plan.transformUp {
-        case r: Repartition if r.getTagValue(Added).isDefined => r.child
-      })._1
-    }
+    if (plan.exists(isPostingsScan)) lower(plan)._1 else plan
 
   private def isPostingsScan(p: LogicalPlan): Boolean = p match {
     case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
       fs.partitionSchema.fieldNames.toSeq == Seq("bucket") &&
         Set("term", "doc_id").subsetOf(fs.dataSchema.fieldNames.toSet)
     case _ => false
-  }
-
-  private def singleTask(p: LogicalPlan): LogicalPlan = {
-    val r = Repartition(1, shuffle = false, p)
-    r.setTagValue(Added, ())
-    r
   }
 
   /** Bytes of the bucket files a postings scan's partition filters select,
@@ -94,17 +76,17 @@ object SingleTaskPostings extends Rule[LogicalPlan] {
     case op @ PhysicalOperation(_, filters, lr: LogicalRelation)
         if isPostingsScan(lr) &&
           prunedBytes(filters, lr).exists(_ <= conf.filesOpenCostInBytes) =>
-      (singleTask(op), true)
+      (Repartition(1, shuffle = false, op), true)
     case _ =>
       val lowered = p.children.map(lower)
       val np = p.withNewChildren(lowered.map(_._1))
       val single = lowered.nonEmpty && lowered.forall(_._2)
       np match {
-        case j: Join if single && (j.hint == JoinHint.NONE || j.hint == ShuffleHash) &&
+        case j: Join if single && j.hint == JoinHint.NONE &&
             Seq(Inner, LeftSemi, LeftAnti, LeftOuter).contains(j.joinType) &&
             ExtractEquiJoinKeys.unapply(j).isDefined =>
           (j.copy(hint = ShuffleHash), true)
-        case u: Union if single => (singleTask(u), true)
+        case u: Union if single => (Repartition(1, shuffle = false, u), true)
         case Repartition(1, _, _) => (np, true)
         case _: Project | _: Filter | _: Aggregate | _: Window | _: Sort | _: Generate =>
           (np, single)

@@ -85,6 +85,22 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n  ", "\n  ", ""))
   }
 
+  /** The full-text rewrite runs inside the session optimizer's
+    * operator-optimization batches and grafts its subplans unoptimized, so
+    * each query is optimized once: no nested optimizer run and no
+    * hand-applied optimizer rule in the extension package, and the
+    * single-task rule needs no tag to recognize nodes of an earlier run. */
+  test("the full-text rewrite runs no nested optimizer") {
+    val ext = Paths.get("src", "main", "scala", "graft", "ext")
+    val stp = ext.resolve("SingleTaskPostings.scala")
+    assert(sources.exists(_._1 == stp), s"no $stp among ${sources.size} files")
+    val others = sources.map(_._1).filterNot(_.startsWith(ext))
+    val bad = offenders("""optimizedPlan|\bColumnPruning\s*\(|\bCollapseProject\s*\(""",
+        others: _*) ++
+      offenders("""\bTreeNodeTag\b""", sources.map(_._1).filterNot(_ == stp): _*)
+    assert(bad.isEmpty, bad.mkString("\n  ", "\n  ", ""))
+  }
+
   test("no post-hoc install of the graft function surface") {
     val bad = offenders("""\bdef\s+install\s*\(""") ++
       offenders("""\b(GraftExtensions|TextKernels|VecKernels)\s*\.\s*install\b""") ++

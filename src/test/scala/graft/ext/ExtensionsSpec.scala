@@ -636,15 +636,12 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("scan, tf-only and positional lowerings agree on every WHERE shape") {
-    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    import org.apache.spark.sql.execution.CoalesceExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     graft.fts.IndexCatalog.clear()
-    // the fixture plus one NULL-text document: NOT forms drop it (NOT over
-    // NULL is NULL) unless the term set is empty (NOT false keeps it)
+    // the fixture plus one NULL-text document (FtsShapes.writeTable)
     val table = ttmp("fts_agree_table")
-    spark.read.parquet(sf("documents")).select("doc_id", "lang", "text")
-      .union(spark.sql(
-        "SELECT 100000L AS doc_id, 'en' AS lang, CAST(NULL AS STRING) AS text"))
-      .write.mode("overwrite").parquet(table)
+    FtsShapes.writeTable(spark, sf("documents"), table)
     spark.read.parquet(table).createOrReplaceTempView("docs_agree")
     // the same session state with spark.sql.files.openCostInBytes = 0:
     // no non-empty postings slice runs as a single task there, so every
@@ -653,62 +650,10 @@ class ExtensionsSpec extends SparkSpec {
     parallel.conf.set("spark.sql.files.openCostInBytes", "0")
     parallel.read.parquet(table).createOrReplaceTempView("docs_agree")
     // two terms outside the corpus vocabulary, by their postings bucket
-    // (the writer's pmod(xxhash64(term), 64)): one whose bucket holds
-    // other terms' postings, one whose bucket holds no file at all
-    def bucket(t: String) =
-      Math.floorMod(new XxHash64(Seq(Literal(t))).eval().asInstanceOf[Long], 64L)
-    val filled = spark.sql("SELECT DISTINCT explode(fts_tokenize(text)) FROM docs_agree")
-      .collect().map(r => bucket(r.getString(0))).toSet
-    val probes = (0 until 1000).map(i => s"nosuch$i")
-    val absent = probes.find(t => filled(bucket(t))).get
-    val unfilled = probes.find(t => !filled(bucket(t))).get
-    val shapes = Seq(
-      "fts_match(text, 'data query spark')",
-      "fts_match_any(text, 'dup vector')",
-      "fts_match_min(text, 'data query dup spark', 3)",
-      "fts_phrase(text, 'data query')",
-      "fts_phrase_wild(text, 'data quer*')",
-      "fts_prefix(text, 'du')",
-      "fts_term_range(text, 'data', 'dup', true, false)",
-      "fts_near(text, 'data', 'query', 2)",
-      "fts_near(text, 'dup', 'dup', 1)",
-      "fts_phrase_slop(text, 'data query', 2)",
-      "fts_wildcard(text, 'd*p')",
-      "fts_wildcard(text, 'c?st*er')",
-      "fts_fuzzy(text, 'dupe', 1)",
-      "fts_regexp(text, 'du[a-z]')",
-      "NOT fts_match(text, 'data query')",
-      "NOT fts_match_any(text, 'data dup')",
-      "fts_match(text, 'dup') OR fts_prefix(text, 'vec')",
-      "fts_match(text, 'dup') OR fts_phrase(text, 'data query')",
-      "fts_match(text, 'data') AND lang = 'en'",
-      "fts_match_any(text, 'spark dup') AND doc_id % 2 = 0",
-      "fts_match(text, 'data') AND NOT fts_match_any(text, 'spark table')",
-      "fts_query(text, 'data AND (quer* OR dup) NOT table')",
-      "fts_query(text, '\"data query\"~2 OR dupe~1')",
-      "fts_match(text, '!!! ...')",
-      "fts_match_any(text, '...')",
-      "NOT fts_match(text, '!!!')",
-      "fts_phrase(text, '...')",
-      "fts_phrase_slop(text, '...', 1)",
-      "fts_near(text, 'data', NULL, 2)",
-      "fts_phrase_slop(text, 'data query', NULL)",
-      s"fts_match(text, '$absent')",
-      s"fts_match(text, 'data $absent')",
-      s"fts_match(text, '$unfilled')",
-      s"fts_match_any(text, 'dup $unfilled')",
-      s"NOT fts_match_any(text, '$unfilled')",
-      // a repeated term fills two phrase slots
-      "fts_phrase(text, 'line group line')",
-      "fts_phrase_slop(text, 'order query order', 1)",
-      "fts_phrase_slop(text, 'group line', 3)")
-    // out-of-range arguments: every lowering rejects them with one message
-    val badArgs = Seq(
-      "fts_fuzzy(text, 'data', 3)", "fts_fuzzy(text, 'data', 0)",
-      "fts_near(text, 'data', 'query', -1)", "fts_near(text, 'data', 'data', -1)",
-      "fts_phrase_slop(text, 'data query', -1)",
-      "fts_match_min(text, 'data query', 0)")
-    val projections = Seq("doc_id", "doc_id, lang")
+    val (absent, unfilled) = FtsShapes.probeTerms(spark, "docs_agree")
+    val shapes = FtsShapes.shapes(absent, unfilled)
+    val badArgs = FtsShapes.badArgs
+    val projections = FtsShapes.projections
     def query(proj: String, where: String,
               s: org.apache.spark.sql.SparkSession = spark) =
       s.sql(s"SELECT $proj FROM docs_agree WHERE $where")
@@ -727,7 +672,7 @@ class ExtensionsSpec extends SparkSpec {
     // scan-path ground truth first (unregistered)
     val expected = grid.map { case (p, w) => rows(p, w) }
     val expectedErr = badGrid.map { case (p, b) => failure(p, b) }
-    val nullDoc = "100000"
+    val nullDoc = FtsShapes.NullDoc
     assert(rows("doc_id", "NOT fts_match(text, '!!!')").exists(_.contains(nullDoc)))
     assert(!rows("doc_id", "NOT fts_match(text, 'data query')").exists(_.contains(nullDoc)))
     assert(expected(shapes.indexOf("fts_phrase(text, 'line group line')")).nonEmpty,
@@ -735,11 +680,31 @@ class ExtensionsSpec extends SparkSpec {
     // fts_score has no scan lowering: its reference is the persisted index
     // scored through the stats table. Two terms per query, so each doc's
     // score is one addition, whose order cannot change the bits
-    val scoreQueries = Seq("data query", s"dup $unfilled", s"$absent $unfilled")
-    def topk(q: String, s: org.apache.spark.sql.SparkSession) =
-      s.sql(s"SELECT doc_id, fts_score(text, '$q') AS score FROM docs_agree " +
-        s"WHERE fts_match_any(text, '$q') ORDER BY score DESC, doc_id LIMIT 10")
+    val scoreQueries = FtsShapes.scoreQueries(absent, unfilled)
+    def topk(q: String, s: org.apache.spark.sql.SparkSession, extra: Option[String] = None) =
+      s.sql(FtsShapes.topkSql("docs_agree", q, extra))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // the covered score with one more id set per extra conjunct: its
+    // reference scores only the conjunct's scan-lowered ids (for the
+    // negation, the complement of the positive set)
+    val extraIds = FtsShapes.scoreConjuncts.map(c =>
+      c -> query("doc_id", c).collect().map(_.getLong(0)).toSeq)
+    assert(extraIds.forall(_._2.nonEmpty))
+    // a single-task slice is coalesced once: no Coalesce 1 below another,
+    // except below a Union that is coalesced as a whole (each side keeps
+    // the Coalesce 1 that makes its own operators exchange-free)
+    val helper = new AdaptiveSparkPlanHelper {}
+    def nestedCoalesce(df: org.apache.spark.sql.DataFrame): Boolean = {
+      import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+      def coalesced(p: SparkPlan): Boolean = p match {
+        case _: UnionExec => false
+        case _: CoalesceExec => true
+        case other => other.children.exists(coalesced)
+      }
+      helper.collect(df.queryExecution.executedPlan) {
+        case c: CoalesceExec if c.numPartitions == 1 => c
+      }.exists(c => coalesced(c.child))
+    }
     for ((name, positional) <- Seq(("tf", false), ("pos", true))) {
       val ixDir = ttmp(s"fts_agree_$name")
       graft.fts.Index.createIndex(spark, table, ixDir, positional = positional)
@@ -753,15 +718,31 @@ class ExtensionsSpec extends SparkSpec {
             assert(failure(p, b, session) == msg, s"$name index, $shape plans: '$b' ($p)")
           }
           scoreQueries.foreach { q =>
-            val want = graft.fts.Search.scoreAllBm25(
-                graft.fts.Index.read(spark, ixDir), q.split(' ').toSeq)
+            def want(candidates: Option[Seq[Long]]) = graft.fts.Search.scoreAllBm25(
+                graft.fts.Index.read(spark, ixDir), q.split(' ').toSeq,
+                candidates = candidates.map(ids => {
+                  import spark.implicits._
+                  ids.toDF("doc_id")
+                }))
               .orderBy(col("score").desc, col("doc_id")).limit(10)
               .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-            assert(topk(q, session) == want,
+            assert(topk(q, session) == want(None),
               s"$name index, $shape plans: fts_score(text, '$q') top-k")
+            extraIds.foreach { case (c, ids) =>
+              assert(topk(q, session, Some(c)) == want(Some(ids)),
+                s"$name index, $shape plans: fts_score(text, '$q') top-k AND $c")
+            }
           }
         }
         assert(topk("data query", spark).nonEmpty)
+        assert(extraIds.forall { case (c, _) => topk("data query", spark, Some(c)).nonEmpty })
+        // every served shape coalesces each single-task slice once
+        val served = grid.map { case (p, w) => s"'$w' ($p)" -> query(p, w) } ++
+          (for (q <- scoreQueries; c <- None +: FtsShapes.scoreConjuncts.map(Some(_)))
+            yield s"top-k '$q' AND $c" -> spark.sql(FtsShapes.topkSql("docs_agree", q, c)))
+        for ((what, df) <- served)
+          assert(!nestedCoalesce(df),
+            s"$name index: $what nests a Coalesce 1:\n${df.queryExecution.executedPlan}")
         // the two sessions really plan the two shapes
         def plan(s: org.apache.spark.sql.SparkSession) = query("doc_id",
           "fts_match(text, 'data query spark')", s).queryExecution.executedPlan.toString
@@ -773,6 +754,9 @@ class ExtensionsSpec extends SparkSpec {
         for (w <- Seq("fts_fuzzy(text, 'dupe', 1)", "fts_regexp(text, 'du[a-z]')"))
           assert(scansOnlyPostings(query("doc_id", w)),
             s"$name index: '$w' must be covered:\n${query("doc_id", w).queryExecution.optimizedPlan}")
+        for (q <- scoreQueries; c <- FtsShapes.scoreConjuncts)
+          assert(scansOnlyPostings(spark.sql(FtsShapes.topkSql("docs_agree", q, Some(c)))),
+            s"$name index: top-k '$q' AND $c must be covered")
       } finally graft.fts.IndexCatalog.clear()
     }
   }

@@ -868,6 +868,36 @@ class SearchSpec extends SparkSpec {
         assert(one == Seq("absent") || ref.nonEmpty, s"$kind, $one")
       }
     }
+    // merge-on-read scoring takes dl and the corpus stats from ONE doc
+    // lengths pipeline: the scores equal, as exact doubles, the form that
+    // reads the log's stats row as literals, also for a log holding a NULL
+    // doc_id (its doc lengths row counts in n_docs), and the plan scans the
+    // base and the delta doclens once each. Two query terms, so a doc's
+    // score is one addition, whose order cannot change the bits
+    val nDir = graft.core.Scratch.freshDir("score_identity_null_log")
+    IncrementalIndex.upsert(spark, nDir, skewed.filter(col("doc_id") < 150))
+    IncrementalIndex.compact(spark, nDir,
+      graft.core.Scratch.freshDir("score_identity_null_base"), buckets = 4)
+    IncrementalIndex.upsert(spark, nDir, skewed.filter(col("doc_id") >= 150)
+      .union(Seq((Option.empty[Long], "w0 w3 w17 nullid")).toDF("doc_id", "text")))
+    val withNull = IncrementalIndex.read(spark, nDir)
+    assert(withNull.docLens.filter(col("doc_id").isNull).count() == 1)
+    def exact(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (Option(r.get(0)), r.getDouble(1))).toSet
+    for ((kind, log) <- Seq("merge-on-read" -> incremental,
+        "merge-on-read, NULL doc_id" -> withNull)) {
+      val stats = CorpusStats.read(log.stats)
+      assert(stats.nDocs == log.docLens.count(), kind)
+      val two = Seq("w3", "w17")
+      val got = exact(Search.scoreAllBm25(log, two))
+      assert(got.nonEmpty && got == exact(Search.scoreAllBm25(log, two, stats = Some(stats))),
+        s"$kind: scores differ from the stats-row form")
+      val plan = Search.scoreBm25(log, terms, 10).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      val doclensScans = plan.linesIterator
+        .count(l => l.trim.startsWith("Location:") && l.contains("doclens"))
+      assert(doclensScans == 2, s"$kind: $doclensScans doclens scans:\n$plan")
+    }
   }
 
   test("persisted SQL serving: top-k and a 3-term AND launch at most the pinned job count") {
