@@ -739,7 +739,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
     with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
   import org.apache.spark.sql.catalyst.expressions.{Alias, And, ArrayContains, Attribute, Coalesce, EqualTo, ExprId, IsNotNull, Literal, NamedExpression}
   import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftOuter, LeftSemi}
-  import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, JoinHint, Project, SubqueryAlias, Union}
+  import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, Project, SubqueryAlias}
   import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
   import graft.fts.IndexCatalog
 
@@ -815,40 +815,25 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
   /** The exact doc-id set for one positive fts predicate over its resolved
     * entry's persisted index, as a [[plannerReady]] plan, with the id
     * attribute the set joins on; None when the predicate is not
-    * index-exact here. A disjunction is the union of its branches' sets, a
-    * conjunction their intersection. */
-  private def exactIds(e: Expression, entryFor: EntryFor)
-      : Option[(LogicalPlan, Attribute)] = {
+    * index-exact here. */
+  private def exactIds(e: Expression, entryFor: EntryFor): Option[(LogicalPlan, Attribute)] =
+    exactIdsDf(e, entryFor).map { case (df, idAttr) => (plannerReady(df), idAttr) }
+
+  /** [[exactIds]] as a DataFrame. A disjunction is the union of its
+    * branches' sets, a conjunction their intersection. */
+  private def exactIdsDf(e: Expression, entryFor: EntryFor)
+      : Option[(org.apache.spark.sql.DataFrame, Attribute)] = {
     // Branches over different indexed columns are fine (same doc id);
     // mixed id attributes cannot combine. A branch needing a text residual
     // (phrase/near over a tf-only index) is not index-exact, so the whole
     // expression falls to the scan lowering
-    def combined(branches: Seq[Expression], combine: Seq[LogicalPlan] => LogicalPlan) = {
-      val resolved = branches.map(exactIds(_, entryFor))
+    def combined(branches: Seq[Expression],
+                 combine: Seq[org.apache.spark.sql.DataFrame] => org.apache.spark.sql.DataFrame) = {
+      val resolved = branches.map(exactIdsDf(_, entryFor))
       if (resolved.exists(_.isEmpty) ||
           resolved.flatten.map(_._2.exprId).distinct.size != 1) None
       else Some((combine(resolved.flatten.map(_._1)), resolved.head.get._2))
     }
-    e match {
-      // recursive, so nested Ors flatten
-      case or: org.apache.spark.sql.catalyst.expressions.Or =>
-        combined(splitDisjunctivePredicates(or), { sets =>
-          val union = Union(sets)
-          Aggregate(union.output, union.output, union)
-        })
-      // a conjunction inside an OR branch — `(a AND b*) OR c`; top-level
-      // Ands are split into separate conjuncts before they get here
-      case and: org.apache.spark.sql.catalyst.expressions.And =>
-        combined(splitConjunctivePredicates(and),
-          _.reduce((a, b) => idJoin(a, a.output.head, b, LeftSemi)))
-      case _ => exactLeafIds(e, entryFor).map { case (df, idAttr) =>
-        (plannerReady(df), idAttr) }
-    }
-  }
-
-  /** [[exactIds]] for one predicate that is not an Or or an And. */
-  private def exactLeafIds(e: Expression, entryFor: EntryFor)
-      : Option[(org.apache.spark.sql.DataFrame, Attribute)] = {
     // type-correct empty id frame (optimizes to an empty LocalRelation)
     def emptyIds(entry: IndexCatalog.Entry) = persistedIx(entry).postings
       .filter(org.apache.spark.sql.GraftColumnBridge.column(Literal.FalseLiteral))
@@ -952,6 +937,14 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
         val (entry, idAttr) = entryFor(a).get
         Some((graft.fts.Search.matchRegexpIds(persistedIx(entry),
           p.toString), idAttr))
+      // recursive, so nested Ors flatten
+      case or: org.apache.spark.sql.catalyst.expressions.Or =>
+        combined(splitDisjunctivePredicates(or), _.reduce(_ unionByName _).distinct())
+      // a conjunction inside an OR branch — `(a AND b*) OR c`; top-level
+      // Ands are split into separate conjuncts before they get here
+      case and: org.apache.spark.sql.catalyst.expressions.And =>
+        combined(splitConjunctivePredicates(and), _.reduce((a, b) =>
+          a.join(b, a(a.columns.head) === b(b.columns.head), "left_semi")))
       case _ => None
     }
   }

@@ -1340,18 +1340,19 @@ object Search {
     * when SQL `fts_score(text, 'q')` is lowered over a registered index.
     * Output columns: `doc_id, score`.
     *
-    * Corpus statistics come in one of three forms, all evaluating the
-    * same expressions, so their scores are bit-identical:
-    *  - given `stats`, `n_docs` and `avgdl` are literals: over a persisted
-    *    layout the plan reads only the pruned postings;
-    *  - postings that carry `dl` (a persisted layout) cross-join the
-    *    one-row `ix.stats` table, broadcast;
-    *  - postings without `dl` (merge-on-read and in-memory indexes) join
-    *    `ix.docLens` for `dl`, and take `n_docs` and `avgdl` as whole-table
-    *    window aggregates over the same `ix.docLens` rows: the row count
-    *    and mean `dl` that every builder's `stats` holds. The doc lengths
-    *    are then computed once, not once for the join and again for the
-    *    stats, at the price of one single-partition window over them. */
+    * Corpus statistics come in one of two forms. By default the one-row
+    * `ix.stats` table is broadcast and cross-joined onto the scoring rows
+    * (merge-on-read and in-memory indexes, whose stats are a plan). Given
+    * `stats`, `n_docs` and `avgdl` are literals instead: the plan reads
+    * only the pruned postings, with no broadcast. Both forms evaluate the
+    * same expressions, so their scores are bit-identical.
+    *
+    * Postings without `dl` (merge-on-read and in-memory indexes) join
+    * `ix.docLens` on a null-safe key, NULL ids dropped first: an equi-join
+    * would infer `isnotnull(doc_id)` on the doc lengths and push it down to
+    * their scans, so that copy would differ from the one `ix.stats`
+    * aggregates. With the two copies alike the stats side reuses the join
+    * side's exchange, and the doc lengths are computed once. */
   def scoreAllBm25(ix: FtsIndex, terms: Seq[String],
                    k1: Double = 1.2, b: Double = 0.75,
                    candidates: Option[DataFrame] = None,
@@ -1366,20 +1367,13 @@ object Search {
     // a persisted layout carries dl on the posting rows ([[Index.write]]
     // denormalizes it), so scoring reads ONLY the query terms' pruned
     // buckets — the O(corpus) doclens join is the in-memory fallback
-    val hasDl = qp.columns.contains("dl")
-    val withStats = stats match {
-      case Some(s) =>
-        (if (hasDl) qp else qp.join(ix.docLens, "doc_id"))
-          .withColumn("n_docs", lit(s.nDocs)).withColumn("avgdl", lit(s.avgdl))
-      case None if hasDl => qp.crossJoin(broadcast(ix.stats))
-      case None =>
-        // no partition keys: an inferred filter on doc_id cannot move below
-        // the window, so a NULL doc_id still counts, as it does in stats
-        val all = org.apache.spark.sql.expressions.Window.partitionBy()
-        qp.join(ix.docLens.withColumn("n_docs", count(lit(1)).over(all))
-          .withColumn("avgdl", avg(col("dl")).over(all)), "doc_id")
-    }
-    withStats
+    val withDl =
+      if (qp.columns.contains("dl")) qp
+      else qp.filter(col("doc_id").isNotNull).join(
+        ix.docLens.select(col("doc_id").as("dl_id"), col("dl")),
+        col("doc_id") <=> col("dl_id")).drop("dl_id")
+    stats.fold(withDl.crossJoin(broadcast(ix.stats)))(s =>
+        withDl.withColumn("n_docs", lit(s.nDocs)).withColumn("avgdl", lit(s.avgdl)))
       .withColumn("idf",
         log((col("n_docs").cast("double") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
       .withColumn("score_t",
