@@ -138,7 +138,7 @@ object FtsTokenizeCjk {
   * starts with `prefix` (already normalized through the token grammar by
   * [[RewriteFtsMatch]], which is the only producer — not SQL-registered).
   * Codegen'd like [[FtsTokenize]]; the index path replaces this with a
-  * term-RANGE postings semi-join ([[graft.fts.Search.matchPrefixIds]]). */
+  * semi-join against the postings of the prefix's vocabulary expansion. */
 case class FtsHasTokenPrefix(child: Expression, prefix: String)
     extends UnaryExpression {
   override def dataType: DataType = BooleanType
@@ -179,8 +179,9 @@ object FtsHasTokenPrefix {
   * so scan and index paths agree). Produced only by [[RewriteFtsMatch]];
   * not SQL-registered. The index path replaces this with a pushed term
   * RANGE over the sorted postings
-  * ([[graft.fts.Search.matchTermRangeIds]], row-group min/max pruning —
-  * the same access path as `fts_prefix`). */
+  * ([[graft.fts.Search.matchTermRangeIds]]: row-group min/max stats skip
+  * only row groups outside the range, none while a bucket file is one
+  * row group). */
 case class FtsHasTokenRange(child: Expression, lo: String, hi: String,
                             inclLo: Boolean, inclHi: Boolean)
     extends UnaryExpression {
@@ -576,9 +577,11 @@ case class FtsScore(left: Expression, right: Expression)
 
 /** `fts_prefix(text, 'quer')`: true iff the document contains a token with
   * the given prefix — the wildcard-suffix query `quer*`. Lowered by
-  * [[RewriteFtsMatch]]: index path = a term-RANGE semi-join against the
-  * term-sorted postings ([[graft.fts.Search.matchPrefixIds]]; row-group
-  * min/max pruning); scan path = the [[FtsHasTokenPrefix]] kernel. */
+  * [[RewriteFtsMatch]]: index path = the prefix expanded against the
+  * index's vocabulary on the driver ([[graft.fts.Vocabulary.withPrefix]]),
+  * then a semi-join against the postings of the expanded terms' buckets,
+  * row-filtered by the term range ([[graft.fts.Search.prefixRange]]);
+  * scan path = the [[FtsHasTokenPrefix]] kernel. */
 case class FtsPrefix(left: Expression, right: Expression) extends FtsPredicate {
   override def children: Seq[Expression] = Seq(left, right)
   override def prettyName: String = "fts_prefix"
@@ -591,10 +594,10 @@ case class FtsPrefix(left: Expression, right: Expression) extends FtsPredicate {
   * Lucene's range query (query syntax `[lo TO hi]` / `{lo TO hi}`).
   * Lowered by [[RewriteFtsMatch]]: index path =
   * [[graft.fts.Search.matchTermRangeIds]] (the bounds push as a term
-  * range into the term-sorted postings, parquet row-group min/max pruning
-  * — the same access path as `fts_prefix`, whose `prefix ≤ t < prefix⁺`
-  * window is the special case); scan path = the [[FtsHasTokenRange]]
-  * kernel. */
+  * range into the term-sorted postings; parquet row-group min/max stats
+  * skip only row groups outside it, none while a bucket file is one row
+  * group, so the range reads every posting); scan path = the
+  * [[FtsHasTokenRange]] kernel. */
 case class FtsTermRange(text: Expression, lo: Expression, hi: Expression,
                         inclLo: Expression, inclHi: Expression)
     extends FtsPredicate {
@@ -661,9 +664,10 @@ case class FtsWildcard(left: Expression, right: Expression) extends FtsPredicate
 /** `fts_fuzzy(text, 'term', k)`: true iff the document contains a token
   * within `k` Levenshtein edits of the term — typo-tolerant search on the
   * SQL surface (query syntax `term~k`). Lowered by [[RewriteFtsMatch]]:
-  * index path = [[graft.fts.Search.matchFuzzyIds]] (the distance runs over
-  * the length-banded term DICTIONARY, never the corpus; matched terms
-  * drive the ordinary postings-union semi-join); scan path = a banded
+  * index path = the term expanded against the index's vocabulary on the
+  * driver ([[graft.fts.Vocabulary.withinEdits]], the predicates of
+  * [[graft.fts.Search.matchFuzzyIds]]), then a semi-join against the
+  * expanded terms' postings in their buckets; scan path = a banded
   * `levenshtein(t, term, k) >= 0` exists() over the token array (the
   * threshold form bails out of the DP early, so a long token costs
   * O(len·k), not O(len²)). */
@@ -834,10 +838,6 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
           resolved.flatten.map(_._2.exprId).distinct.size != 1) None
       else Some((combine(resolved.flatten.map(_._1)), resolved.head.get._2))
     }
-    // type-correct empty id frame (optimizes to an empty LocalRelation)
-    def emptyIds(entry: IndexCatalog.Entry) = persistedIx(entry).postings
-      .filter(org.apache.spark.sql.GraftColumnBridge.column(Literal.FalseLiteral))
-      .select("doc_id")
     e match {
       case FtsMatch(a: Attribute, Literal(q: UTF8String, StringType))
           if entryFor(a).isDefined =>
@@ -900,11 +900,15 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
         Some((if (ts.isEmpty) emptyIds(entry)
           else graft.fts.Search.matchPhraseSloppy(
             persistedIx(entry), ts, sl, entry.buckets), idAttr))
+      // prefix and fuzzy expand against the index's vocabulary on the
+      // driver; the row filter is the prefix range itself, or the expanded
+      // terms for fuzzy
       case FtsPrefix(a: Attribute, Literal(p: UTF8String, StringType))
           if entryFor(a).exists(_._1.analyzer.isV1) =>
         val (entry, idAttr) = entryFor(a).get
-        Some((graft.fts.Search.matchPrefixIds(persistedIx(entry), normPrefix(p)),
-          idAttr))
+        val norm = normPrefix(p)
+        Some((expandedIds(entry, vocabulary(entry).withPrefix(norm),
+          graft.fts.Search.prefixRange(norm)), idAttr))
       case FtsTermRange(a: Attribute, Literal(lo: UTF8String, StringType),
                         Literal(hi: UTF8String, StringType),
                         Literal(il: Boolean, BooleanType),
@@ -928,8 +932,9 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
           if entryFor(a).exists(_._1.analyzer.isV1) =>
         val (entry, idAttr) = entryFor(a).get
         checkEdits(k)
-        Some((graft.fts.Search.matchFuzzyIds(persistedIx(entry),
-          singleTerm(t, "fts_fuzzy"), k), idAttr))
+        val ts = vocabulary(entry).withinEdits(singleTerm(t, "fts_fuzzy"), k)
+        Some((expandedIds(entry, ts,
+          org.apache.spark.sql.functions.col("term").isin(ts: _*)), idAttr))
       case FtsRegexp(a: Attribute, Literal(p: UTF8String, StringType))
           // v1 only, like wildcard/fuzzy: the pattern measures the v1
           // term space, not an analyzer's stemmed dictionary
@@ -1161,6 +1166,12 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
     IndexCatalog.cachedIndex(
       org.apache.spark.sql.SparkSession.active, entry)
 
+  /** The entry's term vocabulary, read once per cached handle
+    * ([[IndexCatalog.cachedVocabulary]]). */
+  private def vocabulary(entry: IndexCatalog.Entry): graft.fts.Vocabulary =
+    IndexCatalog.cachedVocabulary(
+      org.apache.spark.sql.SparkSession.active, entry)
+
   /** The base-relation exprId that `attr` (an output of `plan`) carries,
     * traced through pass-through Projects (direct references and simple
     * `col AS alias` renames), Filters, and SubqueryAliases. None for
@@ -1253,6 +1264,32 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
     if (requireAll) graft.fts.Search.matchAllIds(pruned, terms)
     else graft.fts.Search.matchAnyIds(pruned, terms)
   }
+
+  /** A type-correct empty id set (optimizes to an empty LocalRelation). */
+  private def emptyIds(entry: IndexCatalog.Entry): org.apache.spark.sql.DataFrame =
+    persistedIx(entry).postings
+      .filter(org.apache.spark.sql.GraftColumnBridge.column(Literal.FalseLiteral))
+      .select("doc_id")
+
+  /** Doc ids holding any of `terms`, a dictionary predicate expanded
+    * against the index's vocabulary: one postings slice whose partition
+    * filter is `bucket IN` the terms' distinct buckets (at most
+    * `entry.buckets` literals, however many terms matched) and whose row
+    * filter is `rowFilter`, which must select exactly the terms' rows.
+    * One term's ids are already distinct ([[graft.fts.FtsIndex]]
+    * uniqueness contract). A small slice then runs as one task
+    * ([[SingleTaskPostings]]). */
+  private def expandedIds(entry: IndexCatalog.Entry, terms: Seq[String],
+                          rowFilter: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.DataFrame =
+    if (terms.isEmpty) emptyIds(entry)
+    else {
+      val buckets = terms.map(graft.fts.Index.bucketOf(_, entry.buckets)).distinct.sorted
+      val ids = persistedIx(entry).postings
+        .filter(org.apache.spark.sql.functions.col("bucket").isin(buckets: _*) && rowFilter)
+        .select("doc_id")
+      if (terms.size == 1) ids else ids.distinct()
+    }
 
   /** Wildcard id set: a LEADING star over an index persisted WITH the
     * reversed-term projection answers as a prefix range over the reversed

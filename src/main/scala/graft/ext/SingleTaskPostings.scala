@@ -26,8 +26,10 @@ import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, HadoopFsR
   *  - **Joins of two single-task sides** get a shuffled-hash hint: they
   *    then plan with neither an exchange nor a broadcast. A union of
   *    single-task sides is coalesced to one task the same way.
-  *  - An unpruned scan (a prefix, fuzzy or regexp dictionary scan) and a
-  *    slice above the threshold keep the parallel plan.
+  *  - An unpruned scan (a term range, a wildcard or regexp dictionary
+  *    scan) and a slice above the threshold keep the parallel plan.
+  *    `fts_prefix` and `fts_fuzzy` expand against the index's vocabulary
+  *    first, so their scans prune to the expanded terms' buckets.
   *
   * The threshold is Spark's own estimate of the bytes one task scans in
   * the time a file open costs, the same figure the file-scan planner packs

@@ -722,6 +722,14 @@ object Index {
       p.filter(bucketFilter && termFilter)
     } else p.filter(termFilter)
   }
+
+  /** The bucket [[write]] stores `term`'s postings in: the writer's own
+    * `pmod(xxhash64(term), buckets)`, evaluated on the driver. */
+  def bucketOf(term: String, buckets: Int): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64}
+    Pmod(new XxHash64(Seq(Literal(term))), Literal(buckets.toLong)).eval()
+      .asInstanceOf[Long].toInt
+  }
 }
 
 /** Query operators over an FtsIndex: boolean matching, phrase matching,
@@ -896,51 +904,51 @@ object Search {
   }
 
   /** doc_ids containing any term within `maxEdits` Levenshtein edits of
-    * the query term — TYPO-TOLERANT search. Expansion runs over the TERM
-    * DICTIONARY, not the corpus: distinct terms are |vocab| (millions at
-    * 100 TB, vs trillions of postings), length-banded first (an edit
-    * changes length by ≤ maxEdits — prunes most of the dictionary before
-    * any distance runs), then exact `levenshtein` (codegen built-in); the
-    * matched terms drive the ordinary postings-union plan, so the corpus
-    * side stays the pruned [[matchAnyIds]] shape. FastSS deletion-
-    * neighborhood blocking ([[graft.ops.Fuzzy]]) is the same-result
-    * upgrade if the dictionary itself ever needs sub-linear expansion. */
-  def matchFuzzyIds(ix: FtsIndex, term: String, maxEdits: Int = 1): DataFrame = {
-    val dict = ix.postings.select(col("term")).distinct()
-    val expanded = dict
+    * the query term — TYPO-TOLERANT search. One pass over the postings:
+    * a length band first (an edit changes length by ≤ maxEdits), then
+    * Spark's thresholded `levenshtein(term, q, maxEdits)` (codegen
+    * built-in; it stops once the distance exceeds the budget), then the
+    * distinct ids. The filters read only `term`, so they cost what a
+    * distinct-term dictionary filtered and joined back would, minus the
+    * aggregate and the join. SQL `fts_fuzzy` over a registered index
+    * applies the same two predicates to the index's vocabulary on the
+    * driver ([[Vocabulary.withinEdits]]) and reads only the expanded
+    * terms' buckets. FastSS deletion-neighborhood blocking
+    * ([[graft.ops.Fuzzy]]) is the same-result upgrade if the expansion
+    * itself ever needs to be sub-linear. */
+  def matchFuzzyIds(ix: FtsIndex, term: String, maxEdits: Int = 1): DataFrame =
+    ix.postings
       .filter(abs(length(col("term")) - lit(term.length)) <= maxEdits)
-      .filter(levenshtein(col("term"), lit(term)) <= maxEdits)
-    ix.postings.join(broadcast(expanded), "term")
+      .filter(levenshtein(col("term"), lit(term), maxEdits) >= 0)
       .select("doc_id").distinct()
-  }
 
   /** PHONETIC MATCH (Lucene PhoneticFilter / Solr phonetic slot, Soundex
     * encoding): docs containing any dictionary term that SOUNDS like the
-    * query term — 'spork' finds 'spark' (both S162). Same serving shape
-    * as [[matchFuzzyIds]]: the encoder runs over the |vocab|-sized term
-    * DICTIONARY (Spark's codegen'd soundex builtin), matched terms drive
-    * the ordinary broadcast postings union — the corpus never evaluates
-    * the encoder. Fuzzy measures typo DISTANCE in the spelling space;
+    * query term — 'spork' finds 'spark' (both S162). Same one-pass shape
+    * as [[matchFuzzyIds]]: Spark's codegen'd soundex filters the postings'
+    * terms, then the distinct ids — the corpus text never evaluates the
+    * encoder. Fuzzy measures typo DISTANCE in the spelling space;
     * phonetic measures English sound equivalence (unbounded edit
     * distance: 'nite'→'night') — complementary recall tools. */
   def matchPhoneticIds(ix: FtsIndex, term: String): DataFrame = {
     val norm = term.toLowerCase(java.util.Locale.ROOT)
     require(norm.nonEmpty && norm.matches("[a-z0-9]+"),
       s"phonetic term must normalize to one [a-z0-9]+ token, got '$term'")
-    val dict = ix.postings.select(col("term")).distinct()
+    ix.postings
       .filter(soundex(col("term")) === soundex(lit(norm)))
-    ix.postings.join(broadcast(dict), "term")
       .select("doc_id").distinct()
   }
 
   /** doc_ids containing any term with the given PREFIX (`quer*`) — the
     * standard FTS wildcard-suffix query. The filter is a RANGE on the term
-    * (`prefix ≤ term < prefix⁺`, the successor string), never a LIKE: a
-    * range pushes into parquet row-group min/max stats, so against a
-    * term-SORTED postings layout the scan skips every row group whose term
-    * range misses the prefix window (the hash-bucketed layout can't help
-    * here — hashing destroys prefix locality — which is why [[Index.write]]
-    * sorts postings within buckets). */
+    * ([[prefixRange]]), never a LIKE, and it pushes into the parquet scan.
+    * Row-group min/max stats skip only row groups whose term range misses
+    * the window, and hashing spreads a prefix over every bucket: while a
+    * bucket file is one row group (up to ~128 MB of postings), the range
+    * reads every posting. SQL `fts_prefix` over a registered index
+    * expands the prefix against the index's vocabulary on the driver
+    * ([[Vocabulary.withPrefix]]) and reads only the buckets of the
+    * matching terms, with the same range as the row filter. */
   def matchPrefixIds(ix: FtsIndex, prefix: String): DataFrame = {
     // normalize through the frozen token grammar: indexed terms are
     // lowercase [a-z0-9]+, so "Quer" must mean "quer", and anything the
@@ -948,29 +956,30 @@ object Search {
     val norm = prefix.toLowerCase(java.util.Locale.ROOT)
     require(norm.nonEmpty && norm.matches("[a-z0-9]+"),
       s"prefix must normalize to a non-empty [a-z0-9]+ token, got '$prefix'")
-    val upper = norm.init + (norm.last + 1).toChar // safe: last ∈ [a-z0-9]
-    ix.postings
-      .filter(col("term") >= norm && col("term") < upper)
-      .select("doc_id").distinct()
+    ix.postings.filter(prefixRange(norm)).select("doc_id").distinct()
   }
+
+  /** `prefix ≤ term < prefix⁺`, prefix⁺ the successor string (last char
+    * + 1, safe for a normalized `[a-z0-9]+` prefix): exactly the terms
+    * that start with `prefix`. */
+  def prefixRange(prefix: String): Column =
+    col("term") >= prefix && col("term") < (prefix.init + (prefix.last + 1).toChar)
 
   /** AUTOCOMPLETE (the search-box completion surface — Lucene's
     * TermSuggester / prefix completion slot): the top-k dictionary
     * completions of `prefix`, ranked by document frequency DESC then
     * term ASC (reproducible ties). The candidate terms come from the
-    * SAME pruned prefix window [[matchPrefixIds]] pushes (term-sorted-
-    * within-bucket persisted layout → parquet row-group min/max skips
-    * every group outside the window), and df is one agg over the
-    * windowed postings — vocabulary-scale work, never corpus-scale.
-    * Output: `term, df`. */
+    * SAME prefix window [[matchPrefixIds]] pushes into the scan (its
+    * row-group pruning has that function's limits: a one-row-group
+    * bucket file is read whole), and df is one agg over the windowed
+    * postings. Output: `term, df`. */
   def autocomplete(ix: FtsIndex, prefix: String, k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
     val norm = prefix.toLowerCase(java.util.Locale.ROOT)
     require(norm.nonEmpty && norm.matches("[a-z0-9]+"),
       s"prefix must normalize to a non-empty [a-z0-9]+ token, got '$prefix'")
-    val upper = norm.init + (norm.last + 1).toChar
     ix.postings
-      .filter(col("term") >= norm && col("term") < upper)
+      .filter(prefixRange(norm))
       .groupBy("term").agg(countDistinct(col("doc_id")).as("df"))
       .orderBy(col("df").desc, col("term"))
       .limit(k)
@@ -979,10 +988,12 @@ object Search {
   /** doc_ids containing any term inside the [lo, hi] dictionary range
     * (`[apple TO banana]`; bounds inclusive/exclusive per flag) — the
     * generalization of [[matchPrefixIds]]'s `prefix ≤ term < prefix⁺`
-    * window to user-supplied endpoints. Same scale story: a pushed RANGE
-    * on the term against the term-sorted-within-bucket layout, so parquet
-    * row-group min/max stats skip every row group outside the window;
-    * binary UTF8 order on both sides, matching the scan kernel. */
+    * window to user-supplied endpoints. Same scale story: a RANGE on the
+    * term pushed into the term-sorted-within-bucket layout, where parquet
+    * row-group min/max stats skip only row groups outside the window —
+    * none while each bucket file is one row group, so today the range
+    * reads every posting. Binary UTF8 order on both sides, matching the
+    * scan kernel. */
   def matchTermRangeIds(ix: FtsIndex, lo: String, hi: String,
                         inclLo: Boolean = true, inclHi: Boolean = true): DataFrame = {
     def norm(s: String, which: String): String = {
@@ -1969,26 +1980,22 @@ object Search {
     * misspelled term, candidates are dictionary terms within `maxEdits`,
     * ranked by (edit distance ASC, document frequency DESC, term ASC) —
     * closer beats more-frequent, frequency breaks distance ties, the term
-    * string makes the ranking total. Expansion runs over the length-banded
-    * term DICTIONARY exactly like [[matchFuzzyIds]] (|vocab|-sized, never
-    * corpus-sized); df comes from one aggregation over the pruned postings
-    * of the surviving candidates. Returns the top `n` suggestions as
-    * (term, suggestion, dist, df). */
+    * string makes the ranking total. One pass over the postings, filtered
+    * like [[matchFuzzyIds]]; df is the candidate's row count (postings
+    * are unique per (term, doc_id), see [[FtsIndex]]). Returns the top `n`
+    * suggestions as (term, suggestion, dist, df). */
   def suggest(ix: FtsIndex, term: String, maxEdits: Int = 2,
-              n: Int = 3): DataFrame = {
-    val dict = ix.postings.select(col("term")).distinct()
+              n: Int = 3): DataFrame =
+    ix.postings
       .filter(abs(length(col("term")) - lit(term.length)) <= maxEdits)
-      .filter(levenshtein(col("term"), lit(term)) <= maxEdits)
       .filter(col("term") =!= term) // the exact term is not a suggestion
-    val dfs = ix.postings.join(broadcast(dict), "term")
-      .groupBy("term")
-      .agg(countDistinct(col("doc_id")).as("df"))
-    dfs
+      .withColumn("dist", levenshtein(col("term"), lit(term), maxEdits))
+      .filter(col("dist") >= 0)
+      .groupBy("term", "dist").agg(count(lit(1)).as("df"))
       .select(lit(term).as("term"), col("term").as("suggestion"),
-        levenshtein(col("term"), lit(term)).as("dist"), col("df"))
+        col("dist"), col("df"))
       .orderBy(col("dist").asc, col("df").desc, col("suggestion").asc)
       .limit(n)
-  }
 
   /** MORE-LIKE-THIS (Lucene's find-similar-documents): the source doc's
     * terms rank by classic tf·ln(N/df) against the corpus, the top

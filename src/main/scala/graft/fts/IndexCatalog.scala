@@ -44,18 +44,22 @@ object IndexCatalog {
   // overwrite the first's
   private val byPathCol = new ConcurrentHashMap[(String, String), Entry]()
 
-  /** Per-(session, indexDir) cache of the persisted index's DataFrames:
+  /** Per-(session, indexDir) cache of the persisted index's DataFrames
+    * (and of what [[cachedStats]] and [[cachedVocabulary]] read from them):
     * `spark.read.parquet` LISTS the directory at construction, and the
     * rewrite needs the postings handle on every optimizer pass — without
     * the cache every query re-pays a file listing during planning
     * (planning latency only, but real on object stores). Invalidated by
-    * [[register]] (an index rewrite registers again) and [[clear]]. */
+    * [[register]] (an index rewrite registers again; a registration that
+    * replaces another index drops that index's handle too) and [[clear]]. */
   private val ixCache = new ConcurrentHashMap[String, Handle]()
 
-  /** One session's open handle on a persisted index. Its corpus stats are
-    * read on first use and then kept as long as the handle. */
+  /** One session's open handle on a persisted index. Its corpus stats and
+    * its term vocabulary are read on first use and then kept as long as
+    * the handle. */
   private final class Handle(val spark: AnyRef, val ix: FtsIndex) {
     lazy val stats: CorpusStats = CorpusStats.read(ix.stats)
+    lazy val vocabulary: Vocabulary = Vocabulary.read(ix.postings)
   }
 
   private def handle(spark: org.apache.spark.sql.SparkSession, entry: Entry): Handle =
@@ -84,6 +88,16 @@ object IndexCatalog {
   def cachedStats(spark: org.apache.spark.sql.SparkSession,
                   entry: Entry): CorpusStats =
     handle(spark, entry).stats
+
+  /** The entry's distinct terms, read once per cached handle like
+    * [[cachedStats]]: the first call runs one job over the postings'
+    * `term` column, later calls run none until [[register]] or [[clear]]
+    * drops the handle. `fts_prefix` and `fts_fuzzy` expand against it on
+    * the driver, so their postings scan prunes to the expanded terms'
+    * buckets. */
+  def cachedVocabulary(spark: org.apache.spark.sql.SparkSession,
+                       entry: Entry): Vocabulary =
+    handle(spark, entry).vocabulary
 
   /** Order-independent hash of the table's data files (path, length,
     * mtime) — any rewrite, compaction, append, or delete changes it. The
@@ -140,9 +154,11 @@ object IndexCatalog {
                reversed: Boolean = false,
                analyzer: AnalyzerConfig = AnalyzerConfig()): Unit = {
     ixCache.remove(indexDir) // a re-register means the index was rewritten
-    byPathCol.put((canon(tablePath), textCol.toLowerCase(java.util.Locale.ROOT)),
+    // the index this one replaces (a new compaction epoch) serves no more
+    Option(byPathCol.put((canon(tablePath), textCol.toLowerCase(java.util.Locale.ROOT)),
       Entry(indexDir, idCol, textCol, buckets, positional,
-        tableFingerprint(tablePath), reversed, analyzer))
+        tableFingerprint(tablePath), reversed, analyzer)))
+      .foreach(old => ixCache.remove(old.indexDir))
   }
 
   /** Name of the metadata file [[Index.createIndex]] drops inside the index

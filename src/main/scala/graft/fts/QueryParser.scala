@@ -14,7 +14,8 @@ import org.apache.spark.sql.catalyst.expressions.{And, Expression, Literal, Not,
   *  - "quoted words"   → [[graft.ext.FtsPhrase]]  (adjacent, in order)
   *  - "quoted words"~k → [[graft.ext.FtsPhraseSlop]] (in order, ≤ k extra
   *    tokens interleaved — Lucene's sloppy phrase, ordered)
-  *  - trailing-* word  → [[graft.ext.FtsPrefix]]  (term-range postings scan)
+  *  - trailing-* word  → [[graft.ext.FtsPrefix]]  (vocabulary expansion,
+  *    bucket-pruned postings)
   *  - single inner `*` → [[graft.ext.FtsWildcard]] (range+suffix plan);
   *    multi-`*` / `?` words → general wildcard patterns (pushed head range
   *    + LIKE over pruned postings — Lucene's full WildcardQuery)
@@ -49,7 +50,7 @@ import org.apache.spark.sql.catalyst.expressions.{And, Expression, Literal, Not,
   *    the range — Lucene's range query over the term dictionary. Lowers
   *    to [[graft.ext.FtsTermRange]]: against a v1 index the bounds push
   *    as a term range into the sorted postings (row-group min/max
-  *    pruning, the same access path as `quer*`); unindexed, a codegen
+  *    pruning, none while a bucket file is one row group); unindexed, a codegen
   *    token-scan kernel. Filters without scoring, like every multi-term
   *    clause.
   *  - AND / OR / NOT, parentheses; adjacency is implicit AND (so

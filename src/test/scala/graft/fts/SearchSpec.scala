@@ -270,6 +270,25 @@ class SearchSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSet.contains(1L))
   }
 
+  test("library fuzzy, phonetic and suggest read a persisted index's postings once") {
+    val dir = graft.core.Scratch.freshDir("fuzzy_one_pass_ix")
+    Index.write(ix, dir, buckets = 4)
+    val persisted = Index.read(spark, dir)
+    // scans in the executed adaptive plan, where a reused exchange is a leaf
+    def postingsScans(d: org.apache.spark.sql.DataFrame) = {
+      d.collect()
+      new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(d.queryExecution.executedPlan) {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+        }.size
+    }
+    val fuzzy = Search.matchFuzzyIds(persisted, "spak")
+    assert(postingsScans(fuzzy) == 1, fuzzy.queryExecution.executedPlan.toString)
+    assert(fuzzy.collect().map(_.getLong(0)).toSet == Set(1L, 3L))
+    assert(postingsScans(Search.matchPhoneticIds(persisted, "spork")) == 1)
+    assert(postingsScans(Search.suggest(persisted, "spak")) == 1)
+  }
+
   test("compound: analyzer-first, synonyms post-stem, fuzzy on analyzed dict") {
     import spark.implicits._
     val corpus = Seq(
@@ -917,8 +936,11 @@ class SearchSpec extends SparkSpec {
     // postings slice on one task, joins of two such slices shuffled-hash
     // and corpus stats and phrase slots as literals: top-k, the 3-term AND,
     // the one-word match, the query string, a phrase and a near-AND each
-    // run as ONE job, while an unpruned prefix scan keeps its parallel
-    // plan (≥ 2).
+    // run as ONE job. Prefix and fuzzy terms expand against the index's
+    // vocabulary (read once per handle, by the cold run), so a prefix, a
+    // fuzzy term and a query string with a prefix clause read only their
+    // expanded terms' buckets: one job each (the prefix scanned every
+    // posting in ≥ 2 jobs before).
     graft.fts.IndexCatalog.clear()
     try {
       val table = graft.core.Scratch.freshDir("jobcount_table")
@@ -934,6 +956,8 @@ class SearchSpec extends SparkSpec {
       val qstring = "SELECT doc_id FROM jobcount_docs WHERE fts_query(text, '+w0 -w3 w17')"
       val phrase = "SELECT doc_id FROM jobcount_docs WHERE fts_phrase(text, 'w0 w1')"
       val prefix = "SELECT doc_id FROM jobcount_docs WHERE fts_prefix(text, 'w1')"
+      val fuzzy = "SELECT doc_id FROM jobcount_docs WHERE fts_fuzzy(text, 'w17', 1)"
+      val qprefix = "SELECT doc_id FROM jobcount_docs WHERE fts_query(text, 'w2 w3*')"
       // a near id set is itself a join of two slices, here grafted into a
       // covered match beside another id set
       val nearAnd = "SELECT doc_id FROM jobcount_docs " +
@@ -946,13 +970,15 @@ class SearchSpec extends SparkSpec {
       val (oneJobs, qstringJobs) = (warmJobs(one), warmJobs(qstring))
       val (phraseJobs, prefixJobs) = (warmJobs(phrase), warmJobs(prefix))
       val nearAndJobs = warmJobs(nearAnd)
+      val (fuzzyJobs, qprefixJobs) = (warmJobs(fuzzy), warmJobs(qprefix))
       assert(topkJobs <= 1, s"fts_score top-k launched $topkJobs jobs")
       assert(andJobs <= 1, s"3-term fts_match launched $andJobs jobs")
       assert(oneJobs <= 1, s"one-word fts_match launched $oneJobs jobs")
       assert(qstringJobs <= 1, s"fts_query('+w0 -w3 w17') launched $qstringJobs jobs")
       assert(phraseJobs <= 1, s"fts_phrase launched $phraseJobs jobs")
-      assert(prefixJobs >= 2,
-        s"an unpruned fts_prefix scan must stay parallel, launched $prefixJobs jobs")
+      assert(prefixJobs <= 1, s"fts_prefix launched $prefixJobs jobs")
+      assert(fuzzyJobs <= 1, s"fts_fuzzy launched $fuzzyJobs jobs")
+      assert(qprefixJobs <= 1, s"fts_query('w2 w3*') launched $qprefixJobs jobs")
       assert(nearAndJobs <= 1, s"fts_near AND fts_match launched $nearAndJobs jobs")
       // the lowering is still exact
       val ix = Index.build(skewed)
@@ -969,6 +995,9 @@ class SearchSpec extends SparkSpec {
       assert(idList(spark.sql(phrase)) ==
         idList(Search.matchPhrasePositional(pix, Seq("w0", "w1"))))
       assert(idList(spark.sql(prefix)) == idList(Search.matchPrefixIds(pix, "w1")))
+      assert(idList(spark.sql(fuzzy)) == idList(Search.matchFuzzyIds(pix, "w17", 1)))
+      assert(idList(spark.sql(qprefix)) == idList(Search.matchAllIds(pix, Seq("w2"))
+        .join(Search.matchPrefixIds(pix, "w3"), "doc_id")))
       assert(idList(spark.sql(nearAnd)) == idList(Search.matchNear(pix, "w0", "w1", 2)
         .join(Search.matchAllIds(pix, Seq("w2")), "doc_id")))
     } finally graft.fts.IndexCatalog.clear()
