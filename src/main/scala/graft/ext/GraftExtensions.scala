@@ -177,11 +177,9 @@ object FtsHasTokenPrefix {
   * document sorts inside [lo, hi] (bounds inclusive/exclusive per flag;
   * binary UTF8 order — identical to the order the postings are sorted in,
   * so scan and index paths agree). Produced only by [[RewriteFtsMatch]];
-  * not SQL-registered. The index path replaces this with a pushed term
-  * RANGE over the sorted postings
-  * ([[graft.fts.Search.matchTermRangeIds]]: row-group min/max stats skip
-  * only row groups outside the range, none while a bucket file is one
-  * row group). */
+  * not SQL-registered. The index path replaces this with the range
+  * expanded against the index's vocabulary
+  * ([[graft.fts.Search.TermShape.Range]]). */
 case class FtsHasTokenRange(child: Expression, lo: String, hi: String,
                             inclLo: Boolean, inclHi: Boolean)
     extends UnaryExpression {
@@ -577,11 +575,12 @@ case class FtsScore(left: Expression, right: Expression)
 
 /** `fts_prefix(text, 'quer')`: true iff the document contains a token with
   * the given prefix — the wildcard-suffix query `quer*`. Lowered by
-  * [[RewriteFtsMatch]]: index path = the prefix expanded against the
-  * index's vocabulary on the driver ([[graft.fts.Vocabulary.withPrefix]]),
+  * [[RewriteFtsMatch]] like every term-dictionary predicate: index path =
+  * the shape ([[graft.fts.Search.TermShape.Prefix]]) expanded against the
+  * index's vocabulary on the driver ([[graft.fts.Vocabulary.matching]]),
   * then a semi-join against the postings of the expanded terms' buckets,
-  * row-filtered by the term range ([[graft.fts.Search.prefixRange]]);
-  * scan path = the [[FtsHasTokenPrefix]] kernel. */
+  * row-filtered by the term range; scan path = the [[FtsHasTokenPrefix]]
+  * kernel. */
 case class FtsPrefix(left: Expression, right: Expression) extends FtsPredicate {
   override def children: Seq[Expression] = Seq(left, right)
   override def prettyName: String = "fts_prefix"
@@ -592,12 +591,10 @@ case class FtsPrefix(left: Expression, right: Expression) extends FtsPredicate {
 /** `fts_term_range(text, 'lo', 'hi', incl_lo, incl_hi)`: true iff the
   * document contains a token inside the [lo, hi] dictionary range —
   * Lucene's range query (query syntax `[lo TO hi]` / `{lo TO hi}`).
-  * Lowered by [[RewriteFtsMatch]]: index path =
-  * [[graft.fts.Search.matchTermRangeIds]] (the bounds push as a term
-  * range into the term-sorted postings; parquet row-group min/max stats
-  * skip only row groups outside it, none while a bucket file is one row
-  * group, so the range reads every posting); scan path = the
-  * [[FtsHasTokenRange]] kernel. */
+  * Lowered by [[RewriteFtsMatch]]: index path = the range
+  * ([[graft.fts.Search.TermShape.Range]]) expanded against the index's
+  * vocabulary, then the expanded terms' buckets row-filtered by the
+  * range; scan path = the [[FtsHasTokenRange]] kernel. */
 case class FtsTermRange(text: Expression, lo: Expression, hi: Expression,
                         inclLo: Expression, inclHi: Expression)
     extends FtsPredicate {
@@ -646,14 +643,14 @@ case class FtsPhraseSlop(text: Expression, phrase: Expression,
 /** `fts_wildcard(text, 'qu*ry')`: true iff the document contains a token
   * matching the wildcard pattern — any number of `*` (any run) plus `?`
   * (exactly one char), Lucene's full WildcardQuery. Lowered by
-  * [[RewriteFtsMatch]]: the single-star no-`?` form takes the LIKE-free
-  * head-range + suffix-residual semi-join ([[graft.fts.Search.matchWildcardIds]],
-  * reversed-layout suffix path for a leading star) with the
-  * [[FtsHasTokenWildcard]] kernel as scan path; GENERAL patterns push the
-  * literal head as a term range and run a codegen'd LIKE over the pruned
-  * postings ([[graft.fts.Search.matchPatternIds]]), scan path an
-  * exists(tokens, LIKE). `fts_prefix` is the tail-less special case with
-  * its own simpler lowering. */
+  * [[RewriteFtsMatch]]: the single-star no-`?` form is
+  * [[graft.fts.Search.TermShape.SingleStar]] (head window, suffix and
+  * length test; scan path the [[FtsHasTokenWildcard]] kernel), every
+  * other pattern [[graft.fts.Search.TermShape.Pattern]] (literal-head
+  * window, codegen'd LIKE; scan path an exists(tokens, LIKE)). Index path:
+  * the shape expanded against the index's vocabulary, then the expanded
+  * terms' buckets row-filtered by it — a leading star reads no more than
+  * any other pattern. `fts_prefix` is the tail-less special case. */
 case class FtsWildcard(left: Expression, right: Expression) extends FtsPredicate {
   override def children: Seq[Expression] = Seq(left, right)
   override def prettyName: String = "fts_wildcard"
@@ -665,12 +662,12 @@ case class FtsWildcard(left: Expression, right: Expression) extends FtsPredicate
   * within `k` Levenshtein edits of the term — typo-tolerant search on the
   * SQL surface (query syntax `term~k`). Lowered by [[RewriteFtsMatch]]:
   * index path = the term expanded against the index's vocabulary on the
-  * driver ([[graft.fts.Vocabulary.withinEdits]], the predicates of
-  * [[graft.fts.Search.matchFuzzyIds]]), then a semi-join against the
-  * expanded terms' postings in their buckets; scan path = a banded
-  * `levenshtein(t, term, k) >= 0` exists() over the token array (the
-  * threshold form bails out of the DP early, so a long token costs
-  * O(len·k), not O(len²)). */
+  * driver ([[graft.fts.Search.TermShape.Fuzzy]]: a length band and the
+  * thresholded `levenshtein(t, term, k) >= 0`), then a semi-join against
+  * the expanded terms' postings in their buckets; scan path = the same
+  * predicate in an exists() over the token array (the threshold form
+  * bails out of the DP early, so a long token costs O(len·k), not
+  * O(len²)). */
 case class FtsFuzzy(text: Expression, term: Expression, maxEdits: Expression)
     extends FtsPredicate {
   override def children: Seq[Expression] = Seq(text, term, maxEdits)
@@ -685,13 +682,11 @@ case class FtsFuzzy(text: Expression, term: Expression, maxEdits: Expression)
   * grammar's lowercase `[a-z0-9]+`, so the pattern is matched against
   * that dictionary; an uppercase literal can never match. Lowered by
   * [[RewriteFtsMatch]] (reference seed: RLike,
-  * sql/catalyst/.../regexpExpressions.scala:125): a pattern with an
-  * anchored LITERAL prefix pushes the prefix as a term RANGE into the
-  * sorted postings (row-group min/max pruning — the wildcard
-  * [[graft.fts.Search.matchPatternIds]] plan with RLIKE as the residual
-  * instead of LIKE); a prefix-free pattern runs the codegen'd RLIKE over
-  * the postings' term column (dictionary-sized, never the corpus) and the
-  * matched rows drive the ordinary id-set semi-join. Scan path: an
+  * sql/catalyst/.../regexpExpressions.scala:125) as
+  * [[graft.fts.Search.TermShape.Regexp]]: the anchored RLIKE, windowed by
+  * the pattern's anchored LITERAL prefix when it has one. Index path: the
+  * shape expanded against the index's vocabulary, then the expanded
+  * terms' buckets row-filtered by it, prefix or not; scan path: an
   * exists(tokens, RLIKE) over the token array. Keep patterns RE2-portable
   * (no lookaround/backrefs) — the oracle engine replays them. */
 case class FtsRegexp(text: Expression, pattern: Expression) extends FtsPredicate {
@@ -746,6 +741,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
   import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, Project, SubqueryAlias}
   import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
   import graft.fts.IndexCatalog
+  import graft.fts.Search.TermShape
 
   private def queryTerms(q: UTF8String): Seq[String] =
     graft.fts.Analyzer.tokenizeString(q.toString).distinct
@@ -806,9 +802,6 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
 
   /** The argument checks every lowering of a predicate runs, so the scan
     * fallback and the index plans reject the same call with one message. */
-  private def checkEdits(k: Int): Unit =
-    if (k < 1 || k > 2) throw new IllegalArgumentException(
-      s"fts_fuzzy requires maxEdits in {1, 2}, got $k")
   private def checkSlop(fn: String, slop: Int): Unit =
     if (slop < 0) throw new IllegalArgumentException(
       s"$fn requires a non-negative slop, got $slop")
@@ -863,9 +856,9 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
               entry.buckets), null, null), ts, k), idAttr))
       // phrase/near are index-exact on any POSITIONAL index: v1 positions
       // under the frozen grammar, analyzer positions in analyzed space
-      // (query tokens replay the same pipeline). prefix/wildcard keep
-      // frozen-v1 semantics: their term SHAPES predate the analyzer
-      // stages, so they are only index-exact against a v1 index
+      // (query tokens replay the same pipeline). Term-dictionary shapes
+      // keep frozen-v1 semantics: they predate the analyzer stages, so
+      // they are only index-exact against a v1 index
       case FtsPhrase(a: Attribute, Literal(q: UTF8String, StringType))
           if entryFor(a).exists(_._1.positional) =>
         val (entry, idAttr) = entryFor(a).get
@@ -900,48 +893,13 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
         Some((if (ts.isEmpty) emptyIds(entry)
           else graft.fts.Search.matchPhraseSloppy(
             persistedIx(entry), ts, sl, entry.buckets), idAttr))
-      // prefix and fuzzy expand against the index's vocabulary on the
-      // driver; the row filter is the prefix range itself, or the expanded
-      // terms for fuzzy
-      case FtsPrefix(a: Attribute, Literal(p: UTF8String, StringType))
-          if entryFor(a).exists(_._1.analyzer.isV1) =>
+      // term-dictionary shapes expand against the index's vocabulary on
+      // the driver. v1 only: an analyzer index's dictionary is stemmed, so
+      // a pattern or an edit distance over the raw query measures the
+      // wrong space
+      case DictionaryShape(a: Attribute, shape) if entryFor(a).exists(_._1.analyzer.isV1) =>
         val (entry, idAttr) = entryFor(a).get
-        val norm = normPrefix(p)
-        Some((expandedIds(entry, vocabulary(entry).withPrefix(norm),
-          graft.fts.Search.prefixRange(norm)), idAttr))
-      case FtsTermRange(a: Attribute, Literal(lo: UTF8String, StringType),
-                        Literal(hi: UTF8String, StringType),
-                        Literal(il: Boolean, BooleanType),
-                        Literal(ih: Boolean, BooleanType))
-          if entryFor(a).exists(_._1.analyzer.isV1) =>
-        val (entry, idAttr) = entryFor(a).get
-        Some((graft.fts.Search.matchTermRangeIds(persistedIx(entry),
-          lo.toString, hi.toString, il, ih), idAttr))
-      case FtsWildcard(a: Attribute, Literal(p: UTF8String, StringType))
-          if entryFor(a).exists(_._1.analyzer.isV1) =>
-        val (entry, idAttr) = entryFor(a).get
-        if (isSimpleWildcard(p)) {
-          val (h, t) = parseWildcard(p)
-          Some((wildcardIdsDf(entry, h, t), idAttr))
-        } else
-          Some((patternIdsDf(entry, normPattern(p)), idAttr))
-      case FtsFuzzy(a: Attribute, Literal(t: UTF8String, StringType),
-                    Literal(k: Int, org.apache.spark.sql.types.IntegerType))
-          // v1 only: an analyzer index's dictionary is stemmed, so edit
-          // distance against the raw query term measures the wrong space
-          if entryFor(a).exists(_._1.analyzer.isV1) =>
-        val (entry, idAttr) = entryFor(a).get
-        checkEdits(k)
-        val ts = vocabulary(entry).withinEdits(singleTerm(t, "fts_fuzzy"), k)
-        Some((expandedIds(entry, ts,
-          org.apache.spark.sql.functions.col("term").isin(ts: _*)), idAttr))
-      case FtsRegexp(a: Attribute, Literal(p: UTF8String, StringType))
-          // v1 only, like wildcard/fuzzy: the pattern measures the v1
-          // term space, not an analyzer's stemmed dictionary
-          if entryFor(a).exists(_._1.analyzer.isV1) =>
-        val (entry, idAttr) = entryFor(a).get
-        Some((graft.fts.Search.matchRegexpIds(persistedIx(entry),
-          p.toString), idAttr))
+        Some((expandedIds(entry, shape), idAttr))
       // recursive, so nested Ors flatten
       case or: org.apache.spark.sql.catalyst.expressions.Or =>
         combined(splitDisjunctivePredicates(or), _.reduce(_ unionByName _).distinct())
@@ -1034,42 +992,6 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
     })
   }
 
-  /** Validated (head, tail) of a single-star wildcard pattern. */
-  private def parseWildcard(p: UTF8String): (String, String) = {
-    val norm = p.toString.toLowerCase(Locale.ROOT)
-    if (norm.count(_ == '*') != 1)
-      throw new IllegalArgumentException(
-        s"fts_wildcard requires exactly one '*', got '$p'")
-    val Array(head, tail) = norm.split("\\*", -1)
-    if ((head + tail).isEmpty || !(head + tail).matches("[a-z0-9]*"))
-      throw new IllegalArgumentException(
-        s"fts_wildcard parts must normalize to [a-z0-9], got '$p'")
-    (head, tail)
-  }
-
-  /** True when the pattern is the single-star `head*tail` form with no
-    * `?` — the shape the range+suffix plan ([[graft.fts.Search.matchWildcardIds]],
-    * reversed-layout suffix path) answers without a per-term LIKE. */
-  private def isSimpleWildcard(p: UTF8String): Boolean = {
-    val n = p.toString.toLowerCase(Locale.ROOT)
-    n.count(_ == '*') == 1 && !n.contains('?') &&
-      n.replace("*", "").nonEmpty && n.replace("*", "").matches("[a-z0-9]+")
-  }
-
-  /** Lowercased GENERAL wildcard pattern (any number of `*`, plus `?`
-    * single-char wildcards — Lucene's full WildcardQuery surface);
-    * validated against the only charset the frozen grammar can index. */
-  private def normPattern(p: UTF8String): String = {
-    val n = p.toString.toLowerCase(Locale.ROOT)
-    if (!n.matches("[a-z0-9*?]+"))
-      throw new IllegalArgumentException(
-        s"fts_wildcard pattern must normalize to [a-z0-9*?]+, got '$p'")
-    if (n.forall(_ == '*'))
-      throw new IllegalArgumentException(
-        s"fts_wildcard all-star pattern '$p' matches every token — use a term range")
-    n
-  }
-
   /** Normalized wildcard-phrase slots: the space-separated words of the
     * slot string, each an exact term or a `*`/`?` pattern with at least
     * one literal character (a meta-only slot would cost a dictionary-wide
@@ -1124,29 +1046,45 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
       Some(Literal.FalseLiteral))
   }
 
-  /** General-pattern SCAN path: exists(tokens, t → t LIKE pattern) with
-    * `*`→`%`, `?`→`_` (terms are [a-z0-9]+ — nothing to escape). The Like
-    * is the codegen'd built-in; no regex engine. */
-  private def tokenPatternExists(text: Expression, norm: String): Expression = {
-    val v = org.apache.spark.sql.catalyst.expressions.NamedLambdaVariable(
-      "t", StringType, nullable = false)
-    org.apache.spark.sql.catalyst.expressions.ArrayExists(
-      FtsTokenize(text),
-      org.apache.spark.sql.catalyst.expressions.LambdaFunction(
-        new org.apache.spark.sql.catalyst.expressions.Like(v,
-          Literal(UTF8String.fromString(
-            norm.replace('*', '%').replace('?', '_')), StringType)),
-        Seq(v)))
+  /** A term-dictionary predicate's text argument and validated shape
+    * ([[graft.fts.Search.TermShape]]), when its other arguments are
+    * literals. Every lowering validates through the shape's constructor,
+    * so each rejects a bad call with one message. */
+  private object DictionaryShape {
+    def unapply(e: Expression): Option[(Expression, TermShape)] = e match {
+      case FtsPrefix(text, Literal(p: UTF8String, StringType)) =>
+        Some((text, TermShape.prefix(p.toString)))
+      case FtsTermRange(text, Literal(lo: UTF8String, StringType),
+                        Literal(hi: UTF8String, StringType),
+                        Literal(il: Boolean, BooleanType),
+                        Literal(ih: Boolean, BooleanType)) =>
+        Some((text, TermShape.range(lo.toString, hi.toString, il, ih)))
+      case FtsWildcard(text, Literal(p: UTF8String, StringType)) =>
+        Some((text, TermShape.wildcard(p.toString)))
+      case FtsRegexp(text, Literal(p: UTF8String, StringType)) =>
+        Some((text, TermShape.regexp(p.toString)))
+      case FtsFuzzy(text, Literal(t: UTF8String, StringType),
+                    Literal(k: Int, org.apache.spark.sql.types.IntegerType)) =>
+        Some((text, TermShape.fuzzy(t.toString, k)))
+      case _ => None
+    }
   }
 
-  /** Lowercased prefix; must normalize to a [a-z0-9]+ token fragment (the
-    * only shape the frozen grammar can index). */
-  private def normPrefix(p: UTF8String): String = {
-    val norm = p.toString.toLowerCase(Locale.ROOT)
-    if (norm.isEmpty || !norm.matches("[a-z0-9]+"))
-      throw new IllegalArgumentException(
-        s"fts_prefix requires a prefix that normalizes to [a-z0-9]+, got '$p'")
-    norm
+  /** A term-dictionary predicate's SCAN path: the prefix, range and
+    * single-star kernels, or exists(tokens, t → the shape's predicate) —
+    * a codegen'd LIKE, RLIKE or thresholded levenshtein (it bails out of
+    * the DP band past k, so a long token costs O(len·k), not O(len²)).
+    * NULL text is NULL, through the kernels and ArrayExists alike. */
+  private def scanShape(text: Expression, shape: TermShape): Expression = {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayExists, LambdaFunction, NamedLambdaVariable}
+    shape match {
+      case TermShape.Prefix(p) => FtsHasTokenPrefix(text, p)
+      case TermShape.Range(lo, hi, il, ih) => FtsHasTokenRange(text, lo, hi, il, ih)
+      case TermShape.SingleStar(h, t) => FtsHasTokenWildcard(text, h, t)
+      case other =>
+        val v = NamedLambdaVariable("t", StringType, nullable = false)
+        ArrayExists(FtsTokenize(text), LambdaFunction(other.predicate(v).get, Seq(v)))
+    }
   }
 
   /** The single token `t` normalizes to under the frozen grammar. */
@@ -1271,51 +1209,26 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
       .filter(org.apache.spark.sql.GraftColumnBridge.column(Literal.FalseLiteral))
       .select("doc_id")
 
-  /** Doc ids holding any of `terms`, a dictionary predicate expanded
-    * against the index's vocabulary: one postings slice whose partition
-    * filter is `bucket IN` the terms' distinct buckets (at most
-    * `entry.buckets` literals, however many terms matched) and whose row
-    * filter is `rowFilter`, which must select exactly the terms' rows.
-    * One term's ids are already distinct ([[graft.fts.FtsIndex]]
-    * uniqueness contract). A small slice then runs as one task
-    * ([[SingleTaskPostings]]). */
-  private def expandedIds(entry: IndexCatalog.Entry, terms: Seq[String],
-                          rowFilter: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.DataFrame =
+  /** Doc ids holding a term `shape` matches, the shape expanded against
+    * the index's vocabulary on the driver ([[graft.fts.Vocabulary.matching]]):
+    * one postings slice whose partition filter is `bucket IN` the
+    * expanded terms' distinct buckets (at most `entry.buckets` literals,
+    * however many terms matched) and whose row filter is the shape's own
+    * ([[graft.fts.Search.TermShape.rowFilter]]). One term's ids are
+    * already distinct ([[graft.fts.FtsIndex]] uniqueness contract). A
+    * small slice then runs as one task ([[SingleTaskPostings]]). */
+  private def expandedIds(entry: IndexCatalog.Entry, shape: TermShape)
+      : org.apache.spark.sql.DataFrame = {
+    val terms = vocabulary(entry).matching(shape)
     if (terms.isEmpty) emptyIds(entry)
     else {
       val buckets = terms.map(graft.fts.Index.bucketOf(_, entry.buckets)).distinct.sorted
       val ids = persistedIx(entry).postings
-        .filter(org.apache.spark.sql.functions.col("bucket").isin(buckets: _*) && rowFilter)
+        .filter(org.apache.spark.sql.functions.col("bucket").isin(buckets: _*) && shape.rowFilter)
         .select("doc_id")
       if (terms.size == 1) ids else ids.distinct()
     }
-
-  /** Wildcard id set: a LEADING star over an index persisted WITH the
-    * reversed-term projection answers as a prefix range over the reversed
-    * dictionary ([[graft.fts.Search.matchSuffixIds]] — row-group pruning)
-    * instead of a term-dictionary scan; every other shape takes the
-    * head-range + suffix-residual path. */
-  private def wildcardIdsDf(entry: IndexCatalog.Entry, head: String,
-                            tail: String): org.apache.spark.sql.DataFrame =
-    if (head.isEmpty && entry.reversed)
-      graft.fts.Search.matchSuffixIds(
-        graft.fts.Index.readReversed(
-          org.apache.spark.sql.SparkSession.active, entry.indexDir), tail)
-    else graft.fts.Search.matchWildcardIds(persistedIx(entry), s"$head*$tail")
-
-  /** General-pattern id set, handing [[graft.fts.Search.matchPatternIds]]
-    * the reversed-term projection when the index persisted one, so
-    * head-less patterns with a literal TAIL (`*ing`, `*a?d`) push as a
-    * prefix range over the reversed dictionary instead of scanning the
-    * full term column. */
-  private def patternIdsDf(entry: IndexCatalog.Entry,
-                           pat: String): org.apache.spark.sql.DataFrame =
-    graft.fts.Search.matchPatternIds(persistedIx(entry), pat,
-      if (entry.reversed)
-        Some(graft.fts.Index.readReversed(
-          org.apache.spark.sql.SparkSession.active, entry.indexDir))
-      else None)
+  }
 
   /** Per-doc BM25 scores for `terms` as a [[plannerReady]] plan over the
     * persisted index ([[graft.fts.Search.scoreAllBm25]]): postings pruned
@@ -1702,32 +1615,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
         val terms = phraseTerms(q)
         if (terms.isEmpty) Literal.FalseLiteral
         else phraseContains(text, terms)
-      case FtsPrefix(text, Literal(p: UTF8String, StringType)) =>
-        FtsHasTokenPrefix(text, normPrefix(p))
-      case FtsTermRange(text, Literal(lo: UTF8String, StringType),
-                        Literal(hi: UTF8String, StringType),
-                        Literal(il: Boolean, BooleanType),
-                        Literal(ih: Boolean, BooleanType)) =>
-        // normalize + validate through the same rules as the index path
-        // (matchTermRangeIds), so scan and index lowering agree and a
-        // degenerate range fails loud instead of silently matching nothing
-        def normB(s: String, which: String): String = {
-          val n = s.toLowerCase(java.util.Locale.ROOT)
-          if (!(n.nonEmpty && n.matches("[a-z0-9]+")))
-            throw new IllegalArgumentException(s"fts_term_range $which bound " +
-              s"must normalize to a non-empty [a-z0-9]+ token, got '$s'")
-          n
-        }
-        val (l, h) = (normB(lo.toString, "lo"), normB(hi.toString, "hi"))
-        if (!(if (il && ih) l <= h else l < h))
-          throw new IllegalArgumentException(
-            s"fts_term_range [$l TO $h] is empty (lo must sort before hi)")
-        FtsHasTokenRange(text, l, h, il, ih)
-      case FtsWildcard(text, Literal(p: UTF8String, StringType)) =>
-        if (isSimpleWildcard(p)) {
-          val (h, t) = parseWildcard(p)
-          FtsHasTokenWildcard(text, h, t)
-        } else tokenPatternExists(text, normPattern(p))
+      case DictionaryShape(text, shape) => scanShape(text, shape)
       case FtsPhraseWild(text, Literal(q: UTF8String, StringType)) =>
         val slots = wildSlots(q)
         if (slots.isEmpty) Literal.FalseLiteral
@@ -1747,47 +1635,6 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
         // two spellings plan identically
         else if (sl == 0) phraseContains(text, terms)
         else FtsPhraseSlopTokens(text, terms, sl)
-      case FtsFuzzy(text, Literal(t: UTF8String, StringType),
-                    Literal(k: Int, org.apache.spark.sql.types.IntegerType)) =>
-        // scan fallback: exists(tokens, v -> levenshtein(v, term, k) >= 0)
-        // — the THRESHOLD form of the codegen'd built-in returns -1 past k
-        // and bails out of the DP band early, so a long token costs
-        // O(len·k) not O(len²). Same 3VL as the other kernels: NULL text
-        // → NULL (ArrayExists over a NULL array).
-        checkEdits(k)
-        val term = singleTerm(t, "fts_fuzzy")
-        val v = org.apache.spark.sql.catalyst.expressions.NamedLambdaVariable(
-          "t", StringType, nullable = false)
-        org.apache.spark.sql.catalyst.expressions.ArrayExists(
-          FtsTokenize(text),
-          org.apache.spark.sql.catalyst.expressions.LambdaFunction(
-            org.apache.spark.sql.catalyst.expressions.GreaterThanOrEqual(
-              org.apache.spark.sql.catalyst.expressions.Levenshtein(
-                v, Literal(UTF8String.fromString(term), StringType),
-                Some(Literal(k))),
-              Literal(0)),
-            Seq(v)))
-      case FtsRegexp(text, Literal(p: UTF8String, StringType)) =>
-        // scan fallback: exists(tokens, t -> t RLIKE '^(?:pat)$') — the
-        // codegen'd built-in compiles the literal pattern once. Full-term
-        // anchoring = Lucene RegexpQuery semantics; same 3VL as the other
-        // kernels (NULL text → NULL through ArrayExists).
-        val pat = p.toString
-        if (pat.isEmpty) throw new IllegalArgumentException(
-          "fts_regexp pattern must be non-empty")
-        try java.util.regex.Pattern.compile(pat)
-        catch { case e: java.util.regex.PatternSyntaxException =>
-          throw new IllegalArgumentException(
-            s"fts_regexp pattern '$pat' does not compile: ${e.getMessage}")
-        }
-        val v = org.apache.spark.sql.catalyst.expressions.NamedLambdaVariable(
-          "t", StringType, nullable = false)
-        org.apache.spark.sql.catalyst.expressions.ArrayExists(
-          FtsTokenize(text),
-          org.apache.spark.sql.catalyst.expressions.LambdaFunction(
-            org.apache.spark.sql.catalyst.expressions.RLike(v,
-              Literal(UTF8String.fromString("^(?:" + pat + ")$"), StringType)),
-            Seq(v)))
       // a NULL argument literal: three-valued logic, same as every SQL
       // predicate (child 0 is the text column of every predicate)
       case p: FtsPredicate if p.children.tail.exists {

@@ -239,9 +239,9 @@ object AnalyzerConfig {
   *
   * CONTRACT: `postings` holds at most one row per (term, doc_id). Every
   * producer guarantees it — each `Index.build*` variant aggregates per
-  * (term, doc_id), [[Index.write]]/[[Index.read]] and the df-capped and
-  * reversed layouts only filter or project those rows (reversal is
-  * injective), and [[IncrementalIndex.readAsOf]] re-aggregates the merged
+  * (term, doc_id), [[Index.write]]/[[Index.read]] and the df-capped
+  * layout only filter or project those rows, and
+  * [[IncrementalIndex.readAsOf]] re-aggregates the merged
   * log per (term, doc_id). The query operators rely on it: document
   * frequency is a plain row count per term ([[Search.scoreAllBm25]]), the
   * AND / minimum-should-match id sets count rows per doc
@@ -573,26 +573,6 @@ object Index {
       .parquet(s"$dir/postings_banded")
   }
 
-  /** REVERSED-term postings layout: `(term = reverse(original), doc_id)`,
-    * bucketed and term-sorted exactly like [[write]] — the standard fix for
-    * leading-star wildcards: a SUFFIX query over the original terms is a
-    * PREFIX range over the reversed dictionary, so
-    * [[Search.matchSuffixIds]] gets the same row-group min/max pruning
-    * [[Search.matchPrefixIds]] enjoys, instead of scanning the whole term
-    * dictionary. Storage cost: one extra (term, doc_id) projection of the
-    * postings — no tf/positions (suffix match needs ids only). */
-  def writeReversed(ix: FtsIndex, dir: String, buckets: Int = 64): Unit =
-    ix.postings
-      .select(reverse(col("term")).as("term"), col("doc_id"))
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(buckets)))
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "term")
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(s"$dir/postings_rev")
-
-  def readReversed(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    readParquet(spark, s"$dir/postings_rev")
-
   /** One-call provisioning: build the index from the parquet table, persist
     * it in the bucketed layout, and register the table→index association —
     * after this, SQL `fts_match`/`fts_match_any` over the table lowers to
@@ -604,22 +584,21 @@ object Index {
     * index; the SQL rewrite then normalizes `fts_match`/`fts_match_any`/
     * `fts_score` query strings through the SAME pipeline — stemmed,
     * stopworded, or CJK search on the SQL surface. The analyzer is part of
-    * the index's semantics: term-SHAPE predicates (prefix, wildcard —
-    * their patterns predate the analyzer stages) keep their frozen-v1
-    * scan semantics and are not index-lowered. A POSITIONAL analyzer
-    * index ([[buildPositionalWithAnalyzer]]) serves phrase/near in
-    * analyzed space — stemmed phrase search — since index positions and
-    * query tokens go through the same pipeline. Analyzer indexes carry
-    * no reversed projection. */
+    * the index's semantics: term-dictionary predicates (prefix, range,
+    * wildcard, regexp, fuzzy — their shapes predate the analyzer stages)
+    * keep their frozen-v1 scan semantics and are not index-lowered. A
+    * POSITIONAL analyzer index ([[buildPositionalWithAnalyzer]]) serves
+    * phrase/near in analyzed space — stemmed phrase search — since index
+    * positions and query tokens go through the same pipeline. Over a v1
+    * index, every term-dictionary predicate (a leading-star wildcard
+    * too) expands against the index's term vocabulary
+    * ([[IndexCatalog.cachedVocabulary]]) and reads only the matching
+    * terms' buckets: no extra layout is written for them. */
   def createIndex(spark: org.apache.spark.sql.SparkSession, tablePath: String,
                   indexDir: String, idCol: String = "doc_id",
                   textCol: String = "text", buckets: Int = 64,
                   positional: Boolean = false,
-                  reversed: Boolean = false,
                   analyzer: AnalyzerConfig = AnalyzerConfig()): Unit = {
-    require(analyzer.isV1 || !reversed,
-      "analyzer-configured indexes carry no reversed projection (suffix " +
-        "patterns predate the analyzer stages)")
     // Reuse-if-fresh: when a complete index with these exact parameters
     // already sits at indexDir and the table's file listing is unchanged
     // since it was built, a rebuild would reproduce the same bytes —
@@ -627,7 +606,7 @@ object Index {
     // corpus version, not once per query; any append/rewrite of the table
     // (fingerprint change) or parameter change still rebuilds.
     if (IndexCatalog.metaMatches(spark, tablePath, indexDir, idCol, textCol,
-        buckets, positional, reversed, analyzer)) {
+        buckets, positional, analyzer)) {
       IndexCatalog.restore(spark, indexDir)
       return
     }
@@ -643,17 +622,13 @@ object Index {
              else if (positional) buildPositional(docs, idCol, textCol)
              else build(docs, idCol, textCol)
     write(ix, indexDir, buckets)
-    // the reversed-term projection: leading-star wildcards become prefix
-    // ranges over the reversed dictionary (SQL fts_wildcard('*ery') uses it
-    // when registered)
-    if (reversed) writeReversed(ix, indexDir, buckets)
     if (!analyzer.isV1) writeAnalyzerConfig(spark, indexDir, analyzer)
     IndexCatalog.register(tablePath, indexDir, idCol, textCol, buckets,
-      positional, reversed, analyzer)
+      positional, analyzer)
     // metadata travels with the index: a fresh session can
     // IndexCatalog.restore(spark, indexDir) instead of rebuilding
     IndexCatalog.writeMeta(spark, tablePath, indexDir, idCol, textCol, buckets,
-      positional, reversed, analyzer)
+      positional, analyzer)
   }
 
   def read(spark: org.apache.spark.sql.SparkSession, dir: String, buckets: Int = 64): FtsIndex =
@@ -738,6 +713,7 @@ object Index {
   * reference limit.scala:114 pattern; no global sort at any scale).
   */
 object Search {
+  import org.apache.spark.sql.catalyst.expressions.{And, Expression, GreaterThanOrEqual, Literal}
 
   /** The Lucene-style query-string language as a boolean Column over a
     * text column — `data AND ("fast table" OR quer*) NOT (slow OR x?z)`,
@@ -903,24 +879,193 @@ object Search {
       .select("doc_id")
   }
 
+  /** The literal window a term-dictionary shape's terms sort inside, in
+    * binary UTF-8 order (Spark's string order, the postings' sort order),
+    * each bound inclusive or exclusive. */
+  final case class TermWindow(lo: String, inclLo: Boolean, hi: String, inclHi: Boolean) {
+    def filter(term: Expression): Expression = {
+      import org.apache.spark.sql.catalyst.expressions.{GreaterThan, LessThan, LessThanOrEqual}
+      And(if (inclLo) GreaterThanOrEqual(term, Literal(lo)) else GreaterThan(term, Literal(lo)),
+        if (inclHi) LessThanOrEqual(term, Literal(hi)) else LessThan(term, Literal(hi)))
+    }
+  }
+
+  object TermWindow {
+    /** `[p, p⁺)`, p⁺ the successor string (last char + 1, safe for a
+      * normalized `[a-z0-9]+` fragment): exactly the terms that start
+      * with `p`. None for the empty head of a headless pattern. */
+    def startingWith(p: String): Option[TermWindow] =
+      if (p.isEmpty) None else Some(TermWindow(p, true, p.init + (p.last + 1).toChar, false))
+  }
+
+  /** A term-dictionary predicate: the terms of an index that a prefix,
+    * range, wildcard, regexp or fuzzy query matches. Each shape is one
+    * definition: its validator (the companion object's constructors,
+    * whose messages every lowering reports), an optional literal
+    * [[window]], and one Catalyst [[predicate]] over the term.
+    * Three readers share it:
+    *  - the library's `match*Ids` filter the postings with [[rowFilter]];
+    *  - [[Vocabulary.matching]] binary-searches the window and evaluates
+    *    the predicate on the driver;
+    *  - SQL over a registered index ([[graft.ext.RewriteFtsMatch]])
+    *    expands the shape against the index's vocabulary, then reads the
+    *    expanded terms' buckets with [[rowFilter]] as the row filter. */
+  sealed trait TermShape {
+    def window: Option[TermWindow]
+
+    /** The test beyond the window, over the string expression `term`. */
+    def predicate(term: Expression): Option[Expression]
+
+    /** Window and predicate over `term`. */
+    final def filter(term: Expression): Expression =
+      (window.map(_.filter(term)) ++ predicate(term)).reduce(And)
+
+    /** [[filter]] over a postings frame's `term` column. */
+    final def rowFilter: Column = org.apache.spark.sql.GraftColumnBridge.column(
+      filter(org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("term")))
+  }
+
+  object TermShape {
+    import org.apache.spark.sql.catalyst.expressions.{Abs, EndsWith, Length, LessThanOrEqual, Levenshtein, Like, RLike, Subtract}
+
+    /** `quer*`: the terms starting with `prefix`. */
+    final case class Prefix(prefix: String) extends TermShape {
+      def window: Option[TermWindow] = TermWindow.startingWith(prefix)
+      def predicate(term: Expression): Option[Expression] = None
+    }
+
+    /** `[lo TO hi]` / `{lo TO hi}`: the terms inside the range. */
+    final case class Range(lo: String, hi: String, inclLo: Boolean, inclHi: Boolean)
+        extends TermShape {
+      def window: Option[TermWindow] = Some(TermWindow(lo, inclLo, hi, inclHi))
+      def predicate(term: Expression): Option[Expression] = None
+    }
+
+    /** `head*tail`: the terms starting with `head` and ending with `tail`,
+      * long enough that the two do not overlap. */
+    final case class SingleStar(head: String, tail: String) extends TermShape {
+      def window: Option[TermWindow] = TermWindow.startingWith(head)
+      def predicate(term: Expression): Option[Expression] = Some(
+        (Seq(EndsWith(term, Literal(tail))).filter(_ => tail.nonEmpty) :+
+          GreaterThanOrEqual(Length(term), Literal(head.length + tail.length))).reduce(And))
+    }
+
+    /** Any number of `*` (any run) and `?` (one character): the terms
+      * LIKE the pattern (`*`→`%`, `?`→`_`; terms are `[a-z0-9]+`, so
+      * nothing needs escaping), windowed by the literal head. */
+    final case class Pattern(pattern: String) extends TermShape {
+      def window: Option[TermWindow] =
+        TermWindow.startingWith(pattern.takeWhile(c => c != '*' && c != '?'))
+      def predicate(term: Expression): Option[Expression] =
+        Some(new Like(term, Literal(pattern.replace('*', '%').replace('?', '_'))))
+    }
+
+    /** The terms the regex matches IN FULL (Lucene RegexpQuery), windowed
+      * by the pattern's anchored literal prefix ([[regexLiteralPrefix]]). */
+    final case class Regexp(pattern: String) extends TermShape {
+      def window: Option[TermWindow] = TermWindow.startingWith(regexLiteralPrefix(pattern))
+      def predicate(term: Expression): Option[Expression] =
+        Some(RLike(term, Literal("^(?:" + pattern + ")$")))
+    }
+
+    /** The terms within `maxEdits` Levenshtein edits of `term`: a length
+      * band (`maxEdits` edits change the length by at most `maxEdits`),
+      * then Spark's
+      * thresholded `levenshtein(t, term, maxEdits)`, which stops once the
+      * distance exceeds the budget. */
+    final case class Fuzzy(term: String, maxEdits: Int) extends TermShape {
+      def window: Option[TermWindow] = None
+      def predicate(t: Expression): Option[Expression] = Some(And(
+        LessThanOrEqual(Abs(Subtract(Length(t), Literal(term.length))), Literal(maxEdits)),
+        GreaterThanOrEqual(Levenshtein(t, Literal(term), Some(Literal(maxEdits))), Literal(0))))
+    }
+
+    private def fail(msg: String): Nothing = throw new IllegalArgumentException(msg)
+
+    /** `raw` lowercased, when that is one non-empty `[a-z0-9]+` token. */
+    private def token(raw: String, msg: => String): String = {
+      val n = raw.toLowerCase(java.util.Locale.ROOT)
+      if (!n.matches("[a-z0-9]+")) fail(msg)
+      n
+    }
+
+    def prefix(raw: String): Prefix = Prefix(token(raw,
+      s"fts_prefix requires a prefix that normalizes to [a-z0-9]+, got '$raw'"))
+
+    def range(lo: String, hi: String, inclLo: Boolean, inclHi: Boolean): Range = {
+      def bound(s: String, which: String) = token(s, s"fts_term_range $which bound " +
+        s"must normalize to a non-empty [a-z0-9]+ token, got '$s'")
+      val (l, h) = (bound(lo, "lo"), bound(hi, "hi"))
+      if (!(if (inclLo && inclHi) l <= h else l < h))
+        fail(s"fts_term_range [$l TO $h] is empty (lo must sort before hi)")
+      Range(l, h, inclLo, inclHi)
+    }
+
+    /** The single-star form when the pattern has it, else the general one. */
+    def wildcard(raw: String): TermShape = {
+      val n = raw.toLowerCase(java.util.Locale.ROOT)
+      if (n != "*" && n.matches("[a-z0-9]*\\*[a-z0-9]*")) singleStar(raw) else pattern(raw)
+    }
+
+    def singleStar(raw: String): SingleStar = {
+      val n = raw.toLowerCase(java.util.Locale.ROOT)
+      if (n.count(_ == '*') != 1) fail(s"fts_wildcard requires exactly one '*', got '$raw'")
+      val Array(head, tail) = n.split("\\*", -1)
+      if ((head + tail).isEmpty || !(head + tail).matches("[a-z0-9]*"))
+        fail(s"fts_wildcard parts must normalize to [a-z0-9], got '$raw'")
+      SingleStar(head, tail)
+    }
+
+    def pattern(raw: String): Pattern = {
+      val n = raw.toLowerCase(java.util.Locale.ROOT)
+      if (!n.matches("[a-z0-9*?]+"))
+        fail(s"fts_wildcard pattern must normalize to [a-z0-9*?]+, got '$raw'")
+      if (n.forall(_ == '*'))
+        fail(s"fts_wildcard all-star pattern '$raw' matches every token — use a term range")
+      Pattern(n)
+    }
+
+    /** A non-empty pattern that compiles: it fails here, at plan time,
+      * not per row inside a scan. */
+    def regexp(raw: String): Regexp = {
+      if (raw.isEmpty) fail("fts_regexp pattern must be non-empty")
+      try java.util.regex.Pattern.compile(raw)
+      catch { case e: java.util.regex.PatternSyntaxException =>
+        fail(s"fts_regexp pattern '$raw' does not compile: ${e.getMessage}")
+      }
+      Regexp(raw)
+    }
+
+    /** SQL's fuzzy arguments: one token under the frozen grammar, and 1
+      * or 2 edits. The library's [[matchFuzzyIds]] takes any term and
+      * budget as given. */
+    def fuzzy(raw: String, maxEdits: Int): Fuzzy = {
+      if (maxEdits < 1 || maxEdits > 2) fail(s"fts_fuzzy requires maxEdits in {1, 2}, got $maxEdits")
+      Analyzer.tokenizeString(raw).distinct match {
+        case Seq(t) => Fuzzy(t, maxEdits)
+        case _ => fail(s"fts_fuzzy requires terms that normalize to exactly one token, got '$raw'")
+      }
+    }
+  }
+
+  /** doc_ids holding any term `shape` matches: one filter over the
+    * postings (the window is a term range that pushes into the scan; see
+    * [[matchPrefixIds]] for what it prunes), then the distinct ids. */
+  private def shapeIds(ix: FtsIndex, shape: TermShape): DataFrame =
+    ix.postings.filter(shape.rowFilter).select("doc_id").distinct()
+
   /** doc_ids containing any term within `maxEdits` Levenshtein edits of
-    * the query term — TYPO-TOLERANT search. One pass over the postings:
-    * a length band first (an edit changes length by ≤ maxEdits), then
-    * Spark's thresholded `levenshtein(term, q, maxEdits)` (codegen
-    * built-in; it stops once the distance exceeds the budget), then the
-    * distinct ids. The filters read only `term`, so they cost what a
-    * distinct-term dictionary filtered and joined back would, minus the
-    * aggregate and the join. SQL `fts_fuzzy` over a registered index
-    * applies the same two predicates to the index's vocabulary on the
-    * driver ([[Vocabulary.withinEdits]]) and reads only the expanded
-    * terms' buckets. FastSS deletion-neighborhood blocking
-    * ([[graft.ops.Fuzzy]]) is the same-result upgrade if the expansion
-    * itself ever needs to be sub-linear. */
+    * the query term — TYPO-TOLERANT search ([[TermShape.Fuzzy]]). One
+    * pass over the postings; the filters read only `term`, so they cost
+    * what a distinct-term dictionary filtered and joined back would,
+    * minus the aggregate and the join. SQL `fts_fuzzy` over a registered
+    * index expands the term against the index's vocabulary on the driver
+    * ([[Vocabulary.matching]]) and reads only the expanded terms'
+    * buckets. FastSS deletion-neighborhood blocking ([[graft.ops.Fuzzy]])
+    * is the same-result upgrade if the expansion itself ever needs to be
+    * sub-linear. */
   def matchFuzzyIds(ix: FtsIndex, term: String, maxEdits: Int = 1): DataFrame =
-    ix.postings
-      .filter(abs(length(col("term")) - lit(term.length)) <= maxEdits)
-      .filter(levenshtein(col("term"), lit(term), maxEdits) >= 0)
-      .select("doc_id").distinct()
+    shapeIds(ix, TermShape.Fuzzy(term, maxEdits))
 
   /** PHONETIC MATCH (Lucene PhoneticFilter / Solr phonetic slot, Soundex
     * encoding): docs containing any dictionary term that SOUNDS like the
@@ -941,29 +1086,16 @@ object Search {
 
   /** doc_ids containing any term with the given PREFIX (`quer*`) — the
     * standard FTS wildcard-suffix query. The filter is a RANGE on the term
-    * ([[prefixRange]]), never a LIKE, and it pushes into the parquet scan.
-    * Row-group min/max stats skip only row groups whose term range misses
-    * the window, and hashing spreads a prefix over every bucket: while a
-    * bucket file is one row group (up to ~128 MB of postings), the range
-    * reads every posting. SQL `fts_prefix` over a registered index
-    * expands the prefix against the index's vocabulary on the driver
-    * ([[Vocabulary.withPrefix]]) and reads only the buckets of the
-    * matching terms, with the same range as the row filter. */
-  def matchPrefixIds(ix: FtsIndex, prefix: String): DataFrame = {
-    // normalize through the frozen token grammar: indexed terms are
-    // lowercase [a-z0-9]+, so "Quer" must mean "quer", and anything the
-    // grammar can't produce is a caller error, not an empty result
-    val norm = prefix.toLowerCase(java.util.Locale.ROOT)
-    require(norm.nonEmpty && norm.matches("[a-z0-9]+"),
-      s"prefix must normalize to a non-empty [a-z0-9]+ token, got '$prefix'")
-    ix.postings.filter(prefixRange(norm)).select("doc_id").distinct()
-  }
-
-  /** `prefix ≤ term < prefix⁺`, prefix⁺ the successor string (last char
-    * + 1, safe for a normalized `[a-z0-9]+` prefix): exactly the terms
-    * that start with `prefix`. */
-  def prefixRange(prefix: String): Column =
-    col("term") >= prefix && col("term") < (prefix.init + (prefix.last + 1).toChar)
+    * ([[TermShape.Prefix]]), never a LIKE, and it pushes into the parquet
+    * scan. Row-group min/max stats skip only row groups whose term range
+    * misses the window, and hashing spreads a prefix over every bucket:
+    * while a bucket file is one row group (up to ~128 MB of postings), the
+    * range reads every posting. SQL over a registered index expands every
+    * term-dictionary shape against the index's vocabulary on the driver
+    * ([[Vocabulary.matching]]) and reads only the buckets of the matching
+    * terms, with the same filter on the rows. */
+  def matchPrefixIds(ix: FtsIndex, prefix: String): DataFrame =
+    shapeIds(ix, TermShape.prefix(prefix))
 
   /** AUTOCOMPLETE (the search-box completion surface — Lucene's
     * TermSuggester / prefix completion slot): the top-k dictionary
@@ -975,11 +1107,8 @@ object Search {
     * postings. Output: `term, df`. */
   def autocomplete(ix: FtsIndex, prefix: String, k: Int): DataFrame = {
     require(k >= 1, "k must be positive")
-    val norm = prefix.toLowerCase(java.util.Locale.ROOT)
-    require(norm.nonEmpty && norm.matches("[a-z0-9]+"),
-      s"prefix must normalize to a non-empty [a-z0-9]+ token, got '$prefix'")
     ix.postings
-      .filter(prefixRange(norm))
+      .filter(TermShape.prefix(prefix).rowFilter)
       .groupBy("term").agg(countDistinct(col("doc_id")).as("df"))
       .orderBy(col("df").desc, col("term"))
       .limit(k)
@@ -987,123 +1116,34 @@ object Search {
 
   /** doc_ids containing any term inside the [lo, hi] dictionary range
     * (`[apple TO banana]`; bounds inclusive/exclusive per flag) — the
-    * generalization of [[matchPrefixIds]]'s `prefix ≤ term < prefix⁺`
-    * window to user-supplied endpoints. Same scale story: a RANGE on the
-    * term pushed into the term-sorted-within-bucket layout, where parquet
-    * row-group min/max stats skip only row groups outside the window —
-    * none while each bucket file is one row group, so today the range
-    * reads every posting. Binary UTF8 order on both sides, matching the
-    * scan kernel. */
+    * generalization of [[matchPrefixIds]]' `prefix ≤ term < prefix⁺`
+    * window to user-supplied endpoints, with the same scale story. Binary
+    * UTF8 order on both sides, matching the scan kernel. */
   def matchTermRangeIds(ix: FtsIndex, lo: String, hi: String,
-                        inclLo: Boolean = true, inclHi: Boolean = true): DataFrame = {
-    def norm(s: String, which: String): String = {
-      val n = s.toLowerCase(java.util.Locale.ROOT)
-      require(n.nonEmpty && n.matches("[a-z0-9]+"),
-        s"range $which endpoint must normalize to a non-empty [a-z0-9]+ token, got '$s'")
-      n
-    }
-    val (l, h) = (norm(lo, "lo"), norm(hi, "hi"))
-    require(if (inclLo && inclHi) l <= h else l < h,
-      s"term range [$lo TO $hi] is empty (lo must sort before hi)")
-    ix.postings
-      .filter(if (inclLo) col("term") >= l else col("term") > l)
-      .filter(if (inclHi) col("term") <= h else col("term") < h)
-      .select("doc_id").distinct()
-  }
-
-  /** doc_ids containing a token with the given SUFFIX (`*ery`), answered
-    * from a REVERSED-term layout ([[Index.writeReversed]]): the suffix
-    * reverses into a prefix over the reversed dictionary, so the whole
-    * query is [[matchPrefixIds]] — a pushed term RANGE with row-group
-    * pruning — instead of the term-dictionary scan a leading-star wildcard
-    * otherwise costs. */
-  def matchSuffixIds(revPostings: DataFrame, suffix: String): DataFrame =
-    matchPrefixIds(FtsIndex(revPostings, null, null), suffix.reverse)
+                        inclLo: Boolean = true, inclHi: Boolean = true): DataFrame =
+    shapeIds(ix, TermShape.range(lo, hi, inclLo, inclHi))
 
   /** doc_ids containing a token that matches a single-star WILDCARD
-    * pattern (`qu*ry`, `quer*`, `*ery`). The head (before the star) pushes
-    * as a term RANGE into the sorted postings exactly like
-    * [[matchPrefixIds]]; the tail is a residual suffix filter on the term
-    * plus a length guard (head and tail must not overlap inside one
-    * token). A LEADING star has no range to push — the filter runs over
-    * the term dictionary (still the postings, never the corpus); the
-    * standard index-side fix at scale is a reversed-term layout. */
-  def matchWildcardIds(ix: FtsIndex, pattern: String): DataFrame = {
-    val norm = pattern.toLowerCase(java.util.Locale.ROOT)
-    require(norm.count(_ == '*') == 1,
-      s"wildcard pattern needs exactly one '*', got '$pattern'")
-    val Array(head, tail) = norm.split("\\*", -1)
-    require((head + tail).nonEmpty && (head + tail).matches("[a-z0-9]*"),
-      s"wildcard parts must normalize to [a-z0-9], got '$pattern'")
-    var p = ix.postings
-    if (head.nonEmpty) {
-      val upper = head.init + (head.last + 1).toChar
-      p = p.filter(col("term") >= head && col("term") < upper)
-    }
-    if (tail.nonEmpty) p = p.filter(col("term").endsWith(tail))
-    p.filter(length(col("term")) >= head.length + tail.length)
-      .select("doc_id").distinct()
-  }
+    * pattern (`qu*ry`, `quer*`, `*ery`) — [[TermShape.SingleStar]]: the
+    * head is the term window, the tail a suffix test plus a length guard
+    * (head and tail must not overlap inside one token). A LEADING star
+    * has no window, so the filter reads the whole term column. */
+  def matchWildcardIds(ix: FtsIndex, pattern: String): DataFrame =
+    shapeIds(ix, TermShape.singleStar(pattern))
 
   /** doc_ids containing any token matching a GENERAL wildcard pattern —
     * any number of `*` (any run, possibly empty) and `?` (exactly one
-    * char), Lucene's full WildcardQuery surface. [[matchWildcardIds]]'s
-    * single-star `head*tail` is the special case that needs no per-term
-    * predicate beyond range + suffix; everything else lands here. The
-    * literal head before the first metacharacter still pushes as a term
-    * RANGE (parquet row-group min/max pruning against the term-sorted
-    * layout); the residual check is a codegen'd LIKE (`*`→`%`, `?`→`_` —
-    * terms are [a-z0-9]+ so no escaping exists) evaluated on the PRUNED
-    * postings rows directly: no dictionary shuffle, no join.
-    *
-    * A pattern whose FIRST character is a metacharacter (`*ing`, `?abc`,
-    * `*a?b`) has an empty literal head, so nothing pushes as a range on
-    * the forward layout. When the index was persisted WITH the
-    * reversed-term projection, pass it as `revPostings`: a term matches
-    * `p` iff its reversal matches `reverse(p)`, so the pattern's literal
-    * TAIL pushes as a prefix range over the reversed dictionary (the
-    * [[matchSuffixIds]] trick generalized to arbitrary patterns), with
-    * the reversed LIKE as residual. Only a pattern with metacharacters at
-    * BOTH ends (`*a?`, `?b*`) is range-free on both layouts — that shape
-    * costs one full pass over the postings' term column (still the
-    * dictionary-sized table, never the corpus), and this method says so
-    * loudly on stderr so the cost is attributable. */
-  def matchPatternIds(ix: FtsIndex, pattern: String,
-                      revPostings: Option[DataFrame] = None): DataFrame = {
-    val norm = pattern.toLowerCase(java.util.Locale.ROOT)
-    require(norm.matches("[a-z0-9*?]+"),
-      s"wildcard pattern must normalize to [a-z0-9*?]+, got '$pattern'")
-    require(norm.exists(_ != '*'),
-      s"all-star pattern '$pattern' matches every token — use a term range")
-    def rangedLike(postings: DataFrame, pat: String): DataFrame = {
-      val head = pat.takeWhile(c => c != '*' && c != '?')
-      var p = postings
-      if (head.nonEmpty) {
-        val upper = head.init + (head.last + 1).toChar
-        p = p.filter(col("term") >= head && col("term") < upper)
-      }
-      p.filter(col("term").like(pat.replace('*', '%').replace('?', '_')))
-        .select("doc_id").distinct()
-    }
-    val headless = norm.head == '*' || norm.head == '?'
-    val rnorm = norm.reverse
-    val revHasHead = !(rnorm.head == '*' || rnorm.head == '?')
-    if (headless && revHasHead && revPostings.isDefined)
-      rangedLike(revPostings.get, rnorm)
-    else {
-      if (headless)
-        // Document the cost: no literal head on either end (or no reversed
-        // layout) — the LIKE runs over the whole term dictionary.
-        System.err.println(s"[graft.fts] wildcard pattern '$pattern' has no " +
-          "pushable literal head" +
-          (if (revHasHead) " (no reversed layout supplied)" else "") +
-          " — full postings term scan")
-      rangedLike(ix.postings, norm)
-    }
-  }
+    * char), Lucene's full WildcardQuery surface ([[TermShape.Pattern]]).
+    * The literal head before the first metacharacter is the term window;
+    * the codegen'd LIKE runs on the windowed postings rows directly. A
+    * pattern whose first character is a metacharacter (`*ing`, `?abc`)
+    * has no window and reads the whole term column (the dictionary-sized
+    * table, never the corpus). */
+  def matchPatternIds(ix: FtsIndex, pattern: String): DataFrame =
+    shapeIds(ix, TermShape.pattern(pattern))
 
   /** The longest ANCHORED LITERAL prefix of a regex — the characters a
-    * full match must start with, hence pushable as a term RANGE. Only
+    * full match must start with, hence usable as a term window. Only
     * bare `[a-z0-9]` characters are literal here (the dictionary's whole
     * alphabet); the run stops at the first metacharacter, and its last
     * character is dropped again when a `*`/`?`/`{` quantifier follows
@@ -1121,34 +1161,13 @@ object Search {
 
   /** doc_ids containing any token the regex matches IN FULL — Lucene's
     * RegexpQuery semantics (implicit `^…$` anchoring), the `/pattern/`
-    * term of the query language. Same scale shape as [[matchPatternIds]]:
-    * the pattern's anchored literal prefix ([[regexLiteralPrefix]]) pushes
-    * as a term RANGE into the sorted postings (parquet row-group min/max
-    * pruning) with the codegen'd RLIKE as residual over the PRUNED rows;
-    * a prefix-free pattern costs one full pass over the postings' term
-    * column (dictionary-sized, never the corpus — said loudly on stderr,
-    * like the headless wildcard). The matched rows ARE postings rows, so
-    * the id set needs no further join. */
-  def matchRegexpIds(ix: FtsIndex, pattern: String): DataFrame = {
-    require(pattern.nonEmpty, "fts_regexp pattern must be non-empty")
-    // fail loud at plan time, not per-row inside the scan
-    try java.util.regex.Pattern.compile(pattern)
-    catch { case e: java.util.regex.PatternSyntaxException =>
-      throw new IllegalArgumentException(
-        s"fts_regexp pattern '$pattern' does not compile: ${e.getMessage}")
-    }
-    val anchored = "^(?:" + pattern + ")$"
-    val head = regexLiteralPrefix(pattern)
-    var p = ix.postings
-    if (head.nonEmpty) {
-      val upper = head.init + (head.last + 1).toChar
-      p = p.filter(col("term") >= head && col("term") < upper)
-    } else
-      System.err.println(s"[graft.fts] regexp pattern '$pattern' has no " +
-        "anchored literal prefix — full postings term scan")
-    p.filter(col("term").rlike(anchored)).select("doc_id").distinct()
-  }
-
+    * term of the query language ([[TermShape.Regexp]]). Same shape as
+    * [[matchPatternIds]], with RLIKE for LIKE: the anchored literal
+    * prefix is the term window, and a prefix-free pattern reads the whole
+    * term column. The matched rows ARE postings rows, so the id set needs
+    * no further join. */
+  def matchRegexpIds(ix: FtsIndex, pattern: String): DataFrame =
+    shapeIds(ix, TermShape.regexp(pattern))
   /** Docs matching all `must` terms and none of the `mustNot` terms —
     * semi-join + anti-join against the postings (reference join types,
     * catalyst/.../plans/logical/basicLogicalOperators.scala:270). */
@@ -1238,13 +1257,7 @@ object Search {
       if (exact.isEmpty) Nil else Seq(slotPositions(ix, exact, buckets))
     val patternFrames = slots.zipWithIndex.collect {
       case (slot, i) if isPattern(slot) =>
-        val head = slot.takeWhile(c => c != '*' && c != '?')
-        var p = ix.postings
-        if (head.nonEmpty) {
-          val upper = head.init + (head.last + 1).toChar
-          p = p.filter(col("term") >= head && col("term") < upper)
-        }
-        p.filter(col("term").like(slot.replace('*', '%').replace('?', '_')))
+        ix.postings.filter(TermShape.Pattern(slot).rowFilter)
           .groupBy("doc_id")
           .agg(array_sort(flatten(collect_list(col("positions")))).as("positions"))
           .select(col("doc_id"), lit(i).as("idx"), col("positions"))

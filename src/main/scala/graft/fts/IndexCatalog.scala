@@ -35,7 +35,6 @@ object IndexCatalog {
     * semantics. */
   final case class Entry(indexDir: String, idCol: String, textCol: String,
                          buckets: Int, positional: Boolean, fingerprint: Long,
-                         reversed: Boolean = false,
                          analyzer: AnalyzerConfig = AnalyzerConfig())
 
   // keyed by (canonical table path, lowercased indexed column): one table
@@ -44,14 +43,18 @@ object IndexCatalog {
   // overwrite the first's
   private val byPathCol = new ConcurrentHashMap[(String, String), Entry]()
 
-  /** Per-(session, indexDir) cache of the persisted index's DataFrames
-    * (and of what [[cachedStats]] and [[cachedVocabulary]] read from them):
-    * `spark.read.parquet` LISTS the directory at construction, and the
-    * rewrite needs the postings handle on every optimizer pass — without
-    * the cache every query re-pays a file listing during planning
-    * (planning latency only, but real on object stores). Invalidated by
-    * [[register]] (an index rewrite registers again; a registration that
-    * replaces another index drops that index's handle too) and [[clear]]. */
+  /** Per-indexDir cache of ONE session's handle on the persisted index:
+    * its DataFrames and what [[cachedStats]] and [[cachedVocabulary]]
+    * read from them. `spark.read.parquet` LISTS the directory at
+    * construction, and the rewrite needs the postings handle on every
+    * optimizer pass — without the cache every query re-pays a file
+    * listing during planning (planning latency only, but real on object
+    * stores). The handle belongs to the last session that queried the
+    * index: a query from another session replaces it, so two sessions
+    * taking turns on one index each re-open it (and re-read its
+    * vocabulary) on every switch. Invalidated by [[register]] (an index
+    * rewrite registers again; a registration that replaces another index
+    * drops that index's handle too) and [[clear]]. */
   private val ixCache = new ConcurrentHashMap[String, Handle]()
 
   /** One session's open handle on a persisted index. Its corpus stats and
@@ -67,7 +70,8 @@ object IndexCatalog {
       if (cur != null && (cur.spark eq spark)) cur
       else new Handle(spark, Index.read(spark, entry.indexDir, entry.buckets)))
 
-  /** The entry's persisted index handle, cached per (session, indexDir).
+  /** The entry's persisted index handle, cached per indexDir for the
+    * session that last asked ([[ixCache]]).
     * Every call returns FRESH output exprIds over the SAME cached relation
     * (file listing paid once): one query may graft the postings in as
     * several subplans — scoring join + candidate semi-join, or two
@@ -92,9 +96,10 @@ object IndexCatalog {
   /** The entry's distinct terms, read once per cached handle like
     * [[cachedStats]]: the first call runs one job over the postings'
     * `term` column, later calls run none until [[register]] or [[clear]]
-    * drops the handle. `fts_prefix` and `fts_fuzzy` expand against it on
-    * the driver, so their postings scan prunes to the expanded terms'
-    * buckets. */
+    * drops the handle. SQL's term-dictionary predicates (`fts_prefix`,
+    * `fts_term_range`, `fts_wildcard`, `fts_regexp`, `fts_fuzzy`) expand
+    * against it on the driver ([[Vocabulary.matching]]), so their
+    * postings scan prunes to the expanded terms' buckets. */
   def cachedVocabulary(spark: org.apache.spark.sql.SparkSession,
                        entry: Entry): Vocabulary =
     handle(spark, entry).vocabulary
@@ -151,13 +156,12 @@ object IndexCatalog {
   def register(tablePath: String, indexDir: String,
                idCol: String = "doc_id", textCol: String = "text",
                buckets: Int = 64, positional: Boolean = false,
-               reversed: Boolean = false,
                analyzer: AnalyzerConfig = AnalyzerConfig()): Unit = {
     ixCache.remove(indexDir) // a re-register means the index was rewritten
     // the index this one replaces (a new compaction epoch) serves no more
     Option(byPathCol.put((canon(tablePath), textCol.toLowerCase(java.util.Locale.ROOT)),
       Entry(indexDir, idCol, textCol, buckets, positional,
-        tableFingerprint(tablePath), reversed, analyzer)))
+        tableFingerprint(tablePath), analyzer)))
       .foreach(old => ixCache.remove(old.indexDir))
   }
 
@@ -173,7 +177,6 @@ object IndexCatalog {
   def writeMeta(spark: org.apache.spark.sql.SparkSession, tablePath: String,
                 indexDir: String, idCol: String, textCol: String,
                 buckets: Int, positional: Boolean = false,
-                reversed: Boolean = false,
                 analyzer: AnalyzerConfig = AnalyzerConfig()): Unit = {
     val props = new java.util.Properties()
     props.setProperty("tablePath", canon(tablePath))
@@ -181,7 +184,6 @@ object IndexCatalog {
     props.setProperty("textCol", textCol)
     props.setProperty("buckets", buckets.toString)
     props.setProperty("positional", positional.toString)
-    props.setProperty("reversed", reversed.toString)
     if (!analyzer.isV1) props.setProperty("analyzer", analyzer.describe)
     props.setProperty("fingerprint", tableFingerprint(tablePath).toString)
     val p = new org.apache.hadoop.fs.Path(indexDir, MetaFile)
@@ -213,7 +215,7 @@ object IndexCatalog {
     * rebuilds as before. */
   def metaMatches(spark: org.apache.spark.sql.SparkSession, tablePath: String,
                   indexDir: String, idCol: String, textCol: String,
-                  buckets: Int, positional: Boolean, reversed: Boolean,
+                  buckets: Int, positional: Boolean,
                   analyzer: AnalyzerConfig): Boolean = {
     val p = new org.apache.hadoop.fs.Path(indexDir, MetaFile)
     try {
@@ -227,7 +229,6 @@ object IndexCatalog {
         props.getProperty("textCol") == textCol &&
         props.getProperty("buckets") == buckets.toString &&
         props.getProperty("positional", "false") == positional.toString &&
-        props.getProperty("reversed", "false") == reversed.toString &&
         Option(props.getProperty("analyzer")) ==
           (if (analyzer.isV1) None else Some(analyzer.describe)) &&
         Option(props.getProperty("fingerprint")).contains(
@@ -254,7 +255,6 @@ object IndexCatalog {
         // absent in pre-positional metadata files → false
         props.getProperty("positional", "false").toBoolean,
         props.getProperty("fingerprint").toLong,
-        props.getProperty("reversed", "false").toBoolean,
         Option(props.getProperty("analyzer"))
           .map(AnalyzerConfig.parse).getOrElse(AnalyzerConfig())))
   }

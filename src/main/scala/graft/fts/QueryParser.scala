@@ -14,15 +14,13 @@ import org.apache.spark.sql.catalyst.expressions.{And, Expression, Literal, Not,
   *  - "quoted words"   → [[graft.ext.FtsPhrase]]  (adjacent, in order)
   *  - "quoted words"~k → [[graft.ext.FtsPhraseSlop]] (in order, ≤ k extra
   *    tokens interleaved — Lucene's sloppy phrase, ordered)
-  *  - trailing-* word  → [[graft.ext.FtsPrefix]]  (vocabulary expansion,
-  *    bucket-pruned postings)
-  *  - single inner `*` → [[graft.ext.FtsWildcard]] (range+suffix plan);
-  *    multi-`*` / `?` words → general wildcard patterns (pushed head range
-  *    + LIKE over pruned postings — Lucene's full WildcardQuery)
+  *  - trailing-* word  → [[graft.ext.FtsPrefix]]
+  *  - single inner `*` → [[graft.ext.FtsWildcard]] (head*tail);
+  *    multi-`*` / `?` words → general wildcard patterns (Lucene's full
+  *    WildcardQuery)
   *  - term~k (k ∈ 1,2; bare `~` = 2) → [[graft.ext.FtsFuzzy]] (typo-tolerant)
   *  - /pattern/ → [[graft.ext.FtsRegexp]] (Lucene RegexpQuery: some token
-  *    matches the regex in full; anchored-literal-prefix patterns push a
-  *    term range, the rest scan the dictionary — never the corpus)
+  *    matches the regex in full)
   *  - a NEAR/k b       → [[graft.ext.FtsNear]]    (proximity, either order)
   *  - term^w / "phrase"^w → boost: a no-op for boolean matching, a score
   *    multiplier for `fts_query_score` ([[scoringWeights]])
@@ -48,11 +46,14 @@ import org.apache.spark.sql.catalyst.expressions.{And, Expression, Literal, Not,
   *  - [lo TO hi] / {lo TO hi} → term RANGE (inclusive / exclusive
   *    bounds, mixable): true iff the document contains a token inside
   *    the range — Lucene's range query over the term dictionary. Lowers
-  *    to [[graft.ext.FtsTermRange]]: against a v1 index the bounds push
-  *    as a term range into the sorted postings (row-group min/max
-  *    pruning, none while a bucket file is one row group); unindexed, a codegen
-  *    token-scan kernel. Filters without scoring, like every multi-term
-  *    clause.
+  *    to [[graft.ext.FtsTermRange]]. Filters without scoring, like every
+  *    multi-term clause.
+  *
+  * Every term-dictionary clause (prefix, wildcard, fuzzy, regexp, range)
+  * lowers like its SQL function: against a v1 index it expands against
+  * the index's term vocabulary on the driver and reads only the matching
+  * terms' postings buckets ([[Search.TermShape]]); unindexed, a codegen'd
+  * token-scan kernel.
   *  - AND / OR / NOT, parentheses; adjacency is implicit AND (so
   *    `big data` ≡ `big AND data` — each term must appear, matching
   *    fts_match's all-terms semantics for multi-term strings).
@@ -474,8 +475,7 @@ object QueryParser {
         // pattern token — punctuation inside a pattern is ambiguous (the
         // indexer split such text into several tokens, none of which the
         // pattern could mean), fail loud. The single-star no-'?' form
-        // stays on the adjacency logic below (range+suffix plan, raw-char
-        // star binding).
+        // stays on the adjacency logic below (raw-char star binding).
         if (raw.contains('~'))
           fail(s"term '$raw': cannot combine a wildcard pattern and '~'")
         val norm = raw.toLowerCase(java.util.Locale.ROOT)

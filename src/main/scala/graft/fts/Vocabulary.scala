@@ -1,19 +1,18 @@
 package graft.fts
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** An index's distinct terms, sorted in Spark's string order (binary
-  * UTF-8), so dictionary predicates expand on the driver with the same
-  * answers the postings filters give:
-  *  - [[withPrefix]] is [[Search.matchPrefixIds]]' `[p, p⁺)` range, found
-  *    by two binary searches;
-  *  - [[withinEdits]] is [[Search.matchFuzzyIds]]' length band and
-  *    `levenshtein ≤ k`, with the thresholded distance Spark's
-  *    `levenshtein(l, r, k)` runs.
+  * UTF-8), so term-dictionary predicates expand on the driver with the
+  * same answers the postings filters give: [[matching]] binary-searches a
+  * [[Search.TermShape]]'s window and evaluates its predicate, the same
+  * Catalyst expression the library's filters run.
   *
   * [[IndexCatalog.cachedVocabulary]] keeps one per open index handle, so
-  * a served `fts_prefix`/`fts_fuzzy` reads only its expanded terms'
+  * a served term-dictionary predicate reads only its expanded terms'
   * buckets instead of the whole postings table. The terms are packed into
   * one byte array (term `i` is `bytes[offsets(i), offsets(i + 1))`): the
   * terms' UTF-8 bytes plus 4 bytes a term, instead of two objects a term. */
@@ -24,31 +23,28 @@ final class Vocabulary private (bytes: Array[Byte], offsets: Array[Int]) {
   private def at(i: Int): UTF8String =
     UTF8String.fromBytes(bytes, offsets(i), offsets(i + 1) - offsets(i))
 
-  /** Terms `t` with `prefix ≤ t < prefix⁺` (the successor string: last
-    * char + 1), in order. `prefix` is a normalized `[a-z0-9]+` fragment,
-    * so the window is exactly the terms that start with it. */
-  def withPrefix(prefix: String): Seq[String] = {
-    val upper = prefix.init + (prefix.last + 1).toChar
-    val (from, until) = (lowerBound(prefix), lowerBound(upper))
-    (from until until).map(at(_).toString)
+  /** The terms `shape` matches, in order. */
+  def matching(shape: Search.TermShape): Seq[String] = {
+    val (from, until) = shape.window.fold((0, size)) { w =>
+      (bound(w.lo, w.inclLo), bound(w.hi, !w.inclHi)) }
+    val window = (from until until).iterator.map(at)
+    val matched = shape.predicate(BoundReference(0, StringType, nullable = false)) match {
+      case None => window
+      case Some(p) =>
+        val row = new GenericInternalRow(1)
+        window.filter { t => row.update(0, t); p.eval(row) == true }
+    }
+    matched.map(_.toString).toSeq
   }
 
-  /** Terms within `maxEdits` Levenshtein edits of `term`, in order. */
-  def withinEdits(term: String, maxEdits: Int): Seq[String] = {
-    val q = UTF8String.fromString(term)
-    (0 until size).iterator.map(at)
-      .filter(t => math.abs(t.numChars - term.length) <= maxEdits &&
-        t.levenshteinDistance(q, maxEdits) >= 0)
-      .map(_.toString).toSeq
-  }
-
-  /** Index of the first term ≥ `s`. */
-  private def lowerBound(s: String): Int = {
+  /** Index of the first term ≥ `s` (`inclusive`) or > `s`. */
+  private def bound(s: String, inclusive: Boolean): Int = {
     val key = UTF8String.fromString(s)
     var (lo, hi) = (0, size)
     while (lo < hi) {
       val mid = (lo + hi) >>> 1
-      if (at(mid).compareTo(key) < 0) lo = mid + 1 else hi = mid
+      val c = at(mid).compareTo(key)
+      if (c < 0 || (c == 0 && !inclusive)) lo = mid + 1 else hi = mid
     }
     lo
   }

@@ -1270,33 +1270,25 @@ object Fts extends QueryPack {
                   OR list_contains(t, 'vector')
                ORDER BY doc_id""")),
 
-    // Suffix (leading-star) term query over the REVERSED-term layout: the
-    // suffix reverses into a prefix over the reversed dictionary, so the
-    // query is a pushed term RANGE (row-group pruning) instead of the
-    // term-dictionary scan fts_wildcard('*er') costs. Oracle = tokens
-    // ending in 'er'.
+    // Suffix (leading-star) term query through the library: '*er' has no
+    // literal head, so the suffix test reads the whole term column of the
+    // postings (never the corpus). Oracle = tokens ending in 'er'.
     Q("q_fts_suffix",
-      (s, dir) => {
-        val ixDir = layoutOnce(s, dir, "fts_index_rev",
-            "postings_rev/_SUCCESS") { out =>
-          Index.writeReversed(Index.build(Tables(s, dir, "documents")), out)
-        }
-        Search.matchSuffixIds(Index.readReversed(s, ixDir), "er")
-          .orderBy("doc_id")
-      },
+      (s, dir) =>
+        Search.matchWildcardIds(servedIndex(s, dir), "*er").orderBy("doc_id"),
       Some(s"""WITH toks AS (SELECT doc_id, $DTOKS AS t FROM documents)
                SELECT doc_id FROM toks
                WHERE len(list_filter(t, x -> x LIKE '%er')) > 0
                ORDER BY doc_id""")),
 
-    // Leading-star wildcard through SQL over an index registered WITH the
-    // reversed-term projection: '*er' answers as a prefix range over the
-    // reversed dictionary (row-group pruning) instead of a term-dictionary
-    // scan — same rows as q_fts_suffix, plan-asserted.
+    // Leading-star wildcard through SQL over a registered index: '*er'
+    // expands against the index's term vocabulary on the driver, and the
+    // postings scan reads only the matching terms' buckets — same rows as
+    // q_fts_suffix, plan-asserted.
     Q("q_fts_sql_suffix",
       (s, dir) => {
         graft.fts.Index.createIndex(s, s"$dir/documents.parquet",
-          graft.core.Scratch.dir("fts_index_sql_rev"), reversed = true)
+          graft.core.Scratch.dir("fts_index_sql"))
         Tables(s, dir, "documents").createOrReplaceTempView("documents_ixsuf")
         s.sql("""SELECT doc_id FROM documents_ixsuf
                  WHERE fts_wildcard(text, '*er')
@@ -1327,9 +1319,10 @@ object Fts extends QueryPack {
                  AND NOT list_contains(t, 'slow') AND NOT list_contains(t, 'batch')
                ORDER BY doc_id""")),
 
-    // Single-star wildcard term query through SQL: 'c*er' pushes the head
-    // as a term RANGE into the sorted postings with the suffix + length
-    // guard as residuals (matchWildcardIds). Oracle mirrors the exact
+    // Single-star wildcard term query through SQL: 'c*er' expands against
+    // the index's vocabulary, and the expanded terms' buckets are filtered
+    // by the head range with the suffix + length guard (the single-star
+    // shape matchWildcardIds also runs). Oracle mirrors the exact
     // semantics (LIKE + the non-overlap length guard).
     Q("q_fts_sql_wildcard",
       (s, dir) => {

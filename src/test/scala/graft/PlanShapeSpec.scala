@@ -452,15 +452,31 @@ class PlanShapeSpec extends SparkSpec {
     } finally graft.fts.IndexCatalog.clear()
   }
 
-  test("q_fts_sql_suffix answers the leading star from the reversed layout") {
+  test("q_fts_sql_suffix answers the leading star from the vocabulary-pruned postings") {
     graft.fts.IndexCatalog.clear()
-    val plan = planOf("q_fts_sql_suffix")
     try {
+      val df = SparkEntry.queries("q_fts_sql_suffix")(spark, "/root/testdata/sf0.001")
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
       assert(!plan.contains("documents.parquet"), "suffix must answer index-only")
-      assert(plan.contains("GreaterThanOrEqual(term,re"),
-        "the suffix must push as a prefix range over the REVERSED dictionary")
       assert(!plan.contains("fts_tokenize"),
-        "leading star over the reversed layout must not re-tokenize")
+        "leading star over the index must not re-tokenize")
+      assert(postingsScans(plan) == 1, s"one postings scan:\n$plan")
+      // the expanded terms' buckets: at most `buckets` partition literals
+      val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        .collect(df.queryExecution.executedPlan) {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+        }
+      val entry = graft.fts.IndexCatalog.get("/root/testdata/sf0.001/documents.parquet").get
+      for (scan <- scans) {
+        import org.apache.spark.sql.catalyst.expressions.{InSet, Literal}
+        val literals = scan.partitionFilters.map(_.collect {
+          case InSet(_, hs) => hs.size
+          case _: Literal => 1
+        }.sum).sum
+        assert(literals > 0 && literals <= entry.buckets,
+          s"$literals partition-filter literals: ${scan.partitionFilters}")
+      }
     } finally graft.fts.IndexCatalog.clear()
   }
 

@@ -101,6 +101,17 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n  ", "\n  ", ""))
   }
 
+  /** SQL's term-dictionary predicates expand against the index's term
+    * vocabulary and read only the matching terms' buckets. The library's
+    * whole-postings filters are their reference, not a second lowering. */
+  test("the SQL rewrite lowers no term-dictionary predicate through a postings-wide filter") {
+    val ext = Paths.get("src", "main", "scala", "graft", "ext")
+    assert(sources.exists(_._1.startsWith(ext)), s"no $ext sources")
+    val bad = offenders("""Search\s*\.\s*match(TermRange|Wildcard|Pattern|Regexp|Suffix)Ids\b""",
+      sources.map(_._1).filterNot(_.startsWith(ext)): _*)
+    assert(bad.isEmpty, bad.mkString("\n  ", "\n  ", ""))
+  }
+
   test("no post-hoc install of the graft function surface") {
     val bad = offenders("""\bdef\s+install\s*\(""") ++
       offenders("""\b(GraftExtensions|TextKernels|VecKernels)\s*\.\s*install\b""") ++

@@ -74,14 +74,27 @@ object FtsShapes {
     // a repeated term fills two phrase slots
     "fts_phrase(text, 'line group line')",
     "fts_phrase_slop(text, 'order query order', 1)",
-    "fts_phrase_slop(text, 'group line', 3)")
+    "fts_phrase_slop(text, 'group line', 3)",
+    // dictionary shapes with no literal head, or an exclusive bound
+    "fts_wildcard(text, '*er')",
+    "fts_wildcard(text, '?at*')",
+    "fts_regexp(text, '.*up')",
+    "fts_regexp(text, 'dup|da[a-z]a')",
+    "fts_term_range(text, 'data', 'dup', false, true)",
+    "fts_query(text, '/qu[a-z]*/ OR c*er')",
+    "fts_query(text, 'data AND [dup TO vector}')")
 
   /** Out-of-range arguments: every lowering rejects them with one message. */
   val badArgs: Seq[String] = Seq(
     "fts_fuzzy(text, 'data', 3)", "fts_fuzzy(text, 'data', 0)",
     "fts_near(text, 'data', 'query', -1)", "fts_near(text, 'data', 'data', -1)",
     "fts_phrase_slop(text, 'data query', -1)",
-    "fts_match_min(text, 'data query', 0)")
+    "fts_match_min(text, 'data query', 0)",
+    "fts_term_range(text, 'dup', 'data', true, true)",
+    "fts_term_range(text, '', 'data', true, true)",
+    "fts_term_range(text, 'data', 'a-b', true, true)",
+    "fts_wildcard(text, '*')",
+    "fts_regexp(text, '')", "fts_regexp(text, 'du[')")
 
   val projections: Seq[String] = Seq("doc_id", "doc_id, lang")
 
