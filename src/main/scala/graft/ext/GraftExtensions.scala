@@ -697,30 +697,36 @@ case class FtsRegexp(text: Expression, pattern: Expression) extends FtsPredicate
 }
 
 /** Lowers every `fts_*` predicate and `fts_score` during optimization, in
-  * five passes:
+  * four passes:
   *
-  *  1. **Covered score**: an id-only projection or sort over `fts_score`
-  *     whose WHERE conjuncts are all index-exact, one of them bounding the
-  *     rows to the score's terms, is the BM25 scoring subplan semi-joined
-  *     with the conjuncts' id sets. The corpus is never scanned.
-  *  2. **Covered match**: `SELECT id-only … WHERE <index-exact conjuncts>`
-  *     is the conjuncts' id sets semi-joined, negations anti-joined.
-  *  3. **Score join**: any other `fts_score` over a registered table
+  *  1. **Covered**: a projection, or an `ORDER BY` and the projection above
+  *     it, that reads only the id column and at most one `fts_score`, over
+  *     WHERE conjuncts that are all index-exact, is built from postings
+  *     alone: the BM25 scoring subplan (whose rows a conjunct must bound to
+  *     the score's terms), or else the first conjunct's id set, semi-joined
+  *     with the other id sets and anti-joined with the negated ones. The
+  *     corpus is never scanned. A covered row proves non-NULL its id, the
+  *     scored text column, and each column that a positive conjunct reads
+  *     on every branch (a match leaf its text column, an AND the union of
+  *     its parts' columns, an OR the intersection of its branches'). An
+  *     `IS NOT NULL` or a negation is covered only when every column it
+  *     reads is proven; otherwise the query goes to the passes below.
+  *  2. **Score join**: any other `fts_score` over a registered table
   *     becomes a left-outer join against the per-doc BM25 scores of the
   *     persisted index.
-  *  4. **WHERE pass**: each conjunct a registered index answers
+  *  3. **WHERE pass**: each conjunct a registered index answers
   *     ([[lowerConjunct]]) becomes a join step over the corpus scan,
   *     against postings partition-pruned to the query terms' buckets. Same
   *     predicate→semi-join shape as the reference's
   *     RewritePredicateSubquery (Optimizer.scala:123); the pruning rides
   *     the stock partition-pruning pathway (FileSourceStrategy.scala:78).
-  *  5. **Scan fallback**: whatever is left becomes codegen'd kernels over
+  *  4. **Scan fallback**: whatever is left becomes codegen'd kernels over
   *     `fts_tokenize(text)`, e.g. `array_contains(fts_tokenize(text), term)
   *     AND …` — a full scan, but pushdown-friendly like any predicate.
   *
-  * Passes 1 and 3 share one scoring subplan, [[scoringPlan]]: the query
+  * Passes 1 and 2 share one scoring subplan, [[scoringPlan]]: the query
   * terms' pruned postings, with the index's corpus stats as literals.
-  * Passes 1, 2 and 4 share one id-set lowering, [[exactIds]]; the WHERE
+  * Passes 1 and 3 share one id-set lowering, [[exactIds]]; the WHERE
   * pass adds only the forms that need the corpus row (negation under
   * IsNotNull, token-kernel residuals). Every lowering runs the same
   * argument checks, so a predicate's answer does not depend on which
@@ -736,9 +742,9 @@ case class FtsRegexp(text: Expression, pattern: Expression) extends FtsPredicate
   */
 object RewriteFtsMatch extends Rule[LogicalPlan]
     with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
-  import org.apache.spark.sql.catalyst.expressions.{Alias, And, ArrayContains, Attribute, Coalesce, EqualTo, ExprId, IsNotNull, Literal, NamedExpression}
+  import org.apache.spark.sql.catalyst.expressions.{Alias, And, ArrayContains, Attribute, Coalesce, EqualTo, ExprId, IsNotNull, Literal, NamedExpression, SortOrder}
   import org.apache.spark.sql.catalyst.plans.{LeftAnti, LeftOuter, LeftSemi}
-  import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, Project, SubqueryAlias}
+  import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, JoinHint, Project, Sort, SubqueryAlias}
   import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
   import graft.fts.IndexCatalog
   import graft.fts.Search.TermShape
@@ -1245,8 +1251,17 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
       IndexCatalog.cachedStats(org.apache.spark.sql.SparkSession.active, entry))))
   }
 
+  /** A WHERE conjunct as the covered builder in [[apply]] classifies it:
+    * an IsNotNull, the score's own term domain, or an id set, semi-joined
+    * or (negated) anti-joined. */
+  private sealed trait Covering
+  private case class Implied(attr: Attribute) extends Covering
+  private case object ScoreDomain extends Covering
+  private case class IdSet(conjunct: Expression, ids: LogicalPlan, idAttr: Attribute,
+                           negated: Boolean) extends Covering
+
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    // Pass 0 — ranked retrieval: fts_score occurrences in a Project over a
+    // Score join — ranked retrieval: fts_score occurrences in a Project over a
     // registered table become a LEFT-OUTER join against the per-doc BM25
     // scoring subplan (pruned postings, literal corpus stats), the expression
     // replaced by coalesce(score, 0.0) — docs containing no query term
@@ -1287,245 +1302,129 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
           Some((newExprs, cur))
         }
       }
-    // INDEX-ONLY (covering) ranked retrieval: when the projection touches
-    // nothing but the id column and fts_score, and every WHERE conjunct is
-    // index-exact — with at least one conjunct BOUNDING the rows to the
-    // score's term domain — the corpus scan is unnecessary: the answer is
-    // the scoring subplan semi-joined with the conjuncts' id sets. At
-    // 100 TB this is the difference between a per-query corpus-wide
-    // doc_id scan and a plan that touches only the query terms' pruned
-    // postings buckets (the covering-index property).
-    // The covered CORE for a set of expressions over Filter(cond, …): the
-    // scoring subplan semi-joined with the conjuncts' id sets (none for a
-    // conjunct over exactly the score's term domain), plus the
-    // attributes to rewrite with. None unless: every FtsScore in `exprs`
-    // resolves to ONE (index, query); every non-score reference in `exprs`
-    // is the id column; every conjunct is index-exact on the same id (or
-    // an IsNotNull implied by index-domain membership); and ≥1 conjunct
-    // BOUNDS the rows to the score's term domain.
-    def coveredCore(exprs: Seq[Expression], cond: Expression,
-                    grandchild: LogicalPlan)
-        : Option[(LogicalPlan, Attribute, Attribute, ExprId)] =
+    // INDEX-ONLY (covered) plans: a projection, or a sort and the
+    // projection above it, that reads nothing but the id column and at most
+    // one fts_score, over WHERE conjuncts the index answers, is built from
+    // postings alone. At 100 TB that is the difference between a
+    // corpus-wide doc_id scan per query and a plan that touches only the
+    // query terms' pruned postings buckets. The core is the scoring subplan
+    // when there is a score (a conjunct must bound the rows to its term
+    // domain), else the first positive id set; the other positive sets are
+    // semi-joined to it in conjunct order, then the negated ones
+    // anti-joined. A covered row's id and scored text are non-NULL, and so
+    // is every column a positive conjunct reads on all its branches: an
+    // IsNotNull or a negation over any other column is not covered, since
+    // NOT over a NULL column drops a row the bare anti-join keeps. The id
+    // column identifies a document (the index aggregates per id). Returns
+    // the core and the rebinding of expressions onto it: a bare id
+    // reference keeps its exprId for consumers above (alias trick).
+    def covered(exprs: Seq[Expression], cond: Expression, grandchild: LogicalPlan)
+        : Option[(LogicalPlan, Expression => Expression)] =
       indexedTable(grandchild).flatMap { case (entryFor, _) =>
-        val allScores = exprs.flatMap(_.collect { case fs: FtsScore => fs })
-        val resolved = allScores.flatMap {
+        import org.apache.spark.sql.catalyst.expressions.{AttributeSet, Not, Or}
+        val scores = exprs.flatMap(_.collect {
           case FtsScore(a: Attribute, Literal(q: UTF8String, StringType)) =>
             entryFor(a).map { case (e, id) => (e, id, q) }
-          case _ => Seq.empty
-        }
-        // every score occurrence must resolve, to ONE (index, query)
-        if (allScores.isEmpty || resolved.size != allScores.size ||
-            resolved.map(r => (r._1.indexDir, r._3)).distinct.size != 1)
-          None
+          case _: FtsScore => None
+        })
+        val resolved = scores.flatten
+        val score = resolved.headOption.map { case (e, id, q) => (e, id, entryTerms(e, q)) }
+        // everything but the score must come from the id column
+        val refs = AttributeSet(exprs.flatMap(
+          _.transform { case _: FtsScore => Literal(0.0) }.references))
+        // every score occurrence must resolve, to ONE (index, query) with terms
+        if (refs.size > 1 || resolved.size != scores.size || score.exists(_._3.isEmpty) ||
+            resolved.map(r => (r._1.indexDir, r._3)).distinct.size > 1) None
         else {
-          val (entry, idAttr, q) = resolved.head
-          val scoreTerms = entryTerms(entry, q)
-          // the expressions may reference nothing beyond the id column
-          // (everything else would need the corpus row)
-          val refsOk = scoreTerms.nonEmpty && exprs.forall { e =>
-            e.transform { case _: FtsScore => Literal(0.0) }
-              .references.subsetOf(
-                org.apache.spark.sql.catalyst.expressions.AttributeSet(Seq(idAttr)))
+          val scoreSet = score.fold(Set.empty[String])(_._3.toSet)
+          val col = (a: Attribute) => entryFor(a).map(_._1.indexDir)
+          // a match over the scored column: (all terms required, its terms)
+          def scoreLeaf(c: Expression) = score.flatMap { case (e, _, _) => c match {
+            case FtsMatch(a: Attribute, Literal(q: UTF8String, StringType))
+                if col(a).contains(e.indexDir) => Some((true, entryTerms(e, q).toSet))
+            case FtsMatchAny(a: Attribute, Literal(q: UTF8String, StringType))
+                if col(a).contains(e.indexDir) => Some((false, entryTerms(e, q).toSet))
+            case _ => None
+          }}
+          // the indexed columns a positive conjunct reads on every branch
+          def proves(e: Expression): Set[String] = e match {
+            case or: Or => splitDisjunctivePredicates(or).map(proves).reduce(_ intersect _)
+            case and: And => splitConjunctivePredicates(and).map(proves).reduce(_ union _)
+            case leaf => leaf.references.flatMap(col).toSet
           }
-          // classify conjuncts: each is an exact id set on the same id
-          // attribute, an ignorable IsNotNull (implied by index-domain
-          // membership), the score's own domain, or disqualifying
-          val scoreSet = scoreTerms.toSet
-          def onScoreIndex(a: Attribute) = entryFor(a).exists { case (e, id) =>
-            e.indexDir == entry.indexDir && id.exprId == idAttr.exprId }
-          var bounding = false
-          var ok = refsOk
-          val idSets = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
-          val antiIdSets = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
-          splitConjunctivePredicates(cond).foreach {
-            case IsNotNull(a: Attribute)
-                if a.exprId == idAttr.exprId ||
-                  entryFor(a).exists(_._1.indexDir == entry.indexDir) =>
-              () // postings rows have non-null ids and indexed text
-            // a NEGATED index-exact conjunct subtracts its id set (anti-
-            // join) — sound in the covered domain because every row comes
-            // from postings of non-null indexed text, matching the scan
-            // path's 3VL (NOT fts_match(NULL,…) is NULL there → dropped)
-            case org.apache.spark.sql.catalyst.expressions.Not(inner) =>
-              exactIds(inner, entryFor) match {
-                case Some((ids, conjId)) if conjId.exprId == idAttr.exprId =>
-                  antiIdSets += ids
-                case _ => ok = false
-              }
-            // a conjunct whose docs are EXACTLY the score's term domain —
-            // fts_match_any over the score's term set, or fts_match over
-            // its single term — is what the scoring subplan already holds:
-            // it bounds the rows but needs no id set and no semi-join
-            case FtsMatchAny(a: Attribute, Literal(q2: UTF8String, StringType))
-                if onScoreIndex(a) && entryTerms(entry, q2).toSet == scoreSet =>
-              bounding = true
-            case FtsMatch(a: Attribute, Literal(q2: UTF8String, StringType))
-                if onScoreIndex(a) && scoreSet.size == 1 &&
-                  entryTerms(entry, q2).toSet == scoreSet =>
-              bounding = true
-            case conj =>
-              exactIds(conj, entryFor) match {
-                case Some((ids, conjId)) if conjId.exprId == idAttr.exprId =>
-                  idSets += ids
-                  // does this conjunct imply membership in the score's
-                  // term domain (≥1 score term present)?
-                  conj match {
-                    case FtsMatch(a: Attribute, Literal(q2: UTF8String, StringType))
-                        if entryFor(a).exists(_._1.indexDir == entry.indexDir) &&
-                          entryTerms(entry, q2).exists(scoreTerms.contains) =>
-                      bounding = true
-                    case FtsMatchAny(a: Attribute, Literal(q2: UTF8String, StringType))
-                        if entryFor(a).exists(_._1.indexDir == entry.indexDir) && {
-                          val ts = entryTerms(entry, q2)
-                          ts.nonEmpty && ts.forall(scoreTerms.contains)
-                        } => bounding = true
-                    case _ => ()
-                  }
-                case _ => ok = false
-              }
+          val conjuncts = splitConjunctivePredicates(cond).map {
+            case IsNotNull(a: Attribute) => Some(Implied(a))
+            // exactly the docs the scoring subplan holds: no id set needed
+            case c if scoreLeaf(c).exists { case (all, ts) =>
+                ts == scoreSet && (!all || ts.size == 1) } => Some(ScoreDomain)
+            case Not(inner) => exactIds(inner, entryFor).map { case (ids, id) =>
+              IdSet(inner, ids, id, negated = true) }
+            case c => exactIds(c, entryFor).map { case (ids, id) =>
+              IdSet(c, ids, id, negated = false) }
           }
-          if (!ok || !bounding) None
-          else {
-            var cur: LogicalPlan = scoringPlan(entry, scoreTerms)
-            val scoreIdAttr = cur.output.head
-            val scoreAttr = cur.output(1)
-            idSets.foreach { ids =>
-              cur = idJoin(cur, scoreIdAttr, ids, LeftSemi)
+          val (anti, semi) = conjuncts.flatten.collect { case s: IdSet => s }.partition(_.negated)
+          score.map(_._2).orElse(semi.headOption.map(_.idAttr)).filter { id =>
+            val proven = score.map(_._1.indexDir).toSet ++ semi.flatMap(s => proves(s.conjunct))
+            def isProven(a: Attribute) = a.exprId == id.exprId || col(a).exists(proven)
+            refs.subsetOf(AttributeSet(Seq(id))) &&
+              conjuncts.forall {
+                case Some(Implied(a)) => isProven(a)
+                case Some(ScoreDomain) => true
+                case Some(s: IdSet) => s.idAttr.exprId == id.exprId &&
+                  (!s.negated || s.conjunct.references.forall(isProven))
+                case None => false
+              } &&
+              // some conjunct bounds the rows to the score's term domain
+              // (at least one score term present)
+              (score.isEmpty || conjuncts.exists {
+                case Some(ScoreDomain) => true
+                case Some(IdSet(c, _, _, false)) => scoreLeaf(c).exists { case (all, ts) =>
+                  if (all) ts.exists(scoreSet) else ts.nonEmpty && ts.subsetOf(scoreSet) }
+                case _ => false
+              })
+          }.map { id =>
+            val (start, joined) = score match {
+              case Some((e, _, ts)) => (scoringPlan(e, ts), semi)
+              case None => (semi.head.ids, semi.tail)
             }
-            antiIdSets.foreach { ids =>
-              cur = idJoin(cur, scoreIdAttr, ids, LeftAnti)
-            }
-            Some((cur, scoreIdAttr, scoreAttr, idAttr.exprId))
-          }
-        }
-      }
-    // rewrite one expression against the covered core's attributes; a bare
-    // id reference keeps its exprId for consumers above (alias trick)
-    def coveredExpr(e: Expression, scoreIdAttr: Attribute,
-                    scoreAttr: Attribute, idExprId: ExprId): Expression =
-      e.transform {
-        case _: FtsScore => Coalesce(Seq(scoreAttr, Literal(0.0)))
-        case a: Attribute if a.exprId == idExprId => scoreIdAttr
-      }
-    // rewrite a projection list against the covered core, keeping output
-    // exprIds stable for consumers above
-    def coveredList(list: Seq[NamedExpression], scoreIdAttr: Attribute,
-                    scoreAttr: Attribute, idExprId: ExprId): Seq[NamedExpression] =
-      list.map { ne =>
-        coveredExpr(ne, scoreIdAttr, scoreAttr, idExprId) match {
-          case a: Attribute if a.exprId != ne.exprId =>
-            Alias(a, ne.name)(exprId = ne.exprId)
-          case other => other.asInstanceOf[NamedExpression]
-        }
-      }
-    def indexOnly(projectList: Seq[NamedExpression], child: LogicalPlan)
-        : Option[LogicalPlan] = child match {
-      case Filter(cond, grandchild) =>
-        coveredCore(projectList, cond, grandchild).map {
-          case (core, scoreIdAttr, scoreAttr, idExprId) =>
-            Project(coveredList(projectList, scoreIdAttr, scoreAttr, idExprId),
-              core)
-        }
-      case _ => None
-    }
-    // PURE-MATCH covering: `SELECT id-only … WHERE <all index-exact
-    // conjuncts>` needs no corpus row either — the answer IS the
-    // conjuncts' id sets, semi-joined together. Same uniqueness contract
-    // as every covered plan: the id column identifies a document (the
-    // index aggregates per id; tombstone/upsert semantics already assume
-    // it).
-    def coveredMatch(projectList: Seq[NamedExpression], cond: Expression,
-                     grandchild: LogicalPlan): Option[LogicalPlan] =
-      indexedTable(grandchild).flatMap { case (entryFor, _) =>
-        val conjs = splitConjunctivePredicates(cond)
-        val exact = conjs.flatMap(c => exactIds(c, entryFor).map(c -> _))
-        val exactConjs = exact.map(_._1).toSet
-        // NEGATED index-exact conjuncts subtract their id set via an
-        // anti-join (the covered domain is postings rows — non-null
-        // indexed text — so this matches the scan path's 3VL where
-        // NOT fts_match(NULL,…) is NULL → dropped). At least one POSITIVE
-        // set must remain to define the domain.
-        val anti = conjs.filterNot(exactConjs.contains).flatMap {
-          case n @ org.apache.spark.sql.catalyst.expressions.Not(inner) =>
-            exactIds(inner, entryFor).map(n -> _)
-          case _ => Nil
-        }
-        val antiConjs = anti.map(_._1: Expression).toSet
-        val idAttrs = (exact ++ anti).map(_._2._2.exprId).distinct
-        if (exact.isEmpty || idAttrs.size != 1) None
-        else {
-          val idAttr = exact.head._2._2
-          // attrs positively matched — an IsNotNull over one of them (or
-          // the id) is implied by index-domain membership
-          val positiveAttrs = exact.map(_._1).flatMap(_.collect {
-            case a: Attribute => a.exprId
-          }).toSet + idAttr.exprId
-          val leftovers = conjs.filterNot(exactConjs.contains)
-            .filterNot(antiConjs.contains).forall {
-            case IsNotNull(a: Attribute) => positiveAttrs.contains(a.exprId)
-            case _ => false
-          }
-          val projOk = projectList.forall(_.references.subsetOf(
-            org.apache.spark.sql.catalyst.expressions.AttributeSet(Seq(idAttr))))
-          if (!leftovers || !projOk) None
-          else {
-            var core = exact.head._2._1
-            exact.tail.foreach { case (_, (ids, _)) =>
-              core = idJoin(core, core.output.head, ids, LeftSemi)
-            }
-            anti.foreach { case (_, (ids, _)) =>
-              core = idJoin(core, core.output.head, ids, LeftAnti)
-            }
-            val coreId = core.output.head
-            val newList = projectList.map { ne =>
-              val t = ne.transform {
-                case a: Attribute if a.exprId == idAttr.exprId => coreId
-              }
-              t match {
-                case a: Attribute if a.exprId != ne.exprId =>
-                  Alias(a, ne.name)(exprId = ne.exprId)
-                case other => other.asInstanceOf[NamedExpression]
-              }
-            }
-            Some(Project(newList, core))
+            val core = (joined ++ anti).foldLeft(start) { (cur, s) =>
+              idJoin(cur, cur.output.head, s.ids, if (s.negated) LeftAnti else LeftSemi) }
+            (core, (e: Expression) => (e, e.transform {
+              case _: FtsScore => Coalesce(Seq(core.output(1), Literal(0.0)))
+              case a: Attribute if a.exprId == id.exprId => core.output.head
+            }) match {
+              case (ne: NamedExpression, a: Attribute) if a.exprId != ne.exprId =>
+                Alias(a, ne.name)(exprId = ne.exprId)
+              case (_, other) => other
+            })
           }
         }
       }
     // `SELECT id-only … WHERE <index-exact> ORDER BY fts_score(…) LIMIT k`
     // plans as Project(id, Sort(score-order, Project([id, text], Filter)))
     // — the inner Project carries text ONLY to feed the sort key, so the
-    // id-only-ness is visible at the OUTER Project. A pre-pass covers the
-    // whole chain (the inner list is discarded; the outer one is the real
-    // output): Project(ids, Sort(rewritten keys, core)) — with LIMIT this
-    // still pattern-matches TakeOrderedAndProject, and the corpus is never
-    // scanned.
-    val sortCovered = plan.transformUp {
-      case p @ Project(projectList, Filter(cond, grandchild))
-          if p.resolved && cond.exists(_.isInstanceOf[FtsPredicate]) &&
-            !projectList.exists(_.exists(_.isInstanceOf[FtsScore])) =>
-        coveredMatch(projectList, cond, grandchild).getOrElse(p)
-      case p @ Project(outerList,
-            org.apache.spark.sql.catalyst.plans.logical.Sort(
-              order, global, Project(_, Filter(cond, grandchild)), hint))
-          if p.resolved && order.exists(_.exists(_.isInstanceOf[FtsScore])) &&
-            !outerList.exists(_.exists(_.isInstanceOf[FtsScore])) =>
-        coveredCore(order ++ outerList, cond, grandchild) match {
-          case Some((core, scoreIdAttr, scoreAttr, idExprId)) =>
-            val newOrder = order.map(o =>
-              coveredExpr(o, scoreIdAttr, scoreAttr, idExprId)
-                .asInstanceOf[org.apache.spark.sql.catalyst.expressions.SortOrder])
-            Project(coveredList(outerList, scoreIdAttr, scoreAttr, idExprId),
-              org.apache.spark.sql.catalyst.plans.logical.Sort(
-                newOrder, global, core, hint))
-          case None => p
+    // id-only-ness is visible at the OUTER Project. Covering the whole
+    // chain discards the inner list: Project(ids, Sort(rebound keys,
+    // core)), which with LIMIT still plans as TakeOrderedAndProject.
+    val coveredPlans = plan.transformUp {
+      case p @ Project(list, Filter(cond, grandchild))
+          if p.resolved && cond.exists(_.isInstanceOf[FtsPredicate]) =>
+        covered(list, cond, grandchild).fold[LogicalPlan](p) { case (core, rebind) =>
+          Project(list.map(rebind(_).asInstanceOf[NamedExpression]), core)
+        }
+      case p @ Project(outer, Sort(order, global, Project(_, Filter(cond, grandchild)), hint))
+          if p.resolved && cond.exists(_.isInstanceOf[FtsPredicate]) =>
+        covered(order ++ outer, cond, grandchild).fold[LogicalPlan](p) { case (core, rebind) =>
+          Project(outer.map(rebind(_).asInstanceOf[NamedExpression]),
+            Sort(order.map(rebind(_).asInstanceOf[SortOrder]), global, core, hint))
         }
     }
-    val scoreAware = sortCovered.transformUp {
+    val scoreAware = coveredPlans.transformUp {
       case p @ Project(projectList, child)
           if p.resolved && projectList.exists(_.exists(_.isInstanceOf[FtsScore])) =>
-        indexOnly(projectList, child).orElse(lowerScores(projectList, child).map {
-          case (newList, cur) => Project(newList.map(_.asInstanceOf[NamedExpression]), cur)
-        }).getOrElse(p)
+        lowerScores(projectList, child).fold[LogicalPlan](p) { case (newList, cur) =>
+          Project(newList.map(_.asInstanceOf[NamedExpression]), cur)
+        }
       // filter pushdown may have INLINED a projected score alias into a
       // Filter condition (`WHERE s <> 0` over `SELECT fts_score(..) AS s`) —
       // lower it there too, projecting back to the child's schema so the
@@ -1541,15 +1440,12 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
       // graft the scoring join below the Sort, rewrite the sort keys, and
       // project the original schema back on top — with LIMIT the whole
       // thing still plans as TakeOrderedAndProject
-      case srt @ org.apache.spark.sql.catalyst.plans.logical.Sort(
-            order, global, child, hint)
+      case srt @ Sort(order, global, child, hint)
           if srt.resolved && order.exists(_.exists(_.isInstanceOf[FtsScore])) =>
         lowerScores(order, child) match {
           case Some((newOrder, cur)) =>
             Project(child.output,
-              org.apache.spark.sql.catalyst.plans.logical.Sort(
-                newOrder.map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.SortOrder]),
-                global, cur, hint))
+              Sort(newOrder.map(_.asInstanceOf[SortOrder]), global, cur, hint))
           case None => srt
         }
       // AGGREGATE positions — `GROUP BY lang … max(fts_score(text,'q'))`
@@ -1666,7 +1562,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
       case m: FtsTermRange => throw new IllegalArgumentException(
         "fts_term_range requires literal string bounds and literal BOOLEAN " +
           s"inclusivity flags, got: ${m.sql}")
-      // fts_score that survived pass 0: no registered index, a computed (not
+      // fts_score that survived the score join: no registered index, a computed (not
       // base-column) text argument, a non-literal query, or an unsupported
       // position. Corpus statistics (df, avgdl, N) live in the persisted
       // index, so there is no scan lowering — fail with the remedy.

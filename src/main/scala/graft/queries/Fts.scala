@@ -805,13 +805,9 @@ object Fts extends QueryPack {
     // postings → partition-pruned lookup) — results must be identical.
     Q("q_fts_bm25_persisted",
       (s, dir) => {
-        // build-once per (JVM, corpus dir): the persisted layout is what is
+        // the build-once serving layout: the persisted layout is what is
         // being served; the build is provisioning, paid once per corpus
-        val ixDir = layoutOnce(s, dir, "fts_index", "stats/_SUCCESS") { out =>
-          graft.fts.Index.write(
-            graft.fts.Index.build(Tables(s, dir, "documents")), out)
-        }
-        val persisted = graft.fts.Index.read(s, ixDir)
+        val persisted = servedIndex(s, dir)
         val pruned = persisted.copy(postings = graft.fts.Index.lookup(persisted, Seq("spark", "query")))
         graft.fts.Search.scoreBm25(pruned, Seq("spark", "query"), k = 10)
       },
@@ -1820,11 +1816,7 @@ object Fts extends QueryPack {
     // completes to the corpus terms scan/slow/small/sort/spark/...
     Q("q_fts_autocomplete",
       (s, dir) => {
-        val ixDir = layoutOnce(s, dir, "fts_index_complete",
-            "stats/_SUCCESS") { out =>
-          Index.write(Index.build(Tables(s, dir, "documents")), out)
-        }
-        Search.autocomplete(Index.read(s, ixDir), "S", 5)
+        Search.autocomplete(servedIndex(s, dir), "S", 5)
       },
       Some(s"""WITH toks AS (SELECT doc_id, unnest($DTOKS) AS term
                              FROM documents)
@@ -2249,11 +2241,7 @@ object Fts extends QueryPack {
     // sortedness restores the locality the hash destroyed).
     Q("q_fts_prefix",
       (s, dir) => {
-        val ixDir = layoutOnce(s, dir, "fts_index_prefix",
-            "stats/_SUCCESS") { out =>
-          Index.write(Index.build(Tables(s, dir, "documents")), out)
-        }
-        Search.matchPrefixIds(Index.read(s, ixDir), "quer").orderBy("doc_id")
+        Search.matchPrefixIds(servedIndex(s, dir), "quer").orderBy("doc_id")
       },
       Some(s"""WITH toks AS (SELECT doc_id, $DTOKS AS t FROM documents)
                SELECT doc_id FROM toks

@@ -705,9 +705,16 @@ class ExtensionsSpec extends SparkSpec {
         case c: CoalesceExec if c.numPartitions == 1 => c
       }.exists(c => coalesced(c.child))
     }
-    for ((name, positional) <- Seq(("tf", false), ("pos", true))) {
-      val ixDir = ttmp(s"fts_agree_$name")
+    // each text index alone, then beside an index on lang: with two indexed
+    // columns a covered plan must not take one column's match as proof
+    // that the other is non-NULL
+    for ((kind, positional) <- Seq(("tf", false), ("pos", true));
+         langIndexed <- Seq(false, true)) {
+      val name = if (langIndexed) s"$kind + lang" else kind
+      val ixDir = ttmp(s"fts_agree_$kind")
       graft.fts.Index.createIndex(spark, table, ixDir, positional = positional)
+      if (langIndexed) graft.fts.Index.createIndex(spark, table,
+        ttmp(s"fts_agree_${kind}_lang"), textCol = "lang", positional = positional)
       try {
         for ((session, shape) <- Seq((spark, "single-task"), (parallel, "parallel"))) {
           grid.zip(expected).foreach { case ((p, w), expect) =>
@@ -736,6 +743,11 @@ class ExtensionsSpec extends SparkSpec {
         }
         assert(topk("data query", spark).nonEmpty)
         assert(extraIds.forall { case (c, _) => topk("data query", spark, Some(c)).nonEmpty })
+        // a lang score ranks the lang-bounded shapes' scan-lowered ids
+        if (langIndexed) for (w <- FtsShapes.langBounded;
+                              sql <- FtsShapes.langScoreSql("docs_agree", w))
+          assert(spark.sql(sql).collect().map(r => s"[${r.get(0)}]").sorted.toSeq ==
+            expected(grid.indexOf(("doc_id", w))), s"$name index: $sql")
         // every served shape coalesces each single-task slice once
         val served = grid.map { case (p, w) => s"'$w' ($p)" -> query(p, w) } ++
           (for (q <- scoreQueries; c <- None +: FtsShapes.scoreConjuncts.map(Some(_)))

@@ -11,8 +11,9 @@ import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
 object FtsShapes {
 
   /** The agreement table: the fixture's `documents` rows plus one NULL-text
-    * document (NOT forms drop it, since NOT over NULL is NULL, unless the
-    * term set is empty: NOT false keeps it). Written to `out`. */
+    * document with lang 'en' (NOT forms drop it, since NOT over NULL is
+    * NULL, unless the term set is empty: NOT false keeps it). Written to
+    * `out`. */
   def writeTable(spark: SparkSession, documents: String, out: String): Unit =
     spark.read.parquet(documents).select("doc_id", "lang", "text")
       .union(spark.sql(
@@ -82,7 +83,12 @@ object FtsShapes {
     "fts_regexp(text, 'dup|da[a-z]a')",
     "fts_term_range(text, 'data', 'dup', false, true)",
     "fts_query(text, '/qu[a-z]*/ OR c*er')",
-    "fts_query(text, 'data AND [dup TO vector}')")
+    "fts_query(text, 'data AND [dup TO vector}')",
+    // two indexed columns: the NULL-text document has lang 'en', so a
+    // covered plan may treat text as non-NULL only where a positive
+    // conjunct proves it on every branch
+    "(fts_match(text, 'data') OR fts_match(lang, 'en')) AND text IS NOT NULL",
+    "fts_match(lang, 'en') AND text IS NOT NULL") ++ langBounded
 
   /** Out-of-range arguments: every lowering rejects them with one message. */
   val badArgs: Seq[String] = Seq(
@@ -110,6 +116,21 @@ object FtsShapes {
     "NOT fts_match(text, 'table')",
     "(fts_match(text, 'dup') OR fts_prefix(text, 'vec'))",
     "fts_fuzzy(text, 'dupe', 1)")
+
+  /** Two-column shapes of [[shapes]] bounded by `fts_match(lang, 'en')`, so
+    * a score over the lang index alone can rank them: a negation over text
+    * that no positive conjunct proves non-NULL, and one that a text match
+    * does. */
+  val langBounded: Seq[String] = Seq(
+    "fts_match(lang, 'en') AND NOT fts_match(text, 'data')",
+    "fts_match(lang, 'en') AND fts_match(text, 'data') AND NOT fts_match(text, 'query')")
+
+  /** `where`'s ids ranked by `fts_score(lang, 'en')`, with the score
+    * projected and without it. Lowerable only with an index on `lang`. */
+  def langScoreSql(view: String, where: String): Seq[String] = Seq(
+    s"SELECT doc_id, fts_score(lang, 'en') AS score FROM $view WHERE $where " +
+      "ORDER BY score DESC, doc_id",
+    s"SELECT doc_id FROM $view WHERE $where ORDER BY fts_score(lang, 'en') DESC, doc_id")
 
   /** The top-10 `fts_score` query over `view`, bounded by
     * `fts_match_any(text, q)` and optionally one more conjunct. */

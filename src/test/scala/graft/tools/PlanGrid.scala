@@ -7,9 +7,13 @@ import graft.ext.FtsShapes
 /** Writes, for every query of the full-text agreement grid
   * ([[graft.ext.FtsShapes]]: each WHERE shape and bad-argument shape under
   * each projection, plus the `fts_score` top-k queries with and without an
-  * extra conjunct), under each of four registrations of the agreement
-  * table (none, v1 tf-only, v1 positional, analyzer positional):
-  *  - the optimized logical plan, expression ids normalized to `#N`;
+  * extra conjunct, and the lang-scored two-column shapes), under each of
+  * five registrations of the agreement table (none, v1 tf-only, v1
+  * positional, analyzer positional, and v1 tf-only indexes on both text
+  * and lang):
+  *  - the optimized logical plan, expression ids normalized to `#N` and
+  *    lambda variable numbers to `_N` (both come from JVM-wide counters,
+  *    so they shift with every DataFrame a build happens to construct);
   *  - the md5 of the sorted result rows, or the error message.
   *
   * Two builds' outputs diff to the plan and result changes between them.
@@ -35,14 +39,17 @@ object PlanGrid {
     val scores = for (q <- FtsShapes.scoreQueries(absent, unfilled);
                       c <- None +: FtsShapes.scoreConjuncts.map(Some(_)))
       yield FtsShapes.topkSql("docs_agree", q, c)
-    val registrations = Seq[(String, Option[String => Unit])](
-      "none" -> None,
-      "v1 tf-only" -> Some(graft.fts.Index.createIndex(spark, table, _)),
-      "v1 positional" -> Some(graft.fts.Index.createIndex(spark, table, _,
+    val langScores = FtsShapes.langBounded.flatMap(FtsShapes.langScoreSql("docs_agree", _))
+    val registrations = Seq[(String, Seq[String => Unit])](
+      "none" -> Nil,
+      "v1 tf-only" -> Seq(graft.fts.Index.createIndex(spark, table, _)),
+      "v1 positional" -> Seq(graft.fts.Index.createIndex(spark, table, _,
         positional = true)),
-      "analyzer positional" -> Some(graft.fts.Index.createIndex(spark, table, _,
+      "analyzer positional" -> Seq(graft.fts.Index.createIndex(spark, table, _,
         positional = true, analyzer = graft.fts.AnalyzerConfig(
-          stopWords = Seq("the", "of"), porter = true))))
+          stopWords = Seq("the", "of"), porter = true))),
+      "v1 text + lang" -> Seq(graft.fts.Index.createIndex(spark, table, _),
+        graft.fts.Index.createIndex(spark, table, _, textCol = "lang")))
     def message(e: Throwable): String =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
         .collectFirst { case iae: IllegalArgumentException => iae.getMessage }
@@ -54,19 +61,21 @@ object PlanGrid {
     for ((name, register) <- registrations) {
       graft.fts.IndexCatalog.clear()
       register.foreach(_(graft.core.Scratch.freshDir("plan_grid_index")))
-      for (sql <- where ++ scores) {
+      for (sql <- where ++ scores ++ langScores) {
         val df = scala.util.Try(spark.sql(sql))
         val plan = df.map(_.queryExecution.optimizedPlan.toString)
           .fold(e => s"error: ${message(e)}\n", identity)
         val result = df.map(_.collect().map(_.toString).sorted)
           .fold(e => s"error: ${message(e)}",
             rows => s"${rows.length} rows, md5 ${md5(rows.mkString("\n"))}")
-        out ++= s"== $name | $sql\n${plan.replaceAll("#\\d+", "#N")}-> $result\n\n"
+        val normalized = plan.replaceAll("#\\d+", "#N")
+          .replaceAll("\\b([a-z]+)_\\d+#N", "$1_N#N")
+        out ++= s"== $name | $sql\n$normalized-> $result\n\n"
       }
     }
     graft.fts.IndexCatalog.clear()
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile), out.toString.getBytes(UTF_8))
-    println(s"[plangrid] ${registrations.size * (where.size + scores.size)} queries -> $outFile")
+    println(s"[plangrid] ${registrations.size * (where.size + scores.size + langScores.size)} queries -> $outFile")
     spark.stop()
   }
 }
