@@ -857,9 +857,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
         checkMinMatch(k)
         val ts = entryTerms(entry, q)
         Some((if (ts.isEmpty || k > ts.distinct.size) emptyIds(entry)
-          else graft.fts.Search.matchMinIds(graft.fts.FtsIndex(
-            graft.fts.Index.lookup(persistedIx(entry), ts.distinct,
-              entry.buckets), null, null), ts, k), idAttr))
+          else graft.fts.Search.matchMinIds(persistedIx(entry), ts, k), idAttr))
       // phrase/near are index-exact on any POSITIONAL index: v1 positions
       // under the frozen grammar, analyzer positions in analyzed space
       // (query tokens replay the same pipeline). Term-dictionary shapes
@@ -870,15 +868,13 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
         val (entry, idAttr) = entryFor(a).get
         val ts = entryPhraseTerms(entry, q)
         Some((if (ts.isEmpty) emptyIds(entry)
-          else graft.fts.Search.matchPhrasePositional(
-            persistedIx(entry), ts, entry.buckets), idAttr))
+          else graft.fts.Search.matchPhrasePositional(persistedIx(entry), ts), idAttr))
       case FtsPhraseWild(a: Attribute, Literal(q: UTF8String, StringType))
           if entryFor(a).exists(e => e._1.analyzer.isV1 && e._1.positional) =>
         val (entry, idAttr) = entryFor(a).get
         val slots = wildSlots(q)
         Some((if (slots.isEmpty) emptyIds(entry)
-          else graft.fts.Search.matchPhraseWildPositional(
-            persistedIx(entry), slots, entry.buckets), idAttr))
+          else graft.fts.Search.matchPhraseWildPositional(persistedIx(entry), slots), idAttr))
       case FtsNear(a: Attribute, Literal(ta: UTF8String, StringType),
                    Literal(tb: UTF8String, StringType),
                    Literal(sl: Int, org.apache.spark.sql.types.IntegerType))
@@ -888,8 +884,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
         val (na, nb) = (entryNearTerm(entry, singleTerm(ta, "fts_near")),
           entryNearTerm(entry, singleTerm(tb, "fts_near")))
         Some((if (na.isEmpty || nb.isEmpty) emptyIds(entry)
-          else graft.fts.Search.matchNear(persistedIx(entry),
-            na.get, nb.get, sl, entry.buckets), idAttr))
+          else graft.fts.Search.matchNear(persistedIx(entry), na.get, nb.get, sl), idAttr))
       case FtsPhraseSlop(a: Attribute, Literal(q: UTF8String, StringType),
                          Literal(sl: Int, org.apache.spark.sql.types.IntegerType))
           if entryFor(a).exists(_._1.positional) =>
@@ -897,8 +892,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
         checkSlop("fts_phrase_slop", sl)
         val ts = entryPhraseTerms(entry, q)
         Some((if (ts.isEmpty) emptyIds(entry)
-          else graft.fts.Search.matchPhraseSloppy(
-            persistedIx(entry), ts, sl, entry.buckets), idAttr))
+          else graft.fts.Search.matchPhraseSloppy(persistedIx(entry), ts, sl), idAttr))
       // term-dictionary shapes expand against the index's vocabulary on
       // the driver. v1 only: an analyzer index's dictionary is stemmed, so
       // a pattern or an edit distance over the raw query measures the
@@ -1102,15 +1096,16 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
     ts.head
   }
 
-  /** The persisted index as a lookup-ready handle, cached per (session,
-    * indexDir) in [[IndexCatalog.cachedIndex]] — re-opening the parquet on
-    * every optimizer pass cost a file LISTING per query on top of the
+  /** The persisted index, with the bucket count its postings record, its
+    * DataFrames cached per (session, indexDir) in
+    * [[IndexCatalog.cachedIndex]] — re-opening the parquet on every
+    * optimizer pass cost a file LISTING per query on top of the
     * fingerprint check. */
   private def persistedIx(entry: IndexCatalog.Entry): graft.fts.FtsIndex =
     IndexCatalog.cachedIndex(
       org.apache.spark.sql.SparkSession.active, entry)
 
-  /** The entry's term vocabulary, read once per cached handle
+  /** The entry's term vocabulary, read once per index directory
     * ([[IndexCatalog.cachedVocabulary]]). */
   private def vocabulary(entry: IndexCatalog.Entry): graft.fts.Vocabulary =
     IndexCatalog.cachedVocabulary(
@@ -1195,19 +1190,14 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
     }
 
   /** Doc ids matching `terms` (ALL of them, or ANY if `requireAll` is
-    * false) over the persisted postings. The bucket filter is an
-    * expression over literals, so once grafted ([[plannerReady]]) the
-    * outer optimizer folds it and the scan partition-prunes. */
+    * false) over the persisted postings: the AND/OR match shapes the
+    * library API exposes, over the terms' bucket-pruned slice
+    * ([[graft.fts.Index.slice]]) — one implementation of the match
+    * semantics. */
   private def matchingIds(entry: IndexCatalog.Entry, terms: Seq[String],
-                          requireAll: Boolean): org.apache.spark.sql.DataFrame = {
-    // bucket-pruned postings slice, then the same AND/OR match shapes the
-    // library API exposes — one implementation of the match semantics
-    val pruned = graft.fts.FtsIndex(
-      graft.fts.Index.lookup(persistedIx(entry), terms, entry.buckets),
-      null, null)
-    if (requireAll) graft.fts.Search.matchAllIds(pruned, terms)
-    else graft.fts.Search.matchAnyIds(pruned, terms)
-  }
+                          requireAll: Boolean): org.apache.spark.sql.DataFrame =
+    if (requireAll) graft.fts.Search.matchAllIds(persistedIx(entry), terms)
+    else graft.fts.Search.matchAnyIds(persistedIx(entry), terms)
 
   /** A type-correct empty id set (optimizes to an empty LocalRelation). */
   private def emptyIds(entry: IndexCatalog.Entry): org.apache.spark.sql.DataFrame =
@@ -1217,9 +1207,9 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
 
   /** Doc ids holding a term `shape` matches, the shape expanded against
     * the index's vocabulary on the driver ([[graft.fts.Vocabulary.matching]]):
-    * one postings slice whose partition filter is `bucket IN` the
-    * expanded terms' distinct buckets (at most `entry.buckets` literals,
-    * however many terms matched) and whose row filter is the shape's own
+    * one postings slice ([[graft.fts.Index.slice]]) pruned to the expanded
+    * terms' distinct buckets (at most the layout's bucket count, however
+    * many terms matched), whose row filter is the shape's own
     * ([[graft.fts.Search.TermShape.rowFilter]]). One term's ids are
     * already distinct ([[graft.fts.FtsIndex]] uniqueness contract). A
     * small slice then runs as one task ([[SingleTaskPostings]]). */
@@ -1228,9 +1218,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
     val terms = vocabulary(entry).matching(shape)
     if (terms.isEmpty) emptyIds(entry)
     else {
-      val buckets = terms.map(graft.fts.Index.bucketOf(_, entry.buckets)).distinct.sorted
-      val ids = persistedIx(entry).postings
-        .filter(org.apache.spark.sql.functions.col("bucket").isin(buckets: _*) && shape.rowFilter)
+      val ids = graft.fts.Index.slice(persistedIx(entry), terms, shape.rowFilter)
         .select("doc_id")
       if (terms.size == 1) ids else ids.distinct()
     }
@@ -1240,16 +1228,13 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
     * persisted index ([[graft.fts.Search.scoreAllBm25]]): postings pruned
     * to the terms' buckets, doc lengths read from the `dl` column
     * [[graft.fts.Index.write]] denormalized onto them, and the corpus
-    * stats `(n_docs, avgdl)` folded in as literals, read once per cached
-    * handle ([[IndexCatalog.cachedStats]]). The plan reads the pruned
+    * stats `(n_docs, avgdl)` folded in as literals, read once per index
+    * directory ([[IndexCatalog.cachedStats]]). The plan reads the pruned
     * postings and nothing else: no doclens join, no stats broadcast.
     * Output: (doc_id, score). */
-  private def scoringPlan(entry: IndexCatalog.Entry, terms: Seq[String]): LogicalPlan = {
-    val ix = persistedIx(entry)
-    val pruned = ix.copy(postings = graft.fts.Index.lookup(ix, terms, entry.buckets))
-    plannerReady(graft.fts.Search.scoreAllBm25(pruned, terms, stats = Some(
+  private def scoringPlan(entry: IndexCatalog.Entry, terms: Seq[String]): LogicalPlan =
+    plannerReady(graft.fts.Search.scoreAllBm25(persistedIx(entry), terms, stats = Some(
       IndexCatalog.cachedStats(org.apache.spark.sql.SparkSession.active, entry))))
-  }
 
   /** A WHERE conjunct as the covered builder in [[apply]] classifies it:
     * an IsNotNull, the score's own term domain, or an id set, semi-joined

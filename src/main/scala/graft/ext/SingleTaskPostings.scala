@@ -16,8 +16,8 @@ import org.apache.spark.sql.execution.datasources.{DataSourceStrategy, HadoopFsR
   * its data:
   *
   *  - **Single-task slices.** Every scan of the persisted postings layout
-  *    ([[graft.fts.Index.write]]: partitioned by `bucket`, with `term` and
-  *    `doc_id` data columns) whose partition filters select at most
+  *    ([[graft.fts.Index.isPostings]]: partitioned by `bucket`, with `term`
+  *    and `doc_id` data columns) whose partition filters select at most
   *    `spark.sql.files.openCostInBytes` bytes of bucket files has its
   *    Project/Filter chain wrapped in `Repartition(1, shuffle = false)`.
   *    That plans as `CoalesceExec(1)`, whose `SinglePartition` output
@@ -55,8 +55,7 @@ object SingleTaskPostings extends Rule[LogicalPlan] {
 
   private def isPostingsScan(p: LogicalPlan): Boolean = p match {
     case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
-      fs.partitionSchema.fieldNames.toSeq == Seq("bucket") &&
-        Set("term", "doc_id").subsetOf(fs.dataSchema.fieldNames.toSet)
+      graft.fts.Index.isPostings(fs.partitionSchema, fs.dataSchema)
     case _ => false
   }
 

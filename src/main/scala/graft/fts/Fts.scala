@@ -250,11 +250,20 @@ object AnalyzerConfig {
   * [[Search.matchAnyIds]] given one distinct term) is that term's postings
   * projected to `doc_id`, with no de-duplication at all. A hand-assembled
   * index must keep the contract too.
+  *
+  * `buckets` is the bucket count of a persisted layout. [[Index.write]]
+  * records it in the postings files' own schema (metadata on the `term`
+  * field), and [[Index.read]] carries it here, so every term-restricted
+  * read ([[Index.slice]]) prunes to its terms' buckets without being told
+  * how the layout was written. None means no recorded count: an in-memory
+  * or merge-on-read index, or a layout written before the count was
+  * recorded. Its slices are then correct but unpruned.
   */
 final case class FtsIndex(
     postings: DataFrame, // term, doc_id, tf
     docLens: DataFrame,  // doc_id, dl
-    stats: DataFrame)    // n_docs, avgdl  (single row)
+    stats: DataFrame,    // n_docs, avgdl  (single row)
+    buckets: Option[Int] = None)
 
 /** An index's corpus statistics as plain values: the one `stats` row that
   * [[Search.scoreAllBm25]] otherwise broadcast-joins in. `avgdl` is NaN
@@ -494,22 +503,27 @@ object Index {
     *
     * The layout is `postings/bucket=N/` (data columns `term`, `doc_id`,
     * `tf`, `dl`, plus `positions` when positional), `doclens/` and the
-    * one-row `stats/`. Readers recognize the postings by that schema, not
-    * by the directory name: [[graft.ext.SingleTaskPostings]] runs a scan
-    * of it whose pruned buckets are small as one task, and SQL scoring
-    * reads `stats` once per handle ([[IndexCatalog.cachedStats]]). */
+    * one-row `stats/`. The bucket count is recorded in the postings files'
+    * Spark schema, as metadata on `term` ([[read]] returns it as
+    * [[FtsIndex.buckets]]). Readers recognize the postings by that schema,
+    * not by the directory name: [[graft.ext.SingleTaskPostings]] runs a
+    * scan of it whose pruned buckets are small as one task, and SQL
+    * scoring reads `stats` once per handle ([[IndexCatalog.cachedStats]]). */
   def write(ix: FtsIndex, dir: String, buckets: Int = 64): Unit = {
     val dlWin = org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
+    val recorded = new org.apache.spark.sql.types.MetadataBuilder()
+      .putLong(BucketsKey, buckets).build()
     ix.postings
+      .withColumn("term", col("term").as("term", recorded))
       .withColumn("dl", sum(col("tf")).over(dlWin))
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(buckets)))
+      .withColumn(BucketCol, pmod(xxhash64(col("term")), lit(buckets)))
       // term-sorted within each bucket: row-group min/max stats then prune
       // range queries (prefix match, Search.matchPrefixIds) and runs of one
       // term compress better; the bucket repartition also yields one file
       // per bucket instead of nPart×buckets fragments
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "term")
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
+      .repartition(col(BucketCol))
+      .sortWithinPartitions(BucketCol, "term")
+      .write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
       .parquet(s"$dir/postings")
     // doclens and stats from the postings JUST WRITTEN, not more passes
     // over `ix`'s input: ix.docLens is sum(tf) per doc over ix.postings in
@@ -526,28 +540,6 @@ object Index {
       .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/stats")
   }
-
-  /** Per-term serving BOUNDS beside the persisted postings — Lucene's
-    * block-max metadata at term granularity: df plus the components of a
-    * PARAMETER-FREE BM25 upper bound, the term's max tf and min dl (the
-    * contribution is monotone up in tf and down in dl, so
-    * f(max_tf, min_dl) dominates every posting for ANY (k1, b) chosen at
-    * query time). One aggregation over the already-written postings,
-    * vocabulary-sized, bucketed + term-sorted like the postings so
-    * MaxScore serving reads ONLY the query terms' bucket rows instead of
-    * aggregating postings to rediscover the maxima per query. */
-  def writeTermBounds(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      buckets: Int = 64): Unit =
-    spark.read.parquet(s"$dir/postings")
-      .groupBy("term").agg(
-        countDistinct(col("doc_id")).as("df"),
-        max(col("tf")).as("max_tf"),
-        min(col("dl")).as("min_dl"))
-      .withColumn("bucket", pmod(xxhash64(col("term")), lit(buckets)))
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "term")
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket")
-      .parquet(s"$dir/term_bounds")
 
   /** INDEX-SORTED layout (Lucene index sorting — IndexWriterConfig
     * .setIndexSort over a static score): postings land in VALUE-BANDED
@@ -593,7 +585,12 @@ object Index {
     * index, every term-dictionary predicate (a leading-star wildcard
     * too) expands against the index's term vocabulary
     * ([[IndexCatalog.cachedVocabulary]]) and reads only the matching
-    * terms' buckets: no extra layout is written for them. */
+    * terms' buckets: no extra layout is written for them.
+    *
+    * `buckets` is the write-side bucket count. The postings record it
+    * ([[write]]), so no reader is told it again. A layout that records no
+    * count, or another count, is rebuilt, not reused
+    * ([[IndexCatalog.metaMatches]]). */
   def createIndex(spark: org.apache.spark.sql.SparkSession, tablePath: String,
                   indexDir: String, idCol: String = "doc_id",
                   textCol: String = "text", buckets: Int = 64,
@@ -623,19 +620,49 @@ object Index {
              else build(docs, idCol, textCol)
     write(ix, indexDir, buckets)
     if (!analyzer.isV1) writeAnalyzerConfig(spark, indexDir, analyzer)
-    IndexCatalog.register(tablePath, indexDir, idCol, textCol, buckets,
-      positional, analyzer)
+    IndexCatalog.register(tablePath, indexDir, idCol, textCol, positional, analyzer)
     // metadata travels with the index: a fresh session can
     // IndexCatalog.restore(spark, indexDir) instead of rebuilding
     IndexCatalog.writeMeta(spark, tablePath, indexDir, idCol, textCol, buckets,
       positional, analyzer)
   }
 
-  def read(spark: org.apache.spark.sql.SparkSession, dir: String, buckets: Int = 64): FtsIndex =
+  /** Open a layout [[write]] wrote, with the bucket count its postings
+    * record ([[FtsIndex.buckets]]; None for a layout written before the
+    * count was recorded). The count comes from the same footer read that
+    * supplies the postings schema, so the read runs no Spark job. */
+  def read(spark: org.apache.spark.sql.SparkSession, dir: String): FtsIndex = {
+    val schema = footerSchema(spark, s"$dir/postings")
     FtsIndex(
-      readParquet(spark, s"$dir/postings"),
+      readWithSchema(spark, s"$dir/postings", schema),
       readParquet(spark, s"$dir/doclens"),
-      readParquet(spark, s"$dir/stats"))
+      readParquet(spark, s"$dir/stats"),
+      schema.flatMap(bucketsIn))
+  }
+
+  /** The postings' partition column: a term's hash bucket. */
+  private val BucketCol = "bucket"
+
+  /** The `term` field metadata key [[write]] records the bucket count under. */
+  private val BucketsKey = "graft.fts.buckets"
+
+  private def bucketsIn(postings: org.apache.spark.sql.types.StructType): Option[Int] =
+    postings.find(_.name == "term").map(_.metadata).filter(_.contains(BucketsKey))
+      .map(_.getLong(BucketsKey).toInt)
+
+  /** The bucket count recorded by the postings of the layout at `dir`, from
+    * one footer read; None when the layout records none. */
+  private[fts] def recordedBuckets(spark: org.apache.spark.sql.SparkSession,
+                                   dir: String): Option[Int] =
+    footerSchema(spark, s"$dir/postings").flatMap(bucketsIn)
+
+  /** Whether a file relation with these schemas is a postings layout
+    * [[write]] wrote: partitioned by the bucket alone, with `term` and
+    * `doc_id` among its data columns. */
+  def isPostings(partitionSchema: org.apache.spark.sql.types.StructType,
+                 dataSchema: org.apache.spark.sql.types.StructType): Boolean =
+    partitionSchema.fieldNames.toSeq == Seq(BucketCol) &&
+      Set("term", "doc_id").subsetOf(dataSchema.fieldNames.toSet)
 
   /** Spark's parquet footer key holding the writer's schema as JSON. */
   private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
@@ -679,28 +706,36 @@ object Index {
     * when no Spark footer schema is found. */
   private[fts] def readParquet(spark: org.apache.spark.sql.SparkSession, dir: String,
                                 partitionCols: org.apache.spark.sql.types.StructField*): DataFrame =
-    footerSchema(spark, dir).fold(spark.read.parquet(dir))(s =>
+    readWithSchema(spark, dir, footerSchema(spark, dir), partitionCols: _*)
+
+  /** [[readParquet]] given the directory's footer schema. */
+  private def readWithSchema(spark: org.apache.spark.sql.SparkSession, dir: String,
+                             schema: Option[org.apache.spark.sql.types.StructType],
+                             partitionCols: org.apache.spark.sql.types.StructField*): DataFrame =
+    schema.fold(spark.read.parquet(dir))(s =>
       spark.read.schema(org.apache.spark.sql.types.StructType(
         s.fields ++ partitionCols)).parquet(dir))
 
-  /** Postings rows for the query terms only. Against the persisted layout the
-    * bucket predicate (same expression as the writer, over literals — so
-    * Catalyst constant-folds it and the scan partition-prunes) restricts the
-    * read to the terms' buckets before the term filter runs. */
-  def lookup(ix: FtsIndex, terms: Seq[String], buckets: Int = 64): DataFrame = {
-    val p = ix.postings
-    val termFilter = col("term").isin(terms.distinct: _*)
-    if (p.columns.contains("bucket")) {
-      val bucketFilter = terms.distinct
-        .map(t => col("bucket") === pmod(xxhash64(lit(t)), lit(buckets)))
-        .reduce(_ || _)
-      p.filter(bucketFilter && termFilter)
-    } else p.filter(termFilter)
+  /** The postings rows of `terms`: the one term-restricted postings read
+    * every operator goes through. `rowFilter` selects the rows (by default
+    * `term IN terms`; it must select only rows of `terms`). When `ix`
+    * carries a recorded bucket count ([[FtsIndex.buckets]]) the read is
+    * first restricted to the terms' distinct buckets, as
+    * `(bucket = a) OR (bucket = b) …` over literals, so the scan
+    * partition-prunes. Without a count there is no partition filter: the
+    * same rows, read unpruned. */
+  def slice(ix: FtsIndex, terms: Seq[String]): DataFrame =
+    slice(ix, terms, col("term").isin(terms.distinct: _*))
+
+  def slice(ix: FtsIndex, terms: Seq[String], rowFilter: Column): DataFrame = {
+    val inBuckets = ix.buckets.flatMap(n => terms.distinct.map(bucketOf(_, n)).distinct
+      .map(b => col(BucketCol) === b).reduceOption(_ || _))
+    ix.postings.filter(inBuckets.fold(rowFilter)(_ && rowFilter))
   }
 
   /** The bucket [[write]] stores `term`'s postings in: the writer's own
     * `pmod(xxhash64(term), buckets)`, evaluated on the driver. */
-  def bucketOf(term: String, buckets: Int): Int = {
+  private def bucketOf(term: String, buckets: Int): Int = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64}
     Pmod(new XxHash64(Seq(Literal(term))), Literal(buckets.toLong)).eval()
       .asInstanceOf[Long].toInt
@@ -748,7 +783,7 @@ object Search {
     terms.distinct match {
       case Seq(t) => singleTermIds(ix, t)
       case ts =>
-        ix.postings.filter(col("term").isin(ts: _*))
+        Index.slice(ix, ts)
           .groupBy("doc_id").agg(count(lit(1)).as("n_terms"))
           .filter(col("n_terms") === ts.size)
           .select("doc_id")
@@ -758,7 +793,7 @@ object Search {
     * already distinct by the [[FtsIndex]] uniqueness contract, so no
     * aggregate and no exchange. */
   private def singleTermIds(ix: FtsIndex, term: String): DataFrame =
-    ix.postings.filter(col("term") === term).select("doc_id")
+    Index.slice(ix, Seq(term)).select("doc_id")
 
   /** Candidate ids for a case-insensitive SUBSTRING needle over a
     * trigram index ([[Index.buildTrigram]]): docs holding ALL the
@@ -851,8 +886,7 @@ object Search {
     terms.distinct match {
       case Seq(t) => singleTermIds(ix, t)
       case ts =>
-        ix.postings.filter(col("term").isin(ts: _*))
-          .select("doc_id").distinct()
+        Index.slice(ix, ts).select("doc_id").distinct()
     }
 
   /** doc_ids containing at least `minMatch` DISTINCT of the terms —
@@ -873,7 +907,7 @@ object Search {
         org.apache.spark.sql.GraftColumnBridge.column(
           org.apache.spark.sql.catalyst.expressions.Literal.FalseLiteral))
         .select("doc_id")
-    else ix.postings.filter(col("term").isin(ts: _*))
+    else Index.slice(ix, ts)
       .groupBy("doc_id").agg(count(lit(1)).as("n_terms"))
       .filter(col("n_terms") >= minMatch)
       .select("doc_id")
@@ -1203,10 +1237,9 @@ object Search {
     * full phrase occurrences. Document text is never re-read; the postings
     * filter prunes to the phrase's terms (and, against the persisted layout,
     * their buckets) before anything else runs. */
-  def matchPhrasePositional(ix: FtsIndex, phrase: Seq[String],
-                            buckets: Int = 64): DataFrame = {
+  def matchPhrasePositional(ix: FtsIndex, phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "empty phrase")
-    slotPositions(ix, phrase.zipWithIndex, buckets).groupBy("doc_id")
+    slotPositions(ix, phrase.zipWithIndex).groupBy("doc_id")
       .agg(count(lit(1)).as("n_slots"),
         sort_array(collect_list(struct(col("idx"), col("positions")))).as("tp"))
       .filter(col("n_slots") === phrase.size) // every slot's term present
@@ -1223,13 +1256,12 @@ object Search {
     * per slot `idx` it fills — a term repeated in the phrase fills several.
     * The term → slots map is a literal, exploded per posting row, so the
     * slot lookup is a projection over the bucket-pruned postings
-    * ([[Index.lookup]]): no join, and no local relation to encode. */
-  private def slotPositions(ix: FtsIndex, slots: Seq[(String, Int)],
-                            buckets: Int): DataFrame = {
+    * ([[Index.slice]]): no join, and no local relation to encode. */
+  private def slotPositions(ix: FtsIndex, slots: Seq[(String, Int)]): DataFrame = {
     val terms = slots.map(_._1).distinct
     val slotMap = map(terms.flatMap(t =>
       Seq(lit(t), array(slots.collect { case (`t`, i) => lit(i) }: _*))): _*)
-    Index.lookup(ix, terms, buckets).select(col("doc_id"),
+    Index.slice(ix, terms).select(col("doc_id"),
       explode(element_at(slotMap, col("term"))).as("idx"), col("positions"))
   }
 
@@ -1244,8 +1276,7 @@ object Search {
     * of position arrays. After the union, the adjacency fold is EXACTLY
     * [[matchPhrasePositional]]'s left-fold intersection, so exact and
     * wildcard slots compose in any order. */
-  def matchPhraseWildPositional(ix: FtsIndex, slots: Seq[String],
-                                buckets: Int = 64): DataFrame = {
+  def matchPhraseWildPositional(ix: FtsIndex, slots: Seq[String]): DataFrame = {
     require(slots.nonEmpty, "empty phrase")
     def isPattern(s: String) = s.exists(c => c == '*' || c == '?')
     // ALL exact slots ride ONE bucket-pruned postings lookup (the
@@ -1254,7 +1285,7 @@ object Search {
     // per pattern, not per slot.
     val exact = slots.zipWithIndex.filterNot { case (s, _) => isPattern(s) }
     val exactFrames =
-      if (exact.isEmpty) Nil else Seq(slotPositions(ix, exact, buckets))
+      if (exact.isEmpty) Nil else Seq(slotPositions(ix, exact))
     val patternFrames = slots.zipWithIndex.collect {
       case (slot, i) if isPattern(slot) =>
         ix.postings.filter(TermShape.Pattern(slot).rowFilter)
@@ -1284,11 +1315,10 @@ object Search {
     * their buckets against the persisted layout) BEFORE the position check;
     * the pairwise exists runs only on docs containing both terms, arrays of
     * a few positions each. */
-  def matchNear(ix: FtsIndex, a: String, b: String, slop: Int,
-                buckets: Int = 64): DataFrame = {
+  def matchNear(ix: FtsIndex, a: String, b: String, slop: Int): DataFrame = {
     require(slop >= 0, "slop must be non-negative")
-    val pa = Index.lookup(ix, Seq(a), buckets).select(col("doc_id"), col("positions").as("pa"))
-    val pb = Index.lookup(ix, Seq(b), buckets).select(col("doc_id"), col("positions").as("pb"))
+    val pa = Index.slice(ix, Seq(a)).select(col("doc_id"), col("positions").as("pa"))
+    val pb = Index.slice(ix, Seq(b)).select(col("doc_id"), col("positions").as("pb"))
     pa.join(pb, "doc_id")
       .filter(exists(col("pa"), p => exists(col("pb"), q => abs(p - q) <= slop)))
       .select("doc_id")
@@ -1306,12 +1336,11 @@ object Search {
     * combinatorial blow-up). Document text is never re-read; the postings
     * filter prunes to the phrase terms (and their buckets against a
     * persisted layout) before any position logic runs. */
-  def matchPhraseSloppy(ix: FtsIndex, phrase: Seq[String], slop: Int,
-                        buckets: Int = 64): DataFrame = {
+  def matchPhraseSloppy(ix: FtsIndex, phrase: Seq[String], slop: Int): DataFrame = {
     require(phrase.nonEmpty, "empty phrase")
     require(slop >= 0, "slop must be non-negative")
     val window = phrase.size - 1 + slop
-    slotPositions(ix, phrase.zipWithIndex, buckets).groupBy("doc_id")
+    slotPositions(ix, phrase.zipWithIndex).groupBy("doc_id")
       .agg(count(lit(1)).as("n_slots"),
         sort_array(collect_list(struct(col("idx"), col("positions")))).as("tp"))
       .filter(col("n_slots") === phrase.size) // every slot's term present
@@ -1385,7 +1414,7 @@ object Search {
     // candidate id set (MaxScore pruning must not change any score): the
     // df window runs BEFORE the candidate semi-join, which cannot push
     // below it (the join key is not the window's partition key)
-    val qp0 = withDocFreq(ix.postings.filter(col("term").isin(terms.distinct: _*)))
+    val qp0 = withDocFreq(Index.slice(ix, terms))
     val qp = candidates.fold(qp0)(c =>
       qp0.join(c.select(col("doc_id")), Seq("doc_id"), "left_semi"))
     // a persisted layout carries dl on the posting rows ([[Index.write]]
@@ -1425,7 +1454,7 @@ object Search {
                         k1: Double = 1.2, b: Double = 0.75): MaxScorePlan = {
     require(k >= 1, "k must be positive")
     val distinctTerms = terms.distinct
-    val qp0 = ix.postings.filter(col("term").isin(distinctTerms: _*))
+    val qp0 = Index.slice(ix, distinctTerms)
     val qp = if (qp0.columns.contains("dl")) qp0 else qp0.join(ix.docLens, "doc_id")
     val st = ix.stats.collect()(0)
     val nDocs = st.getAs[Long]("n_docs").toDouble
@@ -1445,23 +1474,6 @@ object Search {
     val maxContrib = termStats.map { case (t, (df, m)) =>
       t -> (math.log((nDocs - df + 0.5) / (df + 0.5) + 1.0) * m)
     }
-    planFromBounds(ix, distinctTerms, k, k1, b, maxContrib, avgdl)
-  }
-
-  /** The seed/theta/partition tail shared by the in-memory and persisted
-    * MaxScore paths, given the per-term upper bounds however derived.
-    * `avgdl` comes from the caller's already-collected stats row — both
-    * callers have it in hand, so no second stats action runs here. */
-  private def planFromBounds(ix: FtsIndex, distinctTerms: Seq[String], k: Int,
-                             k1: Double, b: Double,
-                             maxContrib: Map[String, Double],
-                             avgdl: Double): MaxScorePlan = {
-    if (maxContrib.isEmpty)
-      return MaxScorePlan(Double.NegativeInfinity, distinctTerms, Nil, Map.empty)
-    val qp0 = ix.postings.filter(col("term").isin(distinctTerms: _*))
-    val qp = if (qp0.columns.contains("dl")) qp0 else qp0.join(ix.docLens, "doc_id")
-    val tfPart = col("tf").cast("double") * (k1 + 1.0) /
-      (col("tf").cast("double") + (col("dl").cast("double") / avgdl * b + (1.0 - b)) * k1)
     val seed = maxContrib.toSeq.maxBy { case (t, c) => (c, t) }._1
     // theta: exhibit k concrete docs — the seed term's strongest postings
     // — and take the k-th of their FULL scores; any k docs give a valid
@@ -1483,68 +1495,6 @@ object Search {
     MaxScorePlan(theta, ess.map(_._1), nonEss.map(_._1), maxContrib)
   }
 
-  /** [[maxScorePartition]] against a PERSISTED layout carrying
-    * [[Index.writeTermBounds]] metadata: the per-term upper bounds come
-    * from the bucket-pruned term_bounds rows — |terms| rows read, no
-    * per-query aggregation over postings to rediscover maxima — using the
-    * parameter-free (max_tf, min_dl) dominance bound, valid for any
-    * (k1, b). Slightly looser than the in-memory exact maxima, so the
-    * partition can only be MORE conservative — results stay exactly the
-    * unpruned top-k. */
-  def maxScorePartitionPersisted(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String, terms: Seq[String], k: Int,
-                                 k1: Double = 1.2, b: Double = 0.75,
-                                 buckets: Int = 64): MaxScorePlan = {
-    require(k >= 1, "k must be positive")
-    val distinctTerms = terms.distinct
-    // bucket-prune the postings ONCE (the q_fts_bm25_persisted pattern):
-    // every downstream read — seed top-k, theta scoring — stays within
-    // the query terms' partitions
-    val ix0 = Index.read(spark, dir, buckets)
-    val ix = ix0.copy(postings = Index.lookup(ix0, distinctTerms, buckets))
-    val bucketFilter = distinctTerms
-      .map(t => col("bucket") === pmod(xxhash64(lit(t)), lit(buckets)))
-      .reduce(_ || _)
-    val bounds = spark.read.parquet(s"$dir/term_bounds")
-      .filter(bucketFilter && col("term").isin(distinctTerms: _*))
-      .collect().map(r => r.getAs[String]("term") ->
-        (r.getAs[Long]("df"), r.getAs[Long]("max_tf"), r.getAs[Long]("min_dl")))
-      .toMap
-    if (bounds.isEmpty)
-      return MaxScorePlan(Double.NegativeInfinity, distinctTerms, Nil, Map.empty)
-    val st = ix.stats.collect()(0)
-    val nDocs = st.getAs[Long]("n_docs").toDouble
-    val avgdl = st.getAs[Double]("avgdl")
-    val maxContrib = bounds.map { case (t, (df, maxTf, minDl)) =>
-      val idf = math.log((nDocs - df + 0.5) / (df + 0.5) + 1.0)
-      val tfp = maxTf * (k1 + 1.0) /
-        (maxTf + (minDl / avgdl * b + (1.0 - b)) * k1)
-      t -> idf * tfp
-    }
-    planFromBounds(ix, distinctTerms, k, k1, b, maxContrib, avgdl)
-  }
-
-  /** [[bm25TopKMaxScore]] served entirely from a persisted layout:
-    * bounds from term_bounds, candidates and scoring from the pruned
-    * postings buckets — the full block-max-style serving path. */
-  def bm25TopKMaxScorePersisted(spark: org.apache.spark.sql.SparkSession,
-                                dir: String, terms: Seq[String], k: Int,
-                                k1: Double = 1.2, b: Double = 0.75,
-                                buckets: Int = 64): DataFrame = {
-    val plan = maxScorePartitionPersisted(spark, dir, terms, k, k1, b, buckets)
-    val ix0 = Index.read(spark, dir, buckets)
-    val ix = ix0.copy(postings = Index.lookup(ix0, terms.distinct, buckets))
-    if (plan.nonEssential.isEmpty) scoreBm25(ix, terms, k, k1, b)
-    else {
-      val cands = plan.essential
-        .map(t => Index.lookup(ix, Seq(t), buckets).select("doc_id"))
-        .reduce(_ union _).distinct()
-      scoreAllBm25(ix, terms, k1, b, Some(cands))
-        .select(col("doc_id"), round(col("score"), 4).as("score"))
-        .orderBy(col("score").desc, col("doc_id")).limit(k)
-    }
-  }
-
   /** BM25 top-k through MAXSCORE dynamic pruning: candidates come ONLY
     * from the essential terms' postings — documents matching just the
     * non-essential (low-upper-bound) terms are provably outside the top
@@ -1557,8 +1507,9 @@ object Search {
     * terms, the stopword's postings list is O(corpus) while the top k is
     * fixed — MaxScore reads it only for the candidate semi-join instead
     * of scoring it end to end. The same statistics (per-term upper
-    * bounds) are what Lucene persists per block for block-max WAND; a
-    * persisted layout here would store them per term-bucket. */
+    * bounds) are what Lucene persists per block for block-max WAND; here
+    * they are exact maxima over the query terms' slice, which a persisted
+    * layout prunes to their buckets. */
   def bm25TopKMaxScore(ix: FtsIndex, terms: Seq[String], k: Int,
                        k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     // The MaxScore planning takes several INDEPENDENT actions over the same
@@ -1654,7 +1605,7 @@ object Search {
   def scoreAllLmDirichlet(ix: FtsIndex, terms: Seq[String],
                           mu: Double = 2000.0): DataFrame = {
     require(mu > 0, s"Dirichlet mu must be positive, got $mu")
-    val qp = ix.postings.filter(col("term").isin(terms.distinct: _*))
+    val qp = Index.slice(ix, terms)
     val cf = qp.groupBy("term").agg(sum(col("tf")).cast("double").as("cf"))
     val withDl =
       if (qp.columns.contains("dl")) qp.join(broadcast(cf), "term")
@@ -1690,7 +1641,7 @@ object Search {
                               lambda: Double = 0.1): DataFrame = {
     require(lambda > 0 && lambda < 1,
       s"Jelinek-Mercer lambda must be in (0,1), got $lambda")
-    val qp = ix.postings.filter(col("term").isin(terms.distinct: _*))
+    val qp = Index.slice(ix, terms)
     val cf = qp.groupBy("term").agg(sum(col("tf")).cast("double").as("cf"))
     val withDl =
       if (qp.columns.contains("dl")) qp.join(broadcast(cf), "term")
@@ -1918,11 +1869,11 @@ object Search {
     require(terms.nonEmpty, "empty query")
     val spark = ix.postings.sparkSession
     import spark.implicits._
-    val mapping = terms.zipWithIndex
+    val members = terms.zipWithIndex
       .flatMap { case (t, g) =>
         (t +: synonyms.getOrElse(t, Nil)).distinct.map(m => (m, g)) }
-      .toDF("term", "grp")
-    val base = ix.postings.join(broadcast(mapping), "term")
+    val base = Index.slice(ix, members.map(_._1))
+      .join(broadcast(members.toDF("term", "grp")), "term")
     val hasDl = ix.postings.columns.contains("dl")
     val gp =
       if (hasDl) base.groupBy("grp", "doc_id")
@@ -2066,7 +2017,7 @@ object Search {
     * carry a denormalized `dl` (persisted layout) score without touching
     * the corpus-sized doclens table. */
   def tfidfScoreTopK(ix: FtsIndex, terms: Seq[String], k: Int): DataFrame = {
-    val qp = withDocFreq(ix.postings.filter(col("term").isin(terms.distinct: _*)))
+    val qp = withDocFreq(Index.slice(ix, terms))
     val withDl =
       if (qp.columns.contains("dl")) qp else qp.join(ix.docLens, "doc_id")
     withDl
@@ -2158,7 +2109,7 @@ object Search {
     import spark.implicits._
     val wDf = broadcast(weights.toDF("term", "qw"))
     // weighted-BM25 rerank over the expanded term set
-    val qp0 = withDocFreq(ix.postings.join(wDf, "term"))
+    val qp0 = withDocFreq(Index.slice(ix, weights.map(_._1)).join(wDf, "term"))
     val withDl =
       if (qp0.columns.contains("dl")) qp0 else qp0.join(ix.docLens, "doc_id")
     withDl.crossJoin(broadcast(ix.stats))
@@ -2179,7 +2130,7 @@ object Search {
     * .buildPositional]] posexplode). */
   def matchSpanFirst(ix: FtsIndex, term: String, n: Int): DataFrame = {
     require(n >= 1, "n must be positive")
-    ix.postings.filter(col("term") === term)
+    Index.slice(ix, Seq(term))
       .filter(exists(col("positions"), p => p < n))
       .select(col("doc_id")).distinct()
   }
@@ -2193,9 +2144,9 @@ object Search {
     * the two terms' postings — never the corpus. */
   def matchSpanNot(ix: FtsIndex, a: String, b: String, dist: Int): DataFrame = {
     require(dist >= 0, "dist must be non-negative")
-    val pa = ix.postings.filter(col("term") === a)
+    val pa = Index.slice(ix, Seq(a))
       .select(col("doc_id"), col("positions").as("pa"))
-    val pb = ix.postings.filter(col("term") === b)
+    val pb = Index.slice(ix, Seq(b))
       .select(col("doc_id"), col("positions").as("pb"))
     pa.join(pb, Seq("doc_id"), "left_outer")
       .filter(col("pb").isNull ||

@@ -327,8 +327,10 @@ object IncrementalIndex {
       // the base participates as one pseudo-batch AT the watermark: later
       // tombstones (as_of ≥ watermark) kill base versions, earlier ones
       // are already folded in. The persisted layout's denormalized dl and
-      // bucket columns are layout details, not delta-schema columns.
-      (ix.postings.drop("dl", "bucket").withColumn("batch_id", lit(w)),
+      // its bucket are layout details, not delta-schema columns.
+      val deltaCols = Seq("term", "doc_id", "tf", "positions")
+        .filter(ix.postings.columns.contains).map(col)
+      (ix.postings.select(deltaCols: _*).withColumn("batch_id", lit(w)),
         ix.docLens.withColumn("batch_id", lit(w)))
     }
     val rawP0 = (base.map(_._1) ++ liveDelta("postings_delta"))
@@ -419,8 +421,8 @@ object IncrementalIndex {
     // persists) under the SAME pipeline, so SQL queries normalize through it
     val analyzer = logAnalyzer(spark, dir)
     if (!analyzer.isV1) Index.writeAnalyzerConfig(spark, outDir, analyzer)
-    IndexCatalog.register(tablePath, outDir, idCol, textCol, buckets,
-      positional, analyzer = analyzer)
+    IndexCatalog.register(tablePath, outDir, idCol, textCol, positional,
+      analyzer = analyzer)
     IndexCatalog.writeMeta(spark, tablePath, outDir, idCol, textCol, buckets,
       positional, analyzer = analyzer)
   }

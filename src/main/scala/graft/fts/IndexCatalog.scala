@@ -17,11 +17,12 @@ import java.util.concurrent.ConcurrentHashMap
   */
 object IndexCatalog {
 
-  /** A persisted index produced by [[Index.write]]: where it lives, which
-    * columns of the indexed table are the document id / indexed text, and
-    * the bucket count the postings were partitioned with (must match the
-    * writer's). The rewrite only fires for `fts_match` over `textCol` —
-    * the index carries that column's tokens and no other's.
+  /** A persisted index produced by [[Index.write]]: where it lives, and
+    * which columns of the indexed table are the document id / indexed
+    * text. The bucket count is not here: the postings record it, and the
+    * handle [[Index.read]] opens carries it. The rewrite only fires for
+    * `fts_match` over `textCol` — the index carries that column's tokens
+    * and no other's.
     * `positional` records whether the postings carry per-doc position lists
     * ([[Index.buildPositional]]) — the rewrite lowers `fts_phrase`/`fts_near`
     * to pure index plans only when they do.
@@ -34,7 +35,7 @@ object IndexCatalog {
     * through it, and predicates it cannot answer fall back to scan
     * semantics. */
   final case class Entry(indexDir: String, idCol: String, textCol: String,
-                         buckets: Int, positional: Boolean, fingerprint: Long,
+                         positional: Boolean, fingerprint: Long,
                          analyzer: AnalyzerConfig = AnalyzerConfig())
 
   // keyed by (canonical table path, lowercased indexed column): one table
@@ -43,35 +44,39 @@ object IndexCatalog {
   // overwrite the first's
   private val byPathCol = new ConcurrentHashMap[(String, String), Entry]()
 
-  /** Per-indexDir cache of ONE session's handle on the persisted index:
-    * its DataFrames and what [[cachedStats]] and [[cachedVocabulary]]
-    * read from them. `spark.read.parquet` LISTS the directory at
-    * construction, and the rewrite needs the postings handle on every
-    * optimizer pass — without the cache every query re-pays a file
-    * listing during planning (planning latency only, but real on object
-    * stores). The handle belongs to the last session that queried the
-    * index: a query from another session replaces it, so two sessions
-    * taking turns on one index each re-open it (and re-read its
-    * vocabulary) on every switch. Invalidated by [[register]] (an index
-    * rewrite registers again; a registration that replaces another index
-    * drops that index's handle too) and [[clear]]. */
-  private val ixCache = new ConcurrentHashMap[String, Handle]()
+  /** Per-indexDir cache of ONE session's DataFrames over the persisted
+    * index. `spark.read.parquet` LISTS the directory at construction, and
+    * the rewrite needs the postings on every optimizer pass — without the
+    * cache every query re-pays a file listing during planning (planning
+    * latency only, but real on object stores). The DataFrames belong to
+    * the last session that queried the index: a query from another session
+    * re-opens them. What they read once — [[statsCache]] and
+    * [[vocabCache]] — is shared by every session. All three are
+    * invalidated by [[register]] (an index rewrite registers again; a
+    * registration that replaces another index drops that index's entries
+    * too) and [[clear]]. */
+  private val ixCache =
+    new ConcurrentHashMap[String, (org.apache.spark.sql.SparkSession, FtsIndex)]()
 
-  /** One session's open handle on a persisted index. Its corpus stats and
-    * its term vocabulary are read on first use and then kept as long as
-    * the handle. */
-  private final class Handle(val spark: AnyRef, val ix: FtsIndex) {
-    lazy val stats: CorpusStats = CorpusStats.read(ix.stats)
-    lazy val vocabulary: Vocabulary = Vocabulary.read(ix.postings)
+  /** Per-indexDir corpus stats and term vocabulary: immutable facts of the
+    * layout, read once on first use by whichever session asks first, and
+    * then shared JVM-wide. */
+  private val statsCache = new ConcurrentHashMap[String, CorpusStats]()
+  private val vocabCache = new ConcurrentHashMap[String, Vocabulary]()
+
+  private def index(spark: org.apache.spark.sql.SparkSession, entry: Entry): FtsIndex =
+    ixCache.compute(entry.indexDir, (_, cur) =>
+      if (cur != null && (cur._1 eq spark)) cur
+      else (spark, Index.read(spark, entry.indexDir)))._2
+
+  private def invalidate(indexDir: String): Unit = {
+    ixCache.remove(indexDir)
+    statsCache.remove(indexDir)
+    vocabCache.remove(indexDir)
   }
 
-  private def handle(spark: org.apache.spark.sql.SparkSession, entry: Entry): Handle =
-    ixCache.compute(entry.indexDir, (_, cur) =>
-      if (cur != null && (cur.spark eq spark)) cur
-      else new Handle(spark, Index.read(spark, entry.indexDir, entry.buckets)))
-
-  /** The entry's persisted index handle, cached per indexDir for the
-    * session that last asked ([[ixCache]]).
+  /** The entry's persisted index, cached per indexDir for the session that
+    * last asked ([[ixCache]]), with the bucket count its postings record.
     * Every call returns FRESH output exprIds over the SAME cached relation
     * (file listing paid once): one query may graft the postings in as
     * several subplans — scoring join + candidate semi-join, or two
@@ -79,30 +84,32 @@ object IndexCatalog {
     * the plan ambiguous. */
   def cachedIndex(spark: org.apache.spark.sql.SparkSession,
                   entry: Entry): FtsIndex = {
-    val base = handle(spark, entry).ix
+    val base = index(spark, entry)
     import org.apache.spark.sql.GraftColumnBridge.freshCopy
     FtsIndex(freshCopy(base.postings), freshCopy(base.docLens),
-      freshCopy(base.stats))
+      freshCopy(base.stats), base.buckets)
   }
 
-  /** The entry's corpus statistics `(n_docs, avgdl)`, read once per cached
-    * handle: the first call runs one job over the one-row `stats` table,
-    * later calls run none until [[register]] or [[clear]] drops the
-    * handle. BM25 scoring folds them in as literals. */
+  /** The entry's corpus statistics `(n_docs, avgdl)`, read once per index
+    * directory for every session: the first call runs one job over the
+    * one-row `stats` table, later calls run none until [[register]] or
+    * [[clear]] drops them. BM25 scoring folds them in as literals. */
   def cachedStats(spark: org.apache.spark.sql.SparkSession,
                   entry: Entry): CorpusStats =
-    handle(spark, entry).stats
+    statsCache.computeIfAbsent(entry.indexDir, _ =>
+      CorpusStats.read(index(spark, entry).stats))
 
-  /** The entry's distinct terms, read once per cached handle like
+  /** The entry's distinct terms, read once per index directory like
     * [[cachedStats]]: the first call runs one job over the postings'
     * `term` column, later calls run none until [[register]] or [[clear]]
-    * drops the handle. SQL's term-dictionary predicates (`fts_prefix`,
+    * drops them. SQL's term-dictionary predicates (`fts_prefix`,
     * `fts_term_range`, `fts_wildcard`, `fts_regexp`, `fts_fuzzy`) expand
     * against it on the driver ([[Vocabulary.matching]]), so their
     * postings scan prunes to the expanded terms' buckets. */
   def cachedVocabulary(spark: org.apache.spark.sql.SparkSession,
                        entry: Entry): Vocabulary =
-    handle(spark, entry).vocabulary
+    vocabCache.computeIfAbsent(entry.indexDir, _ =>
+      Vocabulary.read(index(spark, entry).postings))
 
   /** Order-independent hash of the table's data files (path, length,
     * mtime) — any rewrite, compaction, append, or delete changes it. The
@@ -155,14 +162,14 @@ object IndexCatalog {
 
   def register(tablePath: String, indexDir: String,
                idCol: String = "doc_id", textCol: String = "text",
-               buckets: Int = 64, positional: Boolean = false,
+               positional: Boolean = false,
                analyzer: AnalyzerConfig = AnalyzerConfig()): Unit = {
-    ixCache.remove(indexDir) // a re-register means the index was rewritten
+    invalidate(indexDir) // a re-register means the index was rewritten
     // the index this one replaces (a new compaction epoch) serves no more
     Option(byPathCol.put((canon(tablePath), textCol.toLowerCase(java.util.Locale.ROOT)),
-      Entry(indexDir, idCol, textCol, buckets, positional,
+      Entry(indexDir, idCol, textCol, positional,
         tableFingerprint(tablePath), analyzer)))
-      .foreach(old => ixCache.remove(old.indexDir))
+      .foreach(old => invalidate(old.indexDir))
   }
 
   /** Name of the metadata file [[Index.createIndex]] drops inside the index
@@ -207,7 +214,9 @@ object IndexCatalog {
   /** Does a COMPLETE, CURRENT index with exactly these build parameters
     * already sit at `indexDir`? True iff the metadata file (written LAST
     * by [[Index.createIndex]], so its presence marks a complete layout)
-    * exists, every build parameter matches, and the stored build-time
+    * exists, every build parameter matches, the postings record `buckets`
+    * as their bucket count ([[Index.write]]; a layout written before the
+    * count was recorded is rebuilt once), and the stored build-time
     * fingerprint equals the table's CURRENT file listing — i.e. rebuilding
     * would byte-identically reproduce what is already there. Lets
     * createIndex skip the rebuild (guide §1.2: don't recompute what you
@@ -232,7 +241,8 @@ object IndexCatalog {
         Option(props.getProperty("analyzer")) ==
           (if (analyzer.isV1) None else Some(analyzer.describe)) &&
         Option(props.getProperty("fingerprint")).contains(
-          tableFingerprint(tablePath).toString)
+          tableFingerprint(tablePath).toString) &&
+        Index.recordedBuckets(spark, indexDir).contains(buckets)
     } catch { case _: Throwable => false } // unreadable meta = rebuild
   }
 
@@ -251,7 +261,6 @@ object IndexCatalog {
       (props.getProperty("tablePath"),
         props.getProperty("textCol").toLowerCase(java.util.Locale.ROOT)),
       Entry(indexDir, props.getProperty("idCol"), props.getProperty("textCol"),
-        props.getProperty("buckets").toInt,
         // absent in pre-positional metadata files → false
         props.getProperty("positional", "false").toBoolean,
         props.getProperty("fingerprint").toLong,
@@ -280,5 +289,7 @@ object IndexCatalog {
   /** The first fresh entry for `tablePath` (single-index convenience). */
   def get(tablePath: String): Option[Entry] = entriesFor(tablePath).headOption
 
-  def clear(): Unit = { byPathCol.clear(); ixCache.clear() }
+  def clear(): Unit = {
+    byPathCol.clear(); ixCache.clear(); statsCache.clear(); vocabCache.clear()
+  }
 }

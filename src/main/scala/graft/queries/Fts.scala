@@ -802,14 +802,13 @@ object Fts extends QueryPack {
                ORDER BY doc_id""")),
 
     // BM25 again, but through the PERSISTED index layout (bucketed parquet
-    // postings → partition-pruned lookup) — results must be identical.
+    // postings → partition-pruned slice) — results must be identical.
     Q("q_fts_bm25_persisted",
       (s, dir) => {
         // the build-once serving layout: the persisted layout is what is
-        // being served; the build is provisioning, paid once per corpus
-        val persisted = servedIndex(s, dir)
-        val pruned = persisted.copy(postings = graft.fts.Index.lookup(persisted, Seq("spark", "query")))
-        graft.fts.Search.scoreBm25(pruned, Seq("spark", "query"), k = 10)
+        // being served; the build is provisioning, paid once per corpus.
+        // Its postings record their bucket count, so scoring prunes itself
+        graft.fts.Search.scoreBm25(servedIndex(s, dir), Seq("spark", "query"), k = 10)
       },
       Some(graft.queries.Fts.bm25Oracle)),
 
@@ -921,9 +920,7 @@ object Fts extends QueryPack {
           .delete(new org.apache.hadoop.fs.Path(outDir), true)
         ingestDocs(s, dir, graft.core.Scratch.dir("docs_compact_stream"), deltaDir)
         graft.fts.IncrementalIndex.compact(s, deltaDir, outDir)
-        val ix = graft.fts.Index.read(s, outDir)
-        val pruned = ix.copy(postings = graft.fts.Index.lookup(ix, Seq("spark", "query")))
-        Search.scoreBm25(pruned, Seq("spark", "query"), k = 10)
+        Search.scoreBm25(graft.fts.Index.read(s, outDir), Seq("spark", "query"), k = 10)
       },
       Some(bm25Oracle)),
 
@@ -986,10 +983,10 @@ object Fts extends QueryPack {
         val ix = Index.buildPositional(docs2)
         val qp = ix.postings.filter(col("term").isin(terms: _*))
           .repartition(16)
-        // collection statistics served from a PERSISTED dictionary (the
-        // writeTermBounds pattern): at trillion-term scale df lives in a
-        // table, and — the AQE mechanics half — OptimizeSkewedJoin only
-        // matches joins whose children are bare Sort-over-shuffle, so a
+        // collection statistics served from a PERSISTED dictionary: at
+        // trillion-term scale df lives in a table, and — the AQE mechanics
+        // half — OptimizeSkewedJoin only matches joins whose children are
+        // bare Sort-over-shuffle, so a
         // stats side that aggregates AFTER its own shuffle can never be
         // skew-split; the persisted read plans scan → exchange → sort,
         // which can
@@ -1206,9 +1203,7 @@ object Fts extends QueryPack {
           .withColumn("text", concat(col("text"), lit(" zzzupdated")))
         graft.fts.IncrementalIndex.upsert(s, deltaDir, updated)
         graft.fts.IncrementalIndex.compact(s, deltaDir, base2)
-        val ix = graft.fts.Index.read(s, base2)
-        val pruned = ix.copy(postings = graft.fts.Index.lookup(ix, Seq("spark", "query")))
-        Search.scoreBm25(pruned, Seq("spark", "query"), k = 10)
+        Search.scoreBm25(graft.fts.Index.read(s, base2), Seq("spark", "query"), k = 10)
       },
       Some(bm25OracleOver(
         """(SELECT doc_id,
@@ -2105,29 +2100,14 @@ object Fts extends QueryPack {
                SELECT doc_id, round(s, 4) AS score FROM sc
                ORDER BY round(s, 4) DESC, doc_id LIMIT 10""")),
 
-    // MAXSCORE over the PERSISTED layout — the block-max serving path:
-    // Index.writeTermBounds stores per-term (df, max_tf, min_dl) beside
-    // the bucketed postings, so the per-query upper bounds are |terms|
-    // bucket-pruned metadata rows instead of a postings aggregation (the
-    // parameter-free dominance bound f(max_tf, min_dl) stays valid for
-    // any query-time (k1, b) — Lucene persists the same idea per block).
-    // Everything — bounds, seed, theta, candidates, scoring — reads only
-    // the query terms' buckets. Oracle: the unpruned BM25, again.
+    // MAXSCORE over the PERSISTED layout (the servedIndex lifecycle): its
+    // postings record their bucket count and already carry dl, so MaxScore
+    // spills nothing, and every read — the exact per-term maxima, the
+    // seed, theta, candidates and scoring — is the query terms'
+    // bucket-pruned slice (Index.slice). Three driver actions (stats, term
+    // bounds, seed) before the final plan. Oracle: the unpruned BM25, again.
     Q("q_fts_wand_persisted",
-      (s, dir) => {
-        // build-once serving layout (the servedIndex lifecycle): the
-        // block-max metadata is maintained out-of-band with the index;
-        // per-query cost is the bucket-pruned bounds + postings reads.
-        // 16 buckets: the fixture vocabulary is 31 terms — 64 bucket files
-        // would be write amplification with no extra pruning to buy
-        val ixDir = layoutOnce(s, dir, "fts_wand_index",
-            "term_bounds/_SUCCESS") { out =>
-          Index.write(Index.build(Tables(s, dir, "documents")), out, buckets = 16)
-          Index.writeTermBounds(s, out, buckets = 16)
-        }
-        Search.bm25TopKMaxScorePersisted(s, ixDir, Seq("dup", "batch"),
-          k = 10, buckets = 16)
-      },
+      (s, dir) => Search.bm25TopKMaxScore(servedIndex(s, dir), Seq("dup", "batch"), k = 10),
       Some(s"""WITH toks AS (
                  SELECT doc_id, unnest($DTOKS) AS term FROM documents),
                tf AS (SELECT doc_id, term, count(*)::DOUBLE AS tf FROM toks GROUP BY 1, 2),
@@ -2902,10 +2882,8 @@ object Fts extends QueryPack {
         // denormalized on the posting rows), so the data-bound work is
         // candidate-sized; the n_chars join scans a 2-column projection
         // of the corpus against the broadcast-sized candidate set
-        val ix = servedIndex(s, dir)
-        val pruned = ix.copy(postings = Index.lookup(ix, Seq("spark", "query")))
         val decay = exp(-pow((col("n_chars") - 200.0) / 300.0, 2))
-        Search.scoreAllBm25(pruned, Seq("spark", "query"))
+        Search.scoreAllBm25(servedIndex(s, dir), Seq("spark", "query"))
           .join(docs.select("doc_id", "n_chars"), "doc_id")
           .select(col("doc_id"), round(col("score") * decay, 4).as("score"))
           .orderBy(col("score").desc, col("doc_id")).limit(10)
@@ -2943,8 +2921,8 @@ object Fts extends QueryPack {
         // `dl` on those rows replaces the O(corpus) docLens join entirely
         val ix = servedIndex(s, dir)
         val terms = Seq("spark", "query")
-        val qp = Index.lookup(ix, terms)
-        val top = Search.scoreBm25(ix.copy(postings = qp), terms, 3)
+        val qp = Index.slice(ix, terms)
+        val top = Search.scoreBm25(ix, terms, 3)
           .select("doc_id")
         val df = qp.groupBy("term")
           .agg(countDistinct(col("doc_id")).cast("double").as("df"))

@@ -474,7 +474,8 @@ class PlanShapeSpec extends SparkSpec {
           case InSet(_, hs) => hs.size
           case _: Literal => 1
         }.sum).sum
-        assert(literals > 0 && literals <= entry.buckets,
+        assert(literals > 0 &&
+            literals <= graft.fts.IndexCatalog.cachedIndex(spark, entry).buckets.get,
           s"$literals partition-filter literals: ${scan.partitionFilters}")
       }
     } finally graft.fts.IndexCatalog.clear()

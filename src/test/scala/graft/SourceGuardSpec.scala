@@ -112,6 +112,41 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(bad.isEmpty, bad.mkString("\n  ", "\n  ", ""))
   }
 
+  /** A persisted index's postings are bucketed by a hash of the term, and
+    * every term-restricted read prunes to its terms' buckets. The hash and
+    * the bucket column live in `graft.fts.Index` alone (its `write` and
+    * `slice`), so a reader cannot compute a bucket its own way, or read
+    * the bucket count from anywhere but the layout. In the full-text query
+    * pack `bucket` also names a range-facet column, so there only the hash
+    * is checked. */
+  test("only graft.fts.Index names the postings' bucket hash and column") {
+    val pkg = Paths.get("src", "main", "scala", "graft")
+    val fts = pkg.resolve("fts").resolve("Fts.scala")
+    val pack = pkg.resolve("queries").resolve("Fts.scala")
+    assert(sources.exists(_._1 == fts) && sources.exists(_._1 == pack), "no fts sources")
+    val hash = """\bxxhash64\b|\bbucketOf\b""".r
+    def hashLines(text: String) = text.linesIterator.map(_.trim)
+      .filterNot(l => l.startsWith("*") || l.startsWith("/")).filter(hash.findFirstIn(_).isDefined)
+    // Fts.scala split into `object Index` and the rest
+    val (index, rest) = {
+      val text = sources.find(_._1 == fts).get._2
+      val from = text.indexOf("\nobject Index ")
+      val until = text.indexOf("\n}\n", from)
+      assert(from >= 0 && until > from, s"no object Index in $fts")
+      (text.substring(from, until), text.substring(0, from) + text.substring(until))
+    }
+    val bad = for {
+      (p, text) <- sources
+      inPkg = p.startsWith(pkg.resolve("fts")) || p.startsWith(pkg.resolve("ext"))
+      if inPkg || p == pack
+      checked = if (p == fts) rest else text
+      offence <- hashLines(checked).toSeq ++
+        (if (inPkg && stringLiterals(checked).contains("bucket")) Seq("\"bucket\"") else Nil)
+    } yield s"$p: $offence"
+    assert(bad.isEmpty, bad.mkString("\n  ", "\n  ", ""))
+    assert(hashLines(index).nonEmpty && stringLiterals(index).contains("bucket"))
+  }
+
   test("no post-hoc install of the graft function surface") {
     val bad = offenders("""\bdef\s+install\s*\(""") ++
       offenders("""\b(GraftExtensions|TextKernels|VecKernels)\s*\.\s*install\b""") ++

@@ -200,10 +200,8 @@ class ExtensionsSpec extends SparkSpec {
       assert(!df.queryExecution.optimizedPlan.toString.contains("fts_tokenize"),
         "ranked retrieval must score from the index, not re-tokenize")
       val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      val ix = graft.fts.Index.read(spark, ixDir)
-      val pruned = ix.copy(
-        postings = graft.fts.Index.lookup(ix, Seq("spark", "query")))
-      val expect = graft.fts.Search.scoreBm25(pruned, Seq("spark", "query"), 10)
+      val expect = graft.fts.Search.scoreBm25(graft.fts.Index.read(spark, ixDir),
+          Seq("spark", "query"), 10)
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(got == expect)
       // docs containing no query term score 0.0 (coalesced outer join), so
@@ -231,8 +229,7 @@ class ExtensionsSpec extends SparkSpec {
       assert(rows.length == 50)
       val ix = graft.fts.Index.read(spark, ixDir)
       def scoresFor(term: String): Map[Long, Double] =
-        graft.fts.Search.scoreAllBm25(
-            ix.copy(postings = graft.fts.Index.lookup(ix, Seq(term))), Seq(term))
+        graft.fts.Search.scoreAllBm25(ix, Seq(term))
           .collect().map(r => r.getLong(0) ->
             BigDecimal(r.getDouble(1)).setScale(4,
               BigDecimal.RoundingMode.HALF_UP).toDouble).toMap
@@ -309,12 +306,10 @@ class ExtensionsSpec extends SparkSpec {
       assert(!df.queryExecution.executedPlan.toString.contains("documents.parquet"),
         "covered ORDER BY fts_score must not scan the corpus")
       val got = df.collect().map(_.getLong(0)).toSeq
-      val ix = graft.fts.Index.read(spark, ixDir)
-      val pruned = ix.copy(
-        postings = graft.fts.Index.lookup(ix, Seq("spark", "query")))
       // full-precision ordering here (no round in the SQL) — compare against
       // the unrounded scoring frame
-      val expect = graft.fts.Search.scoreAllBm25(pruned, Seq("spark", "query"))
+      val expect = graft.fts.Search.scoreAllBm25(graft.fts.Index.read(spark, ixDir),
+          Seq("spark", "query"))
         .orderBy(org.apache.spark.sql.functions.col("score").desc,
           org.apache.spark.sql.functions.col("doc_id"))
         .limit(10).collect().map(_.getLong(0)).toSeq
@@ -577,7 +572,8 @@ class ExtensionsSpec extends SparkSpec {
       assert(graft.fts.IndexCatalog.get(tmpTable).isEmpty)
       graft.fts.IndexCatalog.restore(spark, ixDir)
       val e = graft.fts.IndexCatalog.get(tmpTable)
-      assert(e.isDefined && e.get.indexDir == ixDir && e.get.buckets == 64)
+      assert(e.isDefined && e.get.indexDir == ixDir &&
+        graft.fts.IndexCatalog.cachedIndex(spark, e.get).buckets.contains(64))
 
       // restore keeps the BUILD-TIME fingerprint: a table rewritten after
       // the build must still read as stale after restore

@@ -499,7 +499,7 @@ class SearchSpec extends SparkSpec {
     assert(uni.essential.toSet ++ uni.nonEssential.toSet == Set("spark", "query"))
   }
 
-  test("MaxScore persisted: metadata bounds dominate exact maxima, results equal") {
+  test("MaxScore over a persisted layout: results equal the unpruned ranking") {
     import spark.implicits._
     val corpus = ((1L to 20L).map(i => (i, s"common filler number$i")) ++
       Seq(21L -> "rare common things", 22L -> "very rare item"))
@@ -507,25 +507,53 @@ class SearchSpec extends SparkSpec {
     val cix = Index.build(corpus)
     val dir = java.nio.file.Files.createTempDirectory("wand_ix").toString
     Index.write(cix, dir)
-    Index.writeTermBounds(spark, dir)
-    val mem = Search.maxScorePartition(cix, Seq("rare", "common"), k = 2)
-    val per = Search.maxScorePartitionPersisted(spark, dir,
-      Seq("rare", "common"), k = 2)
-    // the (max_tf, min_dl) bound can only be LOOSER than the exact maxima
-    for (t <- Seq("rare", "common"))
-      assert(per.maxContrib(t) >= mem.maxContrib(t) - 1e-12,
-        s"$t: ${per.maxContrib(t)} < ${mem.maxContrib(t)}")
-    // on this corpus it still proves the same partition...
+    val persisted = Index.read(spark, dir)
+    // the exact maxima over the terms' slice prove the in-memory partition...
+    val per = Search.maxScorePartition(persisted, Seq("rare", "common"), k = 2)
     assert(per.nonEssential == Seq("common") && per.essential == Seq("rare"))
     // ...and serving equals the unpruned ranking
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toList
-    assert(rows(Search.bm25TopKMaxScorePersisted(spark, dir,
-        Seq("rare", "common"), k = 2))
+    assert(rows(Search.bm25TopKMaxScore(persisted, Seq("rare", "common"), k = 2))
       == rows(Search.scoreBm25(cix, Seq("rare", "common"), k = 2)))
     // absent terms degrade to the empty result, not an error
-    assert(Search.bm25TopKMaxScorePersisted(spark, dir, Seq("zzz"), k = 2)
-      .collect().isEmpty)
+    assert(Search.bm25TopKMaxScore(persisted, Seq("zzz"), k = 2).collect().isEmpty)
+  }
+
+  test("a persisted layout prunes by the bucket count its postings record") {
+    import spark.implicits._
+    val corpus = Seq(
+      (1L, "spark query engine"),
+      (2L, "query the spark cluster"),
+      (3L, "spark sql query"),
+      (4L, "data query spark query")).toDF("doc_id", "text")
+    val mem = Index.buildPositional(corpus)
+    val dir = graft.core.Scratch.freshDir("recorded_buckets_ix")
+    Index.write(mem, dir, buckets = 4)
+    // read with no bucket count: the layout supplies its own
+    val persisted = Index.read(spark, dir)
+    assert(persisted.buckets.contains(4))
+    def ids(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getLong(0)).toSet
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toList
+    val terms = Seq("spark", "query")
+    val phrase = Search.matchPhrasePositional(persisted, terms)
+    assert(ids(phrase) == ids(Search.matchPhrasePositional(mem, terms)) && ids(phrase).nonEmpty)
+    val near = Search.matchNear(persisted, "query", "spark", 2)
+    assert(ids(near) == ids(Search.matchNear(mem, "query", "spark", 2)) && ids(near).nonEmpty)
+    assert(ids(Search.matchPhraseSloppy(persisted, terms, 1)) ==
+      ids(Search.matchPhraseSloppy(mem, terms, 1)))
+    assert(ids(Search.matchAllIds(persisted, terms)) == ids(Search.matchAllIds(mem, terms)))
+    assert(rows(Search.scoreBm25(persisted, terms, 3)) == rows(Search.scoreBm25(mem, terms, 3)))
+    assert(rows(Search.bm25TopKMaxScore(persisted, terms, 3)) ==
+      rows(Search.bm25TopKMaxScore(mem, terms, 3)))
+    // and the read is pruned: the postings scan filters on the bucket
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(phrase.queryExecution.executedPlan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+    assert(scans.nonEmpty && scans.forall(_.partitionFilters.exists(
+      _.references.exists(_.name == "bucket"))), phrase.queryExecution.executedPlan.toString)
   }
 
   test("percolate: conjunctive musts, mustNot veto, no cross product semantics") {

@@ -8,9 +8,9 @@ import graft.ext.FtsShapes
   * ([[graft.ext.FtsShapes]]: each WHERE shape and bad-argument shape under
   * each projection, plus the `fts_score` top-k queries with and without an
   * extra conjunct, and the lang-scored two-column shapes), under each of
-  * five registrations of the agreement table (none, v1 tf-only, v1
-  * positional, analyzer positional, and v1 tf-only indexes on both text
-  * and lang):
+  * six registrations of the agreement table (none, v1 tf-only, v1
+  * positional, analyzer positional, v1 tf-only indexes on both text and
+  * lang, and v1 positional with 16 buckets instead of the default 64):
   *  - the optimized logical plan, expression ids normalized to `#N` and
   *    lambda variable numbers to `_N` (both come from JVM-wide counters,
   *    so they shift with every DataFrame a build happens to construct);
@@ -49,7 +49,9 @@ object PlanGrid {
         positional = true, analyzer = graft.fts.AnalyzerConfig(
           stopWords = Seq("the", "of"), porter = true))),
       "v1 text + lang" -> Seq(graft.fts.Index.createIndex(spark, table, _),
-        graft.fts.Index.createIndex(spark, table, _, textCol = "lang")))
+        graft.fts.Index.createIndex(spark, table, _, textCol = "lang")),
+      "v1 positional, 16 buckets" -> Seq(graft.fts.Index.createIndex(spark, table, _,
+        buckets = 16, positional = true)))
     def message(e: Throwable): String =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
         .collectFirst { case iae: IllegalArgumentException => iae.getMessage }
