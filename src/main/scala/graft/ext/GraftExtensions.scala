@@ -608,7 +608,7 @@ case class FtsTermRange(text: Expression, lo: Expression, hi: Expression,
 /** `fts_near(text, 'a', 'b', slop)`: true iff tokens a and b occur within
   * `slop` positions of each other, either order — proximity search on the
   * SQL surface. Lowered by [[RewriteFtsMatch]]: over a POSITIONAL index
-  * ([[graft.fts.Index.buildPositional]]) it is a pure postings plan
+  * ([[graft.fts.Index.build]] with `positional = true`) it is a pure postings plan
   * ([[graft.fts.Search.matchNear]], text never re-read); over a
   * non-positional index, an all-terms candidate semi-join with the
   * [[FtsNearTokens]] kernel as residual; unindexed, the kernel alone. */
@@ -768,7 +768,7 @@ object RewriteFtsMatch extends Rule[LogicalPlan]
   /** Phrase tokens through the entry's analyzer pipeline — order and
     * repetition preserved (tokenizeQuery keeps both; only [[entryTerms]]
     * dedups). A positional ANALYZER index stores positions in analyzed
-    * space ([[graft.fts.Index.buildPositionalWithAnalyzer]]), so the
+    * space ([[graft.fts.Index.build]]), so the
     * phrase's analyzed token sequence is exactly what adjacency means
     * there — stemmed phrase search. */
   private def entryPhraseTerms(entry: IndexCatalog.Entry,

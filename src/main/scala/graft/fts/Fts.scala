@@ -238,7 +238,7 @@ object AnalyzerConfig {
   * to a handful of files (partition-pruning pathway, SURVEY.md §4.2).
   *
   * CONTRACT: `postings` holds at most one row per (term, doc_id). Every
-  * producer guarantees it — each `Index.build*` variant aggregates per
+  * producer guarantees it — each `Index.build*` builder aggregates per
   * (term, doc_id), [[Index.write]]/[[Index.read]] and the df-capped
   * layout only filter or project those rows, and
   * [[IncrementalIndex.readAsOf]] re-aggregates the merged
@@ -258,12 +258,19 @@ object AnalyzerConfig {
   * how the layout was written. None means no recorded count: an in-memory
   * or merge-on-read index, or a layout written before the count was
   * recorded. Its slices are then correct but unpruned.
+  *
+  * `analyzer` is the analysis pipeline the postings' terms went through
+  * ([[Index.build]]; the default is the frozen v1 grammar). [[Index.write]]
+  * records it with the layout and [[Index.read]] carries it back, so the
+  * layout alone says how to normalize its queries. Whether the index is
+  * positional is no field: it is the `positions` column of the postings.
   */
 final case class FtsIndex(
     postings: DataFrame, // term, doc_id, tf
     docLens: DataFrame,  // doc_id, dl
     stats: DataFrame,    // n_docs, avgdl  (single row)
-    buckets: Option[Int] = None)
+    buckets: Option[Int] = None,
+    analyzer: AnalyzerConfig = AnalyzerConfig())
 
 /** An index's corpus statistics as plain values: the one `stats` row that
   * [[Search.scoreAllBm25]] otherwise broadcast-joins in. `avgdl` is NaN
@@ -282,42 +289,59 @@ object Index {
   /** Build postings + per-doc lengths + corpus stats from a document table.
     * One pass to tokens (explode = reference GenerateExec pattern,
     * sql/core/.../execution/GenerateExec.scala:50), then two cheap aggs;
-    * token stream is cached only for the duration of the build. */
-  def build(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): FtsIndex = {
-    val toks = docs.select(col(idCol).as("doc_id"),
-      explode(Analyzer.tokenize(col(textCol))).as("term"))
-    val postings = toks.groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-    // doc length = Σ tf over the doc's postings — deriving it from postings
-    // (instead of a second aggregation over toks) means the token stream is
-    // scanned once per postings consumer, not once more per docLens/stats
-    // consumer (each re-derivation re-runs scan+tokenize+explode).
-    val docLens = postings.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val stats = docLens.agg(
-      count(lit(1)).as("n_docs"),
-      avg(col("dl")).as("avgdl"))
-    FtsIndex(postings, docLens, stats)
+    * token stream is cached only for the duration of the build.
+    *
+    * `analyzer` is the analysis pipeline ([[Analyzer.tokenizeWith]]; the
+    * default applies no stage past the frozen v1 grammar). The index carries
+    * it ([[FtsIndex.analyzer]]), [[write]] records it with the layout, and
+    * query terms must pass [[AnalyzerConfig.normalizeTerms]]: an index is
+    * only answerable under the analyzer that built it.
+    *
+    * `positional` adds per-doc position lists (0-based token offsets,
+    * sorted): `term, doc_id, tf, positions`. They enable phrase /
+    * adjacency / NEAR queries purely on the index — candidate docs never
+    * re-read text (SURVEY.md §7 risk 4's optional position lists). Position
+    * capture uses the posexplode generator (reference generators.scala:250).
+    * Positions are offsets in the ANALYZED token stream (after
+    * stopword/stem/min-length), so adjacency means "adjacent surviving
+    * tokens": a phrase query whose own tokens went through the same
+    * pipeline ([[AnalyzerConfig.tokenizeQuery]], order and repetition
+    * preserved) matches exactly the docs where its analyzed tokens appear
+    * consecutively — stemmed phrase search (a stopworded term can never
+    * match — it has no postings). */
+  def build(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
+            analyzer: AnalyzerConfig = AnalyzerConfig(),
+            positional: Boolean = false): FtsIndex = {
+    val toks = Analyzer.tokenizeWith(col(textCol), analyzer)
+    val postings =
+      if (positional)
+        docs.select(col(idCol).as("doc_id"), posexplode(toks))
+          .withColumnRenamed("col", "term")
+          .groupBy("term", "doc_id")
+          .agg(count(lit(1)).as("tf"),
+            sort_array(collect_list(col("pos"))).as("positions"))
+      else
+        docs.select(col(idCol).as("doc_id"), explode(toks).as("term"))
+          .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
+    fromPostings(postings, analyzer)
   }
 
-  /** Postings with per-doc position lists (0-based token offsets, sorted):
-    * `term, doc_id, tf, positions`. Enables phrase / adjacency / NEAR
-    * queries purely on the index — candidate docs never re-read text
-    * (SURVEY.md §7 risk 4's optional position lists). Position capture uses
-    * the posexplode generator (reference generators.scala:250); everything
-    * downstream of [[build]] accepts the extra column untouched. */
-  def buildPositional(docs: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text"): FtsIndex = {
-    val toks = docs.select(col(idCol).as("doc_id"),
-      posexplode(Analyzer.tokenize(col(textCol))))
-      .withColumnRenamed("col", "term")
-    val postings = toks.groupBy("term", "doc_id")
-      .agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions"))
-    val docLens = postings.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val stats = docLens.agg(
-      count(lit(1)).as("n_docs"),
-      avg(col("dl")).as("avgdl"))
-    FtsIndex(postings, docLens, stats)
+  /** An index over `postings`. The doc length is Σ tf over the doc's
+    * postings unless `docLens` is given. Deriving it from postings
+    * (instead of a second aggregation over the token stream) means the
+    * token stream is scanned once per postings consumer, not once more per
+    * docLens/stats consumer (each re-derivation re-runs
+    * scan+tokenize+explode). */
+  private[fts] def fromPostings(postings: DataFrame,
+                                analyzer: AnalyzerConfig = AnalyzerConfig(),
+                                docLens: Option[DataFrame] = None): FtsIndex = {
+    val dl = docLens.getOrElse(postings.groupBy("doc_id").agg(sum(col("tf")).as("dl")))
+    FtsIndex(postings, dl, statsOf(dl), analyzer = analyzer)
   }
+
+  /** The one-row corpus stats `(n_docs, avgdl)` of a doc-length table. */
+  private def statsOf(docLens: DataFrame): DataFrame =
+    docLens.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
 
   /** CHARACTER-TRIGRAM index (the pg_trgm / Google Code Search / Zoekt
     * class): postings keyed by the distinct 3-char substrings of the
@@ -336,33 +360,7 @@ object Index {
         graft.ext.CharTrigramsExpr(
           org.apache.spark.sql.GraftColumnBridge.expression(col(textCol)))))
         .as("term"))
-    val postings = toks.groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-    val docLens = postings.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val stats = docLens.agg(
-      count(lit(1)).as("n_docs"),
-      avg(col("dl")).as("avgdl"))
-    FtsIndex(postings, docLens, stats)
-  }
-
-  /** Build through a CONFIGURED analyzer ([[AnalyzerConfig]]): same shape as
-    * [[build]], tokens through [[Analyzer.tokenizeWith]]. The config must be
-    * persisted with the index ([[writeAnalyzerConfig]]) and query terms must
-    * pass [[AnalyzerConfig.normalizeTerms]] — an index is only answerable
-    * under the analyzer that built it. NOTE: custom-analyzer indexes are a
-    * LIBRARY surface; the SQL `fts_match` rewrite assumes the frozen v1
-    * grammar and must not be registered against one ([[createIndex]] only
-    * ever builds v1). */
-  def buildWithAnalyzer(docs: DataFrame, cfg: AnalyzerConfig,
-                        idCol: String = "doc_id",
-                        textCol: String = "text"): FtsIndex = {
-    val toks = docs.select(col(idCol).as("doc_id"),
-      explode(Analyzer.tokenizeWith(col(textCol), cfg)).as("term"))
-    val postings = toks.groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-    val docLens = postings.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val stats = docLens.agg(
-      count(lit(1)).as("n_docs"),
-      avg(col("dl")).as("avgdl"))
-    FtsIndex(postings, docLens, stats)
+    fromPostings(toks.groupBy("term", "doc_id").agg(count(lit(1)).as("tf")))
   }
 
   /** BM25F weighted-field index (Robertson/Zaragoza's "Simple BM25
@@ -385,59 +383,46 @@ object Index {
         .groupBy("term", "doc_id")
         .agg((count(lit(1)).cast("double") * w).as("tf"))
     }.reduce(_ unionByName _)
-    val postings = weighted.groupBy("term", "doc_id").agg(sum(col("tf")).as("tf"))
-    val docLens = postings.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val stats = docLens.agg(
-      count(lit(1)).as("n_docs"),
-      avg(col("dl")).as("avgdl"))
-    FtsIndex(postings, docLens, stats)
+    fromPostings(weighted.groupBy("term", "doc_id").agg(sum(col("tf")).as("tf")))
   }
 
-  /** [[buildPositional]] through a CONFIGURED analyzer: positions are
-    * offsets in the ANALYZED token stream (after stopword/stem/min-length),
-    * so adjacency means "adjacent surviving tokens" — a phrase query whose
-    * own tokens went through the same pipeline ([[AnalyzerConfig
-    * .tokenizeQuery]], order and repetition preserved) matches exactly the
-    * docs where its analyzed tokens appear consecutively. This is the
-    * contract that makes STEMMED phrase search work: index and query agree
-    * because both are positions/sequences in analyzed space (a
-    * stopworded term can never match — it has no postings). */
-  def buildPositionalWithAnalyzer(docs: DataFrame, cfg: AnalyzerConfig,
-                                  idCol: String = "doc_id",
-                                  textCol: String = "text"): FtsIndex = {
-    val toks = docs.select(col(idCol).as("doc_id"),
-      posexplode(Analyzer.tokenizeWith(col(textCol), cfg)))
-      .withColumnRenamed("col", "term")
-    val postings = toks.groupBy("term", "doc_id")
-      .agg(count(lit(1)).as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions"))
-    val docLens = postings.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val stats = docLens.agg(
-      count(lit(1)).as("n_docs"),
-      avg(col("dl")).as("avgdl"))
-    FtsIndex(postings, docLens, stats)
-  }
+  /** The file beside a layout (or a delta log) that records its analyzer
+    * ([[AnalyzerConfig.describe]]); absent for the frozen v1 grammar. */
+  private val AnalyzerFile = "_graft_analyzer.properties"
 
-  /** Persist the analyzer configuration next to the index — a fresh session
-    * reads it back ([[readAnalyzerConfig]]) and normalizes queries with the
-    * exact build-time pipeline. */
+  /** Record `cfg` as the analyzer of the layout (or delta log) at `dir`, so
+    * a fresh session reads it back ([[readAnalyzerConfig]]) and normalizes
+    * queries with the exact build-time pipeline. The v1 grammar is recorded
+    * by the file's absence: writing it deletes a record an earlier build
+    * left in `dir`. */
   def writeAnalyzerConfig(spark: org.apache.spark.sql.SparkSession,
                           dir: String, cfg: AnalyzerConfig): Unit = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_graft_analyzer.properties")
+    val p = new org.apache.hadoop.fs.Path(dir, AnalyzerFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write((cfg.describe + "\n").getBytes("UTF-8"))
-    finally out.close()
+    if (cfg.isV1) fs.delete(p, false)
+    else {
+      val out = fs.create(p, true)
+      try out.write((cfg.describe + "\n").getBytes("UTF-8"))
+      finally out.close()
+    }
   }
 
+  /** The analyzer recorded at `dir`: v1 when it records none. */
   def readAnalyzerConfig(spark: org.apache.spark.sql.SparkSession,
+                         dir: String): AnalyzerConfig =
+    analyzerAt(spark.sparkContext.hadoopConfiguration, dir)
+
+  private def analyzerAt(conf: org.apache.hadoop.conf.Configuration,
                          dir: String): AnalyzerConfig = {
-    val p = new org.apache.hadoop.fs.Path(dir, "_graft_analyzer.properties")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    try AnalyzerConfig.parse(
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines().next().trim)
-    finally in.close()
+    val p = new org.apache.hadoop.fs.Path(dir, AnalyzerFile)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) AnalyzerConfig()
+    else {
+      val in = fs.open(p)
+      try AnalyzerConfig.parse(
+        scala.io.Source.fromInputStream(in, "UTF-8").getLines().next().trim)
+      finally in.close()
+    }
   }
 
   /** Build with a document-frequency cap — the skew guard for stopword-like
@@ -466,12 +451,7 @@ object Index {
     val df = full.postings.groupBy("term")
       .agg(countDistinct(col("doc_id")).as("df"))
     val stop = df.filter(col("df") > cap).select("term")
-    val postings = full.postings.join(broadcast(stop), Seq("term"), "left_anti")
-    val docLens = postings.groupBy("doc_id").agg(sum(col("tf")).as("dl"))
-    val stats = docLens.agg(
-      count(lit(1)).as("n_docs"),
-      avg(col("dl")).as("avgdl"))
-    (FtsIndex(postings, docLens, stats), stop)
+    (fromPostings(full.postings.join(broadcast(stop), Seq("term"), "left_anti")), stop)
   }
 
   /** Persist a capped index: the bucketed layout PLUS its stop-term table —
@@ -502,10 +482,12 @@ object Index {
     * by construction.
     *
     * The layout is `postings/bucket=N/` (data columns `term`, `doc_id`,
-    * `tf`, `dl`, plus `positions` when positional), `doclens/` and the
-    * one-row `stats/`. The bucket count is recorded in the postings files'
-    * Spark schema, as metadata on `term` ([[read]] returns it as
-    * [[FtsIndex.buckets]]). Readers recognize the postings by that schema,
+    * `tf`, `dl`, plus `positions` when positional), `doclens/`, the
+    * one-row `stats/`, and the analyzer record ([[writeAnalyzerConfig]];
+    * writing a v1 index deletes a record an earlier build left there).
+    * The bucket count is recorded in the postings files' Spark schema, as
+    * metadata on `term` ([[read]] returns it as [[FtsIndex.buckets]], and
+    * the analyzer as [[FtsIndex.analyzer]]). Readers recognize the postings by that schema,
     * not by the directory name: [[graft.ext.SingleTaskPostings]] runs a
     * scan of it whose pruned buckets are small as one task, and SQL
     * scoring reads `stats` once per handle ([[IndexCatalog.cachedStats]]). */
@@ -536,9 +518,9 @@ object Index {
     readParquet(spark, s"$dir/postings")
       .groupBy("doc_id").agg(first(col("dl")).as("dl"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/doclens")
-    readParquet(spark, s"$dir/doclens")
-      .agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
+    statsOf(readParquet(spark, s"$dir/doclens"))
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/stats")
+    writeAnalyzerConfig(spark, dir, ix.analyzer)
   }
 
   /** INDEX-SORTED layout (Lucene index sorting — IndexWriterConfig
@@ -572,14 +554,14 @@ object Index {
     * Re-running overwrites the index (idempotent refresh).
     *
     * A non-default `analyzer` builds the index through the configured
-    * pipeline ([[buildWithAnalyzer]]) and persists the config with the
-    * index; the SQL rewrite then normalizes `fts_match`/`fts_match_any`/
+    * pipeline ([[build]]) and the layout records it ([[write]]); the
+    * registration reads it back and the SQL rewrite then normalizes `fts_match`/`fts_match_any`/
     * `fts_score` query strings through the SAME pipeline — stemmed,
     * stopworded, or CJK search on the SQL surface. The analyzer is part of
     * the index's semantics: term-dictionary predicates (prefix, range,
     * wildcard, regexp, fuzzy — their shapes predate the analyzer stages)
     * keep their frozen-v1 scan semantics and are not index-lowered. A
-    * POSITIONAL analyzer index ([[buildPositionalWithAnalyzer]]) serves
+    * POSITIONAL analyzer index (`positional = true`) serves
     * phrase/near in analyzed space — stemmed phrase search — since index
     * positions and query tokens go through the same pipeline. Over a v1
     * index, every term-dictionary predicate (a leading-star wildcard
@@ -587,10 +569,11 @@ object Index {
     * ([[IndexCatalog.cachedVocabulary]]) and reads only the matching
     * terms' buckets: no extra layout is written for them.
     *
-    * `buckets` is the write-side bucket count. The postings record it
-    * ([[write]]), so no reader is told it again. A layout that records no
-    * count, or another count, is rebuilt, not reused
-    * ([[IndexCatalog.metaMatches]]). */
+    * `buckets`, `positional` and `analyzer` are build choices the layout
+    * records ([[write]]): the registration reads them from it
+    * ([[IndexCatalog.register]]), so no reader is told them again. A
+    * layout that records other choices, or no bucket count, is rebuilt,
+    * not reused ([[IndexCatalog.metaMatches]]). */
   def createIndex(spark: org.apache.spark.sql.SparkSession, tablePath: String,
                   indexDir: String, idCol: String = "doc_id",
                   textCol: String = "text", buckets: Int = 64,
@@ -612,32 +595,28 @@ object Index {
     // rebuild that dies mid-write must not leave the old meta blessing
     // half-overwritten postings as fresh
     IndexCatalog.deleteMeta(spark, indexDir)
-    val docs = spark.read.parquet(tablePath)
-    val ix = if (!analyzer.isV1 && positional)
-               buildPositionalWithAnalyzer(docs, analyzer, idCol, textCol)
-             else if (!analyzer.isV1) buildWithAnalyzer(docs, analyzer, idCol, textCol)
-             else if (positional) buildPositional(docs, idCol, textCol)
-             else build(docs, idCol, textCol)
-    write(ix, indexDir, buckets)
-    if (!analyzer.isV1) writeAnalyzerConfig(spark, indexDir, analyzer)
-    IndexCatalog.register(tablePath, indexDir, idCol, textCol, positional, analyzer)
+    write(build(spark.read.parquet(tablePath), idCol, textCol, analyzer, positional),
+      indexDir, buckets)
+    IndexCatalog.register(tablePath, indexDir, idCol, textCol)
     // metadata travels with the index: a fresh session can
     // IndexCatalog.restore(spark, indexDir) instead of rebuilding
-    IndexCatalog.writeMeta(spark, tablePath, indexDir, idCol, textCol, buckets,
-      positional, analyzer)
+    IndexCatalog.writeMeta(spark, tablePath, indexDir, idCol, textCol)
   }
 
   /** Open a layout [[write]] wrote, with the bucket count its postings
     * record ([[FtsIndex.buckets]]; None for a layout written before the
-    * count was recorded). The count comes from the same footer read that
-    * supplies the postings schema, so the read runs no Spark job. */
+    * count was recorded) and its recorded analyzer ([[FtsIndex.analyzer]]).
+    * The count comes from the same footer read that supplies the postings
+    * schema, so the read runs no Spark job. */
   def read(spark: org.apache.spark.sql.SparkSession, dir: String): FtsIndex = {
-    val schema = footerSchema(spark, s"$dir/postings")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val schema = footerSchema(conf, s"$dir/postings")
     FtsIndex(
       readWithSchema(spark, s"$dir/postings", schema),
       readParquet(spark, s"$dir/doclens"),
       readParquet(spark, s"$dir/stats"),
-      schema.flatMap(bucketsIn))
+      schema.flatMap(bucketsIn),
+      analyzerAt(conf, dir))
   }
 
   /** The postings' partition column: a term's hash bucket. */
@@ -650,11 +629,19 @@ object Index {
     postings.find(_.name == "term").map(_.metadata).filter(_.contains(BucketsKey))
       .map(_.getLong(BucketsKey).toInt)
 
-  /** The bucket count recorded by the postings of the layout at `dir`, from
-    * one footer read; None when the layout records none. */
-  private[fts] def recordedBuckets(spark: org.apache.spark.sql.SparkSession,
-                                   dir: String): Option[Int] =
-    footerSchema(spark, s"$dir/postings").flatMap(bucketsIn)
+  /** How the layout at `dir` says it was built: the bucket count its
+    * postings record (None when they record none), whether they carry
+    * `positions`, and its recorded analyzer. One footer read and one
+    * analyzer-record read, no Spark job. */
+  private[fts] final case class Built(buckets: Option[Int], positional: Boolean,
+                                      analyzer: AnalyzerConfig)
+
+  private[fts] def built(conf: org.apache.hadoop.conf.Configuration,
+                         dir: String): Built = {
+    val schema = footerSchema(conf, s"$dir/postings")
+    Built(schema.flatMap(bucketsIn), schema.exists(_.fieldNames.contains("positions")),
+      analyzerAt(conf, dir))
+  }
 
   /** Whether a file relation with these schemas is a postings layout
     * [[write]] wrote: partitioned by the bucket alone, with `term` and
@@ -672,10 +659,9 @@ object Index {
     * depth-first listing (partition dirs included). None when the
     * directory has no data file or the footer carries no Spark schema
     * (a foreign writer). */
-  private[fts] def footerSchema(spark: org.apache.spark.sql.SparkSession,
+  private[fts] def footerSchema(conf: org.apache.hadoop.conf.Configuration,
                                  dir: String): Option[org.apache.spark.sql.types.StructType] = {
     import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
     def visible(p: Path) = !p.getName.startsWith("_") && !p.getName.startsWith(".")
@@ -706,7 +692,8 @@ object Index {
     * when no Spark footer schema is found. */
   private[fts] def readParquet(spark: org.apache.spark.sql.SparkSession, dir: String,
                                 partitionCols: org.apache.spark.sql.types.StructField*): DataFrame =
-    readWithSchema(spark, dir, footerSchema(spark, dir), partitionCols: _*)
+    readWithSchema(spark, dir, footerSchema(spark.sparkContext.hadoopConfiguration, dir),
+      partitionCols: _*)
 
   /** [[readParquet]] given the directory's footer schema. */
   private def readWithSchema(spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -1230,7 +1217,7 @@ object Search {
     candidates.filter(canonical.contains(" " + phrase.mkString(" ") + " "))
   }
 
-  /** Exact phrase match over POSITIONAL postings ([[Index.buildPositional]])
+  /** Exact phrase match over POSITIONAL postings ([[Index.build]])
     * alone: left-fold adjacency intersection over the phrase terms' position
     * lists — acc starts as term₀'s positions and each step keeps the
     * positions p of termᵢ with p−1 in acc, so acc ends as the end-offsets of
@@ -1308,7 +1295,7 @@ object Search {
   }
 
   /** Proximity (NEAR/slop) match over POSITIONAL postings
-    * ([[Index.buildPositional]]): doc_ids where `a` and `b` occur within
+    * ([[Index.build]]): doc_ids where `a` and `b` occur within
     * `slop` token positions of each other, in either order — the
     * generalization of phrase matching that position lists exist for
     * (SURVEY §7 risk 4). The postings filter prunes to the two terms (and
@@ -2127,7 +2114,7 @@ object Search {
     * the first `n` token positions. Pure positional-postings work — one
     * term's list, an `exists` over its positions array; the corpus text
     * is never re-tokenized. Positions are 0-based ([[Index
-    * .buildPositional]] posexplode). */
+    * .build]] posexplode). */
   def matchSpanFirst(ix: FtsIndex, term: String, n: Int): DataFrame = {
     require(n >= 1, "n must be positive")
     Index.slice(ix, Seq(term))

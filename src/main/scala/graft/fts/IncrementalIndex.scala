@@ -126,17 +126,16 @@ object IncrementalIndex {
     if (partitionIds(spark, dir, colName).isEmpty) None
     else Some(Index.readParquet(spark, dir, StructField(colName, LongType)))
 
-  /** Start a foreachBatch sink that appends per-batch postings deltas.
-    * `positional = true` captures per-doc position lists in the deltas
-    * ([[Index.buildPositional]]) — downstream readers/compaction detect the
-    * positions column automatically, and a compacted positional index
-    * serves SQL `fts_near`/`fts_phrase` from position lists alone.
-    * A non-default `analyzer` runs every batch through the configured
-    * pipeline ([[Index.buildWithAnalyzer]]) and persists the config in the
-    * delta dir — [[upsert]] replays it for replacements and
-    * [[compactAndRegister]] registers the compacted index under it, so a
-    * STREAMED corpus serves stemmed/stopworded/CJK SQL search end to end.
-    * Analyzer ingests are tf-only (same contract as [[Index.createIndex]]). */
+  /** Start a foreachBatch sink that appends per-batch postings deltas,
+    * each batch built by [[Index.build]] with `analyzer` and `positional`.
+    * `positional = true` captures per-doc position lists in the deltas —
+    * downstream readers/compaction detect the positions column
+    * automatically, and a compacted positional index serves SQL
+    * `fts_near`/`fts_phrase` from position lists alone. A non-default
+    * `analyzer` runs every batch through the configured pipeline and is
+    * recorded in the delta dir — [[upsert]] replays it for replacements and
+    * [[read]] carries it, so the compacted layout records it too and a
+    * STREAMED corpus serves stemmed/stopworded/CJK SQL search end to end. */
   def start(docsStream: DataFrame, dir: String,
             idCol: String = "doc_id", textCol: String = "text",
             positional: Boolean = false,
@@ -174,22 +173,10 @@ object IncrementalIndex {
         // so a second Index.build would re-run scan→tokenize→explode→groupBy
         // for a frame the first call already produced (2× tokenize on the
         // ingest path)
-        val ix = if (!analyzer.isV1 && positional)
-                   Index.buildPositionalWithAnalyzer(batch, analyzer, idCol, textCol)
-                 else if (!analyzer.isV1)
-                   Index.buildWithAnalyzer(batch, analyzer, idCol, textCol)
-                 else if (positional) Index.buildPositional(batch, idCol, textCol)
-                 else Index.build(batch, idCol, textCol)
-        writeDeltaBatch(ix, dir, batchId)
+        writeDeltaBatch(Index.build(batch, idCol, textCol, analyzer, positional),
+          dir, batchId)
       }
       .start()
-  }
-
-  /** The delta log's persisted analyzer config (v1 when none recorded). */
-  private def logAnalyzer(spark: SparkSession, dir: String): AnalyzerConfig = {
-    val p = new Path(dir, "_graft_analyzer.properties")
-    if (fsOf(spark, p).exists(p)) Index.readAnalyzerConfig(spark, dir)
-    else AnalyzerConfig()
   }
 
   /** Write one batch's postings + doclens as `batch_id=N` partitions.
@@ -263,20 +250,15 @@ object IncrementalIndex {
       writeTombstones(spark, dir, docs.select(col(idCol)), idCol, asOf))
     // positional? — from the live deltas' footer schema, else the
     // compacted base's (a driver-side footer read, no Spark job)
+    val conf = spark.sparkContext.hadoopConfiguration
     val positional =
-      Index.footerSchema(spark, s"$dir/postings_delta")
+      Index.footerSchema(conf, s"$dir/postings_delta")
         .orElse(compactionInfo(spark, dir).flatMap { case (base, _) =>
-          Index.footerSchema(spark, s"$base/postings") })
+          Index.footerSchema(conf, s"$base/postings") })
         .exists(_.fieldNames.contains("positions"))
     // replacements MUST go through the same pipeline the log was built with
-    val analyzer = logAnalyzer(spark, dir)
-    val ix = if (!analyzer.isV1 && positional)
-               Index.buildPositionalWithAnalyzer(docs, analyzer, idCol, textCol)
-             else if (!analyzer.isV1)
-               Index.buildWithAnalyzer(docs, analyzer, idCol, textCol)
-             else if (positional) Index.buildPositional(docs, idCol, textCol)
-             else Index.build(docs, idCol, textCol)
-    writeDeltaBatch(ix, dir, nextBatch)
+    writeDeltaBatch(Index.build(docs, idCol, textCol,
+      Index.readAnalyzerConfig(spark, dir), positional), dir, nextBatch)
     val marker = new Path(s"$dir/postings_delta/batch_id=$nextBatch/$UpsertMarker")
     fsOf(spark, marker).create(marker, true).close()
   }
@@ -289,8 +271,10 @@ object IncrementalIndex {
     * exactly one surviving batch (append-only ingest + upsert's
     * tombstone-then-append). A positions column (positional ingest) is
     * detected from the schema and carried through; corpus stats re-derive
-    * from the surviving doc lengths. Tombstones at or below the watermark
-    * were folded by compaction and truncated with their partitions. */
+    * from the surviving doc lengths. The view carries the analyzer the log
+    * records, so a layout [[compact]] writes from it records it too.
+    * Tombstones at or below the watermark were folded by compaction and
+    * truncated with their partitions. */
   def read(spark: SparkSession, dir: String): FtsIndex =
     readAsOf(spark, dir, Long.MaxValue)
 
@@ -357,9 +341,8 @@ object IncrementalIndex {
         rawP.groupBy("term", "doc_id").agg(sum(col("tf")).as("tf"),
           sort_array(flatten(collect_list(col("positions")))).as("positions"))
       else rawP.groupBy("term", "doc_id").agg(sum(col("tf")).as("tf"))
-    val docLens = rawL.groupBy("doc_id").agg(sum(col("dl")).as("dl"))
-    val stats = docLens.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
-    FtsIndex(postings, docLens, stats)
+    Index.fromPostings(postings, Index.readAnalyzerConfig(spark, dir),
+      Some(rawL.groupBy("doc_id").agg(sum(col("dl")).as("dl"))))
   }
 
   /** Fold the current merge-on-read view into the canonical bucketed layout
@@ -407,23 +390,17 @@ object IncrementalIndex {
     * performs: register the compacted index for `tablePath` (the table the
     * stream ingested) and persist the association metadata — so SQL
     * `fts_match`/`fts_score`/… over that table serves through the compacted
-    * bucketed postings without a manual registration step. A POSITIONAL
-    * ingest ([[start]] with positional=true) is detected from the compacted
-    * layout itself, so `fts_near`/`fts_phrase` lower to pure position-list
-    * plans over the compacted index. */
+    * bucketed postings without a manual registration step. The
+    * registration reads positions and analyzer from the compacted layout
+    * ([[IndexCatalog.register]]): a POSITIONAL ingest ([[start]] with
+    * positional=true) lowers `fts_near`/`fts_phrase` to pure position-list
+    * plans, and an analyzer ingest normalizes SQL queries through its
+    * pipeline. */
   def compactAndRegister(spark: SparkSession, dir: String, outDir: String,
                          tablePath: String, idCol: String = "doc_id",
                          textCol: String = "text", buckets: Int = 64): Unit = {
     compact(spark, dir, outDir, buckets)
-    val positional = Index.footerSchema(spark, s"$outDir/postings")
-      .exists(_.fieldNames.contains("positions"))
-    // an analyzer-configured ingest's compacted index registers (and
-    // persists) under the SAME pipeline, so SQL queries normalize through it
-    val analyzer = logAnalyzer(spark, dir)
-    if (!analyzer.isV1) Index.writeAnalyzerConfig(spark, outDir, analyzer)
-    IndexCatalog.register(tablePath, outDir, idCol, textCol, positional,
-      analyzer = analyzer)
-    IndexCatalog.writeMeta(spark, tablePath, outDir, idCol, textCol, buckets,
-      positional, analyzer = analyzer)
+    IndexCatalog.register(tablePath, outDir, idCol, textCol)
+    IndexCatalog.writeMeta(spark, tablePath, outDir, idCol, textCol)
   }
 }

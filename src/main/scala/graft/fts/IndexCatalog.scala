@@ -23,17 +23,18 @@ object IndexCatalog {
     * handle [[Index.read]] opens carries it. The rewrite only fires for
     * `fts_match` over `textCol` — the index carries that column's tokens
     * and no other's.
-    * `positional` records whether the postings carry per-doc position lists
-    * ([[Index.buildPositional]]) — the rewrite lowers `fts_phrase`/`fts_near`
+    * `positional` says whether the postings carry per-doc position lists
+    * (their `positions` column) — the rewrite lowers `fts_phrase`/`fts_near`
     * to pure index plans only when they do.
     * `fingerprint` is the indexed table's file listing at registration time
     * ([[tableFingerprint]]); [[get]] re-checks it so a table rewritten after
     * indexing falls back to the scan lowering instead of silently
     * semi-joining stale postings.
-    * `analyzer` is the configured analysis pipeline the index was built
-    * with (empty = frozen v1 grammar): the rewrite normalizes query terms
-    * through it, and predicates it cannot answer fall back to scan
-    * semantics. */
+    * `analyzer` is the analysis pipeline the layout records (v1 = frozen
+    * grammar): the rewrite normalizes query terms through it, and
+    * predicates it cannot answer fall back to scan semantics.
+    * [[register]] and [[restore]] read `positional` and `analyzer` from the
+    * layout ([[Index.built]]); no caller states them. */
   final case class Entry(indexDir: String, idCol: String, textCol: String,
                          positional: Boolean, fingerprint: Long,
                          analyzer: AnalyzerConfig = AnalyzerConfig())
@@ -86,8 +87,8 @@ object IndexCatalog {
                   entry: Entry): FtsIndex = {
     val base = index(spark, entry)
     import org.apache.spark.sql.GraftColumnBridge.freshCopy
-    FtsIndex(freshCopy(base.postings), freshCopy(base.docLens),
-      freshCopy(base.stats), base.buckets)
+    base.copy(postings = freshCopy(base.postings),
+      docLens = freshCopy(base.docLens), stats = freshCopy(base.stats))
   }
 
   /** The entry's corpus statistics `(n_docs, avgdl)`, read once per index
@@ -126,14 +127,7 @@ object IndexCatalog {
     * as Spark's own file-index listing. */
   def tableFingerprint(tablePath: String): Long = {
     val path = new org.apache.hadoop.fs.Path(tablePath)
-    // the SESSION's hadoop conf, not a bare new Configuration(): filesystem
-    // credentials/settings supplied via spark.hadoop.* (object stores)
-    // would otherwise make the listing throw — and get()'s staleness guard
-    // would silently deregister the index on that throw
-    val conf = org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sparkContext.hadoopConfiguration)
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-    val fs = path.getFileSystem(conf)
+    val fs = path.getFileSystem(hadoopConf)
     var acc = 0L
     def walk(p: org.apache.hadoop.fs.Path): Unit =
       fs.listStatus(p).foreach { f =>
@@ -148,6 +142,16 @@ object IndexCatalog {
     acc
   }
 
+  /** The active session's hadoop conf, not a bare new Configuration():
+    * filesystem credentials/settings supplied via spark.hadoop.* (object
+    * stores) would otherwise make a listing or footer read throw — and
+    * get()'s staleness guard would silently deregister the index on that
+    * throw. */
+  private def hadoopConf: org.apache.hadoop.conf.Configuration =
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse(new org.apache.hadoop.conf.Configuration())
+
   /** Scheme-qualified canonical key: `file:///x` and `/x` agree (local paths
     * default to the file scheme), but distinct filesystems/buckets —
     * `s3a://bucketA/corpus` vs `s3a://bucketB/corpus` vs `hdfs://nn/corpus`
@@ -160,16 +164,23 @@ object IndexCatalog {
     s"$scheme://$authority${uri.getPath}"
   }
 
+  /** Associate the layout at `indexDir` with `textCol` of the table at
+    * `tablePath`, fingerprinting the table now. Whether the postings are
+    * positional and which analyzer built them come from the layout itself
+    * ([[Index.built]]: one footer read and the analyzer record). */
   def register(tablePath: String, indexDir: String,
-               idCol: String = "doc_id", textCol: String = "text",
-               positional: Boolean = false,
-               analyzer: AnalyzerConfig = AnalyzerConfig()): Unit = {
+               idCol: String = "doc_id", textCol: String = "text"): Unit = {
     invalidate(indexDir) // a re-register means the index was rewritten
     // the index this one replaces (a new compaction epoch) serves no more
     Option(byPathCol.put((canon(tablePath), textCol.toLowerCase(java.util.Locale.ROOT)),
-      Entry(indexDir, idCol, textCol, positional,
-        tableFingerprint(tablePath), analyzer)))
+      entry(hadoopConf, indexDir, idCol, textCol, tableFingerprint(tablePath))))
       .foreach(old => invalidate(old.indexDir))
+  }
+
+  private def entry(conf: org.apache.hadoop.conf.Configuration, indexDir: String,
+                    idCol: String, textCol: String, fingerprint: Long): Entry = {
+    val b = Index.built(conf, indexDir)
+    Entry(indexDir, idCol, textCol, b.positional, fingerprint, b.analyzer)
   }
 
   /** Name of the metadata file [[Index.createIndex]] drops inside the index
@@ -180,18 +191,17 @@ object IndexCatalog {
     * sql/hive/.../HiveExternalCatalog.scala:214). */
   val MetaFile = "_graft_index.properties"
 
-  /** Persist the association alongside the index itself. */
+  /** Persist the association alongside the index itself: the table, its
+    * id and text columns, and the table's fingerprint. How the index was
+    * built is not repeated here: the layout records it ([[Index.built]]).
+    * Meta files that still carry `buckets`, `positional` or `analyzer`
+    * keys restore and are reused as before; the keys are ignored. */
   def writeMeta(spark: org.apache.spark.sql.SparkSession, tablePath: String,
-                indexDir: String, idCol: String, textCol: String,
-                buckets: Int, positional: Boolean = false,
-                analyzer: AnalyzerConfig = AnalyzerConfig()): Unit = {
+                indexDir: String, idCol: String, textCol: String): Unit = {
     val props = new java.util.Properties()
     props.setProperty("tablePath", canon(tablePath))
     props.setProperty("idCol", idCol)
     props.setProperty("textCol", textCol)
-    props.setProperty("buckets", buckets.toString)
-    props.setProperty("positional", positional.toString)
-    if (!analyzer.isV1) props.setProperty("analyzer", analyzer.describe)
     props.setProperty("fingerprint", tableFingerprint(tablePath).toString)
     val p = new org.apache.hadoop.fs.Path(indexDir, MetaFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -214,14 +224,15 @@ object IndexCatalog {
   /** Does a COMPLETE, CURRENT index with exactly these build parameters
     * already sit at `indexDir`? True iff the metadata file (written LAST
     * by [[Index.createIndex]], so its presence marks a complete layout)
-    * exists, every build parameter matches, the postings record `buckets`
-    * as their bucket count ([[Index.write]]; a layout written before the
-    * count was recorded is rebuilt once), and the stored build-time
-    * fingerprint equals the table's CURRENT file listing — i.e. rebuilding
-    * would byte-identically reproduce what is already there. Lets
-    * createIndex skip the rebuild (guide §1.2: don't recompute what you
-    * already have); any append/rewrite/param change fails the check and
-    * rebuilds as before. */
+    * exists and names this table and these columns, the layout records
+    * exactly the requested `buckets`, `positional` and `analyzer`
+    * ([[Index.built]]; a layout written before the bucket count was
+    * recorded is rebuilt once), and the stored build-time fingerprint
+    * equals the table's CURRENT file listing — i.e. rebuilding would
+    * byte-identically reproduce what is already there. Lets createIndex
+    * skip the rebuild (guide §1.2: don't recompute what you already
+    * have); any append/rewrite/param change fails the check and rebuilds
+    * as before. */
   def metaMatches(spark: org.apache.spark.sql.SparkSession, tablePath: String,
                   indexDir: String, idCol: String, textCol: String,
                   buckets: Int, positional: Boolean,
@@ -236,13 +247,10 @@ object IndexCatalog {
       props.getProperty("tablePath") == canon(tablePath) &&
         props.getProperty("idCol") == idCol &&
         props.getProperty("textCol") == textCol &&
-        props.getProperty("buckets") == buckets.toString &&
-        props.getProperty("positional", "false") == positional.toString &&
-        Option(props.getProperty("analyzer")) ==
-          (if (analyzer.isV1) None else Some(analyzer.describe)) &&
         Option(props.getProperty("fingerprint")).contains(
           tableFingerprint(tablePath).toString) &&
-        Index.recordedBuckets(spark, indexDir).contains(buckets)
+        Index.built(spark.sparkContext.hadoopConfiguration, indexDir) ==
+          Index.Built(Some(buckets), positional, analyzer)
     } catch { case _: Throwable => false } // unreadable meta = rebuild
   }
 
@@ -250,7 +258,8 @@ object IndexCatalog {
     * BUILD-TIME fingerprint is kept, so if the table changed since the
     * index was built, [[get]] still detects the staleness and the rewrite
     * falls back to the scan lowering (re-fingerprinting here would wrongly
-    * bless a stale index as fresh). */
+    * bless a stale index as fresh). Positions and analyzer come from the
+    * layout, as in [[register]]. */
   def restore(spark: org.apache.spark.sql.SparkSession, indexDir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(indexDir, MetaFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -260,12 +269,9 @@ object IndexCatalog {
     byPathCol.put(
       (props.getProperty("tablePath"),
         props.getProperty("textCol").toLowerCase(java.util.Locale.ROOT)),
-      Entry(indexDir, props.getProperty("idCol"), props.getProperty("textCol"),
-        // absent in pre-positional metadata files → false
-        props.getProperty("positional", "false").toBoolean,
-        props.getProperty("fingerprint").toLong,
-        Option(props.getProperty("analyzer"))
-          .map(AnalyzerConfig.parse).getOrElse(AnalyzerConfig())))
+      entry(spark.sparkContext.hadoopConfiguration, indexDir,
+        props.getProperty("idCol"), props.getProperty("textCol"),
+        props.getProperty("fingerprint").toLong))
   }
 
   /** ALL fresh entries for `tablePath` (one per indexed column, textCol

@@ -71,22 +71,9 @@ object Fts extends QueryPack {
     * concurrently in one JVM. */
   private def servedIndex(s: org.apache.spark.sql.SparkSession,
                           dir: String): graft.fts.FtsIndex =
-    Index.read(s, layoutOnce(s, dir, "fts_serving", "stats") { out =>
+    Index.read(s, graft.core.Scratch.layoutOnce(dir, "fts_serving", "stats") { out =>
       Index.write(Index.build(Tables(s, dir, "documents")), out)
     })
-
-  /** Build-once per (JVM, corpus dir) scratch layout — the [[servedIndex]]
-    * pattern generalized: `build(out)` runs only when `out/doneSubPath` is
-    * absent (`doneSubPath` must be the artifact `build` writes LAST, so its
-    * presence marks a complete layout), the layout key embeds the corpus
-    * dir's md5 so sf0.001/sf0.01/scale corpora never collide, and a drop
-    * thunk is registered so `Tables.invalidate(dir)` after an in-JVM corpus
-    * rewrite forces a rebuild. Synchronized: ScalaTest suites can drive
-    * queries concurrently in one JVM. Returns the layout dir. */
-  private def layoutOnce(s: org.apache.spark.sql.SparkSession, dir: String,
-                         name: String, doneSubPath: String)
-                        (build: String => Unit): String =
-    graft.core.Scratch.layoutOnce(dir, name, doneSubPath)(build)
 
   /** BM25(k1=1.2, b=0.75) over ('spark','query'), reimplemented from scratch
     * in DuckDB over an arbitrary source relation (so the tombstone query can
@@ -152,11 +139,11 @@ object Fts extends QueryPack {
                ORDER BY doc_id""")),
 
     // Phrase again, but POSITIONAL: adjacency intersection over position
-    // lists from Index.buildPositional — candidate text is never re-read.
+    // lists from Index.build(positional = true) — candidate text is never re-read.
     // Same rows as q_fts_phrase, same oracle.
     Q("q_fts_phrase_pos",
       (s, dir) => {
-        val ix = Index.buildPositional(Tables(s, dir, "documents"))
+        val ix = Index.build(Tables(s, dir, "documents"), positional = true)
         Search.matchPhrasePositional(ix, Seq("data", "query")).orderBy("doc_id")
       },
       Some(s"""WITH toks AS (SELECT doc_id, $DTOKS AS t FROM documents)
@@ -196,7 +183,7 @@ object Fts extends QueryPack {
     // cancel in the difference.
     Q("q_fts_near",
       (s, dir) => {
-        val ix = Index.buildPositional(Tables(s, dir, "documents"))
+        val ix = Index.build(Tables(s, dir, "documents"), positional = true)
         Search.matchNear(ix, "data", "query", slop = 3).orderBy("doc_id")
       },
       Some(s"""WITH toks AS (SELECT doc_id, $DTOKS AS t FROM documents),
@@ -218,7 +205,7 @@ object Fts extends QueryPack {
     // the same increasing-chain window over per-term position lists.
     Q("q_fts_phrase_slop",
       (s, dir) => {
-        val ix = Index.buildPositional(Tables(s, dir, "documents"))
+        val ix = Index.build(Tables(s, dir, "documents"), positional = true)
         Search.matchPhraseSloppy(ix, Seq("data", "query", "join"), slop = 3)
           .orderBy("doc_id")
       },
@@ -405,7 +392,7 @@ object Fts extends QueryPack {
       (s, dir) => {
         val cfg = graft.fts.AnalyzerConfig(
           stopWords = Seq("the"), sStem = true, minTokenLen = 2)
-        val ix = Index.buildWithAnalyzer(Tables(s, dir, "documents"), cfg)
+        val ix = Index.build(Tables(s, dir, "documents"), analyzer = cfg)
         Search.matchCompoundIds(ix, cfg,
           Seq("the", "querries~1", "lookup"),
           Map("lookups" -> Seq("scans"))).orderBy("doc_id")
@@ -563,7 +550,7 @@ object Fts extends QueryPack {
         val cfg = graft.fts.AnalyzerConfig(nfc = true)
         val docs2 = Tables(s, dir, "documents").select(col("doc_id"),
           concat(col("text"), lit(" cafe\u0301")).as("text"))
-        val ix = Index.buildWithAnalyzer(docs2, cfg)
+        val ix = Index.build(docs2, analyzer = cfg)
         val hit = Search.matchAllIds(ix, cfg.tokenizeQuery("cafe\u0301"))
           .agg(count(lit(1)).as("n_composed"))
         val miss = Search.matchAllIds(ix, Seq("cafe"))
@@ -595,7 +582,7 @@ object Fts extends QueryPack {
         val cfg = graft.fts.AnalyzerConfig(foldAccents = true)
         val docs2 = Tables(s, dir, "documents").select(col("doc_id"),
           concat(col("text"), lit(" café niño")).as("text"))
-        val ix = Index.buildWithAnalyzer(docs2, cfg)
+        val ix = Index.build(docs2, analyzer = cfg)
         val hit = Search.matchAllIds(ix,
             cfg.tokenizeQuery("CAFÉ niño"))
           .agg(count(lit(1)).as("n_folded"))
@@ -630,7 +617,7 @@ object Fts extends QueryPack {
       (s, dir) => {
         val docs = Tables(s, dir, "documents")
         val cfg = graft.fts.AnalyzerConfig(porter = true)
-        val ix = Index.buildWithAnalyzer(docs, cfg)
+        val ix = Index.build(docs, analyzer = cfg)
         Search.matchAllIds(ix, cfg.tokenizeQuery("Merged tables query"))
           .orderBy("doc_id")
       },
@@ -980,7 +967,7 @@ object Fts extends QueryPack {
           concat(col("text"), lit(" "),
             expr("repeat('the ', CAST(doc_id % 80 AS INT))")).as("text"))
         val terms = Seq("the", "data", "dup")
-        val ix = Index.buildPositional(docs2)
+        val ix = Index.build(docs2, positional = true)
         val qp = ix.postings.filter(col("term").isin(terms: _*))
           .repartition(16)
         // collection statistics served from a PERSISTED dictionary: at
@@ -990,25 +977,14 @@ object Fts extends QueryPack {
         // stats side that aggregates AFTER its own shuffle can never be
         // skew-split; the persisted read plans scan → exchange → sort,
         // which can
-        // keyed by corpus-dir md5 + built once under the servedIndex
-        // synchronization: suites drive queries concurrently in one JVM,
-        // and a fixed shared path could be overwritten by a sibling
-        // invocation over another corpus between this eager write and
-        // the lazy read of the returned plan
-        val statsDir = synchronized {
-          val key = java.security.MessageDigest.getInstance("MD5")
-            .digest(dir.getBytes("UTF-8")).map("%02x".format(_))
-            .mkString.take(12)
-          val d = graft.core.Scratch.dir(s"fts_skew_stats_$key")
-          graft.core.Scratch.registerLayout(dir, s"fts_skew_stats_$key")(() =>
-            graft.core.Scratch.deleteLocal(d))
-          val done = new org.apache.hadoop.fs.Path(s"$d/_SUCCESS")
-          val fs = done.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (!fs.exists(done))
-            qp.groupBy("term")
-              .agg(countDistinct(col("doc_id")).cast("double").as("df"))
-              .write.mode("overwrite").parquet(d)
-          d
+        // built once per corpus dir: suites drive queries concurrently in
+        // one JVM, and a fixed shared path could be overwritten by a
+        // sibling invocation over another corpus between this eager write
+        // and the lazy read of the returned plan
+        val statsDir = graft.core.Scratch.layoutOnce(dir, "fts_skew_stats", "_SUCCESS") { d =>
+          qp.groupBy("term")
+            .agg(countDistinct(col("doc_id")).cast("double").as("df"))
+            .write.mode("overwrite").parquet(d)
         }
         val df = s.read.parquet(statsDir)
         qp.hint("merge").join(df, "term")
@@ -1581,7 +1557,7 @@ object Fts extends QueryPack {
         val docs = Tables(s, dir, "documents")
         val cfg = graft.fts.AnalyzerConfig(
           stopWords = Seq("the"), sStem = true, minTokenLen = 2)
-        val ix = Index.buildWithAnalyzer(docs, cfg)
+        val ix = Index.build(docs, analyzer = cfg)
         val eff = cfg.normalizeTerms(Seq("the", "queries", "window"))
         Search.matchAllIds(ix, eff).orderBy("doc_id")
       },
@@ -1617,7 +1593,7 @@ object Fts extends QueryPack {
         // so registering the stemmed index for the shared fixture path
         // would replace the v1 (documents, text) entry the other SQL
         // queries race for within one harness session
-        val tbl = layoutOnce(s, dir, "docs_an_table", "_SUCCESS") { out =>
+        val tbl = graft.core.Scratch.layoutOnce(dir, "docs_an_table", "_SUCCESS") { out =>
           Tables(s, dir, "documents").write.mode("overwrite").parquet(out)
         }
         graft.fts.Index.createIndex(s, tbl,
@@ -1672,7 +1648,7 @@ object Fts extends QueryPack {
     // and the harness runs queries concurrently (see q_fts_sql_analyzer).
     Q("q_fts_sql_analyzer_phrase",
       (s, dir) => {
-        val tbl = layoutOnce(s, dir, "docs_anp_table", "_SUCCESS") { out =>
+        val tbl = graft.core.Scratch.layoutOnce(dir, "docs_anp_table", "_SUCCESS") { out =>
           Tables(s, dir, "documents").write.mode("overwrite").parquet(out)
         }
         graft.fts.Index.createIndex(s, tbl,
@@ -2185,7 +2161,7 @@ object Fts extends QueryPack {
           (5L, "場所は東京")
         ).toDF("doc_id", "text")
         val cfg = graft.fts.AnalyzerConfig(cjkBigrams = true)
-        val ix = Index.buildWithAnalyzer(docs, cfg)
+        val ix = Index.build(docs, analyzer = cfg)
         Search.matchAllIds(ix, cfg.tokenizeQuery("東京都")).orderBy("doc_id")
       },
       Some("""WITH docs(doc_id, text) AS (VALUES
@@ -2316,7 +2292,7 @@ object Fts extends QueryPack {
         // scratch COPY of the table: the catalog keys on (table, column),
         // and the shared fixture path must keep its v1 entry for the other
         // SQL queries
-        val tbl = layoutOnce(s, dir, "docs_qan_table", "_SUCCESS") { out =>
+        val tbl = graft.core.Scratch.layoutOnce(dir, "docs_qan_table", "_SUCCESS") { out =>
           Tables(s, dir, "documents").write.mode("overwrite").parquet(out)
         }
         graft.fts.Index.createIndex(s, tbl,
@@ -2483,7 +2459,7 @@ object Fts extends QueryPack {
     // alone; the corpus text is never re-tokenized.
     Q("q_fts_span_first",
       (s, dir) => {
-        val ix = Index.buildPositional(Tables(s, dir, "documents"))
+        val ix = Index.build(Tables(s, dir, "documents"), positional = true)
         Search.matchSpanFirst(ix, "spark", 5).orderBy("doc_id")
       },
       Some(s"""WITH toks AS (SELECT doc_id, $DTOKS AS t FROM documents)
@@ -2498,7 +2474,7 @@ object Fts extends QueryPack {
     // lists left-joined; quantifiers run as doc-local array lambdas.
     Q("q_fts_span_not",
       (s, dir) => {
-        val ix = Index.buildPositional(Tables(s, dir, "documents"))
+        val ix = Index.build(Tables(s, dir, "documents"), positional = true)
         Search.matchSpanNot(ix, "data", "query", dist = 2).orderBy("doc_id")
       },
       Some(s"""WITH pos AS (SELECT doc_id,
@@ -2523,7 +2499,7 @@ object Fts extends QueryPack {
     Q("q_fts_static_sorted",
       (s, dir) => {
         val docs = Tables(s, dir, "documents")
-        val out = layoutOnce(s, dir, "fts_static_banded",
+        val out = graft.core.Scratch.layoutOnce(dir, "fts_static_banded",
             "postings_banded/_SUCCESS") { o =>
           Index.writeStaticBanded(Index.build(docs),
             docs.select(col("doc_id"), col("n_chars").as("score")),
@@ -2638,7 +2614,7 @@ object Fts extends QueryPack {
     // window is a total-order prefix both engines reproduce.
     Q("q_fts_rescore",
       (s, dir) => {
-        val ix = Index.buildPositional(Tables(s, dir, "documents"))
+        val ix = Index.build(Tables(s, dir, "documents"), positional = true)
         Search.rescoreTopK(ix, Seq("data", "query"), Seq("data", "query"),
           window = 50, k = 10, boost = 2.0)
       },

@@ -147,6 +147,26 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(hashLines(index).nonEmpty && stringLiterals(index).contains("bucket"))
   }
 
+  /** The analyzer record beside a layout has one owner, as the bucket hash
+    * does: `graft.fts.Index` writes and reads it, and everyone else asks
+    * `Index` (the layout's [[graft.fts.FtsIndex.analyzer]], or
+    * `readAnalyzerConfig` for a delta log). */
+  test("only graft.fts.Index names the analyzer record file") {
+    val fts = Paths.get("src", "main", "scala", "graft", "fts", "Fts.scala")
+    val text = sources.find(_._1 == fts).map(_._2).getOrElse(fail(s"no $fts"))
+    val from = text.indexOf("\nobject Index ")
+    val until = text.indexOf("\n}\n", from)
+    assert(from >= 0 && until > from, s"no object Index in $fts")
+    val name = "_graft_analyzer.properties"
+    assert(text.substring(from, until).contains(name))
+    val bad = for {
+      (p, t) <- sources if p.startsWith(Paths.get("src", "main", "scala", "graft"))
+      checked = if (p == fts) t.substring(0, from) + t.substring(until) else t
+      line <- checked.linesIterator if line.contains(name)
+    } yield s"$p: ${line.trim}"
+    assert(bad.isEmpty, bad.mkString("\n  ", "\n  ", ""))
+  }
+
   test("no post-hoc install of the graft function surface") {
     val bad = offenders("""\bdef\s+install\s*\(""") ++
       offenders("""\b(GraftExtensions|TextKernels|VecKernels)\s*\.\s*install\b""") ++

@@ -247,8 +247,8 @@ class ExtensionsSpec extends SparkSpec {
     val docsPath = sf("documents")
     val docs = spark.read.parquet(docsPath)
     val posDir = ttmp("fts_index_combo_spec")
-    graft.fts.Index.write(graft.fts.Index.buildPositional(docs), posDir)
-    graft.fts.IndexCatalog.register(docsPath, posDir, positional = true)
+    graft.fts.Index.write(graft.fts.Index.build(docs, positional = true), posDir)
+    graft.fts.IndexCatalog.register(docsPath, posDir)
     try {
       docs.createOrReplaceTempView("docs_combo_spec")
       val df = spark.sql(
@@ -261,7 +261,7 @@ class ExtensionsSpec extends SparkSpec {
         s"conjunct id sets must chain index-only:\n${s.take(2000)}")
       assert(!s.contains("fts_tokenize") && !s.contains("fts_near_tokens"),
         "positional index must serve every conjunct without re-reading text")
-      val ix = graft.fts.Index.buildPositional(docs)
+      val ix = graft.fts.Index.build(docs, positional = true)
       val expect = graft.fts.Search.matchAllIds(ix, Seq("spark"))
         .join(graft.fts.Search.matchPrefixIds(ix, "quer"), "doc_id")
         .join(graft.fts.Search.matchNear(ix, "data", "query", 3), "doc_id")
@@ -384,7 +384,7 @@ class ExtensionsSpec extends SparkSpec {
     val docs = spark.read.parquet(docsPath)
     docs.createOrReplaceTempView("docs_near_sql")
     val expect = graft.fts.Search.matchNear(
-        graft.fts.Index.buildPositional(docs), "data", "query", 3)
+        graft.fts.Index.build(docs, positional = true), "data", "query", 3)
       .collect().map(_.getLong(0)).toSet
     // scan path: single-pass token kernel
     val scan = spark.sql(
@@ -405,8 +405,8 @@ class ExtensionsSpec extends SparkSpec {
     } finally graft.fts.IndexCatalog.clear()
     // positional index: pure position-list plan, no kernel, no re-read
     val posDir = ttmp("fts_index_near_pos_spec")
-    graft.fts.Index.write(graft.fts.Index.buildPositional(docs), posDir)
-    graft.fts.IndexCatalog.register(docsPath, posDir, positional = true)
+    graft.fts.Index.write(graft.fts.Index.build(docs, positional = true), posDir)
+    graft.fts.IndexCatalog.register(docsPath, posDir)
     try {
       val posq = spark.sql(
         "SELECT doc_id FROM docs_near_sql WHERE fts_near(text, 'data', 'query', 3)")
@@ -415,6 +415,56 @@ class ExtensionsSpec extends SparkSpec {
           && !s.contains("fts_tokenize"),
         s"positional index must answer from position lists alone:\n${s.take(1500)}")
       assert(posq.collect().map(_.getLong(0)).toSet == expect)
+    } finally graft.fts.IndexCatalog.clear()
+  }
+
+  test("register reads positions and analyzer from the layout, no flags") {
+    graft.fts.IndexCatalog.clear()
+    val docsPath = sf("documents")
+    val docs = spark.read.parquet(docsPath)
+    docs.createOrReplaceTempView("docs_reg_layout")
+    val phrase = "SELECT doc_id FROM docs_reg_layout WHERE fts_phrase(text, 'data query')"
+    val near = "SELECT doc_id FROM docs_reg_layout WHERE fts_near(text, 'data', 'query', 3)"
+    def ids(sql: String) = spark.sql(sql).collect().map(_.getLong(0)).toSet
+    val (scanPhrase, scanNear) = (ids(phrase), ids(near))
+    assert(scanPhrase.nonEmpty && scanNear.nonEmpty, "dead fixture")
+    val cfg = graft.fts.AnalyzerConfig(stopWords = Seq("the", "of"), porter = true)
+    val an = graft.fts.Index.build(docs, analyzer = cfg, positional = true)
+    val layouts = Seq(
+      ("v1 positional", graft.fts.Index.build(docs, positional = true), scanPhrase, scanNear),
+      ("analyzer positional", an,
+        graft.fts.Search.matchPhrasePositional(an, cfg.tokenizeQuery("data query"))
+          .collect().map(_.getLong(0)).toSet,
+        graft.fts.Search.matchNear(an,
+          cfg.tokenizeQuery("data").head, cfg.tokenizeQuery("query").head, 3)
+          .collect().map(_.getLong(0)).toSet))
+    for ((name, ix, expectPhrase, expectNear) <- layouts) {
+      val dir = ttmp(s"fts_index_reg_layout_${name.replace(' ', '_')}")
+      graft.fts.Index.write(ix, dir)
+      graft.fts.IndexCatalog.register(docsPath, dir)
+      try {
+        for ((sql, expect) <- Seq(phrase -> expectPhrase, near -> expectNear)) {
+          val df = spark.sql(sql)
+          val s = df.queryExecution.optimizedPlan.toString
+          assert(scansOnlyPostings(df) && !s.contains("fts_tokenize")
+              && !s.contains("fts_near_tokens"),
+            s"$name: positions must come from the layout:\n${s.take(1500)}")
+          assert(df.collect().map(_.getLong(0)).toSet == expect, s"$name: $sql")
+        }
+      } finally graft.fts.IndexCatalog.clear()
+    }
+    // a tf-only layout keeps the verified path
+    val tfDir = ttmp("fts_index_reg_layout_tf")
+    graft.fts.Index.write(graft.fts.Index.build(docs), tfDir)
+    graft.fts.IndexCatalog.register(docsPath, tfDir)
+    try {
+      val tfNear = spark.sql(near)
+      assert(tfNear.queryExecution.optimizedPlan.toString.contains("fts_near_tokens"),
+        "a tf-only layout must verify near with the residual kernel")
+      assert(tfNear.collect().map(_.getLong(0)).toSet == scanNear)
+      val tfPhrase = spark.sql(phrase)
+      assert(!scansOnlyPostings(tfPhrase), "a tf-only layout must verify phrases on the text")
+      assert(tfPhrase.collect().map(_.getLong(0)).toSet == scanPhrase)
     } finally graft.fts.IndexCatalog.clear()
   }
 
@@ -459,7 +509,7 @@ class ExtensionsSpec extends SparkSpec {
     val sql = "SELECT doc_id FROM docs_slop_sql " +
       "WHERE fts_phrase_slop(text, 'data query', 3)"
     val expect = graft.fts.Search.matchPhraseSloppy(
-        graft.fts.Index.buildPositional(docs), Seq("data", "query"), 3)
+        graft.fts.Index.build(docs, positional = true), Seq("data", "query"), 3)
       .collect().map(_.getLong(0)).toSet
     assert(expect.nonEmpty)
     // scan path: single-pass ordered-window kernel, no joins
@@ -492,8 +542,8 @@ class ExtensionsSpec extends SparkSpec {
     } finally graft.fts.IndexCatalog.clear()
     // positional index: pure position-list plan, no kernel, no re-read
     val posDir = ttmp("fts_index_slop_pos_spec")
-    graft.fts.Index.write(graft.fts.Index.buildPositional(docs), posDir)
-    graft.fts.IndexCatalog.register(docsPath, posDir, positional = true)
+    graft.fts.Index.write(graft.fts.Index.build(docs, positional = true), posDir)
+    graft.fts.IndexCatalog.register(docsPath, posDir)
     try {
       val posq = spark.sql(sql)
       val s = posq.queryExecution.optimizedPlan.toString
@@ -807,7 +857,7 @@ class ExtensionsSpec extends SparkSpec {
       val served = spark.sql(
         "SELECT doc_id FROM docs_restore_an WHERE fts_match(text, 'the queries window')")
       val expect = graft.fts.Search.matchAllIds(
-          graft.fts.Index.buildWithAnalyzer(docs, cfg),
+          graft.fts.Index.build(docs, analyzer = cfg),
           cfg.normalizeTerms(Seq("the", "queries", "window")))
         .collect().map(_.getLong(0)).toSet
       assert(served.collect().map(_.getLong(0)).toSet == expect)

@@ -277,7 +277,7 @@ class IncrementalIndexSpec extends SparkSpec {
     IncrementalIndex.start(stream, dir, positional = true).awaitTermination()
 
     val incr = IncrementalIndex.read(spark, dir)
-    val batch = Index.buildPositional(rows.toDF("doc_id", "text"))
+    val batch = Index.build(rows.toDF("doc_id", "text"), positional = true)
     def canonPos(ix: FtsIndex) = ix.postings.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getSeq[Int](3).toList)).toSet
@@ -288,6 +288,43 @@ class IncrementalIndexSpec extends SparkSpec {
     val b = Search.matchNear(batch, "data", "query", 3)
       .collect().map(_.getLong(0)).toSet
     assert(a == b && a.nonEmpty)
+  }
+
+  test("a compacted stemmed log records its analyzer and serves SQL under it") {
+    val sparkS = spark
+    import sparkS.implicits._
+    implicit val sqlCtx = sparkS.sqlContext
+
+    val table = graft.core.Scratch.freshDir("incr_ix_an_table")
+    spark.read.parquet(sf("documents")).select("doc_id", "text").write.parquet(table)
+    val rows = spark.read.parquet(table).as[(Long, String)].collect().toSeq
+    val cfg = AnalyzerConfig(stopWords = Seq("the"), sStem = true, minTokenLen = 2)
+    val dir = graft.core.Scratch.freshDir("incr_ix_an_log")
+    val outDir = graft.core.Scratch.freshDir("incr_ix_an_base")
+    // half streamed through the analyzer, half upserted (which replays it)
+    val (streamed, upserted) = rows.splitAt(rows.size / 2)
+    val input = MemoryStream[(Long, String)]
+    input.addData(streamed)
+    IncrementalIndex.start(input.toDF().toDF("doc_id", "text"), dir, analyzer = cfg)
+      .awaitTermination()
+    IncrementalIndex.upsert(spark, dir, upserted.toDF("doc_id", "text"))
+    IncrementalIndex.compact(spark, dir, outDir)
+    assert(Index.read(spark, outDir).analyzer == cfg,
+      "the compacted layout must record the log's analyzer")
+    try {
+      IndexCatalog.clear()
+      IndexCatalog.register(table, outDir)
+      assert(IndexCatalog.get(table).exists(_.analyzer == cfg))
+      spark.read.parquet(table).createOrReplaceTempView("docs_incr_an")
+      val served = spark.sql(
+        "SELECT doc_id FROM docs_incr_an WHERE fts_match(text, 'the queries window')")
+        .collect().map(_.getLong(0)).toSet
+      val expect = Search.matchAllIds(Index.build(rows.toDF("doc_id", "text"), analyzer = cfg),
+          cfg.normalizeTerms(Seq("the", "queries", "window")))
+        .collect().map(_.getLong(0)).toSet
+      assert(expect.nonEmpty, "dead fixture")
+      assert(served == expect)
+    } finally IndexCatalog.clear()
   }
 
   test("time travel: pre-mutation views; history below the watermark fails loud") {

@@ -105,6 +105,51 @@ class IndexReuseSpec extends SparkSpec {
     } finally IndexCatalog.clear()
   }
 
+  test("a meta file with buckets, positional and analyzer keys restores the same entry") {
+    val corpus = freshCorpus(20)
+    val ixDir = graft.core.Scratch.freshDir("ixreuse_old_keys")
+    val cfg = AnalyzerConfig(stopWords = Seq("the"), sStem = true, minTokenLen = 2)
+    try {
+      Index.createIndex(spark, corpus, ixDir, positional = true, analyzer = cfg)
+      val entry = IndexCatalog.get(corpus)
+      assert(entry.exists(e => e.positional && e.analyzer == cfg))
+      // the meta file as builds that stated the build choices there left it
+      val meta = new org.apache.hadoop.fs.Path(ixDir, IndexCatalog.MetaFile)
+      val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val props = new java.util.Properties()
+      val in = fs.open(meta)
+      try props.load(in) finally in.close()
+      props.setProperty("buckets", "64")
+      props.setProperty("positional", "true")
+      props.setProperty("analyzer", cfg.describe)
+      val out = fs.create(meta, true)
+      try props.store(out, "graft index registration") finally out.close()
+      val built = listing(s"$ixDir/postings")
+      IndexCatalog.clear()
+      IndexCatalog.restore(spark, ixDir)
+      assert(IndexCatalog.get(corpus) == entry)
+      IndexCatalog.clear()
+      Index.createIndex(spark, corpus, ixDir, positional = true, analyzer = cfg)
+      assert(listing(s"$ixDir/postings") === built,
+        "a meta file with the old keys must not force a rebuild")
+      assert(IndexCatalog.get(corpus) == entry)
+    } finally IndexCatalog.clear()
+  }
+
+  test("a v1 rebuild over an analyzer layout drops the analyzer record") {
+    val corpus = freshCorpus(20)
+    val ixDir = graft.core.Scratch.freshDir("ixreuse_analyzer_to_v1")
+    try {
+      Index.createIndex(spark, corpus, ixDir,
+        analyzer = AnalyzerConfig(stopWords = Seq("the"), sStem = true))
+      assert(!Index.readAnalyzerConfig(spark, ixDir).isV1)
+      Index.createIndex(spark, corpus, ixDir)
+      assert(Index.readAnalyzerConfig(spark, ixDir).isV1)
+      assert(Index.read(spark, ixDir).analyzer.isV1)
+      assert(IndexCatalog.get(corpus).exists(_.analyzer.isV1))
+    } finally IndexCatalog.clear()
+  }
+
   test("a layout that records no bucket count is read unpruned and rebuilt once") {
     val corpus = freshCorpus(30)
     val ixDir = graft.core.Scratch.freshDir("ixreuse_unrecorded")

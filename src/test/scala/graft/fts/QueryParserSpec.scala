@@ -411,7 +411,7 @@ class QueryParserSpec extends SparkSpec {
       val served = ids(
         "SELECT doc_id FROM docs_qp_an WHERE fts_query(text, 'queries AND window')")
       val expect = Search.matchAllIds(
-          Index.buildWithAnalyzer(docs, cfg),
+          Index.build(docs, analyzer = cfg),
           cfg.normalizeTerms(Seq("queries", "window")))
         .collect().map(_.getLong(0)).toSet
       assert(served == expect && served.nonEmpty)

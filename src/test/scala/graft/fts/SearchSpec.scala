@@ -52,7 +52,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("wildcard-slot phrase: pattern slots union their matching terms") {
-    val pix = Index.buildPositional(docs)
+    val pix = Index.build(docs, positional = true)
     def wild(slots: Seq[String]): Array[Long] =
       Search.matchPhraseWildPositional(pix, slots)
         .collect().map(_.getLong(0)).sorted
@@ -76,7 +76,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("sloppy phrase: ordered chain within the slop window") {
-    val pix = Index.buildPositional(docs)
+    val pix = Index.build(docs, positional = true)
     def slop(phrase: Seq[String], k: Int): Array[Long] =
       Search.matchPhraseSloppy(pix, phrase, k)
         .collect().map(_.getLong(0)).sorted
@@ -105,7 +105,7 @@ class SearchSpec extends SparkSpec {
       graft.ext.FtsPhraseSlopTokens.eval(UTF8String.fromString(text),
         terms.map(UTF8String.fromString).toArray, k)
     val corpus = docs.collect().map(r => (r.getLong(0), r.getString(1)))
-    val pix = Index.buildPositional(docs)
+    val pix = Index.build(docs, positional = true)
     for (phrase <- Seq(Seq("big", "data"), Seq("spark", "data"),
            Seq("spark", "big", "data"), Seq("big", "data", "big"),
            Seq("data", "spark"));
@@ -295,7 +295,7 @@ class SearchSpec extends SparkSpec {
       (4L, "scan only here")
     ).toDF("doc_id", "text")
     val cfg = AnalyzerConfig(stopWords = Seq("the"), sStem = true, minTokenLen = 2)
-    val aix = Index.buildWithAnalyzer(corpus, cfg)
+    val aix = Index.build(corpus, analyzer = cfg)
 
     def run(terms: Seq[String], syn: Map[String, Seq[String]]): Set[Long] =
       Search.matchCompoundIds(aix, cfg, terms, syn)
@@ -527,7 +527,7 @@ class SearchSpec extends SparkSpec {
       (2L, "query the spark cluster"),
       (3L, "spark sql query"),
       (4L, "data query spark query")).toDF("doc_id", "text")
-    val mem = Index.buildPositional(corpus)
+    val mem = Index.build(corpus, positional = true)
     val dir = graft.core.Scratch.freshDir("recorded_buckets_ix")
     Index.write(mem, dir, buckets = 4)
     // read with no bucket count: the layout supplies its own
@@ -699,7 +699,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("spanFirst: term must sit within the first n positions") {
-    val pix = Index.buildPositional(docs)
+    val pix = Index.build(docs, positional = true)
     // 'spark' is token 0 of docs 1 and 3 → within first 1
     assert(Search.matchSpanFirst(pix, "spark", 1)
       .collect().map(_.getLong(0)).sorted === Array(1L, 3L))
@@ -712,7 +712,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("spanNot: an occurrence of a with no b within dist") {
-    val pix = Index.buildPositional(docs)
+    val pix = Index.build(docs, positional = true)
     // 'big' not within 1 of 'data': doc 1 big@2,data@3 adjacent → excluded;
     // doc 2 big@0,data@1,big@2 — big@2 is within 1 of data@1? |2-1|=1 ≤ 1 →
     // and big@0 |0-1|=1 → excluded too
@@ -799,7 +799,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("rescoreTopK: phrase boost reorders only inside the window") {
-    val pix = Index.buildPositional(docs)
+    val pix = Index.build(docs, positional = true)
     val base = Search.scoreBm25(pix, Seq("big", "data"), 4).collect()
       .map(_.getLong(0)).toSeq
     val boosted = Search.rescoreTopK(pix, Seq("big", "data"),
@@ -1016,7 +1016,7 @@ class SearchSpec extends SparkSpec {
       assert(spark.sql(topk).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
         Search.scoreBm25(ix, Seq("w0", "w17"), 10).collect()
           .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
-      val pix = Index.buildPositional(skewed)
+      val pix = Index.build(skewed, positional = true)
       assert(idList(spark.sql(phrase)) ==
         idList(Search.matchPhrasePositional(pix, Seq("w0", "w1"))))
       assert(idList(spark.sql(prefix)) == idList(Search.matchPrefixIds(pix, "w1")))
@@ -1087,7 +1087,7 @@ class SearchSpec extends SparkSpec {
         "ORDER BY score DESC, doc_id LIMIT 10"
       val anPlan = plan(an)
       assert(!anPlan.contains("LeftSemi"), s"analyzed same-set filter kept a semi-join:\n$anPlan")
-      assert(rows(an) == Search.scoreBm25(Index.buildWithAnalyzer(docs, cfg),
+      assert(rows(an) == Search.scoreBm25(Index.build(docs, analyzer = cfg),
           Seq("window", "query"), 10).collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSeq)
     } finally graft.fts.IndexCatalog.clear()

@@ -8,9 +8,11 @@ import graft.ext.FtsShapes
   * ([[graft.ext.FtsShapes]]: each WHERE shape and bad-argument shape under
   * each projection, plus the `fts_score` top-k queries with and without an
   * extra conjunct, and the lang-scored two-column shapes), under each of
-  * six registrations of the agreement table (none, v1 tf-only, v1
+  * seven registrations of the agreement table (none, v1 tf-only, v1
   * positional, analyzer positional, v1 tf-only indexes on both text and
-  * lang, and v1 positional with 16 buckets instead of the default 64):
+  * lang, v1 positional with 16 buckets instead of the default 64, and
+  * analyzer positional registered by `restore` from the layout's own
+  * metadata in a cleared catalog):
   *  - the optimized logical plan, expression ids normalized to `#N` and
   *    lambda variable numbers to `_N` (both come from JVM-wide counters,
   *    so they shift with every DataFrame a build happens to construct);
@@ -51,7 +53,13 @@ object PlanGrid {
       "v1 text + lang" -> Seq(graft.fts.Index.createIndex(spark, table, _),
         graft.fts.Index.createIndex(spark, table, _, textCol = "lang")),
       "v1 positional, 16 buckets" -> Seq(graft.fts.Index.createIndex(spark, table, _,
-        buckets = 16, positional = true)))
+        buckets = 16, positional = true)),
+      "analyzer positional, restored" -> Seq { (dir: String) =>
+        graft.fts.Index.createIndex(spark, table, dir, positional = true,
+          analyzer = graft.fts.AnalyzerConfig(stopWords = Seq("the", "of"), porter = true))
+        graft.fts.IndexCatalog.clear()
+        graft.fts.IndexCatalog.restore(spark, dir)
+      })
     def message(e: Throwable): String =
       Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
         .collectFirst { case iae: IllegalArgumentException => iae.getMessage }
